@@ -30,12 +30,12 @@ sharing one timestamp stream):
     | ts bitstream | col0 bitstream | .. | colk bitstream
   (each bitstream byte-aligned, prefixed by u32 byte length)
 
-The Spark face is ``compress_tier`` (groupBy chunk key ->
-applyInPandas) and ``decompress_chunks`` (mapInPandas explode).  Chunks
-are built from TIER rows (already 3-6 orders of magnitude smaller than
-raw), so the Python codec cost is bounded by tier cardinality, not raw
-row count; the groupBy key includes the chunk window, so hot sources
-split across chunks and no single task sees more than one chunk span.
+The Spark face is ``compress_tier`` (repartition + sort by chunk key ->
+one mapInArrow pass per partition) and ``decompress_chunks``
+(mapInPandas explode).  Chunks are built from TIER rows (already 3-6
+orders of magnitude smaller than raw), so the Python codec cost is
+bounded by tier cardinality, not raw row count; the chunk key includes
+the chunk window, so hot sources split across chunks.
 """
 
 from __future__ import annotations
@@ -544,6 +544,17 @@ CHUNK_SCHEMA = T.StructType(
 )
 
 
+def _group_starts(keys: list) -> np.ndarray:
+    """Row offsets where a run of equal key tuples begins (row 0 always)."""
+    n = len(keys[0])
+    change = np.zeros(n, dtype=bool)
+    change[:1] = True
+    for col in keys:
+        a = col.to_numpy(zero_copy_only=False)
+        change[1:] |= a[1:] != a[:-1]
+    return np.flatnonzero(change)
+
+
 def compress_tier(
     tier_df: DataFrame,
     tier: str,
@@ -553,50 +564,75 @@ def compress_tier(
 ) -> DataFrame:
     """Tier rows -> one Gorilla chunk per (series, chunk window).
 
-    groupBy().applyInPandas — acceptable here precisely because input is
-    tier-sized; never point this at raw rows (SURVEY.md §4: no partial
-    agg in grouped-map).  The chunk key includes chunk_start, so a hot
-    source fans out across chunk windows instead of one giant group.
+    repartition(chunk key) + sortWithinPartitions(chunk key,
+    window_start) + ONE mapInArrow pass per partition: group boundaries
+    come from a numpy compare over the sorted key columns and each group
+    is a zero-copy array slice handed to ``compress_chunk`` — no pandas
+    frame and no Python round trip per group.  A group cut by an Arrow
+    batch boundary is carried into the next batch.  Input is tier-sized;
+    never point this at raw rows.  The chunk key includes chunk_start,
+    so a hot source fans out across chunk windows instead of one giant
+    group.
 
     ``extra_keys`` (string columns of ``tier_df``, e.g. ``["tier"]``)
-    join the group key and pass through to the output — the pipeline
-    compresses ALL tiers' rows in ONE grouped-map stage over their
-    union instead of one applyInPandas (scan + exchange + Python
-    worker round-trip) per tier.
+    join the chunk key and pass through to the output — the pipeline
+    compresses ALL tiers' rows in ONE pass over their union.
     """
+    import pyarrow as pa
+
     chunk_span = chunk_span or CHUNK_SPAN[tier]
-    value_cols = value_cols or DEFAULT_VALUE_COLS
-    df = tier_df.withColumn("chunk_start", window_start(F.col("window_start"), chunk_span))
-    vcols = list(value_cols)
+    vcols = list(value_cols or DEFAULT_VALUE_COLS)
     ekeys = list(extra_keys or [])
+    keys = [*ekeys, *KEY, "chunk_start"]
     schema = T.StructType(
         [T.StructField(k, T.StringType()) for k in ekeys] + list(CHUNK_SCHEMA.fields)
     )
+    out_names = schema.fieldNames()
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start", kind="stable")
-        ts = (pdf["window_start"].astype("int64") // 10**9).to_numpy()
-        cols = [pdf[c].to_numpy(dtype="float64") for c in vcols]
-        chunk = compress_chunk(ts, cols)
-        out = {k: [pdf[k].iloc[0]] for k in ekeys}
-        out.update(
-            {
-                "source": [pdf["source"].iloc[0]],
-                "metric": [pdf["metric"].iloc[0]],
-                "kind": [pdf["kind"].iloc[0]],
-                "chunk_start": [pdf["chunk_start"].iloc[0]],
-                "n_points": [len(pdf)],
-                "min_ts": [pdf["window_start"].min()],
-                "max_ts": [pdf["window_start"].max()],
-                "chunk": [chunk],
-            }
-        )
-        return pd.DataFrame(out)
+    def encode(batch: pa.RecordBatch, last: bool):
+        """Chunks for every complete group of ``batch`` (all of them when
+        ``last``), plus the trailing rows still open."""
+        starts = _group_starts([batch.column(k) for k in keys])
+        done = len(starts) if last else len(starts) - 1
+        if done == 0:
+            return None, batch
+        bounds = np.append(starts, batch.num_rows)
+        first, stop = bounds[:done], bounds[1 : done + 1]
+        ws = batch.column("window_start")
+        ts = np.asarray(ws.cast(pa.int64())) // 10**6  # Spark ships timestamps in us
+        vals = [batch.column(c).to_numpy(zero_copy_only=False).astype(np.float64) for c in vcols]
+        chunks = [
+            compress_chunk(ts[a:b], [v[a:b] for v in vals]) for a, b in zip(first, stop)
+        ]
+        cols = [batch.column(k).take(first) for k in keys]
+        cols += [
+            pa.array(stop - first, pa.int32()),
+            ws.take(first),
+            ws.take(stop - 1),
+            pa.array(chunks, pa.binary()),
+        ]
+        rest = batch.slice(int(bounds[done])) if not last else None
+        return pa.RecordBatch.from_arrays(cols, names=out_names), rest
+
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        carry = None  # the open group's rows, never empty
+        for batch in batches:
+            if carry is not None:
+                batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+            if not batch.num_rows:
+                continue
+            out, carry = encode(batch, last=False)
+            if out is not None:
+                yield out
+        if carry is not None:
+            yield encode(carry, last=True)[0]
 
     return (
-        df.select(*ekeys, *KEY, "chunk_start", "window_start", *vcols)
-        .groupBy(*ekeys, *KEY, "chunk_start")
-        .applyInPandas(build, schema)
+        tier_df.withColumn("chunk_start", window_start(F.col("window_start"), chunk_span))
+        .select(*keys, "window_start", *vcols)
+        .repartition(*keys)
+        .sortWithinPartitions(*keys, "window_start")
+        .mapInArrow(build, schema)
     )
 
 

@@ -23,6 +23,9 @@ Scale design:
   max_by(last, last_ts).  Input is already tiny (one row per fine
   window), so every cascade step shuffles ~nothing.  Rolling raw->1d
   directly must equal 1m->5m->1h->1d (associativity test, SURVEY.md §5.3).
+- ``cascade_tiers`` is the same aggregate over several coarse tiers at
+  once (tier joins the group key): the sealed pipeline builds 5m/1h/1d
+  from the 1m frame in one shuffle instead of a chain of three.
 - percentiles do NOT compose; ``timer_percentiles`` computes them from
   raw points per tier.  Exact mode (sort-based) is for oracle parity;
   at 100 TB use exact=False -> percentile_approx, whose t-digest-style
@@ -31,7 +34,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 TIERS: dict[str, int] = {"1m": 60, "5m": 300, "1h": 3600, "1d": 86400}
@@ -104,16 +107,15 @@ def rollup(points: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def cascade(fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFrame:
-    """Reaggregate a finer tier table into a coarser tier (N3).
-
-    count/sum/min/max/sum_sq compose; avg = sum/cnt and stddev = moment
-    formula recomputed; last carries by max_by on the fine window's
-    last_ts.
-    """
+def _check_multiple(fine_tier: str, coarse_tier: str) -> None:
     if tier_seconds(coarse_tier) % tier_seconds(fine_tier) != 0:
         raise ValueError(f"{coarse_tier} is not a multiple of {fine_tier}")
-    secs = tier_seconds(coarse_tier)
+
+
+def _cascade(fine: DataFrame, coarse_ws: Column, secs: Column, by: list[str]) -> DataFrame:
+    """Shared body of ``cascade`` / ``cascade_tiers``: group ``fine`` by
+    ``by`` + the series + the coarse window ``coarse_ws``, recompose the
+    moments, and derive rate from ``secs`` (the coarse tier's seconds)."""
     has_sq = "sum_sq" in fine.columns
     aggs = [
         F.sum("cnt").alias("cnt"),
@@ -127,14 +129,61 @@ def cascade(fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFrame:
     if has_sq:
         aggs.append(F.sum("sum_sq").alias("sum_sq"))
     out = (
-        fine.withColumn("cws", window_start(F.col("window_start"), coarse_tier))
-        .groupBy(*KEY, F.col("cws").alias("window_start"))
+        fine.groupBy(*by, *KEY, coarse_ws.alias("window_start"))
         .agg(*aggs)
-        .withColumn("rate", F.col("cnt").cast("double") / F.lit(float(secs)))
+        .withColumn("rate", F.col("cnt").cast("double") / secs)
     )
     if has_sq:
         out = out.withColumn("stddev", stddev_from_moments("cnt", "sum", "sum_sq"))
     return out
+
+
+def cascade(fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFrame:
+    """Reaggregate a finer tier table into a coarser tier (N3).
+
+    count/sum/min/max/sum_sq compose; avg = sum/cnt and stddev = moment
+    formula recomputed; last carries by max_by on the fine window's
+    last_ts.
+    """
+    _check_multiple(fine_tier, coarse_tier)
+    secs = F.lit(float(tier_seconds(coarse_tier)))
+    return _cascade(fine, window_start(F.col("window_start"), coarse_tier), secs, [])
+
+
+def cascade_tiers(fine: DataFrame, fine_tier: str, coarse_tiers: list[str]) -> DataFrame:
+    """Every coarse tier from one fine tier in ONE aggregate.
+
+    Each fine row explodes into one (tier, coarse window) pair per coarse
+    tier, and a single groupBy(tier, series, window) — one partial+final
+    shuffle — recomposes them all; ``tier`` is a column of the output.
+    Every aggregate is decomposable (integer sums, min/max, max_by on a
+    per-window-unique last_ts), so the rows are bit-identical to the
+    chained ``cascade`` 1m->5m->1h->1d (pinned by
+    tests/test_extract_rollup.py), without a persisted frame per step.
+    """
+    if not coarse_tiers:
+        raise ValueError("cascade_tiers needs at least one coarse tier")
+    for t in coarse_tiers:
+        _check_multiple(fine_tier, t)
+    pairs = F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(t).alias("tier"),
+                    window_start(F.col("window_start"), t).alias("_cws"),
+                )
+                for t in coarse_tiers
+            ]
+        )
+    )
+    secs = F.create_map(
+        *[x for t in coarse_tiers for x in (F.lit(t), F.lit(float(tier_seconds(t))))]
+    )[F.col("tier")]
+    vals = ["cnt", "sum", "min", "max", "last", "last_ts"]
+    if "sum_sq" in fine.columns:
+        vals.append("sum_sq")
+    exploded = fine.select(*KEY, *vals, pairs)
+    return _cascade(exploded, F.col("_cws"), secs, ["tier"])
 
 
 def rollup_all_tiers(points: DataFrame, tiers: list[str] | None = None) -> dict[str, DataFrame]:
@@ -276,8 +325,7 @@ def set_sketch_cascade(fine: DataFrame, fine_tier: str, coarse_tier: str) -> Dat
     """Reaggregate HLL set tiers: union the fine windows' sketches into
     the coarse window.  Same shuffle shape as ``cascade`` — one
     partial-agg groupBy over already-tiny tier rows."""
-    if tier_seconds(coarse_tier) % tier_seconds(fine_tier) != 0:
-        raise ValueError(f"{coarse_tier} is not a multiple of {fine_tier}")
+    _check_multiple(fine_tier, coarse_tier)
     key = [c for c in fine.columns if c not in ("window_start", "hll")]
     return (
         fine.withColumn("cws", window_start(F.col("window_start"), coarse_tier))

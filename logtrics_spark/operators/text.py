@@ -36,6 +36,19 @@ STOPWORDS = {
     "es": ["el", "la", "los", "que", "de", "en", "es", "una"],
 }
 
+
+def _check_language_keys(stopwords: dict) -> None:
+    """``language_id``'s zero-hit fallback is a (0, 'und') sentinel that
+    wins the lang tiebreak only while every language key sorts before
+    'und'; a key above it (say 'vi' or 'zh') would be returned for
+    zero-hit and null documents instead."""
+    above = sorted(lg for lg in stopwords if lg >= "und")
+    if above:
+        raise ValueError(f"language keys {above} sort at or above the 'und' sentinel")
+
+
+_check_language_keys(STOPWORDS)
+
 # BPE-ish token regex: word pieces, numbers, or single non-space symbols
 BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -126,13 +139,12 @@ def language_id(text: Column | str) -> Column:
     # regex scanned each document TWICE (measured: language_id alone
     # 0.42 s -> 0.26 s at sf0.1).  Value-identical: any real hit beats
     # the sentinel on hits; at all-zero hits the sentinel wins the lang
-    # tiebreak because every stopword key sorts before 'und' (asserted —
-    # adding a key above 'und' must revisit this), and null text yields
+    # tiebreak because every stopword key sorts before 'und' (checked at
+    # import by _check_language_keys), and null text yields
     # structs with null hits, which sort below the sentinel's 0 (nulls
     # first in struct ordering), i.e. the same 'und' the old
     # null-condition fallthrough produced (pinned by the edge probe and
     # the lang_id/quality_score oracles).
-    assert all(lg < "und" for lg in langs), "language key sorts above the 'und' sentinel"
     pairs.append(F.struct(F.lit(0).alias("hits"), F.lit("und").alias("lang")))
     return F.greatest(*pairs)["lang"]
 

@@ -1,7 +1,9 @@
 """N8/N9 — the end-to-end resumable rollup job with lineage + retention.
 
-Pipeline:  raw token table -> extract points -> 1m rollup -> cascade
-(5m/1h/1d) -> Gorilla chunks per tier -> lineage seal -> retention.
+Pipeline:  raw token table -> extract points -> 1m rollup -> every
+coarse tier (5m/1h/1d) in ONE aggregate over the cached 1m frame ->
+Gorilla chunks for all tiers in one Arrow pass -> lineage seal ->
+retention.
 
 Checkpoint/resume semantics (north rule): the unit of progress is a
 *seal unit* = (tier, source, day).  A run:
@@ -12,12 +14,14 @@ Checkpoint/resume semantics (north rule): the unit of progress is a
      broadcast semi-join; a pending day is recomputed for all sources —
      determinism makes re-materializing sealed sources a byte-level
      no-op, and day-level granularity keeps tier tables at (tier, day)
-     partitioning: ~sources-times fewer files to commit),
-  4. writes ALL tier rows in one clustered dynamic-overwrite job and all
+     partitioning: ~sources-times fewer files to commit); coarse tiers
+     re-aggregate (stored ∪ fresh) 1m rows of their pending days,
+  4. seals through ``_seal`` — shared with ``seal_from_fine`` — which
+     writes ALL tier rows in one clustered dynamic-overwrite job and all
      chunks in a second (idempotent: a replayed partition overwrites
      itself with identical bytes),
   5. appends sealed lineage rows strictly after the data lands, tier by
-     tier in cascade order.
+     tier in tier order.
 
 Kill the job anywhere and rerun: sealed units are skipped, unsealed
 units are recomputed onto the same partitions, and the final tables are
@@ -30,8 +34,8 @@ parquet fallback removes the partition directory.
 Skew (N10): the heavy shuffle is the 1m groupBy, which Spark executes
 as partial+final native aggregation — the hot "web" source is spread by
 (source, metric, kind, window_start) grouping, whose cardinality scales
-with time, not rows.  The only grouped-map stage (Gorilla) runs on
-tier-sized data keyed down to (series, chunk day).  AQE handles
+with time, not rows.  The only Python stage (the Gorilla encode) runs
+on tier-sized data clustered by (tier, series, chunk day).  AQE handles
 residual shuffle skew; `operators/skew.py` provides explicit salting
 for custom grouped-map stages over raw-sized data.
 """
@@ -39,13 +43,15 @@ for custom grouped-map stages over raw-sized data.
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logtrics_spark.operators.extract import extract_points
-from logtrics_spark.operators.gorilla import compress_tier, decompress_chunks
-from logtrics_spark.operators.rollup import TIER_ORDER, cascade, rollup
+from logtrics_spark.operators.gorilla import compress_tier
+from logtrics_spark.operators.rollup import TIER_ORDER, cascade_tiers, rollup
 from logtrics_spark.operators.sketchset import KIND_VALS
 from logtrics_spark.storage.tableio import ParquetTableIO
 
@@ -58,6 +64,13 @@ def _day(col):
 
 def _day_str(ts) -> str:
     return ts.strftime("%Y-%m-%d")
+
+
+def _prune(df: DataFrame, days: DataFrame | None) -> DataFrame:
+    """Rows of ``df`` whose ``day`` is in ``days`` (None: all rows)."""
+    if days is None:
+        return df
+    return df.join(F.broadcast(days), ["day"], "left_semi")
 
 
 class RollupJob:
@@ -176,234 +189,240 @@ class RollupJob:
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         raw = self.read_raw()
-        stats: dict[str, int] = {t: 0 for t in self.tiers}
-        cached: list[DataFrame] = []
+        fine_tier = self.tiers[0]
 
-        # fast path: a store with no lineage has nothing sealed, so every
-        # unit is pending — skip the per-tier anti-join + isEmpty probes.
+        # Phase 1 — pending work per tier: {tier: (units, days)}.  A store
+        # with no lineage has nothing sealed, so every unit is pending
+        # (units=None: seal all; days=None: every day) and the per-tier
+        # anti-join + collect is skipped.  Recompute granularity is the
+        # DAY: a day with any pending (source, day) unit is recomputed
+        # for every source (deterministic pipeline -> already-sealed
+        # sources overwrite with identical bytes), so tier/chunk tables
+        # partition by (tier, day) and the day-level dynamic overwrite
+        # stays exactly unit-aligned.
+        pending: dict[str, tuple[set | None, DataFrame | None]] = {}
         fresh = not self.io.exists("lineage")
+        if fresh:
+            days = None
+            if seal_before is not None:
+                days = (
+                    self._all_units(raw).where(F.col("day") < seal_before).select("day").distinct()
+                )
+            pending = {t: (None, days) for t in self.tiers}
+        else:
+            for tier in self.tiers:
+                units = {
+                    (r["source"], r["day"])
+                    for r in self.pending_units(raw, tier, seal_before=seal_before).collect()
+                }
+                if units:
+                    pending[tier] = (units, self._days({d for _, d in units}))
+        stats: dict[str, int] = {t: 0 for t in self.tiers}
+        if not pending:
+            return stats
 
-        # Phase 1 — build every pending tier's DataFrame (all lazy, each
-        # persisted for reuse as the next tier's cascade input and for the
-        # batched write below).  On the resume path the cascade input is
-        # (stored fine rows outside fine-pending days) ∪ (freshly computed
-        # fine rows) — storage alone is stale until phase 2 writes land.
-        # Recompute granularity is the DAY: when any (source, day) unit is
-        # pending, the whole day is recomputed for that tier (deterministic
-        # pipeline -> already-sealed sources overwrite with identical
-        # bytes).  This lets tier/chunk tables partition by (tier, day)
-        # instead of (tier, day, source) — 8x fewer files to commit, and
-        # the day-level dynamic overwrite stays exactly unit-aligned.
-        tier_plans: list[tuple[str, DataFrame, set | None]] = []
-        prev_full: DataFrame | None = None  # fine tier covering ALL days
-        sk_kinds = self.sketchset.enabled
-        # sketch tiers mirror the scalar resume discipline exactly: one
-        # plan frame per (kind, tier) for pending days, one stored-∪-fresh
-        # full view per kind feeding the next tier's cascade
-        sk_plans: list[tuple[str, str, DataFrame]] = []
-        sk_prev: dict[str, DataFrame | None] = {k: None for k in sk_kinds}
+        cached: list[DataFrame] = []
         try:
-            for i, tier in enumerate(self.tiers):
-                if fresh:
-                    pending_set = None
-                    pending_days = None
-                    if seal_before is not None:
-                        pending_days = (
-                            self._all_units(raw)
-                            .where(F.col("day") < seal_before)
-                            .select("day")
-                            .distinct()
-                        )
-                else:
-                    pending = self.pending_units(raw, tier, seal_before=seal_before)
-                    pending_list = [(r["source"], r["day"]) for r in pending.collect()]
-                    if not pending_list:
-                        prev_full = (
-                            self.io.read(f"tiers/tier={tier}")
-                            if self.io.exists(f"tiers/tier={tier}")
-                            else None
-                        )
-                        for k in sk_kinds:
-                            sk_prev[k] = (
-                                self.io.read(f"sk_{k}/tier={tier}")
-                                if self.io.exists(f"sk_{k}/tier={tier}")
-                                else None
-                            )
-                        continue
-                    pending_set = set(pending_list)
-                    pending_days = self.spark.createDataFrame(
-                        [(d,) for d in sorted({d for _, d in pending_list})], "day string"
-                    )
-
-                def _prune(df: DataFrame) -> DataFrame:
-                    if pending_days is None:
-                        return df
-                    return df.join(F.broadcast(pending_days), ["day"], "left_semi")
-
-                if i == 0:
-                    # partition-pruned scan: only pending days
-                    points = extract_points(
-                        _prune(raw), per_source=self.per_source_ts, step_seconds=self.step_seconds
-                    )
-                    tier_df = rollup(points, tier)
-                    sk_frames = {
-                        k: self.sketchset.rollup(points, tier, k) for k in sk_kinds
-                    }
-                else:
-                    assert prev_full is not None, "cascade input missing"
-                    fine = _prune(prev_full)
-                    tier_df = cascade(fine.drop("day"), self.tiers[i - 1], tier)
-                    sk_frames = {}
-                    for k in sk_kinds:
-                        if sk_prev[k] is None:
-                            # sketches enabled on a store whose finer
-                            # sketch history doesn't exist (turned on
-                            # mid-history, or resume across the enable):
-                            # build THIS tier directly from raw points
-                            # for its pending days — a sketch tier is
-                            # valid at any granularity, this just pays
-                            # the scan instead of the cheap merge
-                            pts_t = extract_points(
-                                _prune(raw),
-                                per_source=self.per_source_ts,
-                                step_seconds=self.step_seconds,
-                            )
-                            sk_frames[k] = self.sketchset.rollup(pts_t, tier, k)
-                        else:
-                            sk_frames[k] = self.sketchset.cascade(
-                                k, _prune(sk_prev[k]).drop("day"), self.tiers[i - 1], tier
-                            )
-
-                tier_df = tier_df.withColumn("day", _day("window_start")).persist()
-                cached.append(tier_df)
-                tier_plans.append((tier, tier_df, pending_set))
-                sk_cur: dict[str, DataFrame] = {}
-                for k in sk_kinds:
-                    skf = sk_frames[k].withColumn("day", _day("window_start")).persist()
-                    cached.append(skf)
-                    sk_plans.append((k, tier, skf))
-                    sk_cur[k] = skf
-
-                if fresh or pending_days is None:
-                    prev_full = tier_df
-                    for k in sk_kinds:
-                        sk_prev[k] = sk_cur[k]
-                else:
-                    stored = (
-                        self.io.read(f"tiers/tier={tier}")
-                        if self.io.exists(f"tiers/tier={tier}")
-                        else None
-                    )
-                    if stored is None:
-                        prev_full = tier_df
-                    else:
-                        stored = stored.join(F.broadcast(pending_days), ["day"], "left_anti")
-                        prev_full = stored.unionByName(tier_df)
-                    for k in sk_kinds:
-                        skf = sk_cur[k]
-                        sk_stored = (
-                            self.io.read(f"sk_{k}/tier={tier}")
-                            if self.io.exists(f"sk_{k}/tier={tier}")
-                            else None
-                        )
-                        if sk_stored is None:
-                            sk_prev[k] = skf
-                        else:
-                            sk_prev[k] = sk_stored.join(
-                                F.broadcast(pending_days), ["day"], "left_anti"
-                            ).unionByName(skf)
-
-            if not tier_plans:
-                return stats
-
-            # Phase 2 — ONE clustered write for all tier rows and ONE for
-            # all chunks.  partitionBy(tier, day) produces the
-            # tiers/tier=X/day=Y layout (source stays a data column), and
-            # collapses 2*T driver-blocking write jobs into 2 — each
-            # partitioned write costs seconds of commit/listing overhead
-            # regardless of size, and T*days*sources file commits were the
-            # measured bottleneck at bench scale.  Compression likewise
-            # runs as ONE grouped-map stage over the unioned tier rows
-            # (tier joins the group key) instead of one
-            # scan+exchange+Python round-trip per tier.
-            all_tiers = None
-            for tier, tdf, _pset in tier_plans:
-                t = tdf.withColumn("tier", F.lit(tier))
-                all_tiers = t if all_tiers is None else all_tiers.unionByName(t)
-
-            all_chunks = (
-                compress_tier(
-                    all_tiers.drop("day"), tier_plans[0][0], chunk_span="1d",
-                    value_cols=self.chunk_value_cols, extra_keys=["tier"],
+            # Phase 2 — one cached frame of every pending tier's rows
+            # (tier + day columns).  The finest tier is the only one read
+            # from raw (partition-pruned to its pending days); it is
+            # cached too, as it is both written and the input of the
+            # one-aggregate cascade to every pending coarse tier.
+            points = fine = None
+            if fine_tier in pending:
+                points = extract_points(
+                    _prune(raw, pending[fine_tier][1]),
+                    per_source=self.per_source_ts,
+                    step_seconds=self.step_seconds,
                 )
-                .withColumn("day", _day("chunk_start"))
+                fine = rollup(points, fine_tier).withColumn("day", _day("window_start")).persist()
+                cached.append(fine)
+
+            frames = [] if fine is None else [fine.withColumn("tier", F.lit(fine_tier))]
+            coarse = [t for t in self.tiers[1:] if t in pending]
+            if coarse:
+                frames.append(self._coarse(fine, coarse, None if fresh else pending))
+            all_tiers = reduce(DataFrame.unionByName, frames).persist()
+            cached.append(all_tiers)
+            sketches = self._sketch_frames(raw, points, pending, fresh)
+            cached += [f for _k, _t, f in sketches]
+
+            # Phase 3 — land and seal (shared with seal_from_fine)
+            return self._seal(
+                all_tiers,
+                {t: pending[t][0] for t in self.tiers if t in pending},
+                lambda src: [f"raw/source={src}"],
+                run_id,
+                fail_after_tier=fail_after_tier,
+                sketches=sketches,
             )
-
-            self.io.write_partitioned(all_tiers, "tiers", ["tier", "day"])
-            all_chunks = all_chunks.persist()
-            cached.append(all_chunks)
-            self.io.write_partitioned(all_chunks, "chunks", ["tier", "day"])
-
-            # sketch tables: one clustered write per kind covering every
-            # pending tier, landing BEFORE the lineage seals — a crash
-            # here leaves the day's unit unsealed, so the next run
-            # rewrites the same partitions (same idempotence as tiers)
-            for k in sk_kinds:
-                all_sk = None
-                for kk, t, f in sk_plans:
-                    if kk != k:
-                        continue
-                    t_f = f.withColumn("tier", F.lit(t))
-                    all_sk = t_f if all_sk is None else all_sk.unionByName(t_f)
-                if all_sk is not None:
-                    self.io.write_partitioned(all_sk, f"sk_{k}", ["tier", "day"])
-
-            # Phase 3 — lineage: one aggregate over the cached chunk rows,
-            # appended per tier IN TIER ORDER (a crash between appends
-            # leaves earlier tiers sealed, later ones pending — the same
-            # resume semantics as per-tier writes).
-            lin = (
-                all_chunks.groupBy("tier", "source", "chunk_start")
-                .agg(F.count("*").alias("row_count"), F.sum("n_points").alias("point_count"))
-                .collect()
-            )
-            for tier, _tdf, pset in tier_plans:
-                rows = [r for r in lin if r["tier"] == tier]
-                if pset is not None:
-                    # whole-day recompute may cover already-sealed sources
-                    # of that day — seal only the actually-pending units
-                    rows = [
-                        r for r in rows if (r["source"], _day_str(r["chunk_start"])) in pset
-                    ]
-                self.io.append_lineage(
-                    [
-                        {
-                            "tier": tier,
-                            "source": r["source"],
-                            "window_start": r["chunk_start"],
-                            "input_partitions": [f"raw/source={r['source']}"],
-                            "row_count": r["row_count"],
-                            "point_count": r["point_count"],
-                            "sealed": True,
-                            "run_id": run_id,
-                        }
-                        for r in rows
-                    ]
-                )
-                stats[tier] = len({(r["source"], _day_str(r["chunk_start"])) for r in rows})
-                if fail_after_tier == tier:
-                    raise RuntimeError(f"injected failure after tier {tier}")
         finally:
             for df in cached:
                 df.unpersist()
+
+    def _days(self, days: set) -> DataFrame:
+        return self.spark.createDataFrame([(d,) for d in sorted(days)], "day string")
+
+    def _stored(self, table: str) -> DataFrame | None:
+        return self.io.read(table) if self.io.exists(table) else None
+
+    def _coarse(self, fine: DataFrame | None, coarse: list[str], pending) -> DataFrame:
+        """Every pending coarse tier in one aggregate over the finest tier
+        (``cascade_tiers``), with ``tier`` and ``day`` columns.
+
+        ``pending`` is None on the fresh path (``fine`` covers every day
+        to seal).  On resume the cascade input for the coarse pending
+        days is (stored fine rows outside the fine-pending days) ∪
+        (freshly computed fine rows) — storage alone is stale until the
+        writes land — and each tier is then cut to its own pending days.
+        """
+        fine_tier = self.tiers[0]
+        if pending is not None:
+            days = self._days({d for t in coarse for _, d in pending[t][0]})
+            src = self._stored(f"tiers/tier={fine_tier}")
+            if src is not None:
+                src = _prune(src, days)
+                if fine is not None:
+                    src = src.join(F.broadcast(pending[fine_tier][1]), ["day"], "left_anti")
+            if fine is not None:
+                fine = _prune(fine, days)
+                src = fine if src is None else src.unionByName(fine)
+            if src is None:
+                raise RuntimeError(
+                    f"cannot cascade {coarse}: no {fine_tier} rows are stored or pending "
+                    "for their days"
+                )
+            fine = src
+        out = cascade_tiers(fine, fine_tier, coarse).withColumn("day", _day("window_start"))
+        if pending is not None:
+            want = self.spark.createDataFrame(
+                sorted({(t, d) for t in coarse for _, d in pending[t][0]}),
+                "tier string, day string",
+            )
+            out = out.join(F.broadcast(want), ["tier", "day"], "left_semi")
+        return out
+
+    def _sketch_frames(self, raw, points, pending, fresh) -> list[tuple[str, str, DataFrame]]:
+        """Cached (kind, tier, rows) for every enabled sketch kind and
+        pending tier.  Sketch tiers keep the chained MERGE cascade and
+        mirror the scalar resume discipline: the input of tier i is
+        (stored tier i-1 outside its pending days) ∪ (fresh tier i-1)."""
+        out = []
+        for k in self.sketchset.enabled:
+            prev = None  # tier i-1 covering ALL days
+            for i, tier in enumerate(self.tiers):
+                if tier not in pending:
+                    prev = self._stored(f"sk_{k}/tier={tier}")
+                    continue
+                days = pending[tier][1]
+                if i == 0:
+                    cur = self.sketchset.rollup(points, tier, k)
+                elif prev is None:
+                    # sketches enabled on a store whose finer sketch
+                    # history doesn't exist (turned on mid-history, or
+                    # resume across the enable): build THIS tier directly
+                    # from raw points for its pending days — a sketch tier
+                    # is valid at any granularity, this just pays the scan
+                    # instead of the cheap merge
+                    pts = extract_points(
+                        _prune(raw, days),
+                        per_source=self.per_source_ts,
+                        step_seconds=self.step_seconds,
+                    )
+                    cur = self.sketchset.rollup(pts, tier, k)
+                else:
+                    cur = self.sketchset.cascade(
+                        k, _prune(prev, days).drop("day"), self.tiers[i - 1], tier
+                    )
+                cur = cur.withColumn("day", _day("window_start")).persist()
+                out.append((k, tier, cur))
+                stored = None if fresh else self._stored(f"sk_{k}/tier={tier}")
+                if stored is None:
+                    prev = cur
+                else:
+                    prev = stored.join(F.broadcast(days), ["day"], "left_anti").unionByName(cur)
+        return out
+
+    def _seal(
+        self,
+        all_tiers: DataFrame,
+        units: dict[str, set | None],
+        inputs: Callable[[str], list[str]],
+        run_id: str,
+        fail_after_tier: str | None = None,
+        sketches=(),
+    ) -> dict[str, int]:
+        """Land cached tier rows (``tier`` + ``day`` columns) and seal them.
+
+        ONE clustered write for all tier rows and ONE for all chunks:
+        partitionBy(tier, day) produces the tiers/tier=X/day=Y layout
+        (source stays a data column) — each partitioned write costs
+        seconds of commit/listing overhead regardless of size.  Gorilla
+        compression runs as one pass over the union (tier joins the chunk
+        key).  Sketch tables land next, BEFORE the lineage seals — a
+        crash here leaves the day's units unsealed, so the next run
+        rewrites the same partitions.  Lineage is one aggregate over the
+        cached chunks, appended per tier IN TIER ORDER (``units``' order):
+        a crash between appends leaves earlier tiers sealed and later ones
+        pending.  ``units[tier]`` None seals every unit of the tier, else
+        only those (source, day) units — a whole-day recompute may cover
+        already-sealed sources.  ``inputs(source)`` names the lineage
+        input partitions.  Returns {tier: sealed (source, day) units}.
+        """
+        stats: dict[str, int] = {t: 0 for t in self.tiers}
+        chunks = (
+            compress_tier(
+                all_tiers.drop("day"), self.tiers[0], chunk_span="1d",
+                value_cols=self.chunk_value_cols, extra_keys=["tier"],
+            )
+            .withColumn("day", _day("chunk_start"))
+            .persist()
+        )
+        try:
+            self.io.write_partitioned(all_tiers, "tiers", ["tier", "day"])
+            self.io.write_partitioned(chunks, "chunks", ["tier", "day"])
+            for k in self.sketchset.enabled:
+                frames = [f.withColumn("tier", F.lit(t)) for kk, t, f in sketches if kk == k]
+                if frames:
+                    all_sk = reduce(DataFrame.unionByName, frames)
+                    self.io.write_partitioned(all_sk, f"sk_{k}", ["tier", "day"])
+            lin = (
+                chunks.groupBy("tier", "source", "chunk_start")
+                .agg(F.count("*").alias("row_count"), F.sum("n_points").alias("point_count"))
+                .collect()
+            )
+        finally:
+            chunks.unpersist()
+        for tier, pset in units.items():
+            rows = [r for r in lin if r["tier"] == tier]
+            if pset is not None:
+                rows = [r for r in rows if (r["source"], _day_str(r["chunk_start"])) in pset]
+            self.io.append_lineage(
+                [
+                    {
+                        "tier": tier,
+                        "source": r["source"],
+                        "window_start": r["chunk_start"],
+                        "input_partitions": inputs(r["source"]),
+                        "row_count": r["row_count"],
+                        "point_count": r["point_count"],
+                        "sealed": True,
+                        "run_id": run_id,
+                    }
+                    for r in rows
+                ]
+            )
+            stats[tier] = len({(r["source"], _day_str(r["chunk_start"])) for r in rows})
+            if fail_after_tier == tier:
+                raise RuntimeError(f"injected failure after tier {tier}")
         return stats
 
     def seal_from_fine(self, fine: DataFrame, run_id: str | None = None) -> dict[str, int]:
         """Archive externally-computed finest-tier rows (the daemon's
-        closed days, ``Daemon.archive_closed_days``): cascade to every
-        configured tier, land all tier rows in one clustered write and
-        all Gorilla chunks in a second (the run() phase-2 shape), then
-        append lineage seals in tier order.
+        closed days, ``Daemon.archive_closed_days``): every coarser
+        configured tier in one aggregate over them, then the shared
+        ``_seal`` (one tier write, one chunk write, lineage in tier
+        order).
 
         ``fine`` must carry finest-tier rollup rows (KEY + window_start
         + the aggregate columns).  Idempotent like run(): a replay
@@ -412,65 +431,18 @@ class RollupJob:
         {tier: sealed (source, day) units}.
         """
         run_id = run_id or uuid.uuid4().hex[:12]
-        stats: dict[str, int] = {t: 0 for t in self.tiers}
-        cached: list[DataFrame] = []
+        fine = fine.withColumn("day", _day("window_start")).persist()
+        all_tiers = fine.withColumn("tier", F.lit(self.tiers[0]))
+        if len(self.tiers) > 1:
+            all_tiers = all_tiers.unionByName(self._coarse(fine, self.tiers[1:], None))
+        all_tiers = all_tiers.persist()
         try:
-            prev = fine.withColumn("day", _day("window_start")).persist()
-            cached.append(prev)
-            frames: list[tuple[str, DataFrame]] = [(self.tiers[0], prev)]
-            for i, tier in enumerate(self.tiers[1:], start=1):
-                cur = (
-                    cascade(prev.drop("day"), self.tiers[i - 1], tier)
-                    .withColumn("day", _day("window_start"))
-                    .persist()
-                )
-                cached.append(cur)
-                frames.append((tier, cur))
-                prev = cur
-
-            all_tiers = None
-            for tier, tdf, in frames:
-                t = tdf.withColumn("tier", F.lit(tier))
-                all_tiers = t if all_tiers is None else all_tiers.unionByName(t)
-            all_chunks = (
-                compress_tier(
-                    all_tiers.drop("day"), self.tiers[0], chunk_span="1d",
-                    value_cols=self.chunk_value_cols, extra_keys=["tier"],
-                )
-                .withColumn("day", _day("chunk_start"))
-                .persist()
+            return self._seal(
+                all_tiers, {t: None for t in self.tiers}, lambda _src: ["daemon-live-store"], run_id
             )
-            cached.append(all_chunks)
-            self.io.write_partitioned(all_tiers, "tiers", ["tier", "day"])
-            self.io.write_partitioned(all_chunks, "chunks", ["tier", "day"])
-
-            lin = (
-                all_chunks.groupBy("tier", "source", "chunk_start")
-                .agg(F.count("*").alias("row_count"), F.sum("n_points").alias("point_count"))
-                .collect()
-            )
-            for tier, _tdf in frames:
-                rows = [r for r in lin if r["tier"] == tier]
-                self.io.append_lineage(
-                    [
-                        {
-                            "tier": tier,
-                            "source": r["source"],
-                            "window_start": r["chunk_start"],
-                            "input_partitions": ["daemon-live-store"],
-                            "row_count": r["row_count"],
-                            "point_count": r["point_count"],
-                            "sealed": True,
-                            "run_id": run_id,
-                        }
-                        for r in rows
-                    ]
-                )
-                stats[tier] = len({(r["source"], _day_str(r["chunk_start"])) for r in rows})
         finally:
-            for df in cached:
-                df.unpersist()
-        return stats
+            all_tiers.unpersist()
+            fine.unpersist()
 
     # --------------------------------------------------------- retention
     def retention(self) -> list[tuple[str, str]]:

@@ -9,6 +9,7 @@ from logtrics_spark.operators.extract import extract_points, extract_points_arro
 from logtrics_spark.operators.rollup import (
     TIERS,
     cascade,
+    cascade_tiers,
     rollup,
     rollup_all_tiers,
     timer_percentiles,
@@ -152,6 +153,66 @@ def test_cascade_equals_direct(spark, tok_df):
     _assert_frame_equal(direct_1h, cascaded_1h)
     direct_1d = rollup(pts, "1d").toPandas()
     _assert_frame_equal(direct_1d, tiers["1d"].toPandas())
+
+
+def _daemon_fine_rows(spark):
+    """Finest-tier rows shaped like the daemon's live store: api Engine
+    points (counter inc/dec, gauge, timer, meter) rolled to 1m, written
+    as two snapshot versions, resolved latest-wins (resolve_latest's
+    column order)."""
+    from pyspark.sql import functions as F
+
+    from logtrics_spark.api import Engine
+    from logtrics_spark.plans.daemon import resolve_latest
+
+    rng = np.random.default_rng(3)
+    n = 3000
+    vs, ws = rng.integers(-99, 99, n), rng.integers(0, 9, n)
+    pdf = pd.DataFrame(
+        {
+            "source": rng.choice(["web", "db"], n),
+            "line": [f"v={v} w={w}" for v, w in zip(vs, ws)],
+            "ts": pd.Timestamp("2024-01-01 22:00")
+            + pd.to_timedelta(np.sort(rng.integers(0, 4 * 3600, n)), unit="s"),
+        }
+    )
+
+    def handler(caps, m):
+        v = caps["v"].astype("int64")
+        m.counter("up").inc(v.clip(lower=0))
+        m.counter("down").dec(v.clip(upper=0).abs())
+        m.gauge("g").update(v)
+        m.timer("t").update(caps["w"].astype("int64"))
+        m.meter("hits").mark(1)
+
+    eng = Engine()
+    eng.rule("v", r"v=(?P<v>-?\d+) w=(?P<w>\d+)", handler)
+    fine = rollup(eng.run(spark.createDataFrame(pdf)), "1m")
+    stale = fine.withColumn("sum", F.col("sum") + 1).withColumn("flush_seq", F.lit(1))
+    return resolve_latest(stale.unionByName(fine.withColumn("flush_seq", F.lit(2))))
+
+
+def test_cascade_tiers_bit_identical_to_chain(spark, tok_df):
+    """One aggregate for every coarse tier == the chained 1m->5m->1h->1d
+    cascade, bit for bit on every column, for token-table tiers and for
+    daemon-shaped fine rows."""
+    for fine in (rollup(extract_points(tok_df), "1m"), _daemon_fine_rows(spark)):
+        fine = fine.localCheckpoint()
+        one = cascade_tiers(fine, "1m", ["5m", "1h", "1d"]).localCheckpoint()
+        prev = fine
+        for fine_t, tier in (("1m", "5m"), ("5m", "1h"), ("1h", "1d")):
+            prev = cascade(prev, fine_t, tier)
+            want = _norm(prev.toPandas())
+            got = _norm(one.where(one.tier == tier).drop("tier").toPandas())
+            assert list(got.columns) == list(want.columns) and len(got) == len(want) > 0
+            for c in want.columns:
+                a, b = want[c].to_numpy(), got[c].to_numpy()
+                if a.dtype.kind == "f":
+                    assert np.array_equal(a.view(np.uint64), b.view(np.uint64)), (tier, c)
+                else:
+                    assert (a == b).all(), (tier, c)
+    with pytest.raises(ValueError, match="not a multiple"):
+        cascade_tiers(fine, "1h", ["1d", "5m"])
 
 
 def test_timer_percentiles_exact(spark, tok_df, tok_pdf):

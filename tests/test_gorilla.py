@@ -226,3 +226,64 @@ def test_range_read_prunes_chunks_and_matches_filter(spark, tmp_path):
     assert decompress_chunks_range(chunks, ts_from=lo).count() == decompress_chunks(
         chunks
     ).where(F.col("window_start") >= F.lit(lo).cast("timestamp")).count()
+
+
+def test_compress_tier_arrow_batches_match_per_group_chunks(spark):
+    """The one-pass Arrow encode equals per-group compress_chunk output
+    byte for byte, with a tiny prime Arrow batch size so groups straddle
+    batches (incl. single-point groups and one group far larger than a
+    batch), and an empty input keeps the chunk schema."""
+    import pandas as pd
+
+    from logtrics_spark.operators.gorilla import CHUNK_SCHEMA, DEFAULT_VALUE_COLS
+
+    rng = np.random.default_rng(7)
+    t0 = pd.Timestamp("2024-01-01")
+    frames = []
+    # (tier, source, metric, n windows): skewed sizes, singletons, and a
+    # series crossing a chunk (1h) boundary
+    for tier, src, metric, n in [
+        ("1m", "web", "a", 1), ("1m", "web", "b", 2), ("1m", "api", "a", 97),
+        ("5m", "web", "a", 1), ("5m", "db", "c", 13), ("1m", "db", "c", 1),
+    ]:
+        step = 60 if tier == "1m" else 300
+        ws = t0 + pd.to_timedelta(rng.permutation(n) * step + 30 * 60, unit="s")
+        frames.append(
+            pd.DataFrame(
+                {
+                    "tier": tier, "source": src, "metric": metric, "kind": "timer",
+                    "window_start": ws,
+                    "cnt": rng.integers(1, 9, n), "sum": rng.integers(-50, 50, n),
+                    "min": rng.integers(-50, 0, n), "max": rng.integers(0, 50, n),
+                    "avg": rng.normal(size=n), "last": rng.integers(-9, 9, n),
+                }
+            )
+        )
+    pdf = pd.concat(frames, ignore_index=True)
+
+    want = {}
+    pdf["chunk_start"] = pdf["window_start"].dt.floor("1h")
+    for key, g in pdf.groupby(["tier", "source", "metric", "kind", "chunk_start"]):
+        g = g.sort_values("window_start")
+        ts = g["window_start"].astype("int64").to_numpy() // 10**9
+        chunk = compress_chunk(ts, [g[c].to_numpy(dtype="float64") for c in DEFAULT_VALUE_COLS])
+        want[key] = (len(g), g["window_start"].min(), g["window_start"].max(), chunk)
+    assert max(n for n, *_ in want.values()) > 7 * 3
+
+    df = spark.createDataFrame(pdf.drop(columns="chunk_start"))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = compress_tier(df, "1m", chunk_span="1h", extra_keys=["tier"]).collect()
+    finally:
+        spark.conf.set(conf, old)
+    keys = ["tier", "source", "metric", "kind", "chunk_start"]
+    got = {
+        tuple(r[k] for k in keys): (r["n_points"], r["min_ts"], r["max_ts"], bytes(r["chunk"]))
+        for r in got
+    }
+    assert got == want
+
+    empty = compress_tier(df.limit(0).drop("tier"), "1m")
+    assert empty.schema == CHUNK_SCHEMA and empty.count() == 0

@@ -80,6 +80,41 @@ def test_kill_and_resume_identical(spark, tok, tmp_path):
         )
 
 
+def test_resume_without_fine_rows_raises(spark, tmp_path):
+    """Coarse tiers pending while the sealed 1m table is gone (dropped
+    between the crash and the resume): the run raises instead of
+    sealing coarse tiers from nothing."""
+    import shutil
+
+    job = RollupJob(spark, str(tmp_path / "s"), step_seconds=STEP)
+    job.ingest_raw(gen_tokseq(spark, 300, partitions=1))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        job.run(run_id="r1", fail_after_tier="1m")
+    shutil.rmtree(job.io.path("tiers/tier=1m"))
+    with pytest.raises(RuntimeError, match="no 1m rows are stored or pending"):
+        job.run(run_id="r2")
+
+
+def test_seal_from_fine_matches_run(spark, tok, tmp_path):
+    """run() and seal_from_fine() share one seal path: sealing a run
+    store's 1m rows elsewhere reproduces its tiers/ rows and chunks/
+    bytes for every tier, and seals the same units."""
+    run = _run_clean(spark, tok, str(tmp_path / "run"))
+    sealed = RollupJob(spark, str(tmp_path / "fine"))
+    stats = sealed.seal_from_fine(run.read_tier("1m"), run_id="f")
+    units = run.io.sealed_units().groupBy("tier").count().collect()
+    assert stats == {r["tier"]: r["count"] for r in units}
+    for table, key in (("tiers", KEY), ("chunks", ["source", "metric", "kind", "chunk_start"])):
+        a, b = (
+            j.io.read(table).toPandas().sort_values(["tier", *key]).reset_index(drop=True)
+            for j in (run, sealed)
+        )
+        assert set(a["tier"]) == set(run.tiers)
+        if table == "chunks":
+            a["chunk"], b["chunk"] = a["chunk"].map(bytes), b["chunk"].map(bytes)
+        assert a.equals(b[a.columns]), table
+
+
 def test_retention_drops_only_fully_sealed(spark, tok, tmp_path):
     job = _run_clean(spark, tok, str(tmp_path / "store"))
     raw_before = set(job.io.list_partitions("raw", "day"))

@@ -58,10 +58,12 @@ def test_gapfill_join_is_not_cartesian(spark, raw):
 
 def test_no_python_udfs_in_native_path(spark, raw):
     """The hot path (extract native + rollup + cascade) must stay JVM-side:
-    no BatchEvalPython / ArrowEvalPython / MapInPandas nodes."""
+    no BatchEvalPython / ArrowEvalPython / MapInPandas / MapInArrow nodes."""
     tiers = cascade(rollup(extract_points(raw), "1m"), "1m", "5m")
     plan = _plan(tiers)
-    for marker in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"]:
+    for marker in [
+        "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+    ]:
         assert marker not in plan, marker
 
 
@@ -71,7 +73,7 @@ def test_graphite_lines_stay_jvm_side(spark, raw):
     from logtrics_spark.sinks.graphite import to_graphite_lines
 
     plan = _plan(to_graphite_lines(rollup(extract_points(raw), "1h"), "1h"))
-    for marker in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
+    for marker in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"]:
         assert marker not in plan, marker
     assert "format_string" in plan.lower() or "Generate" in plan
 

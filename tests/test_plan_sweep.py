@@ -30,7 +30,8 @@ PY_ALLOWED = {
     # chunked numpy matmul per (band, bucket) group — batch-vectorized
     # grouped-map, replaces the 14M-pair enumerate+dedup+interpreted-dot)
     "embedding_dupes": {"ArrowEvalPython", "FlatMapGroupsInPandas"},
-    "gorilla_roundtrip": {"FlatMapGroupsInPandas", "MapInPandas"},  # codec
+    # codec: mapInArrow encode per partition + mapInPandas decode
+    "gorilla_roundtrip": {"MapInArrow", "MapInPandas"},
     "multimodal_features": {"MapInPandas"},  # decode seam
     "holtwinters_1h": {"FlatMapGroupsInPandas"},  # seasonal fold
     "lttb_1m": {"FlatMapGroupsInPandas"},  # bucket selection fold
@@ -47,6 +48,7 @@ PY_MARKERS = (
     "ArrowEvalPython",
     "FlatMapGroupsInPandas",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandasWithState",
 )
 

@@ -365,6 +365,18 @@ def test_language_id_known_samples(spark):
     assert list(got["lang"]) == ["en", "de", "fr", "und"]
 
 
+def test_language_keys_above_und_sentinel_raise():
+    """The 'und' fallback needs every language key to sort below 'und';
+    the import-time check raises (not an assert, so python -O keeps it)."""
+    from logtrics_spark.operators.text import STOPWORDS, _check_language_keys
+
+    _check_language_keys(STOPWORDS)
+    with pytest.raises(ValueError, match=r"\['vi', 'zh'\].*'und' sentinel"):
+        _check_language_keys({**STOPWORDS, "zh": ["的"], "vi": ["và"]})
+    with pytest.raises(ValueError, match="und"):
+        _check_language_keys({"und": []})
+
+
 # ------------------------------------------------------------ multimodal
 def test_multimodal_features(spark):
     from logtrics_spark.operators.multimodal import extract_features, gen_media

@@ -18,6 +18,9 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+# Python plan nodes counted by --all ("ArrowEval" covers ArrowEvalPython)
+PY_NODES = ("BatchEvalPython", "ArrowEval", "FlatMapGroupsInPandas", "MapInPandas", "MapInArrow")
+
 
 def main(argv: list[str]) -> int:
     import __spark_entry__ as entrymod
@@ -48,10 +51,10 @@ def main(argv: list[str]) -> int:
                 # counts are meaningful here; use the single-query mode
                 # (explain("formatted")) for codegen spans.
                 scan = plan.count("FileScan") + plan.count("BatchScan")
+                py = sum(plan.count(m) for m in PY_NODES)
                 print(
                     f"{name:24s} exchanges={plan.count('Exchange'):2d} "
-                    f"scans={scan:2d} "
-                    f"python={plan.count('BatchEvalPython') + plan.count('ArrowEval') + plan.count('FlatMapGroupsInPandas') + plan.count('MapInPandas'):2d}"
+                    f"scans={scan:2d} python={py:2d}"
                 )
             return 0
         if target not in qs:
