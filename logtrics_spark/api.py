@@ -27,7 +27,10 @@ points at once.
 from __future__ import annotations
 
 import logging
+import os
 import re
+import warnings
+import zipimport
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
@@ -42,6 +45,8 @@ from logtrics_spark.operators.extract import POINT_SCHEMA
 # counter emitted once per (failing rule, batch); lets operators alert on
 # broken rules instead of watching points silently vanish
 ERROR_METRIC_PREFIX = "_rule_errors"
+
+_MATCH_GROUPS_WARNING = "This pattern is interpreted as a regular expression, and has match groups"
 
 
 class _Instrument:
@@ -149,6 +154,109 @@ class Rule:
             )
 
 
+def _pin_spark_archives() -> None:
+    """Keep this Python worker from re-reading Spark's own archives
+    before every task.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of each task (``setup_spark_files``).  On Python 3.11 that makes every
+    cached ``zipimporter`` re-read its archive's directory: one importer
+    per package imported from ``pyspark.zip``, plus the spark-core jar
+    that Spark also puts on the worker's path.  That costs 0.12-0.2 s per
+    task on a 4-core VM, more than the engine's own work on a
+    10,000-line batch.  Those archives belong to the Spark install and do
+    not change under a running worker, so their importers keep their
+    directory.  Any other archive, such as one added with ``addPyFile``,
+    is still re-read.  Idempotent; workers are reused across tasks, so
+    only a worker's first task pays.
+    """
+    if getattr(zipimport.zipimporter, "_spark_archives_pinned", False):
+        return
+    rescan = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self) -> None:
+        name = os.path.basename(self.archive)
+        if not (name == "pyspark.zip" or name.startswith("py4j-") or name.endswith(".jar")):
+            rescan(self)
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    zipimport.zipimporter._spark_archives_pinned = True
+
+
+def apply_rules(
+    pdf: pd.DataFrame, rules: list[tuple[str, re.Pattern, Handler]]
+) -> pd.DataFrame | None:
+    """One batch of lines(source, line, ts) -> points, or None if no
+    rule produced a point.  The per-batch body of ``Engine.run``.
+
+    Per rule: regex gate (silent skip of non-matches), first-match
+    named-capture projection, handler call.  A failing rule drops its
+    points for the batch and emits one ``_rule_errors.<rule>`` counter
+    point instead (script.go:59-62's log-and-continue).
+    """
+    log = logging.getLogger("logtrics_spark.engine")
+    out_frames = []
+    lines = pdf["line"].astype("string")
+    for name, pat, handler in rules:
+        # buffer this rule's frames locally and publish only
+        # after the handler completes: a failure mid-flush
+        # must not ship a partial subset of the rule's points
+        rule_frames: list[pd.DataFrame] = []
+        try:
+            # gate (parser.go:41-43): silent skip of non-matches.  pandas
+            # warns once per worker per rule that the pattern has groups
+            # (into daemon stderr); they are the point, so it is silenced
+            with warnings.catch_warnings():
+                warnings.filterwarnings("ignore", _MATCH_GROUPS_WARNING, UserWarning)
+                mask = lines.str.contains(pat, regex=True, na=False)
+            if not mask.any():
+                continue
+            sub = pdf[mask]
+            # first-match named-capture projection (parser.go:45-56);
+            # pd.str.extract == FindStringSubmatch: first match,
+            # we then keep named groups only
+            caps = sub["line"].astype("string").str.extract(pat)
+            caps = caps[[c for c in caps.columns if isinstance(c, str)]]
+            # metadata projection (logtrics.go:190-196)
+            caps = caps.assign(_source=sub["source"], _line=sub["line"])
+            sink = Metrics(caps.index, rule_name=name)
+            handler(caps, sink)
+            for metric, kind, values in sink._points:
+                rule_frames.append(
+                    pd.DataFrame(
+                        {
+                            "source": sub["source"],
+                            "metric": metric,
+                            "kind": kind,
+                            "ts": sub["ts"],
+                            "value": values.astype("int64"),
+                        }
+                    )
+                )
+        except Exception:
+            # per-rule isolation (script.go:59-62): a broken
+            # rule must not kill sibling rules or the job —
+            # but unlike the round-1 silent continue, the
+            # failure is logged (the reference logs handler
+            # errors too) and surfaced as a counter point so
+            # a dashboard shows the rule bleeding out
+            log.exception("rule %r failed; dropping its points for this batch", name)
+            out_frames.append(
+                pd.DataFrame(
+                    {
+                        "source": ["_engine"],
+                        "metric": [f"{ERROR_METRIC_PREFIX}.{name}"],
+                        "kind": ["counter"],
+                        "ts": [pdf["ts"].iloc[0]],
+                        "value": [1],
+                    }
+                )
+            )
+            continue
+        out_frames.extend(rule_frames)
+    return pd.concat(out_frames, ignore_index=True) if out_frames else None
+
+
 class Engine:
     """Holds rules; ``run`` turns a lines DataFrame into metric points."""
 
@@ -169,14 +277,13 @@ class Engine:
     ) -> DataFrame:
         """lines(source, line, ts) -> points(source, metric, kind, ts, value).
 
-        One Arrow pass for all rules; per-rule failures are isolated
-        (errors drop that rule's points for the batch, mirroring
-        script.go:59-62's log-and-continue).
+        One Arrow pass for all rules (``apply_rules`` per batch);
+        per-rule failures are isolated (errors drop that rule's points
+        for the batch, mirroring script.go:59-62's log-and-continue).
         """
         if not self.rules:
             raise ValueError("no rules registered")
-        rules = [(r.name, r.pattern) for r in self.rules]
-        handlers = {r.name: r.handler for r in self.rules}
+        rules = [(r.name, r.pattern, r.handler) for r in self.rules]
 
         slim = df.select(
             F.col(source_col).alias("source"),
@@ -185,65 +292,11 @@ class Engine:
         )
 
         def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            compiled = [(name, re.compile(pat)) for name, pat in rules]
-            log = logging.getLogger("logtrics_spark.engine")
+            _pin_spark_archives()
+            compiled = [(name, re.compile(pat), h) for name, pat, h in rules]
             for pdf in batches:
-                out_frames = []
-                lines = pdf["line"].astype("string")
-                for name, pat in compiled:
-                    # buffer this rule's frames locally and publish only
-                    # after the handler completes: a failure mid-flush
-                    # must not ship a partial subset of the rule's points
-                    rule_frames: list[pd.DataFrame] = []
-                    try:
-                        # gate (parser.go:41-43): silent skip of non-matches
-                        mask = lines.str.contains(pat, regex=True, na=False)
-                        if not mask.any():
-                            continue
-                        sub = pdf[mask]
-                        # first-match named-capture projection (parser.go:45-56);
-                        # pd.str.extract == FindStringSubmatch: first match,
-                        # we then keep named groups only
-                        caps = sub["line"].astype("string").str.extract(pat)
-                        caps = caps[[c for c in caps.columns if isinstance(c, str)]]
-                        # metadata projection (logtrics.go:190-196)
-                        caps = caps.assign(_source=sub["source"], _line=sub["line"])
-                        sink = Metrics(caps.index, rule_name=name)
-                        handlers[name](caps, sink)
-                        for metric, kind, values in sink._points:
-                            rule_frames.append(
-                                pd.DataFrame(
-                                    {
-                                        "source": sub["source"],
-                                        "metric": metric,
-                                        "kind": kind,
-                                        "ts": sub["ts"],
-                                        "value": values.astype("int64"),
-                                    }
-                                )
-                            )
-                    except Exception:
-                        # per-rule isolation (script.go:59-62): a broken
-                        # rule must not kill sibling rules or the job —
-                        # but unlike the round-1 silent continue, the
-                        # failure is logged (the reference logs handler
-                        # errors too) and surfaced as a counter point so
-                        # a dashboard shows the rule bleeding out
-                        log.exception("rule %r failed; dropping its points for this batch", name)
-                        out_frames.append(
-                            pd.DataFrame(
-                                {
-                                    "source": ["_engine"],
-                                    "metric": [f"{ERROR_METRIC_PREFIX}.{name}"],
-                                    "kind": ["counter"],
-                                    "ts": [pdf["ts"].iloc[0]],
-                                    "value": [1],
-                                }
-                            )
-                        )
-                        continue
-                    out_frames.extend(rule_frames)
-                if out_frames:
-                    yield pd.concat(out_frames, ignore_index=True)
+                out = apply_rules(pdf, compiled)
+                if out is not None:
+                    yield out
 
         return slim.mapInPandas(process, POINT_SCHEMA)

@@ -322,54 +322,72 @@ class Daemon:
 
     # ------------------------------------------------------------- sink
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Tier rows -> store append + Graphite emission (one flush).
+        """Streaming ``foreachBatch`` flush: tier rows -> ``_flush``.
 
         The frame is persisted for the flush: up to four actions consume
-        it (isEmpty probe, store write, debug snapshot, TCP emit), and an
-        unpersisted foreachBatch frame re-runs the micro-batch
+        it (isEmpty probe, store write, debug snapshot, Graphite send),
+        and an unpersisted foreachBatch frame re-runs the micro-batch
         aggregation per action.
         """
         batch_df = batch_df.persist()
         try:
             if batch_df.isEmpty():
                 return
-            from logtrics_spark.plans.pipeline import _day
-
-            # store writes serialize across concurrently-flushing
-            # streaming queries so compaction's read-then-rewrite can
-            # never race an append into a lost update.  The flush_seq is
-            # stamped INSIDE the lock: a compact() that beat this flush
-            # to the lock restamps the pre-flush snapshot with a seq
-            # drawn earlier than ours, so our rows still win latest-wins
-            # (stamping before the lock inverted that ordering).
-            with self._store_guard():
-                out = (
-                    batch_df.withColumn("day", _day("window_start"))
-                    .withColumn("tier", F.lit(self.tier))
-                    .withColumn("flush_seq", F.lit(self._next_flush_seq()))
-                )
-                self.io.write_partitioned(
-                    out, "tiers", ["tier", "day"], overwrite_dynamic=False
-                )
-                self._flushes_since_compact += 1
-                due = (
-                    self.compact_every > 0
-                    and self._flushes_since_compact >= self.compact_every
-                )
-            if due:
-                self.compact()
-            g = self.conf.get("graphite", {})
-            lines = to_graphite_lines(batch_df, self.tier, prefix=g.get("prefix", "logtrics"))
-            if g.get("debug"):  # K3: log the registry snapshot per flush
-                for r in lines.limit(50).collect():
-                    logger.debug("graphite batch=%s %s", batch_id, r["line"])
-            host, port = g.get("host"), g.get("port")
-            if host and port:
-                send_graphite_tcp(lines, str(host), int(port))
-            if self._prom_enabled:
-                self.refresh_prometheus()
+            self._flush(batch_df, batch_id)
         finally:
             batch_df.unpersist()
+
+    def _flush(self, rows: DataFrame, batch_id: int) -> None:
+        """One flush of non-empty, materialized tier rows: store append,
+        then Graphite lines, then the Prometheus refresh.
+
+        A Graphite outage (any ``OSError`` from the send) is logged and
+        skipped: the rows are already in the store, and the next flush
+        re-sends every changed window's snapshot — the go-metrics-graphite
+        reporter likewise logs a failed flush and retries on the next
+        tick.  Raising here would end a streaming query.
+        """
+        from logtrics_spark.plans.pipeline import _day
+
+        # store writes serialize across concurrently-flushing
+        # streaming queries so compaction's read-then-rewrite can
+        # never race an append into a lost update.  The flush_seq is
+        # stamped INSIDE the lock: a compact() that beat this flush
+        # to the lock restamps the pre-flush snapshot with a seq
+        # drawn earlier than ours, so our rows still win latest-wins
+        # (stamping before the lock inverted that ordering).
+        with self._store_guard():
+            out = (
+                rows.withColumn("day", _day("window_start"))
+                .withColumn("tier", F.lit(self.tier))
+                .withColumn("flush_seq", F.lit(self._next_flush_seq()))
+            )
+            self.io.write_partitioned(
+                out, "tiers", ["tier", "day"], overwrite_dynamic=False
+            )
+            self._flushes_since_compact += 1
+            due = (
+                self.compact_every > 0
+                and self._flushes_since_compact >= self.compact_every
+            )
+        if due:
+            self.compact()
+        g = self.conf.get("graphite", {})
+        lines = to_graphite_lines(rows, self.tier, prefix=g.get("prefix", "logtrics"))
+        if g.get("debug"):  # K3: log the registry snapshot per flush
+            for r in lines.limit(50).collect():
+                logger.debug("graphite batch=%s %s", batch_id, r["line"])
+        host, port = g.get("host"), g.get("port")
+        if host and port:
+            try:
+                send_graphite_tcp(lines, str(host), int(port))
+            except OSError as e:
+                logger.warning(
+                    "graphite flush to %s:%s failed (%s); the next flush re-sends",
+                    host, port, e,
+                )
+        if self._prom_enabled:
+            self.refresh_prometheus()
 
     def refresh_prometheus(self) -> str:
         """Re-render the exposition snapshot from the store's latest
@@ -448,18 +466,27 @@ class Daemon:
     # ------------------------------------------------ driver-side modes
     def process_lines(self, lines: DataFrame) -> int:
         """Batch drain path (console/udp): lines -> points -> tier rows
-        -> the same sink.  Returns the number of tier rows flushed.
+        -> the same flush as the streaming sink.  Returns the number of
+        tier rows flushed.
+
+        The rule engine (the drain's one Python stage) and the rollup
+        run under one lazy ``localCheckpoint`` of the tier rows, which
+        the one ``count`` materializes; the flush then reads the
+        checkpoint.  The points are checkpointed on their own only when
+        sketch tiers read them a second time.
 
         The udp collector drains CUMULATIVELY (all datagrams so far), so
         repeated drains are snapshot versions exactly like streaming
         update emissions — latest-wins resolves them (sketch rows from
         this path carry origin='drain' and resolve the same way).
         """
-        points = self.engine.run(lines).localCheckpoint()
-        tier_rows = rollup(points, self.tier).localCheckpoint()
+        points = self.engine.run(lines)
+        if self.sketch_kinds:
+            points = points.localCheckpoint()
+        tier_rows = rollup(points, self.tier).localCheckpoint(eager=False)
         n = tier_rows.count()
         if n:
-            self._sink(tier_rows, batch_id=-1)
+            self._flush(tier_rows, batch_id=-1)
             if self.sketch_kinds:
                 self._write_sketches(points, origin="drain")
         return n

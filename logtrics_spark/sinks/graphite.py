@@ -17,9 +17,11 @@ reference:
   (counter ``.count``, gauge ``.value``, meter ``.count``/``.mean-rate``
   (+ EWMA columns when present), timer ``.count``/``.min``/``.max``/
   ``.mean`` (+ percentile columns when present)).  Pure Catalyst string
-  expressions — usable at any scale, streamable through foreachBatch.
-- ``send_graphite_tcp``: ships a lines DataFrame to a Graphite host,
-  one socket per partition (executor-side, nothing through the driver).
+  expressions, built as ONE parsed SQL expression from ``_KIND_FIELDS``
+  — usable at any scale, streamable through foreachBatch.
+- ``send_graphite_tcp``: ships a lines DataFrame to a Graphite host
+  over one TCP connection, streaming the frame to the driver one
+  partition at a time (never the whole frame at once).
 - ``graphite_batch_sink``: foreachBatch adapter combining the two,
   honoring the ``graphite.debug`` config key (K3) by also logging the
   formatted registry snapshot per batch.
@@ -38,6 +40,7 @@ specific shortest-repr ambiguity) — this is also what makes the
 from __future__ import annotations
 
 import logging
+import socket
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -62,33 +65,45 @@ def _i(col) -> Column:
     return F.format_string("%d", c.cast("long"))
 
 
-# reporter field -> tier column, formatter; mirrors what the
+# SQL-text twins of _f / _i (same quantization, same casts, same double
+# literals) for the one parsed expression to_graphite_lines builds; the
+# Column forms above serve the Prometheus sink
+def _f_sql(v: str) -> str:
+    q6 = f"floor(CAST({v} AS DOUBLE) * 1000000.0D + 0.5D + 0.000001D) / 1000000.0D"
+    return f"format_string('%.6f', {q6})"
+
+
+def _i_sql(v: str) -> str:
+    return f"format_string('%d', CAST({v} AS BIGINT))"
+
+
+# reporter field -> tier column, SQL formatter; mirrors what the
 # go-metrics-graphite reporter emits per metric kind (graphite.go:86)
 _KIND_FIELDS: dict[str, list[tuple[str, str, object]]] = {
-    "counter": [("count", "cum_sum", _i), ("count", "sum", _i)],
-    "gauge": [("value", "last", _i)],
+    "counter": [("count", "cum_sum", _i_sql), ("count", "sum", _i_sql)],
+    "gauge": [("value", "last", _i_sql)],
     "meter": [
-        ("count", "cnt", _i),
-        ("mean-rate", "rate", _f),
-        ("one-minute", "rate_m1", _f),
-        ("five-minute", "rate_m5", _f),
-        ("fifteen-minute", "rate_m15", _f),
+        ("count", "cnt", _i_sql),
+        ("mean-rate", "rate", _f_sql),
+        ("one-minute", "rate_m1", _f_sql),
+        ("five-minute", "rate_m5", _f_sql),
+        ("fifteen-minute", "rate_m15", _f_sql),
     ],
     "timer": [
-        ("count", "cnt", _i),
-        ("min", "min", _f),
-        ("max", "max", _f),
-        ("mean", "avg", _f),
-        ("std-dev", "stddev", _f),
-        ("50-percentile", "p50", _f),
-        ("75-percentile", "p75", _f),
-        ("95-percentile", "p95", _f),
-        ("99-percentile", "p99", _f),
-        ("999-percentile", "p999", _f),
-        ("mean-rate", "rate", _f),
-        ("one-minute", "rate_m1", _f),
-        ("five-minute", "rate_m5", _f),
-        ("fifteen-minute", "rate_m15", _f),
+        ("count", "cnt", _i_sql),
+        ("min", "min", _f_sql),
+        ("max", "max", _f_sql),
+        ("mean", "avg", _f_sql),
+        ("std-dev", "stddev", _f_sql),
+        ("50-percentile", "p50", _f_sql),
+        ("75-percentile", "p75", _f_sql),
+        ("95-percentile", "p95", _f_sql),
+        ("99-percentile", "p99", _f_sql),
+        ("999-percentile", "p999", _f_sql),
+        ("mean-rate", "rate", _f_sql),
+        ("one-minute", "rate_m1", _f_sql),
+        ("five-minute", "rate_m5", _f_sql),
+        ("fifteen-minute", "rate_m15", _f_sql),
     ],
 }
 
@@ -99,6 +114,9 @@ _KIND_FIELDS: dict[str, list[tuple[str, str, object]]] = {
 _TIMER_DURATION_FIELDS = {"min", "max", "mean", "std-dev"} | {
     f"{p}-percentile" for p in (50, 75, 95, 99, 999)
 }
+
+# bytes buffered per sendall in send_graphite_tcp
+_SEND_BUFFER_BYTES = 64 * 1024
 
 
 def to_graphite_lines(
@@ -122,82 +140,91 @@ def to_graphite_lines(
     (DurationUnit=time.Second, graphite/graphite.go:71), so a pipeline
     whose timer values are nanoseconds passes 1e9; the default 1.0
     reports values in their stored unit.
+
+    The per-kind ``CASE kind WHEN ... THEN array(format_string(...))``
+    is one SQL expression parsed once, over a projection that carries
+    the metric path, the epoch string and the duration unit as columns.
+    The prefix and the unit enter as literal Columns, never as SQL
+    text; the SQL names only the fixed kinds, suffixes and columns of
+    ``_KIND_FIELDS``.
     """
     cols = set(tier_df.columns)
-    secs = tier_seconds(tier)
-    epoch = (F.unix_timestamp("window_start").cast("long") + F.lit(secs)).cast("long")
-    path = F.concat_ws(".", F.lit(prefix), F.col("source"), F.col("metric"))
-
-    per_kind = []
+    branches = []
+    used: list[str] = []
     for kind, fields in _KIND_FIELDS.items():
         seen = set()
-        exprs = []
+        items = []
         for suffix, col, fmt in fields:
             if col not in cols or suffix in seen:
                 continue
             seen.add(suffix)
+            if col not in used:
+                used.append(col)
             if kind == "gauge" and gauge_float:
-                fmt = _f
-            value: Column | str = col
+                fmt = _f_sql
+            value = f"`{col}`"
             if (
                 kind == "timer"
                 and timer_duration_unit != 1.0
                 and suffix in _TIMER_DURATION_FIELDS
             ):
-                value = F.col(col).cast("double") / F.lit(float(timer_duration_unit))
-            exprs.append(
-                F.format_string(
-                    "%s.%s %s %s",
-                    path,
-                    F.lit(suffix),
-                    fmt(value),
-                    F.format_string("%d", epoch),
-                )
-            )
-        if exprs:
-            per_kind.append((kind, F.array(*exprs)))
+                value = f"CAST({value} AS DOUBLE) / `unit`"
+            items.append(f"format_string('%s.%s %s %s', `path`, '{suffix}', {fmt(value)}, `epoch`)")
+        if items:
+            branches.append(f"WHEN '{kind}' THEN array({', '.join(items)})")
 
-    if not per_kind:
+    if not branches:
         # tier_df carries none of the mapped value columns: no field can
         # be emitted for ANY kind — return an empty lines frame rather
         # than exploding a null literal (which raises at analysis time)
         return tier_df.sparkSession.createDataFrame([], "line string")
-    lines_array = None
-    for kind, arr in per_kind:
-        lines_array = (
-            F.when(F.col("kind") == kind, arr)
-            if lines_array is None
-            else lines_array.when(F.col("kind") == kind, arr)
-        )
+    epoch = (
+        F.unix_timestamp("window_start").cast("long") + F.lit(tier_seconds(tier))
+    ).cast("long")
+    named = tier_df.select(
+        F.concat_ws(".", F.lit(prefix), F.col("source"), F.col("metric")).alias("path"),
+        F.format_string("%d", epoch).alias("epoch"),
+        F.lit(float(timer_duration_unit)).alias("unit"),
+        "kind",
+        *used,
+    )
     # unknown kinds produce no lines (null array -> explode drops row)
-    return tier_df.select(F.explode(lines_array).alias("line"))
+    lines = F.expr(f"CASE `kind` {' '.join(branches)} END")
+    return named.select(F.explode(lines).alias("line"))
 
 
 def send_graphite_tcp(
     lines_df: DataFrame, host: str, port: int, timeout_s: float = 10.0
 ) -> None:
-    """Ship lines to a Graphite plaintext listener, socket-per-partition.
+    """Ship lines to a Graphite plaintext listener over one connection.
 
-    Executor-side: each partition opens one TCP connection and streams
-    its lines (the reference holds one connection per flusher,
-    graphite/graphite.go:61-64; per-partition is the distributed
-    equivalent).  Driver never materializes the data.
+    The reference holds one connection per flusher
+    (graphite/graphite.go:61-64).  The frame streams to the driver one
+    partition at a time (``toLocalIterator`` with the next partition
+    prefetched), so the driver holds about two partitions, never the
+    whole frame — the CLI ``graphite`` command ships a whole stored tier
+    through here.  Lines go out in buffered ``sendall`` calls of about
+    64 KiB.  The socket opens at the first line: an empty frame opens
+    none.
     """
-
-    def send_partition(rows) -> None:
-        import socket
-
-        sock = None
-        try:
-            for row in rows:
-                if sock is None:  # connect lazily: empty partitions stay silent
-                    sock = socket.create_connection((host, port), timeout=timeout_s)
-                sock.sendall((row["line"] + "\n").encode("utf-8"))
-        finally:
-            if sock is not None:
-                sock.close()
-
-    lines_df.foreachPartition(send_partition)
+    sock = None
+    buf: list[bytes] = []
+    size = 0
+    try:
+        for row in lines_df.select("line").toLocalIterator(prefetchPartitions=True):
+            if sock is None:
+                sock = socket.create_connection((host, port), timeout=timeout_s)
+            b = (row[0] + "\n").encode("utf-8")
+            buf.append(b)
+            size += len(b)
+            if size >= _SEND_BUFFER_BYTES:
+                sock.sendall(b"".join(buf))
+                buf, size = [], 0
+        if buf:
+            sock.sendall(b"".join(buf))
+    finally:
+        if sock is not None:
+            sock.close()
 
 
 def graphite_batch_sink(

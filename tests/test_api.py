@@ -187,3 +187,75 @@ def test_points_feed_rollup(spark, lines):
     eng.rule("hello", r'hello "(?P<w>\w+)"', lambda c, m: m.meter("hits").mark(1))
     tier = rollup(eng.run(lines), "1h").toPandas()
     assert tier["cnt"].sum() == 2
+
+
+def test_apply_rules_pure_pandas_without_warnings():
+    """The per-batch body in plain pandas: first match only, named
+    groups only, non-matching lines and rules skipped — and no warning
+    escapes (pandas warns about a gate pattern with groups)."""
+    import warnings
+
+    from logtrics_spark.api import ERROR_METRIC_PREFIX, apply_rules
+
+    pdf = pd.DataFrame(
+        {
+            "source": ["s1", "s2", "s3"],
+            "line": ["k=1 k=2", "no match here", "x k=7"],
+            "ts": pd.to_datetime(["2024-01-01 00:00", "2024-01-01 00:01", "2024-01-01 00:02"]),
+        }
+    )
+    seen = []
+
+    def count(caps, m):
+        seen.append(caps.copy())
+        m.counter("hits").inc(caps["v"])
+
+    def never(caps, m):
+        raise AssertionError("handler of a rule that matched no line ran")
+
+    rules = [
+        ("kv", re.compile(r"(k)=(?P<v>\d+)"), count),  # one unnamed, one named group
+        ("none", re.compile(r"(?P<z>zzz)"), never),
+    ]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = apply_rules(pdf, rules)
+
+    assert len(seen) == 1
+    assert list(seen[0].columns) == ["v", "_source", "_line"]  # named groups only
+    assert seen[0]["v"].tolist() == ["1", "7"]  # first match; "no match here" skipped
+    assert not out["metric"].str.startswith(ERROR_METRIC_PREFIX).any()
+    assert out[["source", "metric", "kind", "value"]].values.tolist() == [
+        ["s1", "hits", "counter", 1],
+        ["s3", "hits", "counter", 7],
+    ]
+    assert out["ts"].tolist() == [pdf["ts"][0], pdf["ts"][2]]
+    # no rule matched anything: no points frame at all
+    assert apply_rules(pdf.iloc[[1]], rules) is None
+
+
+def test_pin_spark_archives_skips_only_spark_archives(tmp_path, monkeypatch):
+    """After the pin, a zipimporter rescan skips Spark's own archives
+    (pyspark.zip, py4j-*.zip, jars) and still rescans any other one."""
+    import zipfile
+    import zipimport
+
+    from logtrics_spark.api import _pin_spark_archives
+
+    rescanned = []
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", lambda self: rescanned.append(self.archive)
+    )
+    monkeypatch.setattr(zipimport.zipimporter, "_spark_archives_pinned", False, raising=False)
+    names = ["pyspark.zip", "py4j-0.10.9.9-src.zip", "spark-core_2.13-4.1.2.jar", "extra.zip"]
+    importers = []
+    for name in names:
+        with zipfile.ZipFile(tmp_path / name, "w") as z:
+            z.writestr("mod.py", "X = 1\n")
+        importers.append(zipimport.zipimporter(str(tmp_path / name)))
+
+    _pin_spark_archives()
+    _pin_spark_archives()  # idempotent: the second call wraps nothing again
+    for imp in importers:
+        imp.invalidate_caches()
+    assert rescanned == [str(tmp_path / "extra.zip")]

@@ -3,11 +3,14 @@
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 
 from logtrics_spark.__main__ import main
 from logtrics_spark.datagen import gen_tokseq
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_cli_rollup_and_graphite_dry_run(spark, tmp_path, capsys):
@@ -68,7 +71,7 @@ def test_cli_alerts(spark, tmp_path, capsys):
 def test_explain_queries_tool(spark, capsys):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(REPO / "tools"))
     import explain_queries
 
     assert explain_queries.main(["tiers_chain"]) == 0
@@ -200,13 +203,13 @@ def test_example_llm_pipeline(spark, tmp_path):
     queries) against the sandbox test data without error."""
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/examples")
+    _sys.path.insert(0, str(REPO / "examples"))
     try:
         import llm_pipeline
 
         report = llm_pipeline.main(work_dir=str(tmp_path / "wk"))
     finally:
-        _sys.path.remove("/root/repo/examples")
+        _sys.path.remove(str(REPO / "examples"))
     flow = [report["curation"][k] for k in ("input", "near_dedup", "sample")]
     assert flow == sorted(flow, reverse=True)
     assert report["tokens"]["docs"] == report["curation"]["sample"]

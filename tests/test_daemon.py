@@ -268,3 +268,26 @@ def test_load_rules_validation(tmp_path):
         load_rules(f"{empty}:engine")
     with pytest.raises(ValueError, match="must be"):
         load_rules("nocolon")
+
+
+def test_graphite_outage_does_not_fail_the_flush(spark, tmp_path, caplog):
+    """A refused Graphite connection is logged once and the drain goes
+    on: the rows are stored and process_lines returns their count."""
+    import socket
+
+    from logtrics_spark.plans.daemon import Daemon
+    from logtrics_spark.sources.readers import lines_df
+
+    s = socket.socket()
+    s.bind(("127.0.0.1", 0))
+    port = s.getsockname()[1]
+    s.close()  # nothing listens there now
+    conf = {"graphite": {"host": "127.0.0.1", "port": port}}
+    d = Daemon(spark, conf, _engine(), str(tmp_path / "store"))
+    with caplog.at_level(logging.WARNING, logger="logtrics_spark.daemon"):
+        n = d.process_lines(lines_df(spark, LINES))
+    assert n > 0
+    assert d.read_tier_latest().count() == n
+    warned = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warned) == 1
+    assert f"127.0.0.1:{port}" in warned[0].getMessage()

@@ -104,10 +104,11 @@ def test_fold_matches_independent_thesis_port_on_adversarial_shapes():
     everywhere), and random data.  A pairwise-vs-sequential mean
     mismatch flips argmax on exact ties; this pins bit-identity."""
     import sys
+    from pathlib import Path
 
     import numpy as np
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from __spark_entry__ import _lttb_steinarsson
 
     from logtrics_spark.operators.downsample import lttb_fold

@@ -15,8 +15,9 @@ the r7 §3 optimization being audited).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main(argv: list[str]) -> int:

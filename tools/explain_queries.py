@@ -15,8 +15,9 @@ thing to chase.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # Python plan nodes counted by --all ("ArrowEval" covers ArrowEvalPython)
 PY_NODES = ("BatchEvalPython", "ArrowEval", "FlatMapGroupsInPandas", "MapInPandas", "MapInArrow")
