@@ -24,11 +24,10 @@ in the grouping key everywhere, same trick as the tier column).
 
 **CMS is LINEAR** — the table of a union is the elementwise SUM of the
 tables — so unlike the other three families (t-digest centroid drift,
-MG clipping, HLL HIP history), EVERY build mode and cascade order
-yields the bit-identical table: direct == presketch == any cascade
-shape.  Tests pin table equality, not an error envelope, and the
-driver oracle checks point estimates exactly in the collision-free
-regime.
+MG clipping, HLL HIP history), EVERY cascade order yields the
+bit-identical table: a build from raw == any cascade shape.  Tests
+pin table equality, not an error envelope, and the driver oracle
+checks point estimates exactly in the collision-free regime.
 
 Hashing (engine-independent, stable forever — stored sketches must
 outlive library versions): ``md5(utf8(item))`` split into two 64-bit
@@ -36,17 +35,9 @@ halves ``h1, h2``; row ``d`` probes column ``(h1 + d*h2) mod width``
 (Kirsch & Mitzenmacher, "Less hashing, same performance", 2006).
 Python big-int arithmetic, no word overflow.
 
-Execution shape mirrors the MG modes (operators/heavyhitters.py):
-
-  direct (default): exact (window, item) counts via a native two-key
-  groupBy, then collect_list + ONE Arrow scatter pass (np.add.at).
-  The raw shuffle carries (window, item, count) rows.
-
-  presketch=True: mapInPandas builds one batch-local table per
-  series-window per input BATCH, so the shuffle carries a FIXED
-  ``depth*width`` longs per group per batch regardless of item
-  cardinality — and linearity makes the result identical to direct,
-  not merely within-bound.
+Execution shape: exact (window, item) counts via a native two-key
+groupBy, then collect_list + ONE Arrow scatter pass (np.add.at).  The
+raw shuffle carries (window, item, count) rows.
 
 The cascade is PURE Catalyst: collect_list of tables folded with
 ``aggregate``/``zip_with`` higher-order functions — elementwise long
@@ -62,7 +53,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from logtrics_spark.operators.rollup import KEY, tier_seconds, window_start
 
@@ -106,16 +96,12 @@ def cms_rollup(
     key: list[str] | None = None,
     depth: int = 4,
     width: int = 1024,
-    presketch: bool = False,
 ) -> DataFrame:
     """One CMS row per series-window over ``item_col``:
     (key..., window_start, depth, width, table, total_n).
 
     Null items are dropped (no observation) before counting, matching
-    `mg_rollup`.  presketch mode bounds the shuffle and every task by
-    ``depth*width`` per group per batch; linearity guarantees the
-    result table is IDENTICAL to direct mode (tested), so the choice
-    is purely a physical-plan decision.
+    `mg_rollup`.
 
     **Pick the fine tier by window DENSITY**: a CMS row costs a fixed
     ``depth*width`` longs regardless of content, so building tables for
@@ -135,58 +121,6 @@ def cms_rollup(
         .select(*gcols, F.col(item_col).cast("string").alias("_item"))
         .where(F.col("_item").isNotNull())
     )
-    out_tail = [
-        T.StructField("depth", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("table", T.ArrayType(T.LongType())),
-        T.StructField("total_n", T.LongType()),
-    ]
-
-    if presketch:
-        in_fields = {f.name: f for f in pts.schema.fields}
-        schema = T.StructType(
-            [T.StructField(c, in_fields[c].dataType) for c in gcols] + out_tail
-        )
-
-        def partial(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                codes, keys_idx = pd.factorize(
-                    pd.MultiIndex.from_frame(pdf[gcols]), sort=False
-                )
-                cnt = (
-                    pd.DataFrame({"_g": codes, "_i": pdf["_item"].to_numpy()})
-                    .groupby(["_g", "_i"], sort=False, dropna=False)
-                    .size()
-                    .reset_index(name="_n")
-                    .sort_values("_g", kind="stable")
-                )
-                garr = cnt["_g"].to_numpy()
-                iarr = cnt["_i"].to_numpy(dtype=object)
-                narr = cnt["_n"].to_numpy(dtype=np.int64)
-                seg = np.flatnonzero(np.r_[True, garr[1:] != garr[:-1]])
-                ends = np.append(seg[1:], len(garr))
-                rows = []
-                for si, ei in zip(seg, ends):
-                    tab = _scatter(iarr[si:ei], narr[si:ei], depth, width)
-                    rows.append(
-                        (
-                            *keys_idx[garr[si]],
-                            depth,
-                            width,
-                            [int(x) for x in tab],
-                            int(narr[si:ei].sum()),
-                        )
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[*gcols, "depth", "width", "table", "total_n"]
-                )
-
-        partials = pts.mapInPandas(partial, schema)
-        # linear merge of batch partials == the direct table, exactly
-        return _merge_tables(partials, gcols + ["depth", "width"])
-
     counts = (
         pts.groupBy(*gcols, "_item")
         .agg(F.count("*").alias("_cnt"))

@@ -32,26 +32,24 @@ from logtrics_spark.operators.rollup import KEY, tier_seconds
 HORIZONS_MIN = [1, 5, 15]
 
 
-def ewma_oracle(rates: np.ndarray, tick_secs: int, horizon_min: int) -> np.ndarray:
-    """Single-series reference fold (also used by pytest)."""
+def ewma_oracle(
+    rates: np.ndarray, tick_secs: int, horizon_min: int, init: float | None = None
+) -> np.ndarray:
+    """Single-series reference fold (also used by pytest and by the
+    streaming fold).  ``init`` is the average carried in from earlier
+    ticks; None lets the first tick initialize it."""
     alpha = 1.0 - math.exp(-tick_secs / (horizon_min * 60.0))
     out = np.empty_like(rates, dtype=np.float64)
-    acc = 0.0
+    acc = init
     for i, r in enumerate(rates):
-        acc = r if i == 0 else alpha * r + (1 - alpha) * acc
+        acc = r if acc is None else alpha * r + (1 - alpha) * acc
         out[i] = acc
     return out
 
 
-def meter_ewma(tier_df: DataFrame, tier: str, horizons_min: list[int] | None = None) -> DataFrame:
-    """tier rows -> per-window EWMA rate columns (rate_m1, rate_m5, ...).
-
-    Grouped-map per series; state is one float per horizon, sequential
-    over that series' windows only.
-    """
-    horizons = horizons_min or HORIZONS_MIN
-    secs = tier_seconds(tier)
-    out_schema = T.StructType(
+def ewma_schema(horizons: list[int]) -> T.StructType:
+    """Output rows of `meter_ewma` and its streaming twin."""
+    return T.StructType(
         [
             T.StructField("source", T.StringType()),
             T.StructField("metric", T.StringType()),
@@ -62,6 +60,16 @@ def meter_ewma(tier_df: DataFrame, tier: str, horizons_min: list[int] | None = N
         ]
         + [T.StructField(f"rate_m{h}", T.DoubleType()) for h in horizons]
     )
+
+
+def meter_ewma(tier_df: DataFrame, tier: str, horizons_min: list[int] | None = None) -> DataFrame:
+    """tier rows -> per-window EWMA rate columns (rate_m1, rate_m5, ...).
+
+    Grouped-map per series; state is one float per horizon, sequential
+    over that series' windows only.
+    """
+    horizons = horizons_min or HORIZONS_MIN
+    secs = tier_seconds(tier)
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("window_start", kind="stable")
@@ -75,5 +83,5 @@ def meter_ewma(tier_df: DataFrame, tier: str, horizons_min: list[int] | None = N
     return (
         tier_df.select(*KEY, "window_start", "cnt")
         .groupBy(*KEY)
-        .applyInPandas(fold, out_schema)
+        .applyInPandas(fold, ewma_schema(horizons))
     )

@@ -22,41 +22,24 @@ counts coordinate-wise, add errs, then if over capacity subtract the
 (k+1)-th largest count from all, clip at 0, and fold the subtracted
 amount into ``err`` (the PODS'12 reduction).
 
-Execution shape mirrors the t-digest modes, picked by window DENSITY:
-
-  direct (default): per-window item counts via a plain JVM two-key
-  groupBy (partial+final native agg — the raw shuffle carries
-  (window, item) longs), then collect_list + ONE Arrow reduction pass.
-  Right for modest windows, but the collect_list funnels a window's
-  whole DISTINCT-ITEM set through one task — at 100 TB a
-  high-cardinality column (user ids) makes that task the bottleneck.
-
-  presketch=True: mapInPandas builds a capacity-k MG summary per
-  series-window per input BATCH (mergeable, PODS'12), so the shuffle
-  carries <= k (item, count) pairs per group per batch instead of the
-  full distinct set, and no single task ever sees a window's whole
-  cardinality.  Right when windows are huge/high-cardinality — the
-  true aggregateByKey regime.  Like any partial-MG pipeline the kept
-  ITEM SET can differ from direct mode at the clipped tail (the
-  guarantee — any item with true count > n/(k+1) survives, and
-  est <= true <= est + err — holds in both).
-
-The summary build and every merge are whole-batch Arrow passes over
-collect_list rows — no per-group pandas.
+Execution shape: per-window item counts via a plain JVM two-key
+groupBy (partial+final native agg — the raw shuffle carries (window,
+item) longs), then the PODS'12 reduction in pure Catalyst over one
+collect_list per window (see `mg_rollup`).  The collect_list funnels a
+window's whole DISTINCT-ITEM set through one task, so a window with
+millions of distinct items is bounded by one task's memory; that
+regime is scale-out work.  Cascades merge summaries with the same
+reduction, also in Catalyst (`mg_cascade`); the streaming fold
+(streaming/mg_stream.py) calls the Python `mg_merge`.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from logtrics_spark.operators.rollup import KEY, tier_seconds, window_start
-
-_SUMMARY = "items array<string>, counts array<long>, err long, total_n long"
-
 
 def _reduce(items: np.ndarray, counts: np.ndarray, k: int):
     """PODS'12 reduction to capacity k; returns (items, counts, delta).
@@ -94,106 +77,29 @@ def mg_merge(summaries, k: int):
     return list(items), [int(c) for c in counts], err + delta, total
 
 
-def _merge_rows_udf(k: int):
-    """Arrow pass merging collect_list'ed summaries at capacity k
-    (closure factory — pandas_udf rejects extra defaulted params)."""
-
-    @F.pandas_udf(_SUMMARY)
-    def merge_rows(it: pd.Series, cn: pd.Series, er: pd.Series, tn: pd.Series) -> pd.DataFrame:
-        rows = []
-        for its, cns, errs, ns in zip(it, cn, er, tn):
-            rows.append(mg_merge(zip(its, cns, errs, ns), k))
-        return pd.DataFrame(rows, columns=["items", "counts", "err", "total_n"])
-
-    return merge_rows
-
-
 def mg_rollup(
     points: DataFrame,
     tier: str,
     item_col: str,
     key: list[str] | None = None,
     k: int = 256,
-    presketch: bool = False,
 ) -> DataFrame:
     """One MG summary per series-window over ``item_col``.
 
-    Direct mode: exact item counting (two-key native groupBy), then the
-    summary truncates to capacity k with the MG guarantee; err == 0
-    whenever the window's item cardinality <= k (the summary is then
-    exact).  presketch mode (see module doc): batch-local capacity-k
-    partials merged through the PODS'12 reduction — the shuffle and
-    every single task are bounded by k, independent of the window's
-    item cardinality.
+    Exact item counting (two-key native groupBy), then the summary
+    truncates to capacity k with the MG guarantee; err == 0 whenever
+    the window's item cardinality <= k (the summary is then exact).
     """
     key = key or KEY
     gcols = [*key, "window_start"]
-    # null items are dropped (no observation), and BEFORE counting: in
-    # direct mode collect_list("_item") silently drops nulls while
-    # collect_list("_cnt") keeps their counts — misaligned arrays would
-    # crash the reduction; filtering here keeps both modes identical
+    # null items are dropped (no observation) before counting, so
+    # total_n counts only the items a summary can hold
     pts = (
         points.withColumn("window_start", window_start(F.col("ts"), tier))
         .select(*gcols, F.col(item_col).cast("string").alias("_item"))
         .where(F.col("_item").isNotNull())
     )
-    if presketch:
-        in_fields = {f.name: f for f in pts.schema.fields}
-        schema = T.StructType(
-            [T.StructField(c, in_fields[c].dataType) for c in gcols]
-            + [
-                T.StructField("items", T.ArrayType(T.StringType())),
-                T.StructField("counts", T.ArrayType(T.LongType())),
-                T.StructField("err", T.LongType()),
-                T.StructField("total_n", T.LongType()),
-            ]
-        )
-
-        def partial(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                codes, keys_idx = pd.factorize(
-                    pd.MultiIndex.from_frame(pdf[gcols]), sort=False
-                )
-                cnt = (
-                    pd.DataFrame({"_g": codes, "_i": pdf["_item"].to_numpy()})
-                    .groupby(["_g", "_i"], sort=False, dropna=False)
-                    .size()
-                    .reset_index(name="_n")
-                    .sort_values("_g", kind="stable")
-                )
-                garr = cnt["_g"].to_numpy()
-                iarr = cnt["_i"].to_numpy(dtype=object)
-                narr = cnt["_n"].to_numpy(dtype=np.int64)
-                seg = np.flatnonzero(np.r_[True, garr[1:] != garr[:-1]])
-                ends = np.append(seg[1:], len(garr))
-                rows = []
-                for si, ei in zip(seg, ends):
-                    i2, c2, delta = _reduce(iarr[si:ei], narr[si:ei], k)
-                    rows.append(
-                        (
-                            *keys_idx[garr[si]],
-                            list(i2),
-                            [int(x) for x in c2],
-                            int(delta),
-                            int(narr[si:ei].sum()),
-                        )
-                    )
-                yield pd.DataFrame(rows, columns=[*gcols, "items", "counts", "err", "total_n"])
-
-        partials = pts.mapInPandas(partial, schema)
-        merged = partials.groupBy(*gcols).agg(
-            F.collect_list("items").alias("_it"),
-            F.collect_list("counts").alias("_cn"),
-            F.collect_list("err").alias("_er"),
-            F.collect_list("total_n").alias("_tn"),
-        )
-        return merged.withColumn(
-            "_s", _merge_rows_udf(k)("_it", "_cn", "_er", "_tn")
-        ).select(*gcols, "_s.items", "_s.counts", "_s.err", "_s.total_n")
-
-    # Direct mode runs the PODS'12 reduction in PURE Catalyst: the
+    # The PODS'12 reduction runs in PURE Catalyst: the
     # summary is a per-group sorted (-count, item) struct array, the
     # (k+1)-th count is the clip delta, and the kept prefix is a
     # filter+transform over the first k entries.  The r6 shape shipped
@@ -249,7 +155,7 @@ def mg_cascade(fine: DataFrame, fine_tier: str, coarse_tier: str, k: int = 256) 
     """Merge fine windows' summaries into the coarse window — pure
     Catalyst (r7): explode each summary's (item, count) pairs, bag-sum
     per (group, item) with map-side partial aggregation, then run the
-    SAME PODS'12 reduction `mg_rollup` direct mode uses (sorted
+    SAME PODS'12 reduction `mg_rollup` uses (sorted
     (-count, item) struct array, (k+1)-th count as the clip delta,
     kept prefix where count - delta > 0).
 

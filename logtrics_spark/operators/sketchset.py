@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from logtrics_spark.config import ConfigError
+
 # sketch-kind -> its summary value columns (everything else is key)
 KIND_VALS = {
     "tdigest": ["tdigest"],
@@ -43,6 +45,11 @@ KIND_VALS = {
     # column from the same winning row), and cms_cascade then groups
     # by them, so mixed geometries still never merge
     "cms": ["depth", "width", "table", "total_n"],
+}
+
+# the accepted ``[sketches]`` table keys (see `SketchSet.from_config`)
+CONFIG_KEYS = {
+    "enabled", "item_col", "mg_k", "compression", "lg_config_k", "cms_depth", "cms_width",
 }
 
 
@@ -56,7 +63,6 @@ class SketchSet:
         lg_config_k: int = 12,
         cms_depth: int = 4,
         cms_width: int = 1024,
-        presketch: bool = False,
     ) -> None:
         bad = set(enabled) - set(KIND_VALS)
         if bad:
@@ -70,18 +76,19 @@ class SketchSet:
         self.lg_config_k = int(lg_config_k)
         self.cms_depth = int(cms_depth)
         self.cms_width = int(cms_width)
-        # presketch=True switches tdigest/MG builds to their map-side
-        # partial mode (shuffle bounded by sketch size, not window
-        # cardinality) — the huge/high-cardinality-window regime; leave
-        # False when windows are modest (per-group partials degenerate
-        # to one sketch per point, the r4 111s lesson)
-        self.presketch = bool(presketch)
 
     @classmethod
     def from_config(cls, conf: dict | None) -> "SketchSet":
         """Build from a ``[sketches]`` config table (daemon TOML shape);
-        an empty/missing table yields an empty set (no-op)."""
+        an empty/missing table yields an empty set (no-op).  Unknown
+        keys raise ``ConfigError``, like the strict config merge."""
         sk = conf or {}
+        unknown = set(sk) - CONFIG_KEYS
+        if unknown:
+            raise ConfigError(
+                f"unknown [sketches] keys {sorted(unknown)}; "
+                f"pick from {sorted(CONFIG_KEYS)}"
+            )
         return cls(
             enabled=list(sk.get("enabled", []) or []),
             item_col=sk.get("item_col", "value"),
@@ -90,7 +97,6 @@ class SketchSet:
             lg_config_k=int(sk.get("lg_config_k", 12)),
             cms_depth=int(sk.get("cms_depth", 4)),
             cms_width=int(sk.get("cms_width", 1024)),
-            presketch=bool(sk.get("presketch", False)),
         )
 
     def __bool__(self) -> bool:
@@ -108,18 +114,12 @@ class SketchSet:
         from logtrics_spark.operators.tdigest import tdigest_rollup
 
         if name == "tdigest":
-            return tdigest_rollup(
-                points, tier, compression=self.compression, presketch=self.presketch
-            )
+            return tdigest_rollup(points, tier, compression=self.compression)
         if name == "mg":
-            return mg_rollup(
-                points, tier, self.item_col, k=self.mg_k, presketch=self.presketch
-            )
+            return mg_rollup(points, tier, self.item_col, k=self.mg_k)
         if name == "cms":
             return cms_rollup(
-                points, tier, self.item_col,
-                depth=self.cms_depth, width=self.cms_width,
-                presketch=self.presketch,
+                points, tier, self.item_col, depth=self.cms_depth, width=self.cms_width
             )
         pts = points.withColumn(self.item_col, F.col(self.item_col).cast("string"))
         return set_sketch_rollup(pts, tier, self.item_col, lg_config_k=self.lg_config_k)

@@ -23,32 +23,19 @@ window is numpy-speed.  Merging two digests is the same routine over
 the concatenated centroids, making merge associative-up-to-resolution
 and deterministic for a fixed input order.
 
-Execution shape — pick by window DENSITY (points per series-window
-relative to partition count), measured, not guessed:
-
-  direct (default): groupBy(key, window).collect_list(value) — a plain
-  JVM partial-aggregating shuffle — then ONE ArrowEvalPython pass
-  building a digest per row.  Right whenever windows are modest (a 1m
-  tier at ~dozens-to-thousands of points per window): the r4 bench
-  showed the presketch variant costs 15x more here, because with ~1
-  point per group per input batch the "partial digests" degenerate to
-  one sketch PER POINT and the 80k-group grouped-map pays pandas
-  overhead per group.
-
-  presketch=True: mapInPandas builds partial digests per input batch
-  with a fully-vectorized MULTI-GROUP k-cell pass (one lexsort +
-  reduceat for the whole batch), so the shuffle carries kilobyte
-  sketches instead of raw doubles; partials then merge through the
-  same collect_list + Arrow merge.  Right when single windows are huge
-  (millions of points — a collect_list there would materialize them in
-  one task) — the true aggregateByKey regime.
+Execution shape: groupBy(key, window).collect_list(value) — a plain
+JVM partial-aggregating shuffle — then ONE ArrowEvalPython pass
+building a digest per row.  A map-side design that built partial
+digests per input batch measured 111 s at sf0.1 (BENCH/NOTES.md):
+fine windows hold ~12 points, so its "partials" degenerated to one
+sketch PER POINT.  Coarser tiers merge digests through the same
+collect_list + Arrow pass (`tdigest_cascade`).
 
 Estimates interpolate between centroid midpoints with exact min/max
 endpoints; rank error concentrates near q=0.5 and shrinks toward the
-tails (the k1 guarantee).  Presketch estimates depend slightly on how
-rows were batched into partials (like any t-digest pipeline); tests
-assert rank error ≤ 0.02 under adversarial orderings, not bit
-equality, and that both modes agree.
+tails (the k1 guarantee).  Cascaded estimates depend slightly on the
+merge order (like any t-digest pipeline); tests assert rank error
+≤ 0.02 under adversarial orderings, not bit equality.
 """
 
 from __future__ import annotations
@@ -156,53 +143,6 @@ def from_bytes(blob: bytes):
 # ------------------------------------------------------------ Spark ops
 
 
-def _build_many(codes: np.ndarray, values: np.ndarray, compression: float):
-    """Vectorized MULTI-group digest build: one lexsort + one k-cell
-    reduceat over a whole batch; returns (group_code, blob) pairs.
-
-    Per-group work after the vector pass is one C-level slice + header
-    concat — no pandas groupby.apply, no per-point Python.
-    """
-    all_codes = np.unique(codes)
-    ok = ~np.isnan(values)
-    codes, values = codes[ok], values[ok]
-    if not len(values):
-        # groups emptied by the NaN filter still emit (empty digest) so
-        # presketch mode yields the same window rows as direct mode,
-        # where collect_list keeps the group and build() drops the NaNs
-        empty = to_bytes(np.empty(0), np.empty(0), np.inf, -np.inf, compression)
-        return [(c, empty) for c in all_codes]
-    order = np.lexsort((values, codes))
-    g, v = codes[order], values[order]
-    gstart = np.empty(len(g), dtype=bool)
-    gstart[0] = True
-    np.not_equal(g[1:], g[:-1], out=gstart[1:])
-    seg_idx = np.flatnonzero(gstart)
-    sizes = np.diff(np.append(seg_idx, len(g)))
-    pos = np.arange(len(g)) - np.repeat(seg_idx, sizes)
-    q_right = (pos + 1.0) / np.repeat(sizes, sizes).astype(np.float64)
-    cells = np.floor(_k(q_right, compression))
-    new_cent = gstart.copy()
-    np.logical_or(new_cent[1:], cells[1:] != cells[:-1], out=new_cent[1:])
-    starts = np.flatnonzero(new_cent)
-    cw = np.diff(np.append(starts, len(g))).astype(np.float64)
-    cm = np.add.reduceat(v, starts) / cw
-    cent_seg = np.searchsorted(starts, seg_idx)  # first centroid per group
-    cent_counts = np.diff(np.append(cent_seg, len(starts)))
-    out = []
-    for gi in range(len(seg_idx)):
-        a, b = cent_seg[gi], cent_seg[gi] + cent_counts[gi]
-        lo = v[seg_idx[gi]]
-        hi = v[seg_idx[gi] + sizes[gi] - 1]
-        out.append((g[seg_idx[gi]], to_bytes(cm[a:b], cw[a:b], lo, hi, compression)))
-    if len(seg_idx) < len(all_codes):
-        # NaN-only groups (see the empty-batch branch above)
-        present = {c for c, _ in out}
-        empty = to_bytes(np.empty(0), np.empty(0), np.inf, -np.inf, compression)
-        out.extend((c, empty) for c in all_codes if c not in present)
-    return out
-
-
 def _build_udf(compression: float):
     @F.pandas_udf(T.BinaryType())
     def build_rows(vals: pd.Series) -> pd.Series:
@@ -222,55 +162,24 @@ def tdigest_rollup(
     value_col: str = "value",
     key: list[str] | None = None,
     compression: float = DEFAULT_COMPRESSION,
-    presketch: bool = False,
 ) -> DataFrame:
     """Timer tier rows carrying a mergeable t-digest per series-window.
 
-    See the module doc for the direct-vs-presketch decision; the
-    shuffle is a plain JVM partial aggregation either way, and the
-    Python stages are whole-batch Arrow passes, never per-group pandas.
+    The shuffle is a plain JVM partial aggregation (collect_list) and
+    the digest build is one whole-batch Arrow pass, never per-group
+    pandas.  A window whose values are all NaN still yields a row, with
+    an empty digest (`tdigest_stats` reads it as cnt 0).
     """
     key = key or KEY
     pts = points.withColumn("window_start", window_start(F.col("ts"), tier)).select(
         *key, "window_start", value_col
     )
-    gcols = [*key, "window_start"]
-    if not presketch:
-        grouped = pts.groupBy(*gcols).agg(F.collect_list(value_col).alias("_vals"))
-        return grouped.withColumn(
-            "tdigest", _build_udf(compression)(F.col("_vals"))
-        ).drop("_vals")
-
-    # presketch: batch-local digests via the vectorized multi-group
-    # build; the group key rides as a dense code per batch
-    in_fields = {f.name: f for f in pts.schema.fields}
-    schema = T.StructType(
-        [T.StructField(c, in_fields[c].dataType) for c in gcols]
-        + [T.StructField("tdigest", T.BinaryType())]
+    grouped = pts.groupBy(*key, "window_start").agg(
+        F.collect_list(value_col).alias("_vals")
     )
-
-    def partial(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes, keys = pd.factorize(
-                pd.MultiIndex.from_frame(pdf[gcols]), sort=False
-            )
-            pairs = _build_many(
-                codes.astype(np.int64),
-                pdf[value_col].to_numpy(dtype=np.float64),
-                compression,
-            )
-            if not pairs:
-                continue
-            gsel = [keys[c] for c, _ in pairs]
-            out = pd.DataFrame(gsel, columns=gcols)
-            out["tdigest"] = [b for _, b in pairs]
-            yield out
-
-    partials = pts.mapInPandas(partial, schema)
-    merged = partials.groupBy(*gcols).agg(F.collect_list("tdigest").alias("_blobs"))
-    return merged.withColumn("tdigest", _merge_udf(F.col("_blobs"))).drop("_blobs")
+    return grouped.withColumn(
+        "tdigest", _build_udf(compression)(F.col("_vals"))
+    ).drop("_vals")
 
 
 def tdigest_cascade(fine: DataFrame, fine_tier: str, coarse_tier: str) -> DataFrame:

@@ -59,10 +59,6 @@ from logtrics_spark.streaming.rollup_stream import rollup_stream
 
 logger = logging.getLogger("logtrics_spark.daemon")
 
-# re-export for callers (the CLI sketch command); the dispatch itself
-# lives in operators/sketchset.py, shared with the batch RollupJob
-_SK_VALS = KIND_VALS
-
 
 def _resolve_sketch_versions(df: DataFrame, val_cols: list[str]) -> DataFrame:
     """Collapse a sketch table's stored versions to one contribution row
@@ -492,15 +488,6 @@ class Daemon:
         return n
 
     # --------------------------------------------------- sketch tiers
-    def _sketch_rollup(self, points: DataFrame, name: str) -> DataFrame:
-        """Finest-tier sketch rows for one kind (SketchSet dispatch)."""
-        return self.sketchset.rollup(points, self.tier, name)
-
-    def _sketch_cascade(
-        self, name: str, df: DataFrame, fine_tier: str, coarse_tier: str
-    ) -> DataFrame:
-        return self.sketchset.cascade(name, df, fine_tier, coarse_tier)
-
     def _write_sketch_rows(
         self, name: str, rows: DataFrame, tier: str, origin: str, batch_seq: int = -1
     ) -> None:
@@ -530,9 +517,8 @@ class Daemon:
         trio safe to append without streaming state.
         """
         for name in self.sketch_kinds:
-            self._write_sketch_rows(
-                name, self._sketch_rollup(points, name), self.tier, origin, batch_seq
-            )
+            rows = self.sketchset.rollup(points, self.tier, name)
+            self._write_sketch_rows(name, rows, self.tier, origin, batch_seq)
 
     def _sketch_sink(self, points_batch: DataFrame, batch_id: int) -> None:
         points_batch = points_batch.persist()
@@ -552,21 +538,21 @@ class Daemon:
         the CLI when it customizes mg_k/compression."""
         if self.sketch_kinds:
             return self.sketch_kinds
-        return [k for k in _SK_VALS if self.io.exists(f"sk_{k}")]
+        return [k for k in KIND_VALS if self.io.exists(f"sk_{k}")]
 
     def read_sketch(self, name: str, tier: str | None = None) -> DataFrame:
         """Consolidated sketch rows for one kind+tier: one row per
         series+window (versions resolved, contributions merged)."""
-        if name not in _SK_VALS:
-            raise ValueError(f"unknown sketch kind {name!r}; pick from {sorted(_SK_VALS)}")
+        if name not in KIND_VALS:
+            raise ValueError(f"unknown sketch kind {name!r}; pick from {sorted(KIND_VALS)}")
         tier = tier or self.tier
         if not self.io.exists(f"sk_{name}/tier={tier}"):
             raise ValueError(
                 f"store {self.store_root!r} has no sk_{name} tier={tier} rows yet"
             )
         df = self.io.read(f"sk_{name}/tier={tier}").drop("day")
-        resolved = _resolve_sketch_versions(df, _SK_VALS[name])
-        return self._sketch_cascade(name, resolved, tier, tier)
+        resolved = _resolve_sketch_versions(df, KIND_VALS[name])
+        return self.sketchset.cascade(name, resolved, tier, tier)
 
     # ------------------------------------------------------------- read
     def read_tier_latest(self, tier: str | None = None) -> DataFrame:
@@ -631,7 +617,7 @@ class Daemon:
                         c for c in ("source", "metric", "kind", "window_start")
                         if c in df.columns
                     ]
-                    vals = _SK_VALS[name]
+                    vals = KIND_VALS[name]
                     snap = (
                         df.where(F.col("origin") != "stream")
                         .groupBy(*keys)
@@ -710,7 +696,7 @@ class Daemon:
                 sprev, sprev_tier = fine_sk, self.tier
                 frames = [(self.tier, fine_sk)]
                 for t in job.tiers[1:]:
-                    scur = self._sketch_cascade(name, sprev, sprev_tier, t).localCheckpoint()
+                    scur = self.sketchset.cascade(name, sprev, sprev_tier, t).localCheckpoint()
                     frames.append((t, scur))
                     sprev, sprev_tier = scur, t
                 for t, fdf in frames:
@@ -777,7 +763,7 @@ class Daemon:
             sprev = self.read_sketch(name).localCheckpoint()
             sprev_tier = self.tier
             for t in tiers[1:]:
-                scur = self._sketch_cascade(name, sprev, sprev_tier, t).localCheckpoint()
+                scur = self.sketchset.cascade(name, sprev, sprev_tier, t).localCheckpoint()
                 self._write_sketch_rows(name, scur, t, origin="cascade")
                 counts[f"sk_{name}:{t}"] = scur.count()
                 sprev, sprev_tier = scur, t

@@ -21,14 +21,14 @@ reads a continuously-maintained rollup in production.
 Ordering contract: windows must arrive in non-decreasing window_start
 order per series (true for the append-mode tier sink, whose emissions
 follow the watermark).  Within a micro-batch rows are sorted; ACROSS
-batches the state store carries the fold forward.  The recurrence and
-alphas are identical to operators/ewma.py::ewma_oracle (pinned by
+batches the state store carries the fold forward.  Each batch runs
+operators/ewma.py::ewma_oracle seeded with the carried averages, so
+the rows equal the batch `meter_ewma` fold (pinned by
 tests/test_streaming_ewma.py).
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -36,24 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from logtrics_spark.operators.ewma import HORIZONS_MIN, ewma_oracle, ewma_schema
 from logtrics_spark.operators.rollup import KEY, tier_seconds
-
-HORIZONS_MIN = [1, 5, 15]
-
-
-def _out_schema(horizons: list[int]) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("source", T.StringType()),
-            T.StructField("metric", T.StringType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("rate", T.DoubleType()),
-        ]
-        + [T.StructField(f"rate_m{h}", T.DoubleType()) for h in horizons]
-    )
-
 
 _STATE_SCHEMA = T.StructType([T.StructField("emas", T.ArrayType(T.DoubleType()))])
 
@@ -69,8 +53,6 @@ def meter_ewma_stream(
     """
     horizons = horizons_min or HORIZONS_MIN
     secs = tier_seconds(tier)
-    alphas = [1.0 - math.exp(-secs / (h * 60.0)) for h in horizons]
-    out_schema = _out_schema(horizons)
 
     def fold(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -86,12 +68,6 @@ def meter_ewma_stream(
         else:
             emas = [None] * len(horizons)
         inst = pdf["cnt"].to_numpy(dtype="float64") / float(secs)
-        out_cols: dict[str, list[float]] = {f"rate_m{h}": [] for h in horizons}
-        for r in inst:
-            for j, (h, a) in enumerate(zip(horizons, alphas)):
-                prev = emas[j]
-                emas[j] = r if prev is None else a * r + (1 - a) * prev
-                out_cols[f"rate_m{h}"].append(emas[j])
         out = pd.DataFrame(
             {
                 "source": key[0],
@@ -102,8 +78,10 @@ def meter_ewma_stream(
                 "rate": inst,
             }
         )
-        for name, vals in out_cols.items():
-            out[name] = vals
+        for j, h in enumerate(horizons):
+            rates = ewma_oracle(inst, secs, h, emas[j])
+            out[f"rate_m{h}"] = rates
+            emas[j] = rates[-1]
         state.update(([float(e) for e in emas],))
         yield out
 
@@ -111,6 +89,6 @@ def meter_ewma_stream(
         tier_rows.select(*KEY, "window_start", "cnt")
         .groupBy(*KEY)
         .applyInPandasWithState(
-            fold, out_schema, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
+            fold, ewma_schema(horizons), _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
         )
     )

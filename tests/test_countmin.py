@@ -3,7 +3,7 @@ error guarantee, pure-Catalyst cascade/query plans, geometry safety.
 
 CMS is the one sketch family where merge order CANNOT change the
 answer (tables sum elementwise), so these tests pin exact table
-equality across build modes and cascade shapes — stronger than the
+equality across cascade shapes — stronger than the
 error envelopes t-digest/MG/HLL get.
 """
 
@@ -80,15 +80,7 @@ def test_point_estimate_never_underestimates():
     assert np.quantile(over, 0.99) <= bound
 
 
-# ------------------------------------------------------------- build modes
-def test_direct_equals_presketch_bitwise(spark, points):
-    direct = cms_rollup(points, "1m", "source", depth=4, width=256).toPandas()
-    pre = cms_rollup(
-        points, "1m", "source", depth=4, width=256, presketch=True
-    ).toPandas()
-    assert _tables_equal(direct, pre)
-
-
+# ------------------------------------------------------------- cascades
 def test_cascade_equals_direct_bitwise(spark, points):
     fine = cms_rollup(points, "1m", "source", depth=4, width=256)
     casc = cms_cascade(fine, "1m", "1h").toPandas()
@@ -183,17 +175,3 @@ def test_cascade_and_query_are_pure_catalyst(spark, points, tmp_path):
     query_plan = cms_query(fine, ["books"])._jdf.queryExecution().executedPlan().toString()
     for plan in (casc_plan, query_plan):
         assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
-
-
-def test_presketch_single_python_stage(spark, points, tmp_path):
-    """presketch partials are fixed depth*width rows per group per
-    batch; the only Python stage is the partial build itself — the
-    merge after the shuffle is the Catalyst HOF fold."""
-    points.write.parquet(str(tmp_path / "pts"))
-    pts = spark.read.parquet(str(tmp_path / "pts"))
-    plan = (
-        cms_rollup(pts, "1h", "source", depth=2, width=64, presketch=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("MapInPandas") == 1, plan
-    assert "EvalPython" not in plan, plan

@@ -186,7 +186,9 @@ def test_daemon_sketch_stream_partials_dedupe_replay(spark, tmp_path):
 
 def test_daemon_sketch_config_validation(spark, tmp_path):
     from logtrics_spark.api import Engine
+    from logtrics_spark.config import ConfigError
     from logtrics_spark.plans.daemon import Daemon
+    from logtrics_spark.plans.pipeline import RollupJob
 
     eng = Engine()
     eng.rule("r", r"(?P<n>\d+)", lambda caps, m: m.counter("req").inc(1))
@@ -197,6 +199,18 @@ def test_daemon_sketch_config_validation(spark, tmp_path):
             eng,
             str(tmp_path / "s"),
         )
+    # unknown [sketches] keys raise instead of being dropped: a removed
+    # option, and a typo of a real one
+    for bad in ({"presketch": True}, {"mg_K": 64}):
+        with pytest.raises(ConfigError, match="unknown \\[sketches\\] keys"):
+            Daemon(
+                spark,
+                {"modes": ["console"], "sketches": {"enabled": ["mg"], **bad}},
+                eng,
+                str(tmp_path / "s"),
+            )
+    with pytest.raises(ConfigError, match="presketch"):
+        RollupJob(spark, str(tmp_path / "j"), sketches={"enabled": ["mg"], "presketch": True})
     d = _daemon(spark, tmp_path)
     with pytest.raises(ValueError, match="no sk_tdigest"):
         d.read_sketch("tdigest")

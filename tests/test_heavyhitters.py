@@ -124,7 +124,7 @@ def test_mg_cascade_validation(spark):
 def test_mg_cascade_matches_mg_merge_reference(spark):
     """The r7 pure-Catalyst cascade must be VALUE-IDENTICAL — items,
     item order, clipped counts, accumulated err, total_n — to the
-    Python `mg_merge` reference (still the presketch-mode merge), on a
+    Python `mg_merge` reference (the streaming fold's merge), on a
     workload where fine summaries are clipped (err > 0) and one fine
     window is emptied to exercise the posexplode_outer null-pos path
     for err/total_n accumulation."""
@@ -169,11 +169,9 @@ def test_mg_cascade_matches_mg_merge_reference(spark):
 
 
 def test_mg_presketch_high_cardinality_bounds(spark):
-    """presketch mode with window cardinality >> k: PODS'12 guarantee
-    holds (est <= true <= est + err, mass exact, heavy items survive)
-    and the plan shows the map-side partial (MapInPandas) instead of
-    funnelling the window's full distinct set through one
-    collect_list task."""
+    """Window cardinality >> k (5,000 distinct items, k=64, one
+    window): the PODS'12 guarantee holds (est <= true <= est + err,
+    mass exact, heavy items survive)."""
     rng = np.random.default_rng(7)
     ids = (rng.zipf(1.5, 30_000) % 5000).astype(np.int64)
     pdf = pd.DataFrame(
@@ -187,13 +185,10 @@ def test_mg_presketch_high_cardinality_bounds(spark):
     )
     df = spark.createDataFrame(pdf).repartition(8)
     k = 64
-    pre_df = mg_rollup(df, "1h", "user", k=k, presketch=True)
-    plan = pre_df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    rows = pre_df.collect()
+    rows = mg_rollup(df, "1h", "user", k=k).collect()
     assert len(rows) == 1
     r = rows[0]
-    assert r["total_n"] == len(pdf)  # exact mass through partials
+    assert r["total_n"] == len(pdf)  # exact mass
     assert len(r["items"]) <= k
     true = pd.Series(ids.astype(str)).value_counts()
     est = dict(zip(r["items"], r["counts"]))
@@ -206,38 +201,11 @@ def test_mg_presketch_high_cardinality_bounds(spark):
     # err bookkeeping sane: bounded by total mass
     assert 0 < r["err"] <= len(pdf)
 
-    # direct mode funnels the distinct set; presketch must not
-    direct_plan = (
-        mg_rollup(df, "1h", "user", k=k)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInPandas" not in direct_plan
-
-
-def test_mg_presketch_agrees_with_direct_when_exact(spark):
-    """k >= cardinality: both modes are exact and identical (the same
-    items, the same counts, err 0) regardless of batching."""
-    df, pdf = _points(spark)
-    k = 1024
-    d = mg_rollup(df, "1m", "user", k=k)
-    p = mg_rollup(df, "1m", "user", k=k, presketch=True)
-    drows = {tuple(r[c] for c in ("source", "metric", "kind", "window_start")): r for r in d.collect()}
-    prows = {tuple(r[c] for c in ("source", "metric", "kind", "window_start")): r for r in p.collect()}
-    assert drows.keys() == prows.keys()
-    for key, dr in drows.items():
-        pr = prows[key]
-        assert dr["err"] == pr["err"] == 0
-        assert dict(zip(dr["items"], dr["counts"])) == dict(zip(pr["items"], pr["counts"]))
-        assert dr["total_n"] == pr["total_n"]
-
 
 def test_mg_null_items_dropped_consistently(spark):
-    """Null items (a null metric field cast to string) must not
-    misalign direct mode's parallel collect_lists (items drops nulls,
-    counts kept them -> lexsort shape crash) and both modes must agree:
-    null = no observation."""
+    """Null items (a null metric field cast to string) are dropped
+    before counting: null = no observation, in the summary and in
+    total_n."""
     pdf = pd.DataFrame(
         {
             "source": "web",
@@ -248,9 +216,8 @@ def test_mg_null_items_dropped_consistently(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    for presketch in (False, True):
-        r = mg_rollup(df, "1h", "user", k=8, presketch=presketch).collect()
-        assert len(r) == 1
-        est = dict(zip(r[0]["items"], r[0]["counts"]))
-        assert est == {"7": 2, "9": 1}, (presketch, est)
-        assert r[0]["total_n"] == 3  # nulls are not observations
+    r = mg_rollup(df, "1h", "user", k=8).collect()
+    assert len(r) == 1
+    est = dict(zip(r[0]["items"], r[0]["counts"]))
+    assert est == {"7": 2, "9": 1}
+    assert r[0]["total_n"] == 3  # nulls are not observations

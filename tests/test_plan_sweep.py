@@ -37,7 +37,7 @@ PY_ALLOWED = {
     "lttb_1m": {"FlatMapGroupsInPandas"},  # bucket selection fold
     # merged entry: the 'arrow' part is the declared Arrow extractor
     "tokseq_tiers": {"MapInPandas", "ArrowEvalPython"},
-    # sketch pipelines (direct mode): collect_list shuffle + Arrow
+    # sketch pipelines: collect_list shuffle + Arrow
     # build/merge/stats passes — no grouped-map, no per-group pandas
     "tdigest_1h": {"ArrowEvalPython"},
     "freq_sketch_1h": {"ArrowEvalPython"},  # incl. cms build; cascade+probe pure JVM

@@ -4,6 +4,12 @@ Runs every __spark_entry__.queries() entry on Spark and its
 oracle_sql() twin on DuckDB at the given sf dir, then compares
 row-count, column names, and an order-insensitive value hash
 (columns sorted by name, rows sorted by their string form).
+
+    python tools/check_entry.py [SF_DIR] [NAME[,NAME...]]
+
+The optional second argument re-runs only the named entries (comma-
+separated); an unknown name raises.  Each OK line prints the row count
+and the value hash, so two trees can be compared entry by entry.
 """
 
 from __future__ import annotations
@@ -51,16 +57,19 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
     import __spark_entry__ as entrymod
     from logtrics_spark.session import get_spark
 
+    qs = entrymod.queries()
+    names = set(only.split(",")) if only else set(qs)
+    if unknown := names - set(qs):
+        raise ValueError(f"unknown entries {sorted(unknown)}")
     spark = get_spark(app_name="check-entry", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
-        if only and only != name:
+        if name not in names:
             continue
         try:
             got = fn(spark, sf_dir).toPandas()
@@ -101,7 +110,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None) -> int:
             print("  spark:", got.head(3).to_dict("records"))
             print("  duck :", exp.head(3).to_dict("records"))
         else:
-            print(f"OK   {name}: {len(got)} rows")
+            print(f"OK   {name}: {len(got)} rows, hash {frame_hash(got)}")
     # smoke entry()
     if not only:
         res = entrymod.entry(spark)
