@@ -13,4 +13,15 @@ compression, retention + lineage) per the north rule.
 
 __version__ = "0.1.0"
 
+import sys
+
 from logtrics_spark.session import get_spark  # noqa: F401
+
+# A PySpark Python worker (forked from pyspark.daemon, which imports
+# pyspark.worker first) imports this package when it unpickles one of
+# the package's UDF closures: pin Spark's own archives there, once per
+# worker, for every UDF the package ships (api._pin_spark_archives).
+if "pyspark.worker" in sys.modules:
+    from logtrics_spark.api import _pin_spark_archives
+
+    _pin_spark_archives()

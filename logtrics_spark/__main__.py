@@ -13,7 +13,7 @@ cmd/logtrics/main.go's cobra CLI with config + mode flags).
 ``run`` is the daemon (the reference's primary entry point,
 main.go:97-121): TOML modes -> sources -> rules -> streaming rollup ->
 tier store + Graphite flusher; ``rollup`` runs the resumable batch job
-(ingest -> tiers -> Gorilla -> lineage [-> retention]); ``graphite``
+(ingest -> tiers -> Gorilla chunks -> lineage [-> retention]); ``graphite``
 formats a stored tier as plaintext lines and ships them over TCP (K2);
 ``config-check`` validates a reference-shaped TOML.  Spark session
 settings come from logtrics_spark.session (SPARK_GRAFT_CPUS etc.).
@@ -130,8 +130,9 @@ def _cmd_alerts(args) -> int:
 def _cmd_read(args) -> int:
     """Time-range read over a stored tier — the dashboard fetch path.
 
-    Live tier tables get plain pushed ``window_start`` predicates;
-    ``--from-chunks`` serves Gorilla-archived tiers with CHUNK-level
+    ``read_tier`` rows (sealed days decoded from their chunks, live
+    rows as stored) get plain ``window_start`` predicates;
+    ``--from-chunks`` serves the sealed days alone with CHUNK-level
     zone-map pruning (only chunks whose stored min_ts/max_ts overlap
     [--from, --to] are decompressed — operators/gorilla.py::
     decompress_chunks_range).  Daemon (snapshot-flush) stores resolve
@@ -230,7 +231,7 @@ def _cmd_compact(args) -> int:
 
 def _cmd_archive(args) -> int:
     """Seal the live store's closed days into a batch archival store
-    (tiers + Gorilla chunks + lineage, plus cascaded sk_* sketch
+    (Gorilla chunks + lineage, plus cascaded sk_* sketch
     tables) and drop them from the live head — the daemon owns the open
     day, the RollupJob owns history."""
     from logtrics_spark.api import Engine

@@ -167,8 +167,10 @@ def _pin_spark_archives() -> None:
     10,000-line batch.  Those archives belong to the Spark install and do
     not change under a running worker, so their importers keep their
     directory.  Any other archive, such as one added with ``addPyFile``,
-    is still re-read.  Idempotent; workers are reused across tasks, so
-    only a worker's first task pays.
+    is still re-read.  Idempotent.  The package installs it once per
+    worker process, when the worker first imports ``logtrics_spark`` to
+    unpickle one of its closures (``logtrics_spark/__init__.py``), so
+    every Python task after a worker's first one skips the re-read.
     """
     if getattr(zipimport.zipimporter, "_spark_archives_pinned", False):
         return
@@ -292,7 +294,6 @@ class Engine:
         )
 
         def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            _pin_spark_archives()
             compiled = [(name, re.compile(pat), h) for name, pat, h in rules]
             for pdf in batches:
                 out = apply_rules(pdf, compiled)

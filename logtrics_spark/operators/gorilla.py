@@ -28,14 +28,24 @@ Chunk layout (one chunk per (series, chunk_window), k value columns
 sharing one timestamp stream):
     u32 n_points | u16 n_cols | i64 ts[0] | u64 col0[0] .. u64 colk[0]
     | ts bitstream | col0 bitstream | .. | colk bitstream
-  (each bitstream byte-aligned, prefixed by u32 byte length)
+    | trailer: (u16 column, validity bitmap) per column with a null
+  (each bitstream byte-aligned, prefixed by u32 byte length, so a read
+  skips the streams of columns it does not return).  Each value column
+  is its 64-bit pattern: int64 for integer columns, float64 for float
+  columns, the µs offset from window_start for timestamps.  A chunk
+  without nulls has no trailer.  The chunk table's ``value_cols``
+  column names each chunk's columns and their Spark types
+  ("cnt:bigint,sum:double,.."); parquet dictionary-encodes it.  Chunk
+  rows without it are the older float64-only layout, named by the
+  reader.
 
 The Spark face is ``compress_tier`` (repartition + sort by chunk key ->
-one mapInArrow pass per partition) and ``decompress_chunks``
-(mapInPandas explode).  Chunks are built from TIER rows (already 3-6
-orders of magnitude smaller than raw), so the Python codec cost is
-bounded by tier cardinality, not raw row count; the chunk key includes
-the chunk window, so hot sources split across chunks.
+one mapInArrow pass per partition) and ``decompress_chunks`` (one
+mapInArrow pass that decodes only the requested columns).  Chunks are
+built from TIER rows (already 3-6 orders of magnitude smaller than
+raw), so the Python codec cost is bounded by tier cardinality, not raw
+row count; the chunk key includes the chunk window, so hot sources
+split across chunks.
 """
 
 from __future__ import annotations
@@ -44,7 +54,6 @@ import struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,28 +61,6 @@ from pyspark.sql import types as T
 from logtrics_spark.operators.rollup import KEY, tier_seconds, window_start
 
 # ---------------------------------------------------------------- bit io
-
-
-class _BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nbits += nbits
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def getvalue(self) -> bytes:
-        if self.nbits:
-            return bytes(self.buf) + bytes([(self.acc << (8 - self.nbits)) & 0xFF])
-        return bytes(self.buf)
 
 
 class _BitReader:
@@ -99,12 +86,10 @@ class _BitReader:
 
 # -------------------------------------------------------- bit packing
 #
-# The encoders below emit (value, nbits) code pairs instead of driving a
-# per-call bit writer; _pack_codes assembles the final bitstream with one
-# vectorized numpy pass (ragged bit expansion + packbits).  Byte layout
-# is identical to the original _BitWriter (MSB-first, final byte
-# zero-padded low), so chunks written by either implementation decode
-# with either decoder.
+# The encoders below emit (value, nbits) code pairs; _pack_codes
+# assembles the final bitstream with one vectorized numpy pass.  Bits
+# are MSB-first and the final byte is zero-padded low; the byte format
+# is pinned by golden fixtures (tests/test_gorilla.py).
 
 
 def _pack_codes(vals: np.ndarray, nbits: np.ndarray) -> bytes:
@@ -112,8 +97,8 @@ def _pack_codes(vals: np.ndarray, nbits: np.ndarray) -> bytes:
 
     O(#codes), not O(#bits): each code lands in at most two adjacent
     64-bit words; the high/low contributions are scattered with
-    np.add.at (codes never overlap, so add == bitwise-or).  Matches the
-    _BitWriter layout exactly (MSB-first, trailing zero padding).
+    np.add.at (codes never overlap, so add == bitwise-or).  MSB-first,
+    trailing zero padding.
     """
     nb = nbits.astype(np.int64)
     keep = nb > 0
@@ -171,35 +156,9 @@ def _zero_run(buf: bytes, pos: int, max_bits: int) -> int:
 
 # ------------------------------------------------------------ ts codec
 
-_DOD_BUCKETS = [(64, "10", 7), (256, "110", 9), (2048, "1110", 12)]
-
-
-def _encode_ts(w: _BitWriter, ts: np.ndarray) -> None:
-    """Reference (per-write) encoder — kept as the format spec and the
-    differential-test twin of the vectorized ``_encode_ts_codes``."""
-    prev_delta = 0
-    prev = int(ts[0])
-    for i in range(1, len(ts)):
-        cur = int(ts[i])
-        delta = cur - prev
-        dod = delta - prev_delta
-        if dod == 0:
-            w.write(0, 1)
-        else:
-            for hi, prefix, bits in _DOD_BUCKETS:
-                if -hi < dod <= hi:
-                    w.write(int(prefix, 2), len(prefix))
-                    w.write(dod + hi - 1, bits)
-                    break
-            else:
-                w.write(0b1111, 4)
-                w.write(dod & ((1 << 64) - 1), 64)
-        prev, prev_delta = cur, delta
-
-
 def _encode_ts_codes(ts: np.ndarray) -> bytes:
     """Vectorized ts encoder: bucket selection and payloads via numpy,
-    one _pack_codes pass; bit-identical to _encode_ts."""
+    one _pack_codes pass."""
     d = np.diff(ts.astype(np.int64))
     if len(d) == 0:
         return b""
@@ -283,36 +242,6 @@ def _decode_ts(r: _BitReader, n: int, first: int) -> np.ndarray:
 # --------------------------------------------------------- value codec
 
 
-def _encode_vals(w: _BitWriter, bits: np.ndarray) -> None:
-    """Reference (per-write) encoder — format spec / differential twin
-    of ``_encode_vals_codes``."""
-    prev = int(bits[0])
-    lead, mlen = -1, -1  # previous window; -1 = none
-    for i in range(1, len(bits)):
-        cur = int(bits[i])
-        xor = prev ^ cur
-        if xor == 0:
-            w.write(0, 1)
-        else:
-            w.write(1, 1)
-            lz = 64 - xor.bit_length()  # leading zeros
-            tz = (xor & -xor).bit_length() - 1  # trailing zeros
-            if lz > 31:
-                lz = 31
-            ml = 64 - lz - tz
-            if lead >= 0 and lz >= lead and lz + ml <= lead + mlen:
-                # fits inside the previous (leading, length) window
-                w.write(0, 1)
-                w.write(xor >> (64 - lead - mlen), mlen)
-            else:
-                w.write(1, 1)
-                w.write(lz, 5)
-                w.write(ml - 1, 6)
-                w.write(xor >> tz, ml)
-                lead, mlen = lz, ml
-        prev = cur
-
-
 def _clz64(x: np.ndarray) -> np.ndarray:
     """Vectorized count-leading-zeros for uint64 (exact, 6 halvings)."""
     x = x.copy()
@@ -335,27 +264,20 @@ def _xor_stats(bits: np.ndarray):
     return xor, nz, lz, tz, ml
 
 
-def _encode_vals_codes(bits: np.ndarray, policy: str = "fixed") -> bytes:
+def _encode_vals_codes(bits: np.ndarray) -> bytes:
     """Value encoder.  The control-bit format lets the ENCODER pick any
-    (leading, length) window policy — the decoder just follows headers:
-
-    - policy='greedy': the paper's adaptive walk (reuse the previous
-      window while values fit).  Sequential by construction; kept as
-      the format spec and byte-pinned against _encode_vals by the
-      differential test.
-    - policy='fixed' (default): one chunk-level window covering the
-      p10 leading / p90 ending bit of all xors; values outside it emit
-      their own one-off header, and the next fitting value re-declares
-      the chunk window.  Every decision is a numpy mask — no Python
-      per-element loop — at a small size cost (~10% of values pay a
-      13-bit header; payloads are window-width instead of per-value
-      width).  Same decoder, bit-exact round-trip either way.
+    (leading, length) window — the decoder just follows headers.  This
+    one declares one chunk-level window covering the p10 leading / p90
+    ending bit of all xors; values outside it emit their own one-off
+    header, and the next fitting value re-declares the chunk window.
+    Every decision is a numpy mask — no Python per-element loop — at a
+    small size cost over the paper's adaptive walk (~10% of values pay a
+    13-bit header; payloads are window-width instead of per-value
+    width).
     """
     if len(bits) <= 1:
         return b""
     xor, nz, lz, tz, ml = _xor_stats(bits)
-    if policy == "greedy":
-        return _encode_vals_codes_greedy(xor, lz, tz, ml)
 
     m = len(xor)
     # two code slots per element: control/header, then payload
@@ -412,36 +334,6 @@ def _encode_vals_codes(bits: np.ndarray, policy: str = "fixed") -> bytes:
     return _pack_codes(all_vals, all_nbits)
 
 
-def _encode_vals_codes_greedy(xor, lz, tz, ml) -> bytes:
-    xor_l = xor.tolist()
-    lz_l = lz.tolist()
-    tz_l = tz.tolist()
-    ml_l = ml.tolist()
-
-    vals: list[int] = []
-    nbits: list[int] = []
-    ap_v, ap_n = vals.append, nbits.append
-    lead, mlen = -1, -1
-    for i, x in enumerate(xor_l):
-        if x == 0:
-            ap_v(0)
-            ap_n(1)
-            continue
-        l_, m_ = lz_l[i], ml_l[i]
-        if lead >= 0 and l_ >= lead and l_ + m_ <= lead + mlen:
-            ap_v(0b10)
-            ap_n(2)
-            ap_v(x >> (64 - lead - mlen))
-            ap_n(mlen)
-        else:
-            ap_v((0b11 << 11) | (l_ << 6) | (m_ - 1))
-            ap_n(13)
-            ap_v(x >> tz_l[i])
-            ap_n(m_)
-            lead, mlen = l_, m_
-    return _pack_codes(np.array(vals, dtype=np.uint64), np.array(nbits, dtype=np.uint8))
-
-
 def _decode_vals(r: _BitReader, n: int, first: int) -> np.ndarray:
     # hot path mirrors _decode_ts: inlined reads, zero-run repeat fill
     out = np.empty(n, dtype=np.uint64)
@@ -484,51 +376,85 @@ def _decode_vals(r: _BitReader, n: int, first: int) -> np.ndarray:
 # ----------------------------------------------------------- chunk api
 
 
-def compress_chunk(ts: np.ndarray, cols: list[np.ndarray]) -> bytes:
-    """(int64 ts[], k float64 columns) -> one Gorilla chunk (bytes)."""
+def compress_chunk(
+    ts: np.ndarray, cols: list[np.ndarray], valid: list[np.ndarray | None] | None = None
+) -> bytes:
+    """(int64 ts[], k value columns) -> one Gorilla chunk (bytes).
+
+    A column is stored as its 64-bit pattern: float64, int64 and uint64
+    arrays as they are, anything else converted to float64 first.
+    ``valid`` (one bool mask or None per column) marks nulls: such a
+    column stores 0 bits at its nulls plus a validity bitmap in the
+    chunk's trailer, so NaN and null stay apart.
+    """
     ts = np.asarray(ts, dtype=np.int64)
     n = len(ts)
     if n == 0:
         return struct.pack("<IH", 0, len(cols))
-    views = [np.ascontiguousarray(c, dtype=np.float64).view(np.uint64) for c in cols]
+    views = []
+    trailer = b""
+    for i, (c, ok) in enumerate(zip(cols, valid or [None] * len(cols))):
+        c = np.asarray(c)
+        if c.dtype not in (np.float64, np.int64, np.uint64):
+            c = c.astype(np.float64)
+        v = np.ascontiguousarray(c).view(np.uint64)
+        if ok is not None and not ok.all():
+            v = np.where(ok, v, np.uint64(0))
+            trailer += struct.pack("<H", i) + np.packbits(ok).tobytes()
+        views.append(v)
     head = struct.pack("<IHq", n, len(views), int(ts[0]))
     head += b"".join(struct.pack("<Q", int(v[0])) for v in views)
     streams = [_encode_ts_codes(ts)]
     streams += [_encode_vals_codes(v) for v in views]
-    return head + b"".join(struct.pack("<I", len(s)) + s for s in streams)
+    return head + b"".join(struct.pack("<I", len(s)) + s for s in streams) + trailer
 
 
-def decompress_chunk(buf: bytes) -> tuple[np.ndarray, list[np.ndarray]]:
-    """Inverse of compress_chunk; value arrays are float64 (bit-exact)."""
+def decompress_chunk(
+    buf: bytes, picks: list[int] | None = None
+) -> tuple[np.ndarray, list[np.ndarray], list[np.ndarray | None]]:
+    """Inverse of compress_chunk: (int64 ts, the uint64 bit pattern of
+    each picked column, its validity mask or None).  ``picks`` (column
+    positions, default all) decodes only those streams; the others are
+    skipped by their u32 length prefix."""
     n, k = struct.unpack_from("<IH", buf, 0)
+    picks = list(range(k)) if picks is None else picks
     if n == 0:
-        return np.empty(0, dtype=np.int64), [np.empty(0) for _ in range(k)]
-    off = 6
-    (first_ts,) = struct.unpack_from("<q", buf, off)
-    off += 8
-    first_vals = []
-    for _ in range(k):
-        (fv,) = struct.unpack_from("<Q", buf, off)
-        first_vals.append(fv)
-        off += 8
-    streams = []
+        empty = [np.empty(0, dtype=np.uint64) for _ in picks]
+        return np.empty(0, dtype=np.int64), empty, [None] * len(picks)
+    (first_ts,) = struct.unpack_from("<q", buf, 6)
+    firsts = struct.unpack_from(f"<{k}Q", buf, 14)
+    off = 14 + 8 * k
+    spans = []
     for _ in range(k + 1):
         (ln,) = struct.unpack_from("<I", buf, off)
-        off += 4
-        streams.append(buf[off : off + ln])
-        off += ln
-    ts = _decode_ts(_BitReader(streams[0]), n, first_ts)
-    cols = [
-        _decode_vals(_BitReader(streams[i + 1]), n, first_vals[i]).view(np.float64)
-        for i in range(k)
-    ]
-    return ts, cols
+        spans.append((off + 4, off + 4 + ln))
+        off += 4 + ln
+    nulls = {}
+    nb = (n + 7) >> 3
+    while off < len(buf):  # trailer: (u16 column, validity bitmap) per nullable column
+        (i,) = struct.unpack_from("<H", buf, off)
+        bitmap = np.frombuffer(buf, np.uint8, nb, off + 2)
+        nulls[i] = np.unpackbits(bitmap, count=n).astype(bool)
+        off += 2 + nb
+    ts = _decode_ts(_BitReader(buf[slice(*spans[0])]), n, first_ts)
+    cols = [_decode_vals(_BitReader(buf[slice(*spans[i + 1])]), n, firsts[i]) for i in picks]
+    return ts, cols, [nulls.get(i) for i in picks]
 
 
 # ---------------------------------------------------------- spark face
 
 CHUNK_SPAN: dict[str, str] = {"1m": "1d", "5m": "1d", "1h": "1d", "1d": "1d"}
 DEFAULT_VALUE_COLS = ["cnt", "sum", "min", "max", "avg", "last"]
+# every stored tier column; rate and stddev re-derive from these on read
+TIER_VALUE_COLS = [*DEFAULT_VALUE_COLS, "last_ts", "sum_sq"]
+# value column types a chunk can carry, by Spark's simpleString
+_TYPES = {
+    t.simpleString(): t
+    for t in (
+        T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(),
+        T.FloatType(), T.DoubleType(), T.TimestampType(), T.TimestampNTZType(),
+    )
+}
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -540,6 +466,8 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("min_ts", T.TimestampType()),
         T.StructField("max_ts", T.TimestampType()),
         T.StructField("chunk", T.BinaryType()),
+        # "name:type,..." of the chunk's value columns, in chunk order
+        T.StructField("value_cols", T.StringType()),
     ]
 )
 
@@ -553,6 +481,22 @@ def _group_starts(keys: list) -> np.ndarray:
         a = col.to_numpy(zero_copy_only=False)
         change[1:] |= a[1:] != a[:-1]
     return np.flatnonzero(change)
+
+
+def _column_bits(arr, ws_us: np.ndarray):
+    """One Arrow value column -> (uint64 bit patterns, validity or None).
+    Integers travel as int64, floats as float64, timestamps as their µs
+    offset from the row's window_start — all lossless."""
+    import pyarrow as pa
+
+    valid = np.asarray(arr.is_valid()) if arr.null_count else None
+    if pa.types.is_timestamp(arr.type):
+        v = np.asarray(arr.cast(pa.int64()).fill_null(0)) - ws_us
+    elif pa.types.is_integer(arr.type):
+        v = np.asarray(arr.cast(pa.int64()).fill_null(0))
+    else:
+        v = np.asarray(arr.cast(pa.float64()).fill_null(0.0))
+    return np.ascontiguousarray(v).view(np.uint64), valid
 
 
 def compress_tier(
@@ -574,18 +518,31 @@ def compress_tier(
     so a hot source fans out across chunk windows instead of one giant
     group.
 
-    ``extra_keys`` (string columns of ``tier_df``, e.g. ``["tier"]``)
-    join the chunk key and pass through to the output — the pipeline
-    compresses ALL tiers' rows in ONE pass over their union.
+    ``value_cols`` defaults to every stored tier column present
+    (``TIER_VALUE_COLS``); each keeps its own type and nulls, and the
+    ``value_cols`` output column describes them, so a read needs no
+    column list from the caller.  ``extra_keys`` (string columns of
+    ``tier_df``, e.g. ``["tier"]``) join the chunk key and pass through
+    to the output — the pipeline compresses ALL tiers' rows in ONE pass
+    over their union.
     """
     import pyarrow as pa
 
     chunk_span = chunk_span or CHUNK_SPAN[tier]
-    vcols = list(value_cols or DEFAULT_VALUE_COLS)
+    vcols = list(value_cols or [c for c in TIER_VALUE_COLS if c in tier_df.columns])
+    types = [tier_df.schema[c].dataType.simpleString() for c in vcols]
+    bad = [f"{c}:{t}" for c, t in zip(vcols, types) if t not in _TYPES]
+    if bad:
+        raise TypeError(f"Gorilla chunks cannot store {bad}; types: {sorted(_TYPES)}")
+    desc = ",".join(f"{c}:{t}" for c, t in zip(vcols, types))
     ekeys = list(extra_keys or [])
     keys = [*ekeys, *KEY, "chunk_start"]
+    # the description also rides as field metadata (parquet keeps it in
+    # the footer schema), so a read learns the types without a job
     schema = T.StructType(
-        [T.StructField(k, T.StringType()) for k in ekeys] + list(CHUNK_SCHEMA.fields)
+        [T.StructField(k, T.StringType()) for k in ekeys]
+        + CHUNK_SCHEMA.fields[:-1]
+        + [T.StructField("value_cols", T.StringType(), metadata={"value_cols": desc})]
     )
     out_names = schema.fieldNames()
 
@@ -599,10 +556,16 @@ def compress_tier(
         bounds = np.append(starts, batch.num_rows)
         first, stop = bounds[:done], bounds[1 : done + 1]
         ws = batch.column("window_start")
-        ts = np.asarray(ws.cast(pa.int64())) // 10**6  # Spark ships timestamps in us
-        vals = [batch.column(c).to_numpy(zero_copy_only=False).astype(np.float64) for c in vcols]
+        us = np.asarray(ws.cast(pa.int64()))  # Spark ships timestamps in us
+        ts = us // 10**6
+        bits = [_column_bits(batch.column(c), us) for c in vcols]
         chunks = [
-            compress_chunk(ts[a:b], [v[a:b] for v in vals]) for a, b in zip(first, stop)
+            compress_chunk(
+                ts[a:b],
+                [v[a:b] for v, _ in bits],
+                [None if ok is None else ok[a:b] for _, ok in bits],
+            )
+            for a, b in zip(first, stop)
         ]
         cols = [batch.column(k).take(first) for k in keys]
         cols += [
@@ -610,6 +573,7 @@ def compress_tier(
             ws.take(first),
             ws.take(stop - 1),
             pa.array(chunks, pa.binary()),
+            pa.array([desc] * done, pa.string()),
         ]
         rest = batch.slice(int(bounds[done])) if not last else None
         return pa.RecordBatch.from_arrays(cols, names=out_names), rest
@@ -636,50 +600,122 @@ def compress_tier(
     )
 
 
+def _out_types(descs: list, names: list[str]) -> dict[str, T.DataType]:
+    """Output type of each requested column over descriptions (None: a
+    legacy float64 row).  Integer and float columns that differ across
+    descriptions widen to double, as a union would; a column no
+    description carries reads as double."""
+    seen: dict[str, set] = {c: set() for c in names}
+    for d in descs:
+        pairs = [p.split(":") for p in d.split(",")] if d else [(c, "double") for c in names]
+        for c, t in pairs:
+            seen.get(c, set()).add(t)
+    out = {}
+    for c, ts in seen.items():
+        if len(ts) > 1 and any(t.startswith("timestamp") for t in ts):
+            raise ValueError(f"chunk column {c!r} is stored as {sorted(ts)}")
+        out[c] = _TYPES[ts.pop()] if len(ts) == 1 else T.DoubleType()
+    return out
+
+
 def decompress_chunks(chunk_df: DataFrame, value_cols: list[str] | None = None) -> DataFrame:
-    """Chunk table -> tier rows (inverse of compress_tier).
+    """Chunk table -> tier rows (inverse of compress_tier), with the
+    ``value_cols`` columns (default ``DEFAULT_VALUE_COLS``).
 
-    ``value_cols`` must be the writer's list IN WRITER ORDER: the chunk
-    header stores only the column COUNT (validated below — a mismatch
-    raises instead of silently truncating/mislabeling), names travel in
-    the caller's config exactly like a parquet-free columnar format.
+    A typed chunk row (its ``value_cols`` description is set, as
+    compress_tier writes it) yields each named column in its own type,
+    nulls included, and decodes only those streams; a name the chunk
+    does not carry reads null.  Output types come from the description
+    in the column's metadata, or, when a plan lost it, from one small
+    job over the ``value_cols`` column.  A legacy chunk row (no
+    description) stores float64 columns by position: ``value_cols``
+    must then be the writer's list IN WRITER ORDER — a count mismatch
+    raises instead of mislabeling streams.
     """
-    value_cols = value_cols or DEFAULT_VALUE_COLS
-    vcols = list(value_cols)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    names = list(value_cols or DEFAULT_VALUE_COLS)
+    typed = "value_cols" in chunk_df.columns
+    descs = [None]
+    if typed:
+        descs = [chunk_df.schema["value_cols"].metadata.get("value_cols")]
+        if descs[0] is None:  # a plan or table format that dropped the metadata
+            descs = [r[0] for r in chunk_df.select("value_cols").distinct().collect()]
+    types = _out_types(descs, names)
     out_schema = T.StructType(
-        [
-            T.StructField("source", T.StringType()),
-            T.StructField("metric", T.StringType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-        ]
-        + [T.StructField(c, T.DoubleType()) for c in vcols]
+        [T.StructField(c, T.StringType()) for c in KEY]
+        + [T.StructField("window_start", T.TimestampType())]
+        + [T.StructField(c, types[c]) for c in names]
     )
+    arrow_schema = pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in out_schema])
+    floats = [isinstance(types[c], (T.FloatType, T.DoubleType)) for c in names]
+    layouts: dict = {}
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                ts, cols = decompress_chunk(bytes(row.chunk))
-                if len(cols) != len(vcols):
-                    raise ValueError(
-                        f"chunk encodes {len(cols)} value columns but "
-                        f"value_cols names {len(vcols)} ({vcols}); pass the "
-                        "writer's chunk_value_cols (in writer order)"
-                    )
-                frame = {
-                    "source": np.repeat(row.source, len(ts)),
-                    "metric": np.repeat(row.metric, len(ts)),
-                    "kind": np.repeat(row.kind, len(ts)),
-                    "window_start": pd.to_datetime(ts, unit="s"),
-                }
-                for name, col in zip(vcols, cols):
-                    frame[name] = col
-                frames.append(pd.DataFrame(frame))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def layout(desc, k: int) -> list:
+        """[(stream position, stored type) or None] per requested name."""
+        if desc is None:
+            if k != len(names):
+                raise ValueError(
+                    f"chunk encodes {k} value columns but value_cols names "
+                    f"{len(names)} ({names}); pass the writer's value columns "
+                    "(in writer order)"
+                )
+            return [(i, "double") for i in range(k)]
+        if desc not in layouts:
+            pos = {c: (i, t) for i, (c, t) in enumerate(p.split(":") for p in desc.split(","))}
+            for c, f in zip(names, floats):
+                t = pos.get(c, (0, None))[1]
+                if t and _TYPES[t] != types[c] and not (f and not t.startswith("timestamp")):
+                    raise ValueError(f"chunk column {c!r} is stored as {t}, read as {types[c]}")
+            layouts[desc] = [pos.get(c) for c in names]
+        return layouts[desc]
 
-    return chunk_df.select("source", "metric", "kind", "chunk").mapInPandas(explode, out_schema)
+    def values(bits: np.ndarray, stored: str, ts: np.ndarray, as_float: bool) -> np.ndarray:
+        if stored.startswith("timestamp"):
+            return bits.view(np.int64) + ts * 10**6
+        v = bits.view(np.float64 if stored in ("double", "float") else np.int64)
+        return v.astype(np.float64) if as_float and v.dtype != np.float64 else v
+
+    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            bufs = batch.column("chunk").to_pylist()
+            descs = batch.column("value_cols").to_pylist() if typed else [None] * len(bufs)
+            counts, stamps = [], []
+            vals: list[list] = [[] for _ in names]
+            oks: list[list] = [[] for _ in names]  # validity per chunk, None: all valid
+            for buf, desc in zip(bufs, descs):
+                (k,) = struct.unpack_from("<H", buf, 4)
+                where = layout(desc, k)
+                ts, bits, valid = decompress_chunk(buf, [w[0] for w in where if w])
+                n = len(ts)
+                counts.append(n)
+                stamps.append(ts)
+                got = iter(zip(bits, valid))
+                for j, w in enumerate(where):
+                    if w is None:  # a column this chunk does not carry
+                        vals[j].append(np.zeros(n, np.float64 if floats[j] else np.int64))
+                        oks[j].append(np.zeros(n, bool))
+                    else:
+                        b, ok = next(got)
+                        vals[j].append(values(b, w[1], ts, floats[j]))
+                        oks[j].append(ok)
+            rows = pa.array(np.repeat(np.arange(len(bufs)), counts))
+            cols = [batch.column(c).take(rows) for c in KEY]
+            cols.append(pa.array(np.concatenate(stamps) * 10**6))
+            for v, ok in zip(vals, oks):
+                mask = None
+                if any(m is not None for m in ok):
+                    parts = [np.ones(len(x), bool) if m is None else m for x, m in zip(v, ok)]
+                    mask = ~np.concatenate(parts)
+                cols.append(pa.array(np.concatenate(v), mask=mask))
+            cols = [c.cast(f.type) for c, f in zip(cols, arrow_schema)]
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    src = [*KEY, "chunk", *(["value_cols"] if typed else [])]
+    return chunk_df.select(*src).mapInArrow(explode, out_schema)
 
 
 def decompress_chunks_range(

@@ -26,8 +26,8 @@ changed window's aggregate-so-far (streaming state holds the complete
 aggregate, so the LAST emission per window is the closed value).  The
 store therefore appends snapshot versions stamped with a monotonic
 ``flush_seq``; ``read_tier_latest`` resolves latest-wins per
-series+window.  (The batch pipeline's sealed, write-once tier tables
-remain the archival path; a daemon store is the live head.)
+series+window.  (The batch pipeline's sealed, write-once Gorilla chunk
+tables remain the archival path; a daemon store is the live head.)
 
 Production posture at scale is unchanged: file/tcp streams are the real
 sources; console/udp are the dev harness the reference also treats as
@@ -640,7 +640,8 @@ class Daemon:
 
     def archive_closed_days(self, job, before_day: str | None = None) -> dict:
         """Seal CLOSED days of the live store into a RollupJob's
-        archival store (tiers + Gorilla chunks + lineage), then drop
+        archival store (Gorilla chunks of every tier + one lineage
+        append, ``RollupJob.seal_from_fine``), then drop
         them from the live head — the daemon owns the open day, the
         batch pipeline owns sealed history; without this handoff they
         are disjoint stores a user must reconcile by hand.

@@ -2,8 +2,9 @@
 
 Pipeline:  raw token table -> extract points -> 1m rollup -> every
 coarse tier (5m/1h/1d) in ONE aggregate over the cached 1m frame ->
-Gorilla chunks for all tiers in one Arrow pass -> lineage seal ->
-retention.
+Gorilla chunks for all tiers in one Arrow pass -> one lineage append ->
+retention.  The chunks are the sealed tiers' only copy; ``read_tier``
+decodes them.
 
 Checkpoint/resume semantics (north rule): the unit of progress is a
 *seal unit* = (tier, source, day).  A run:
@@ -15,13 +16,14 @@ Checkpoint/resume semantics (north rule): the unit of progress is a
      determinism makes re-materializing sealed sources a byte-level
      no-op, and day-level granularity keeps tier tables at (tier, day)
      partitioning: ~sources-times fewer files to commit); coarse tiers
-     re-aggregate (stored ∪ fresh) 1m rows of their pending days,
+     re-aggregate (stored ∪ fresh) 1m rows of their pending days, the
+     stored ones decoded from the 1m chunks of just those days,
   4. seals through ``_seal`` — shared with ``seal_from_fine`` — which
-     writes ALL tier rows in one clustered dynamic-overwrite job and all
-     chunks in a second (idempotent: a replayed partition overwrites
-     itself with identical bytes),
-  5. appends sealed lineage rows strictly after the data lands, tier by
-     tier in tier order.
+     writes ALL tiers' Gorilla chunks in one clustered dynamic-overwrite
+     job (idempotent: a replayed partition overwrites itself with
+     identical bytes),
+  5. appends every tier's sealed lineage rows in ONE append, strictly
+     after the data lands.
 
 Kill the job anywhere and rerun: sealed units are skipped, unsealed
 units are recomputed onto the same partitions, and the final tables are
@@ -50,8 +52,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logtrics_spark.operators.extract import extract_points
-from logtrics_spark.operators.gorilla import compress_tier
-from logtrics_spark.operators.rollup import TIER_ORDER, cascade_tiers, rollup
+from logtrics_spark.operators import gorilla
+from logtrics_spark.operators.rollup import TIER_ORDER, cascade_tiers, rollup, tier_seconds
 from logtrics_spark.operators.sketchset import KIND_VALS
 from logtrics_spark.storage.tableio import ParquetTableIO
 
@@ -81,18 +83,9 @@ class RollupJob:
         tiers: list[str] | None = None,
         per_source_ts: bool = False,
         step_seconds: int = 1,
-        chunk_value_cols: list[str] | None = None,
         sketches=None,
     ) -> None:
-        """``chunk_value_cols`` picks the aggregate columns archived in
-        Gorilla chunks (default gorilla.DEFAULT_VALUE_COLS).  Retention
-        drops tier rows, so anything NOT in the chunks is gone for
-        dropped days — include "sum_sq" to keep timer stddev derivable
-        forever (read_tier_from_chunks then restores a stddev column);
-        rate/avg-style columns are derivable from cnt/sum and never need
-        archiving.
-
-        ``sketches`` (a ``SketchSet`` or its config-dict shape, e.g.
+        """``sketches`` (a ``SketchSet`` or its config-dict shape, e.g.
         ``{"enabled": ["tdigest", "mg", "hll"], "item_col": "value"}``)
         turns on MERGEABLE sketch tiers alongside the scalar tiers:
         run() builds finest-tier tdigest/MG/HLL rows from the same
@@ -113,7 +106,6 @@ class RollupJob:
         self.tiers = tiers or TIER_ORDER
         self.per_source_ts = per_source_ts
         self.step_seconds = step_seconds
-        self.chunk_value_cols = chunk_value_cols
         if sketches is None or isinstance(sketches, SketchSet):
             self.sketchset = sketches or SketchSet([])
         else:
@@ -177,15 +169,16 @@ class RollupJob:
     def run(
         self,
         run_id: str | None = None,
-        fail_after_tier: str | None = None,
+        fail_at: str | None = None,
         seal_before: str | None = None,
     ) -> dict:
         """Compute pending units for every tier; returns per-tier counts.
 
         ``seal_before`` ('yyyy-MM-dd'): only seal days strictly before
         this watermark, so an in-progress ingest day is never frozen.
-        ``fail_after_tier`` injects a crash after sealing that tier —
-        used by the kill/resume test; never set in production.
+        ``fail_at`` ("chunks", "sketches" or "lineage") injects a crash
+        after that step of the seal — used by the kill/resume tests;
+        never set in production.
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         raw = self.read_raw()
@@ -223,11 +216,12 @@ class RollupJob:
 
         cached: list[DataFrame] = []
         try:
-            # Phase 2 — one cached frame of every pending tier's rows
-            # (tier + day columns).  The finest tier is the only one read
-            # from raw (partition-pruned to its pending days); it is
-            # cached too, as it is both written and the input of the
-            # one-aggregate cascade to every pending coarse tier.
+            # Phase 2 — one frame of every pending tier's rows (tier +
+            # day columns), read once by the chunk encode.  The finest
+            # tier is the only one read from raw (partition-pruned to its
+            # pending days); it is cached, as it is both encoded and the
+            # input of the one-aggregate cascade to every pending coarse
+            # tier.
             points = fine = None
             if fine_tier in pending:
                 points = extract_points(
@@ -242,8 +236,7 @@ class RollupJob:
             coarse = [t for t in self.tiers[1:] if t in pending]
             if coarse:
                 frames.append(self._coarse(fine, coarse, None if fresh else pending))
-            all_tiers = reduce(DataFrame.unionByName, frames).persist()
-            cached.append(all_tiers)
+            all_tiers = reduce(DataFrame.unionByName, frames)
             sketches = self._sketch_frames(raw, points, pending, fresh)
             cached += [f for _k, _t, f in sketches]
 
@@ -253,7 +246,7 @@ class RollupJob:
                 {t: pending[t][0] for t in self.tiers if t in pending},
                 lambda src: [f"raw/source={src}"],
                 run_id,
-                fail_after_tier=fail_after_tier,
+                fail_at=fail_at,
                 sketches=sketches,
             )
         finally:
@@ -272,21 +265,23 @@ class RollupJob:
 
         ``pending`` is None on the fresh path (``fine`` covers every day
         to seal).  On resume the cascade input for the coarse pending
-        days is (stored fine rows outside the fine-pending days) ∪
-        (freshly computed fine rows) — storage alone is stale until the
-        writes land — and each tier is then cut to its own pending days.
+        days is (stored fine rows outside the fine-pending days, decoded
+        from just those days' fine chunks) ∪ (freshly computed fine
+        rows) — storage alone is stale until the writes land — and each
+        tier is then cut to its own pending days.
         """
         fine_tier = self.tiers[0]
         if pending is not None:
-            days = self._days({d for t in coarse for _, d in pending[t][0]})
-            src = self._stored(f"tiers/tier={fine_tier}")
-            if src is not None:
-                src = _prune(src, days)
-                if fine is not None:
-                    src = src.join(F.broadcast(pending[fine_tier][1]), ["day"], "left_anti")
+            days = {d for t in coarse for _, d in pending[t][0]}
+            recomputed = {d for _, d in pending[fine_tier][0]} if fine is not None else set()
+            src = None
+            table = f"chunks/tier={fine_tier}"
+            if days - recomputed and self.io.exists(table):
+                stored = self.io.read(table).where(F.col("day").isin(sorted(days - recomputed)))
+                src = gorilla.decompress_chunks(stored.drop("day"), gorilla.TIER_VALUE_COLS)
             if fine is not None:
-                fine = _prune(fine, days)
-                src = fine if src is None else src.unionByName(fine)
+                fine = _prune(fine, self._days(days))
+                src = fine if src is None else src.unionByName(fine.select(*src.columns))
             if src is None:
                 raise RuntimeError(
                     f"cannot cascade {coarse}: no {fine_tier} rows are stored or pending "
@@ -349,43 +344,45 @@ class RollupJob:
         units: dict[str, set | None],
         inputs: Callable[[str], list[str]],
         run_id: str,
-        fail_after_tier: str | None = None,
+        fail_at: str | None = None,
         sketches=(),
     ) -> dict[str, int]:
-        """Land cached tier rows (``tier`` + ``day`` columns) and seal them.
+        """Land tier rows (``tier`` + ``day`` columns) as Gorilla chunks
+        and seal them.
 
-        ONE clustered write for all tier rows and ONE for all chunks:
-        partitionBy(tier, day) produces the tiers/tier=X/day=Y layout
-        (source stays a data column) — each partitioned write costs
-        seconds of commit/listing overhead regardless of size.  Gorilla
-        compression runs as one pass over the union (tier joins the chunk
-        key).  Sketch tables land next, BEFORE the lineage seals — a
-        crash here leaves the day's units unsealed, so the next run
-        rewrites the same partitions.  Lineage is one aggregate over the
-        cached chunks, appended per tier IN TIER ORDER (``units``' order):
-        a crash between appends leaves earlier tiers sealed and later ones
-        pending.  ``units[tier]`` None seals every unit of the tier, else
-        only those (source, day) units — a whole-day recompute may cover
-        already-sealed sources.  ``inputs(source)`` names the lineage
-        input partitions.  Returns {tier: sealed (source, day) units}.
+        The chunks are the sealed tiers' only copy.  ONE clustered write
+        lands every tier's chunks: partitionBy(tier, day) produces the
+        chunks/tier=X/day=Y layout (source stays a data column) — each
+        partitioned write costs seconds of commit/listing overhead
+        regardless of size.  Compression runs as one pass over the union
+        (tier joins the chunk key).  Sketch tables land next, then ONE
+        lineage append seals every tier: a crash anywhere before it
+        leaves the whole seal pending, and the next run rewrites the same
+        partitions with identical bytes.  ``units[tier]`` None seals
+        every unit of the tier, else only those (source, day) units — a
+        whole-day recompute may cover already-sealed sources.
+        ``inputs(source)`` names the lineage input partitions.
+        ``fail_at`` names the step after which to inject a crash (tests
+        only).  Returns {tier: sealed (source, day) units}.
         """
-        stats: dict[str, int] = {t: 0 for t in self.tiers}
-        chunks = (
-            compress_tier(
-                all_tiers.drop("day"), self.tiers[0], chunk_span="1d",
-                value_cols=self.chunk_value_cols, extra_keys=["tier"],
-            )
-            .withColumn("day", _day("chunk_start"))
-            .persist()
+
+        def done(step: str) -> None:
+            if fail_at == step:
+                raise RuntimeError(f"injected failure after the {step} write")
+
+        chunks = gorilla.compress_tier(
+            all_tiers.drop("day"), self.tiers[0], chunk_span="1d", extra_keys=["tier"]
         )
+        chunks = chunks.withColumn("day", _day("chunk_start")).persist()
         try:
-            self.io.write_partitioned(all_tiers, "tiers", ["tier", "day"])
             self.io.write_partitioned(chunks, "chunks", ["tier", "day"])
+            done("chunks")
             for k in self.sketchset.enabled:
                 frames = [f.withColumn("tier", F.lit(t)) for kk, t, f in sketches if kk == k]
                 if frames:
                     all_sk = reduce(DataFrame.unionByName, frames)
                     self.io.write_partitioned(all_sk, f"sk_{k}", ["tier", "day"])
+            done("sketches")
             lin = (
                 chunks.groupBy("tier", "source", "chunk_start")
                 .agg(F.count("*").alias("row_count"), F.sum("n_points").alias("point_count"))
@@ -393,36 +390,37 @@ class RollupJob:
             )
         finally:
             chunks.unpersist()
-        for tier, pset in units.items():
-            rows = [r for r in lin if r["tier"] == tier]
-            if pset is not None:
-                rows = [r for r in rows if (r["source"], _day_str(r["chunk_start"])) in pset]
-            self.io.append_lineage(
-                [
-                    {
-                        "tier": tier,
-                        "source": r["source"],
-                        "window_start": r["chunk_start"],
-                        "input_partitions": inputs(r["source"]),
-                        "row_count": r["row_count"],
-                        "point_count": r["point_count"],
-                        "sealed": True,
-                        "run_id": run_id,
-                    }
-                    for r in rows
-                ]
-            )
-            stats[tier] = len({(r["source"], _day_str(r["chunk_start"])) for r in rows})
-            if fail_after_tier == tier:
-                raise RuntimeError(f"injected failure after tier {tier}")
+        rows = []
+        for r in lin:
+            pset = units.get(r["tier"], ())
+            if pset is None or (r["source"], _day_str(r["chunk_start"])) in pset:
+                rows.append(r)
+        self.io.append_lineage(
+            [
+                {
+                    "tier": r["tier"],
+                    "source": r["source"],
+                    "window_start": r["chunk_start"],
+                    "input_partitions": inputs(r["source"]),
+                    "row_count": r["row_count"],
+                    "point_count": r["point_count"],
+                    "sealed": True,
+                    "run_id": run_id,
+                }
+                for r in rows
+            ]
+        )
+        done("lineage")
+        stats: dict[str, int] = {t: 0 for t in self.tiers}
+        for tier, _src, _d in {(r["tier"], r["source"], _day_str(r["chunk_start"])) for r in rows}:
+            stats[tier] += 1
         return stats
 
     def seal_from_fine(self, fine: DataFrame, run_id: str | None = None) -> dict[str, int]:
         """Archive externally-computed finest-tier rows (the daemon's
         closed days, ``Daemon.archive_closed_days``): every coarser
         configured tier in one aggregate over them, then the shared
-        ``_seal`` (one tier write, one chunk write, lineage in tier
-        order).
+        ``_seal`` (one chunk write, one lineage append).
 
         ``fine`` must carry finest-tier rollup rows (KEY + window_start
         + the aggregate columns).  Idempotent like run(): a replay
@@ -435,13 +433,11 @@ class RollupJob:
         all_tiers = fine.withColumn("tier", F.lit(self.tiers[0]))
         if len(self.tiers) > 1:
             all_tiers = all_tiers.unionByName(self._coarse(fine, self.tiers[1:], None))
-        all_tiers = all_tiers.persist()
         try:
             return self._seal(
                 all_tiers, {t: None for t in self.tiers}, lambda _src: ["daemon-live-store"], run_id
             )
         finally:
-            all_tiers.unpersist()
             fine.unpersist()
 
     # --------------------------------------------------------- retention
@@ -465,15 +461,17 @@ class RollupJob:
         return dropped
 
     def retention_tiers(self, max_age_days: dict[str, int], today: str) -> list[tuple[str, str]]:
-        """Tiered downsampling retention: drop FINE tier/chunk day
-        partitions older than their policy window, keeping the coarser
-        tiers as the permanent history (the whole point of cascading
-        rollups: 1m for a week, 1h for a year, 1d forever).
+        """Tiered downsampling retention: drop FINE tiers' day partitions
+        (chunks, sketches and any ``tiers/`` head rows) older than their
+        policy window, keeping the coarser tiers as the permanent history
+        (the whole point of cascading rollups: 1m for a week, 1h for a
+        year, 1d forever).
 
         ``max_age_days`` maps tier -> days kept (tiers absent from the
         map are kept forever); ``today`` is 'yyyy-MM-dd'.  Day-partition
         drops are pure directory removals (Iceberg: DELETE WHERE day <
-        cutoff) — no data rewrite.  Returns [(tier, day)] dropped.
+        cutoff) — no data rewrite.  Returns [(tier, day)] of the dropped
+        chunk partitions.
         """
         import datetime as _dt
 
@@ -496,27 +494,41 @@ class RollupJob:
                 for k in sorted(sk_kinds)
                 if self.io.exists(f"sk_{k}/tier={tier}")
             ]
-            for table in (f"tiers/tier={tier}", f"chunks/tier={tier}", *sk_tables):
+            for table in (f"chunks/tier={tier}", f"tiers/tier={tier}", *sk_tables):
                 for day in self.io.list_partitions(table, "day"):
                     if day < cutoff and self.io.drop_partition(table, day=day):
-                        if table.startswith("tiers"):
+                        if table.startswith("chunks"):
                             dropped.append((tier, day))
         return dropped
 
-    def compact_tier(self, tier: str) -> dict[str, int]:
-        """Compact every day partition of a tier table to one file;
-        returns {day: files_before} for days that had >1 file."""
-        out: dict[str, int] = {}
-        table = f"tiers/tier={tier}"
-        for day in self.io.list_partitions(table, "day"):
-            n = self.io.compact_partition(table, day=day)
-            if n > 1:
-                out[day] = n
-        return out
-
     # ------------------------------------------------------------- reads
     def read_tier(self, tier: str) -> DataFrame:
-        return self.io.read(f"tiers/tier={tier}").drop("day")
+        """Every row of a tier: the sealed days decoded from their Gorilla
+        chunks — each stored column in its own type, with ``rate`` and
+        ``stddev`` re-derived by the expressions rollup/cascade use, so
+        the rows are bit-identical to the sealed ones — plus each
+        ``tiers/`` day partition that has no chunk partition: the
+        unsealed head (a daemon's live store) or a day sealed before
+        chunks carried every column.  A day in both is served once, from
+        chunks."""
+        from logtrics_spark.operators.rollup import stddev_from_moments
+
+        sealed = self.io.list_partitions(f"chunks/tier={tier}", "day")
+        parts = []
+        if sealed:
+            chunks = self.io.read(f"chunks/tier={tier}").drop("day")
+            typed = "value_cols" in chunks.columns
+            out = gorilla.decompress_chunks(chunks, gorilla.TIER_VALUE_COLS if typed else None)
+            secs = F.lit(float(tier_seconds(tier)))
+            out = out.withColumn("rate", F.col("cnt").cast("double") / secs)
+            if typed:
+                out = out.withColumn("stddev", stddev_from_moments("cnt", "sum", "sum_sq"))
+            parts.append(out)
+        if self.io.exists(f"tiers/tier={tier}") or not parts:
+            # a tier with no rows at all raises here (path not found)
+            head = self.io.read(f"tiers/tier={tier}")
+            parts.append(head.where(~F.col("day").isin(sealed)).drop("day"))
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
     def read_sketch_tier(self, name: str, tier: str) -> DataFrame:
         """Sketch tier rows (write-once final rows — estimate with
@@ -527,27 +539,13 @@ class RollupJob:
         return self.io.read(f"sk_{name}/tier={tier}").drop("day")
 
     def read_tier_from_chunks(self, tier: str, ts_from=None, ts_to=None) -> DataFrame:
-        """Serve a tier by decompressing its Gorilla chunks (the post-
-        retention read path).  When the archived columns include the
-        sum_sq moment, the timer stddev is restored as a derived column
-        (sample stddev, identical formula to the live tier rows).
+        """A tier's sealed rows with the gorilla.DEFAULT_VALUE_COLS
+        columns, decoding only those streams of its Gorilla chunks (the
+        dashboard read path; ``read_tier`` returns every column).
 
         ``ts_from``/``ts_to`` (inclusive) prune at CHUNK granularity on
         the stored min_ts/max_ts stats before any decompression — a
         narrow dashboard range decompresses only overlapping chunks
         (operators/gorilla.py::decompress_chunks_range)."""
-        from logtrics_spark.operators.gorilla import decompress_chunks_range
-
-        out = decompress_chunks_range(
-            self.io.read(f"chunks/tier={tier}").drop("day"),
-            ts_from=ts_from,
-            ts_to=ts_to,
-            value_cols=self.chunk_value_cols,
-        )
-        if "sum_sq" in out.columns:
-            from logtrics_spark.operators.rollup import stddev_from_moments
-
-            out = out.withColumn(
-                "stddev", stddev_from_moments("cnt", "sum", "sum_sq")
-            )
-        return out
+        chunks = self.io.read(f"chunks/tier={tier}").drop("day")
+        return gorilla.decompress_chunks_range(chunks, ts_from=ts_from, ts_to=ts_to)

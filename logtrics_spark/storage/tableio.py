@@ -14,16 +14,19 @@ lower and the day-level dynamic overwrite unit-aligned, pipeline.py
 phase 2):
 
     raw/       source=<s>/day=<d>/*.parquet
-    tiers/     tier=<T>/day=<d>/*.parquet   (rollup rows)
-    chunks/    tier=<T>/day=<d>/*.parquet   (Gorilla chunk rows)
+    tiers/     tier=<T>/day=<d>/*.parquet   (rollup rows of the unsealed
+                                             head only: a daemon's live
+                                             store)
+    chunks/    tier=<T>/day=<d>/*.parquet   (Gorilla chunk rows: the
+                                             sealed tiers, every column)
     lineage/   append-only parquet log
 
 Idempotent seal protocol (SURVEY.md §7.7 hard part #2), no transactions
-needed: chunk/tier writes use dynamic partition overwrite keyed by the
-seal unit, so a replayed unit overwrites itself byte-for-byte (the
-pipeline is deterministic); the lineage row is appended strictly AFTER
-its data lands.  A crash between the two leaves an unsealed unit that
-the next run simply recomputes onto the same partitions.
+needed: chunk writes use dynamic partition overwrite keyed by the seal
+unit, so a replayed unit overwrites itself byte-for-byte (the pipeline
+is deterministic); one lineage append per seal lands strictly AFTER its
+data.  A crash between the two leaves unsealed units that the next run
+simply recomputes onto the same partitions.
 """
 
 from __future__ import annotations

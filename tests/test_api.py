@@ -259,3 +259,60 @@ def test_pin_spark_archives_skips_only_spark_archives(tmp_path, monkeypatch):
     for imp in importers:
         imp.invalidate_caches()
     assert rescanned == [str(tmp_path / "extra.zip")]
+
+
+_PIN_PROBE = '''
+import json, os, zipimport
+
+import pandas as pd
+from pyspark.sql import SparkSession
+
+spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+
+
+def probe(batches):  # defined here, so pickled by value: imports no package module
+    for _ in batches:
+        pass
+    pinned = getattr(zipimport.zipimporter, "_spark_archives_pinned", False)
+    yield pd.DataFrame({"pid": [os.getpid()], "pinned": [pinned]})
+
+
+def task():  # collect, not first: a task that stops reading early gives up its worker
+    return spark.range(1, numPartitions=1).mapInPandas(probe, "pid long, pinned boolean").collect()[0]
+
+
+before = task()
+from logtrics_spark.operators.gorilla import compress_tier  # noqa: E402
+
+rows = pd.DataFrame({"source": ["s"] * 3, "metric": ["m"] * 3, "kind": ["counter"] * 3,
+                     "window_start": pd.date_range("2024-01-01", periods=3, freq="min"),
+                     "cnt": [1, 2, 3]})
+compress_tier(spark.createDataFrame(rows), "1m").count()
+after = task()
+print(json.dumps({"before": before.asDict(), "after": after.asDict()}))
+spark.stop()
+'''
+
+
+def test_package_import_pins_each_python_worker(tmp_path):
+    """A fresh Python worker re-reads Spark's archives until it imports
+    the package to unpickle one of its closures (here compress_tier's);
+    from then on every task of that worker finds them pinned.  Runs its
+    own one-core session, so both probes land on one fresh worker."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    script = tmp_path / "probe.py"
+    script.write_text(_PIN_PROBE)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")])}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=repo, env=env, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["before"]["pinned"] is False
+    assert got["after"] == {"pid": got["before"]["pid"], "pinned": True}

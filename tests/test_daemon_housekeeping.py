@@ -158,6 +158,12 @@ def test_archive_closed_days_handoff(spark, tmp_path):
     pd.testing.assert_frame_equal(
         served, closed_latest[served.columns.tolist()], check_dtype=False
     )
+    # read_tier decodes every column of the closed day, type for type,
+    # and the archive keeps no tiers/ row copy
+    full = job.read_tier("1m").orderBy(*TIER_COLS).toPandas().reset_index(drop=True)
+    pd.testing.assert_frame_equal(full, closed_latest[full.columns.tolist()])
+    assert full.columns.tolist() == [c for c in closed_latest.columns if c != "flush_seq"]
+    assert not job.io.exists("tiers")
     # cascade archived too, and sealed in lineage for every tier
     assert job.read_tier("1h").count() == 1
     sealed = job.io.sealed_units().toPandas()
@@ -202,6 +208,21 @@ def test_cli_compact_and_archive(spark, tmp_path, capsys):
     )
     out = json.loads(capsys.readouterr().out)
     assert out["sealed_units"]["1m"] == 1
+
+
+def test_read_tier_over_daemon_live_store(spark, tmp_path):
+    """RollupJob.read_tier (what the graphite/alerts/query CLI commands
+    use) over a daemon live store, which has no chunks: every stored
+    snapshot row, flush_seq included, exactly as written."""
+    from logtrics_spark.plans.pipeline import RollupJob
+
+    d = _daemon(spark, tmp_path)
+    _flush(d, spark, "2024-03-01", 30, value0=1.0)
+    _flush(d, spark, "2024-03-01", 30, value0=2.0)
+    got = RollupJob(spark, str(tmp_path / "store")).read_tier("1m")
+    want = d.io.read("tiers/tier=1m").drop("day")
+    assert got.schema == want.schema and got.count() == 60
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
 def test_alerts_cli_resolves_daemon_snapshots(spark, tmp_path, capsys):

@@ -21,12 +21,12 @@ except ImportError:  # pragma: no cover
 
 def _roundtrip(ts, cols):
     buf = compress_chunk(np.asarray(ts, dtype=np.int64), [np.asarray(c, dtype=np.float64) for c in cols])
-    ts2, cols2 = decompress_chunk(buf)
+    ts2, cols2, valid = decompress_chunk(buf)
     assert np.array_equal(np.asarray(ts, dtype=np.int64), ts2)
+    assert valid == [None] * len(cols)
     for a, b in zip(cols, cols2):
         av = np.asarray(a, dtype=np.float64).view(np.uint64)
-        bv = b.view(np.uint64)
-        assert np.array_equal(av, bv), (a, b)
+        assert np.array_equal(av, b), (a, b)
     return buf
 
 
@@ -58,7 +58,7 @@ def test_special_floats_bit_identical():
 def test_single_point_and_empty():
     _roundtrip(np.array([1234567890]), [np.array([42.5])])
     buf = compress_chunk(np.empty(0, dtype=np.int64), [np.empty(0)])
-    ts, cols = decompress_chunk(buf)
+    ts, cols, _ = decompress_chunk(buf)
     assert len(ts) == 0 and len(cols) == 1 and len(cols[0]) == 0
 
 
@@ -131,45 +131,65 @@ def test_spark_roundtrip(spark, tmp_path):
     assert stats.bytes < 0.8 * stats.pts * 8 * 7  # ts + 6 value cols raw
 
 
-def test_vectorized_encoders_bit_identical_to_reference():
-    """The numpy-packed encoders must emit byte-identical streams to the
-    per-write reference encoders for adversarial inputs: dod bucket
-    boundaries, 64-bit overflow dods, xor window resets, NaN/inf/-0.0."""
-    from logtrics_spark.operators.gorilla import (
-        _BitWriter,
-        _encode_ts,
-        _encode_ts_codes,
-        _encode_vals,
-        _encode_vals_codes,
-    )
+_B = 1_704_067_200
+_PAYLOAD_NAN = np.uint64(0x7FF8DEADBEEF0001).view(np.float64)
+# (ts, columns, validity, chunk bytes).  The three float64 chunks without
+# nulls are byte-identical to the float-only layout that predates typed
+# columns; "long" stores int64 bits and "nulls" adds the validity trailer.
+GOLDEN = {
+    "regular": (
+        _B + np.arange(6) * 60,
+        [np.array([3.25, 3.25, 3.5, 3.5, 3.75, 3.75])],
+        None,
+        "06000000010080009265000000000000000000000a4002000000bd80030000006d0748",
+    ),
+    "irregular": (
+        np.array([_B, _B + 7, _B + 300, _B + 2**33, _B + 2**33 + 1, _B + 2**33 + 2049]),
+        [np.array([1.0, 2.5, -3.0, 1e10, 1e-10, 1e-10])],
+        None,
+        "0600000001008000926500000000000000000000f03f17000000a3748ef80000000fffffed7fffffffff"
+        "00000096f7ff0021000000c1b3ffa0000000000a00300000000005041540be4000030fdff677203e75ef6ec0",
+    ),
+    "special": (
+        _B + np.arange(7) * 60,
+        [np.array([0.0, -0.0, np.nan, np.inf, -np.inf, 5e-324, _PAYLOAD_NAN])],
+        None,
+        "0700000001008000926500000000000000000000000002000000bd8031000000c1bc00000000000005fff0"
+        "00000000010004000000000050000000000000183ffff0000000000001c1bbffc6f56df77800",
+    ),
+    "long": (
+        _B + np.arange(5) * 300,
+        [np.array([2**53 + 1, -(2**63), 2**63 - 1, 0, 7], dtype=np.int64)],
+        None,
+        "0500000001008000926500000000010000000000200003000000e92b0023000000c1fc010000000000000d"
+        "ffffffffffffffff3fffffffffffffffc000000000000000e0",
+    ),
+    "nulls": (
+        _B + np.arange(5) * 60,
+        [np.array([5, 0, 6, 0, 7], dtype=np.int64), np.array([np.nan, 1.0, -0.0, 2.0, np.inf])],
+        [np.array([1, 0, 1, 0, 1], dtype=bool), None],
+        "05000000020080009265000000000500000000000000000000000000f87f02000000bd8013000000ff0000"
+        "0000160000000340000000680000000e0a000000c25c00e02effec008ffc0000a8",
+    ),
+}
 
-    rng = np.random.default_rng(11)
-    # timestamps: regular run, bucket edges, sign flips, huge jumps
-    base = 1_704_067_200
-    ts_cases = [
-        np.array([base], dtype=np.int64),
-        base + np.arange(500, dtype=np.int64) * 60,
-        base + np.cumsum(rng.integers(-3000, 3000, 400)),
-        np.array([base, base + 1, base + 2, base + 2**40, base + 2**40 + 3], dtype=np.int64),
-        base + np.cumsum(np.array([64, 128, -63, 65, 256, -255, 257, 2048, -2047, 2049, 0, 0])),
-    ]
-    for ts in ts_cases:
-        w = _BitWriter()
-        _encode_ts(w, ts)
-        assert w.getvalue() == _encode_ts_codes(np.asarray(ts, dtype=np.int64)), ts[:5]
 
-    val_cases = [
-        np.array([1.5], dtype=np.float64),
-        np.repeat(3.25, 300),
-        rng.standard_normal(500),
-        np.array([0.0, -0.0, np.nan, np.inf, -np.inf, 1e-310, 5.0, 5.0, 5.000001]),
-        np.round(np.cumsum(rng.standard_normal(400)), 2),
-    ]
-    for vals in val_cases:
-        view = np.ascontiguousarray(vals, dtype=np.float64).view(np.uint64)
-        w = _BitWriter()
-        _encode_vals(w, view)
-        assert w.getvalue() == _encode_vals_codes(view, policy="greedy"), vals[:5]
+def test_chunk_format_golden_bytes():
+    """The chunk format is pinned byte for byte: the encoder emits these
+    fixtures and the decoder restores every 64-bit pattern and null; a
+    picked-column decode skips the other streams."""
+    for name, (ts, cols, valid, hexed) in GOLDEN.items():
+        buf = compress_chunk(ts, cols, valid)
+        assert buf.hex() == hexed, name
+        ts2, bits, valid2 = decompress_chunk(bytes.fromhex(hexed))
+        assert np.array_equal(ts2, ts), name
+        for c, b, ok, ok2 in zip(cols, bits, valid or [None] * len(cols), valid2):
+            assert (ok is None and ok2 is None) or np.array_equal(ok, ok2), name
+            keep = np.ones(len(c), dtype=bool) if ok is None else ok
+            assert np.array_equal(np.ascontiguousarray(c).view(np.uint64)[keep], b[keep]), name
+        last = len(cols) - 1
+        _, (b,), (ok,) = decompress_chunk(buf, [last])
+        assert np.array_equal(b, bits[last]) and ok is valid2[last], name
 
 
 def test_range_read_prunes_chunks_and_matches_filter(spark, tmp_path):
@@ -230,9 +250,10 @@ def test_range_read_prunes_chunks_and_matches_filter(spark, tmp_path):
 
 def test_compress_tier_arrow_batches_match_per_group_chunks(spark):
     """The one-pass Arrow encode equals per-group compress_chunk output
-    byte for byte, with a tiny prime Arrow batch size so groups straddle
-    batches (incl. single-point groups and one group far larger than a
-    batch), and an empty input keeps the chunk schema."""
+    (each column in its own 64-bit type) byte for byte, with a tiny
+    prime Arrow batch size so groups straddle batches (incl.
+    single-point groups and one group far larger than a batch), and an
+    empty input keeps the chunk schema."""
     import pandas as pd
 
     from logtrics_spark.operators.gorilla import CHUNK_SCHEMA, DEFAULT_VALUE_COLS
@@ -266,7 +287,7 @@ def test_compress_tier_arrow_batches_match_per_group_chunks(spark):
     for key, g in pdf.groupby(["tier", "source", "metric", "kind", "chunk_start"]):
         g = g.sort_values("window_start")
         ts = g["window_start"].astype("int64").to_numpy() // 10**9
-        chunk = compress_chunk(ts, [g[c].to_numpy(dtype="float64") for c in DEFAULT_VALUE_COLS])
+        chunk = compress_chunk(ts, [g[c].to_numpy() for c in DEFAULT_VALUE_COLS])
         want[key] = (len(g), g["window_start"].min(), g["window_start"].max(), chunk)
     assert max(n for n, *_ in want.values()) > 7 * 3
 
@@ -286,4 +307,6 @@ def test_compress_tier_arrow_batches_match_per_group_chunks(spark):
     assert got == want
 
     empty = compress_tier(df.limit(0).drop("tier"), "1m")
-    assert empty.schema == CHUNK_SCHEMA and empty.count() == 0
+    assert empty.schema.simpleString() == CHUNK_SCHEMA.simpleString() and empty.count() == 0
+    desc = "cnt:bigint,sum:bigint,min:bigint,max:bigint,avg:double,last:bigint"
+    assert empty.schema["value_cols"].metadata == {"value_cols": desc}

@@ -1,18 +1,23 @@
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logtrics_spark.datagen import gen_tokseq
 from logtrics_spark.operators.extract import extract_points
-from logtrics_spark.operators.rollup import TIERS, rollup
+from logtrics_spark.operators.rollup import cascade_tiers, rollup, stddev_from_moments
 from logtrics_spark.plans.pipeline import RollupJob
 
 N = 4_000  # spans >1 hour of derived ts; with step 30s spans >1 day
 STEP = 30  # 30s per doc -> 4000 docs ~ 33h -> 2 days of data
+TINY = 300  # docs: ~2.5 h of one day, for the crash-point runs
 KEY = ["source", "metric", "kind", "window_start"]
+CHUNK_KEY = ["tier", "source", "metric", "kind", "chunk_start"]
 
 
 def _tiers_equal(a: pd.DataFrame, b: pd.DataFrame, cols=("cnt", "sum", "min", "max", "avg", "last")):
@@ -22,6 +27,30 @@ def _tiers_equal(a: pd.DataFrame, b: pd.DataFrame, cols=("cnt", "sum", "min", "m
     for c in cols:
         av, bv = a[c].to_numpy(dtype="float64"), b[c].to_numpy(dtype="float64")
         assert np.array_equal(av.view(np.uint64), bv.view(np.uint64)), c
+
+
+def _identical(want: DataFrame, got: DataFrame) -> None:
+    """Same column names and types, and row by row (ordered by KEY) the
+    same nulls and the same 64-bit pattern of every float."""
+    assert got.schema.simpleString() == want.schema.simpleString()
+    a, b = (df.orderBy(*KEY).collect() for df in (want, got))
+    assert len(a) == len(b)
+    for ra, rb in zip(a, b):
+        for x, y in zip(ra, rb):
+            if isinstance(x, float) and isinstance(y, float):
+                assert struct.pack("<d", x) == struct.pack("<d", y), (ra, rb)
+            else:
+                assert x == y, (ra, rb)
+
+
+def _chunk_rows(job) -> pd.DataFrame:
+    pdf = job.io.read("chunks").toPandas()
+    pdf["chunk"] = pdf["chunk"].map(bytes)
+    return pdf.sort_values(CHUNK_KEY).reset_index(drop=True)
+
+
+def _sealed(job) -> list:
+    return sorted(tuple(r) for r in job.io.sealed_units().collect())
 
 
 @pytest.fixture()
@@ -37,14 +66,16 @@ def _run_clean(spark, tok, root) -> RollupJob:
 
 
 def test_end_to_end_matches_direct_rollup(spark, tok, tmp_path):
+    """Every tier read back from the chunk store equals rollup (1m) and
+    cascade_tiers (5m/1h/1d) computed here: every column, its type, its
+    nulls and its bits."""
     job = _run_clean(spark, tok, str(tmp_path / "store"))
-    from logtrics_spark.operators.extract import with_ts
-
-    pts = extract_points(tok, step_seconds=STEP)
-    for tier in ["1m", "1h", "1d"]:
-        direct = rollup(pts, tier).toPandas()
-        stored = job.read_tier(tier).toPandas()
-        _tiers_equal(direct, stored)
+    assert not job.io.exists("tiers")
+    fine = rollup(extract_points(tok, step_seconds=STEP), "1m").localCheckpoint()
+    coarse = cascade_tiers(fine, "1m", ["5m", "1h", "1d"]).localCheckpoint()
+    _identical(fine, job.read_tier("1m"))
+    for tier in ["5m", "1h", "1d"]:
+        _identical(coarse.where(F.col("tier") == tier).drop("tier"), job.read_tier(tier))
 
 
 def test_chunks_serve_identical_tier(spark, tok, tmp_path):
@@ -60,59 +91,154 @@ def test_second_run_is_noop(spark, tok, tmp_path):
     assert all(v == 0 for v in stats.values()), stats
 
 
-def test_kill_and_resume_identical(spark, tok, tmp_path):
-    """SURVEY.md §5.6: kill after tier 1m sealed -> rerun -> tables equal
-    to a never-killed run."""
+def test_kill_and_resume_identical(spark, tmp_path):
+    """SURVEY.md §5.6: a crash after each step of the seal -> rerun ->
+    the same chunk bytes and sealed units as a never-killed run.  Before
+    the one lineage append nothing is sealed; after it, everything."""
+    tok = gen_tokseq(spark, TINY, partitions=2)
     clean = _run_clean(spark, tok, str(tmp_path / "clean"))
-
-    killed = RollupJob(spark, str(tmp_path / "killed"), step_seconds=STEP)
-    killed.ingest_raw(tok)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        killed.run(run_id="r1", fail_after_tier="1m")
-    # resume: 1m sealed (skipped), coarser tiers recomputed
-    stats = killed.run(run_id="r2")
+    want, units = _chunk_rows(clean), _sealed(clean)
+    for point in ("chunks", "sketches", "lineage"):
+        killed = RollupJob(spark, str(tmp_path / point), step_seconds=STEP)
+        killed.ingest_raw(tok)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            killed.run(run_id="r1", fail_at=point)
+        stats = killed.run(run_id="r2")
+        assert (sum(stats.values()) == 0) == (point == "lineage"), (point, stats)
+        assert _chunk_rows(killed).equals(want) and _sealed(killed) == units, point
+    # the coarse tiers pending alone: a 1m-only job seals 1m, then the
+    # full ladder cascades them from the stored 1m chunks
+    root = str(tmp_path / "fine_first")
+    part = RollupJob(spark, root, tiers=["1m"], step_seconds=STEP)
+    part.ingest_raw(tok)
+    part.run(run_id="p1")
+    stats = RollupJob(spark, root, step_seconds=STEP).run(run_id="p2")
     assert stats["1m"] == 0 and stats["5m"] > 0
-    for tier in ["1m", "5m", "1h", "1d"]:
-        _tiers_equal(clean.read_tier(tier).toPandas(), killed.read_tier(tier).toPandas())
-        _tiers_equal(
-            clean.read_tier_from_chunks(tier).toPandas(),
-            killed.read_tier_from_chunks(tier).toPandas(),
-        )
+    assert _chunk_rows(part).equals(want) and _sealed(part) == units
 
 
 def test_resume_without_fine_rows_raises(spark, tmp_path):
-    """Coarse tiers pending while the sealed 1m table is gone (dropped
-    between the crash and the resume): the run raises instead of
+    """Coarse tiers pending while the sealed 1m chunks are gone (dropped
+    between the 1m seal and the resume): the run raises instead of
     sealing coarse tiers from nothing."""
     import shutil
 
-    job = RollupJob(spark, str(tmp_path / "s"), step_seconds=STEP)
-    job.ingest_raw(gen_tokseq(spark, 300, partitions=1))
-    with pytest.raises(RuntimeError, match="injected failure"):
-        job.run(run_id="r1", fail_after_tier="1m")
-    shutil.rmtree(job.io.path("tiers/tier=1m"))
+    root = str(tmp_path / "s")
+    job = RollupJob(spark, root, tiers=["1m"], step_seconds=STEP)
+    job.ingest_raw(gen_tokseq(spark, TINY, partitions=1))
+    job.run(run_id="r1")
+    shutil.rmtree(job.io.path("chunks/tier=1m"))
     with pytest.raises(RuntimeError, match="no 1m rows are stored or pending"):
-        job.run(run_id="r2")
+        RollupJob(spark, root, step_seconds=STEP).run(run_id="r2")
 
 
 def test_seal_from_fine_matches_run(spark, tok, tmp_path):
     """run() and seal_from_fine() share one seal path: sealing a run
-    store's 1m rows elsewhere reproduces its tiers/ rows and chunks/
-    bytes for every tier, and seals the same units."""
+    store's 1m rows elsewhere reproduces its chunks/ bytes for every
+    tier, and seals the same units."""
     run = _run_clean(spark, tok, str(tmp_path / "run"))
     sealed = RollupJob(spark, str(tmp_path / "fine"))
     stats = sealed.seal_from_fine(run.read_tier("1m"), run_id="f")
     units = run.io.sealed_units().groupBy("tier").count().collect()
     assert stats == {r["tier"]: r["count"] for r in units}
-    for table, key in (("tiers", KEY), ("chunks", ["source", "metric", "kind", "chunk_start"])):
-        a, b = (
-            j.io.read(table).toPandas().sort_values(["tier", *key]).reset_index(drop=True)
-            for j in (run, sealed)
-        )
-        assert set(a["tier"]) == set(run.tiers)
-        if table == "chunks":
-            a["chunk"], b["chunk"] = a["chunk"].map(bytes), b["chunk"].map(bytes)
-        assert a.equals(b[a.columns]), table
+    a, b = _chunk_rows(run), _chunk_rows(sealed)
+    assert set(a["tier"]) == set(run.tiers)
+    assert a.equals(b[a.columns])
+
+
+def test_seal_is_one_chunk_write_and_one_lineage_append(spark, tmp_path, monkeypatch):
+    """A seal (run or seal_from_fine) writes one chunk table, no tiers/
+    row copy, and appends lineage once for all tiers."""
+    from logtrics_spark.storage.tableio import ParquetTableIO
+
+    calls = []
+    real_write, real_append = ParquetTableIO.write_partitioned, ParquetTableIO.append_lineage
+
+    def write(self, df, table, *a, **k):
+        calls.append(table)
+        return real_write(self, df, table, *a, **k)
+
+    def append(self, rows):
+        calls.append(("lineage", len({r["tier"] for r in rows})))
+        return real_append(self, rows)
+
+    monkeypatch.setattr(ParquetTableIO, "write_partitioned", write)
+    monkeypatch.setattr(ParquetTableIO, "append_lineage", append)
+    job = RollupJob(spark, str(tmp_path / "run"), step_seconds=STEP)
+    job.ingest_raw(gen_tokseq(spark, TINY, partitions=1))
+    calls.clear()
+    job.run(run_id="r")
+    assert calls == ["chunks", ("lineage", 4)]
+    calls.clear()
+    other = RollupJob(spark, str(tmp_path / "fine"))
+    other.seal_from_fine(job.read_tier("1m"), run_id="f")
+    assert calls == ["chunks", ("lineage", 4)]
+    assert not job.io.exists("tiers") and not other.io.exists("tiers")
+
+
+def test_seal_from_fine_keeps_types_nulls_and_special_values(spark, tmp_path):
+    """Chunks store each column's own 64-bit type and its nulls apart
+    from NaN: ±0.0, ±inf, NaN, nulls and a long above 2^53 read back
+    bit for bit, and the coarse tier equals cascade_tiers over them."""
+    import datetime as dt
+
+    schema = (
+        "source string, metric string, kind string, window_start timestamp, cnt bigint, "
+        "sum bigint, min double, max double, avg double, last double, last_ts timestamp, "
+        "sum_sq bigint"
+    )
+    t0 = dt.datetime(2024, 5, 1, 10, 0)
+
+    def at(minutes, us=0):
+        return t0 + dt.timedelta(minutes=minutes, microseconds=us)
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        ("s", "m", "timer", at(0), 2, 2**53 + 1, nan, 0.0, 1.5, -0.0, at(0, 59_999_999), 2**62 + 3),
+        ("s", "m", "timer", at(1), 0, None, -0.0, -inf, None, None, at(1, 1), None),
+        ("s", "m", "timer", at(2), 3, -(2**62), inf, nan, -inf, inf, None, 7),
+        ("s", "g", "gauge", at(2), 1, 5, 5.0, 5.0, 5.0, 5.0, at(2, 123), 25),
+    ]
+    # rollup-shaped rows: rate and stddev by rollup's own expressions
+    fine = (
+        spark.createDataFrame(rows, schema)
+        .withColumn("rate", F.col("cnt").cast("double") / F.lit(60.0))
+        .withColumn("stddev", stddev_from_moments("cnt", "sum", "sum_sq"))
+    )
+    job = RollupJob(spark, str(tmp_path / "s"), tiers=["1m", "1h"])
+    assert job.seal_from_fine(fine, run_id="f") == {"1m": 1, "1h": 1}
+    _identical(fine, job.read_tier("1m"))
+    _identical(cascade_tiers(fine, "1m", ["1h"]).drop("tier"), job.read_tier("1h"))
+
+
+def test_read_tier_serves_legacy_day_once(spark, tok, tmp_path):
+    """A store sealed before chunks carried every column holds a day in
+    both tiers/ (rows) and chunks/ (float-only chunks without a
+    description): read_tier serves that day once, from the chunks, and a
+    day only in tiers/ from its rows."""
+    from logtrics_spark.operators.gorilla import DEFAULT_VALUE_COLS, compress_tier
+    from logtrics_spark.plans.pipeline import _day
+
+    job = RollupJob(spark, str(tmp_path / "legacy"), tiers=["1m"])
+    rows = rollup(extract_points(tok, step_seconds=STEP), "1m")
+    rows = rows.withColumn("day", _day("window_start")).localCheckpoint()
+    days = sorted(r["day"] for r in rows.select("day").distinct().collect())
+    assert len(days) == 2
+    job.io.write_partitioned(rows.withColumn("tier", F.lit("1m")), "tiers", ["tier", "day"])
+    first = rows.where(F.col("day") == days[0])
+    floats = first.select(*KEY, *[F.col(c).cast("double") for c in DEFAULT_VALUE_COLS])
+    chunks = compress_tier(floats, "1m", chunk_span="1d").drop("value_cols")
+    chunks = chunks.withColumn("day", _day("chunk_start")).withColumn("tier", F.lit("1m"))
+    job.io.write_partitioned(chunks, "chunks", ["tier", "day"])
+
+    got = job.read_tier("1m")
+    assert got.count() == rows.count()
+    day0 = got.where(_day("window_start") == days[0])
+    assert day0.where(F.col("last_ts").isNull()).count() == first.count()
+    _identical(floats, day0.select(*KEY, *DEFAULT_VALUE_COLS))
+    day1 = got.where(_day("window_start") == days[1])
+    assert day1.where(F.col("last_ts").isNull()).count() == 0
+    assert day1.count() == rows.count() - first.count()
 
 
 def test_retention_drops_only_fully_sealed(spark, tok, tmp_path):
@@ -201,7 +327,7 @@ def test_tiered_retention_policy(spark, tok, tmp_path):
     job = RollupJob(spark, str(tmp_path / "store"), step_seconds=STEP)
     job.ingest_raw(tok)
     job.run(run_id="r")
-    days_1m = job.io.list_partitions("tiers/tier=1m", "day")
+    days_1m = job.io.list_partitions("chunks/tier=1m", "day")
     assert len(days_1m) >= 2
     import datetime as dt
 
@@ -211,13 +337,11 @@ def test_tiered_retention_policy(spark, tok, tmp_path):
     today = (dt.date.fromisoformat(max(days_1m)) + dt.timedelta(days=1)).isoformat()
     dropped = job.retention_tiers({"1m": 1, "5m": 1}, today=today)
     assert ("1m", min(days_1m)) in dropped
-    left_1m = job.io.list_partitions("tiers/tier=1m", "day")
+    left_1m = job.io.list_partitions("chunks/tier=1m", "day")
     assert min(days_1m) not in left_1m and max(days_1m) in left_1m
-    # chunks dropped in lockstep, coarse tiers untouched
-    assert min(days_1m) not in job.io.list_partitions("chunks/tier=1m", "day")
-    assert job.io.list_partitions("tiers/tier=1d", "day") and set(
-        job.io.list_partitions("tiers/tier=1h", "day")
-    ) == set(days_1m) if True else True
+    # coarse tiers untouched
+    assert set(job.io.list_partitions("chunks/tier=1h", "day")) == set(days_1m)
+    assert job.io.list_partitions("chunks/tier=1d", "day")
     # remaining data still reads
     assert job.read_tier("1m").count() > 0
     assert job.read_tier("1h").count() > 0
@@ -225,56 +349,14 @@ def test_tiered_retention_policy(spark, tok, tmp_path):
         job.retention_tiers({"2m": 1}, today=today)
 
 
-def test_compact_tier_single_file_same_data(spark, tok, tmp_path):
-    """Compaction collapses multi-file day partitions to one file with
-    byte-identical rows (streaming appends are the usual cause)."""
-    job = RollupJob(spark, str(tmp_path / "store"), step_seconds=STEP)
-    job.ingest_raw(tok)
-    job.run(run_id="r")
-    # simulate streaming appends: re-append the 1m rows split into files
-    tier_rows = job.read_tier("1m")
-    from logtrics_spark.plans.pipeline import _day
-
-    extra = tier_rows.limit(50).withColumn("day", _day("window_start")).withColumn(
-        "tier", F.lit("1m")
-    ).repartition(5)
-    job.io.write_partitioned(extra, "tiers", ["tier", "day"], overwrite_dynamic=False, cluster=False)
-    before = job.read_tier("1m").toPandas()
-    days = job.io.list_partitions("tiers/tier=1m", "day")
-    compacted = job.compact_tier("1m")
-    assert compacted  # at least one day had >1 file
-    from pathlib import Path
-
-    for day in days:
-        files = list((Path(str(tmp_path / "store")) / f"tiers/tier=1m/day={day}").glob("*.parquet"))
-        assert len(files) == 1, day
-    after = job.read_tier("1m").toPandas()
-    key = ["source", "metric", "kind", "window_start"]
-    assert before.sort_values(key).reset_index(drop=True).equals(
-        after.sort_values(key).reset_index(drop=True)
-    )
-
-
 def test_chunks_archive_sum_sq_restores_stddev(spark, tok, tmp_path):
-    """chunk_value_cols incl. sum_sq: the post-retention chunk read path
-    restores a stddev column equal to the live tier's (same moment
-    formula), so retention never loses the timer stddev."""
-    from logtrics_spark.operators.gorilla import DEFAULT_VALUE_COLS
-
-    job = RollupJob(
-        spark,
-        str(tmp_path / "store"),
-        step_seconds=STEP,
-        chunk_value_cols=[*DEFAULT_VALUE_COLS, "sum_sq"],
-    )
-    job.ingest_raw(tok)
-    job.run(run_id="r")
-    stored = job.read_tier("5m").toPandas()
-    from_chunks = job.read_tier_from_chunks("5m").toPandas()
-    _tiers_equal(stored, from_chunks, cols=("cnt", "sum", "min", "max", "avg", "last", "sum_sq"))
-    a = stored.sort_values(KEY).reset_index(drop=True)["stddev"].to_numpy()
-    b = from_chunks.sort_values(KEY).reset_index(drop=True)["stddev"].to_numpy()
-    assert np.allclose(a, b, rtol=1e-12, atol=0)
+    """Chunks carry the sum_sq moment, so read_tier re-derives the timer
+    stddev of a sealed day exactly as a direct rollup computes it —
+    dropping fine rows never loses it."""
+    job = _run_clean(spark, tok, str(tmp_path / "store"))
+    direct = rollup(extract_points(tok, step_seconds=STEP), "5m")
+    cols = [*KEY, "cnt", "sum", "sum_sq", "stddev"]
+    _identical(direct.select(*cols), job.read_tier("5m").select(*cols))
 
 
 def test_decompress_rejects_mismatched_value_cols(spark, tok, tmp_path):
@@ -288,13 +370,16 @@ def test_decompress_rejects_mismatched_value_cols(spark, tok, tmp_path):
     )
 
     tiers = rollup(extract_points(tok, step_seconds=STEP), "1h")
-    chunks = compress_tier(
-        tiers, "1h", value_cols=[*DEFAULT_VALUE_COLS, "sum_sq"]
-    ).localCheckpoint()
+    cols = [*DEFAULT_VALUE_COLS, "sum_sq"]
+    floats = tiers.select(*KEY, *[F.col(c).cast("double") for c in cols])
+    # a float-only chunk table without its description: the reader names the columns
+    chunks = compress_tier(floats, "1h", value_cols=cols).drop("value_cols").localCheckpoint()
     with pytest.raises(Exception, match="7 value columns.*names 6"):
         decompress_chunks(chunks).count()  # default 6-name config
-    ok = decompress_chunks(chunks, value_cols=[*DEFAULT_VALUE_COLS, "sum_sq"])
+    ok = decompress_chunks(chunks, value_cols=cols)
     assert ok.count() == tiers.count()
+    # a described table needs no names from the reader
+    assert decompress_chunks(compress_tier(tiers, "1h")).count() == tiers.count()
 
 
 def test_compact_partition_heals_crashed_swap(spark, tok, tmp_path):
@@ -306,9 +391,9 @@ def test_compact_partition_heals_crashed_swap(spark, tok, tmp_path):
     job = RollupJob(spark, str(tmp_path / "store"), step_seconds=STEP)
     job.ingest_raw(tok)
     job.run(run_id="r")
-    day = job.io.list_partitions("tiers/tier=1m", "day")[0]
+    day = job.io.list_partitions("chunks/tier=1m", "day")[0]
     before = job.read_tier("1m").toPandas()
-    target = Path(job.io.path("tiers/tier=1m")) / f"day={day}"
+    target = Path(job.io.path("chunks/tier=1m")) / f"day={day}"
     # simulate the crash window: target renamed away, tmp left behind
     old = target.with_name(target.name + "._compact_old")
     tmp = target.with_name(target.name + "._compact_tmp")
@@ -316,7 +401,7 @@ def test_compact_partition_heals_crashed_swap(spark, tok, tmp_path):
     tmp.mkdir()
     (tmp / "garbage.parquet").write_bytes(b"not parquet")
     assert not target.exists()
-    job.io.compact_partition("tiers/tier=1m", day=day)
+    job.io.compact_partition("chunks/tier=1m", day=day)
     assert target.exists() and not old.exists() and not tmp.exists()
     after = job.read_tier("1m").toPandas()
     key = ["source", "metric", "kind", "window_start"]

@@ -21,6 +21,7 @@ from logtrics_spark.plans.pipeline import RollupJob
 
 N = 4_000
 STEP = 30  # ~33h of derived ts -> 2 days
+TINY = 300  # docs: ~2.5 h of one day, for the crash-point runs
 SK = {"enabled": ["tdigest", "mg", "hll", "cms"], "item_col": "value"}
 
 
@@ -113,36 +114,42 @@ def test_sketch_tiers_built_and_answer(spark, tok, tmp_path):
             assert est - true_c <= 3 * np.e / width * r["total_n"]
 
 
-def test_sketch_kill_resume_completes(spark, tok, tmp_path):
-    """Crash after the 1m seal: resume recomputes the coarser tiers'
-    sketch partitions; final estimates equal a never-killed run's."""
+def _state(job):
+    """Chunk bytes, sealed units and per-tier digest stats of a store."""
+    chunks = job.io.read("chunks").toPandas()
+    chunks["chunk"] = chunks["chunk"].map(bytes)
+    key = ["tier", "source", "metric", "kind", "chunk_start"]
+    digests = [
+        td.tdigest_stats(job.read_sketch_tier("tdigest", t))
+        .select("source", "metric", "window_start", "cnt", "min", "max")
+        .orderBy("source", "metric", "window_start")
+        .toPandas()
+        for t in ("1m", "1d")
+    ]
+    units = sorted(tuple(r) for r in job.io.sealed_units().collect())
+    return chunks.sort_values(key).reset_index(drop=True), units, digests
+
+
+def test_sketch_kill_resume_completes(spark, tmp_path):
+    """A crash after each step of the seal (chunk write, sketch writes,
+    lineage append): the resume leaves the same chunk bytes, sealed units
+    and sketch estimates as a never-killed run."""
+    tok = gen_tokseq(spark, TINY, partitions=2)
     clean = RollupJob(spark, str(tmp_path / "clean"), step_seconds=STEP, sketches=SK)
     clean.ingest_raw(tok)
     clean.run(run_id="c")
+    chunks, units, digests = _state(clean)
 
-    killed = RollupJob(spark, str(tmp_path / "killed"), step_seconds=STEP, sketches=SK)
-    killed.ingest_raw(tok)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        killed.run(run_id="r1", fail_after_tier="1m")
-    stats = killed.run(run_id="r2")
-    assert stats["1m"] == 0 and stats["5m"] > 0
-
-    for t in ("1m", "1d"):
-        a = (
-            td.tdigest_stats(clean.read_sketch_tier("tdigest", t))
-            .select("source", "metric", "window_start", "cnt", "min", "max")
-            .orderBy("source", "metric", "window_start")
-            .toPandas()
-        )
-        b = (
-            td.tdigest_stats(killed.read_sketch_tier("tdigest", t))
-            .select("source", "metric", "window_start", "cnt", "min", "max")
-            .orderBy("source", "metric", "window_start")
-            .toPandas()
-        )
-        pd.testing.assert_frame_equal(
-            a.reset_index(drop=True), b.reset_index(drop=True)
-        )
+    for point in ("chunks", "sketches", "lineage"):
+        killed = RollupJob(spark, str(tmp_path / point), step_seconds=STEP, sketches=SK)
+        killed.ingest_raw(tok)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            killed.run(run_id="r1", fail_at=point)
+        killed.run(run_id="r2")
+        got_chunks, got_units, got_digests = _state(killed)
+        assert got_chunks.equals(chunks) and got_units == units, point
+        for a, b in zip(digests, got_digests):
+            pd.testing.assert_frame_equal(a, b)
 
 
 def test_sketch_retention_coarse_survives(spark, tok, tmp_path):
@@ -178,14 +185,13 @@ def test_no_sketches_is_noop(spark, tok, tmp_path):
 
 
 def test_enable_sketches_mid_history_resumes(spark, tok, tmp_path):
-    """Sketches turned on AFTER a partial scalar-only run (the crashed
-    enable window): the coarser tiers' sketch rows build directly from
+    """Sketches turned on AFTER a scalar-only run that sealed just the 1m
+    tier: the coarser tiers' sketch rows build directly from
     raw for their pending days instead of asserting on the missing fine
     sketch history."""
-    job0 = RollupJob(spark, str(tmp_path / "s"), step_seconds=STEP)
+    job0 = RollupJob(spark, str(tmp_path / "s"), tiers=["1m"], step_seconds=STEP)
     job0.ingest_raw(tok)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        job0.run(run_id="r1", fail_after_tier="1m")
+    job0.run(run_id="r1")
 
     job = RollupJob(spark, str(tmp_path / "s"), step_seconds=STEP, sketches=SK)
     stats = job.run(run_id="r2")
