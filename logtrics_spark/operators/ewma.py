@@ -32,15 +32,12 @@ from logtrics_spark.operators.rollup import KEY, tier_seconds
 HORIZONS_MIN = [1, 5, 15]
 
 
-def ewma_oracle(
-    rates: np.ndarray, tick_secs: int, horizon_min: int, init: float | None = None
-) -> np.ndarray:
-    """Single-series reference fold (also used by pytest and by the
-    streaming fold).  ``init`` is the average carried in from earlier
-    ticks; None lets the first tick initialize it."""
+def ewma_oracle(rates: np.ndarray, tick_secs: int, horizon_min: int) -> np.ndarray:
+    """Single-series reference fold (also used by pytest); the first
+    tick initializes the average."""
     alpha = 1.0 - math.exp(-tick_secs / (horizon_min * 60.0))
     out = np.empty_like(rates, dtype=np.float64)
-    acc = init
+    acc = None
     for i, r in enumerate(rates):
         acc = r if acc is None else alpha * r + (1 - alpha) * acc
         out[i] = acc
@@ -48,7 +45,7 @@ def ewma_oracle(
 
 
 def ewma_schema(horizons: list[int]) -> T.StructType:
-    """Output rows of `meter_ewma` and its streaming twin."""
+    """Output rows of `meter_ewma`."""
     return T.StructType(
         [
             T.StructField("source", T.StringType()),

@@ -60,30 +60,6 @@ from pyspark.sql import types as T
 
 from logtrics_spark.operators.rollup import KEY, tier_seconds, window_start
 
-# ---------------------------------------------------------------- bit io
-
-
-class _BitReader:
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes) -> None:
-        self.buf = buf
-        self.pos = 0
-
-    def read(self, nbits: int) -> int:
-        out = 0
-        remaining = nbits
-        while remaining > 0:
-            byte_i, bit_i = divmod(self.pos, 8)
-            avail = 8 - bit_i
-            take = min(avail, remaining)
-            chunk = (self.buf[byte_i] >> (avail - take)) & ((1 << take) - 1)
-            out = (out << take) | chunk
-            remaining -= take
-            self.pos += take
-        return out
-
-
 # -------------------------------------------------------- bit packing
 #
 # The encoders below emit (value, nbits) code pairs; _pack_codes
@@ -195,12 +171,12 @@ def _encode_ts_codes(ts: np.ndarray) -> bytes:
     return _pack_codes(all_vals, all_nbits)
 
 
-def _decode_ts(r: _BitReader, n: int, first: int) -> np.ndarray:
+def _decode_ts(buf: bytes, n: int, first: int) -> np.ndarray:
     # hot path: inlined bit reads (byte-slice + from_bytes, no method
     # calls) and a vectorized fill for zero-bit runs (constant delta)
     out = np.empty(n, dtype=np.int64)
     out[0] = first
-    buf, pos = r.buf, r.pos
+    pos = 0
     prev, prev_delta = first, 0
     i = 1
     while i < n:
@@ -235,7 +211,6 @@ def _decode_ts(r: _BitReader, n: int, first: int) -> np.ndarray:
         prev += prev_delta
         out[i] = prev
         i += 1
-    r.pos = pos
     return out
 
 
@@ -334,11 +309,11 @@ def _encode_vals_codes(bits: np.ndarray) -> bytes:
     return _pack_codes(all_vals, all_nbits)
 
 
-def _decode_vals(r: _BitReader, n: int, first: int) -> np.ndarray:
+def _decode_vals(buf: bytes, n: int, first: int) -> np.ndarray:
     # hot path mirrors _decode_ts: inlined reads, zero-run repeat fill
     out = np.empty(n, dtype=np.uint64)
     out[0] = first
-    buf, pos = r.buf, r.pos
+    pos = 0
     prev = first
     lead, mlen = 0, 0
     i = 1
@@ -369,7 +344,6 @@ def _decode_vals(r: _BitReader, n: int, first: int) -> np.ndarray:
         prev ^= bits << (64 - lead - mlen)
         out[i] = prev
         i += 1
-    r.pos = pos
     return out
 
 
@@ -436,8 +410,8 @@ def decompress_chunk(
         bitmap = np.frombuffer(buf, np.uint8, nb, off + 2)
         nulls[i] = np.unpackbits(bitmap, count=n).astype(bool)
         off += 2 + nb
-    ts = _decode_ts(_BitReader(buf[slice(*spans[0])]), n, first_ts)
-    cols = [_decode_vals(_BitReader(buf[slice(*spans[i + 1])]), n, firsts[i]) for i in picks]
+    ts = _decode_ts(buf[slice(*spans[0])], n, first_ts)
+    cols = [_decode_vals(buf[slice(*spans[i + 1])], n, firsts[i]) for i in picks]
     return ts, cols, [nulls.get(i) for i in picks]
 
 

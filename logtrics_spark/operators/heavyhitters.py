@@ -29,8 +29,8 @@ collect_list per window (see `mg_rollup`).  The collect_list funnels a
 window's whole DISTINCT-ITEM set through one task, so a window with
 millions of distinct items is bounded by one task's memory; that
 regime is scale-out work.  Cascades merge summaries with the same
-reduction, also in Catalyst (`mg_cascade`); the streaming fold
-(streaming/mg_stream.py) calls the Python `mg_merge`.
+reduction, also in Catalyst (`mg_cascade`); the Python `mg_merge` is
+the reference that tests pin `mg_cascade` against.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from logtrics_spark.operators.rollup import KEY, tier_seconds, window_start
 
 def _reduce(items: np.ndarray, counts: np.ndarray, k: int):
     """PODS'12 reduction to capacity k; returns (items, counts, delta).
+    Part of the `mg_merge` test reference.
 
     Deterministic: ties in the (k+1)-th count are resolved by the
     (-count, item) sort, so the same inputs always keep the same items.
@@ -60,7 +61,10 @@ def _reduce(items: np.ndarray, counts: np.ndarray, k: int):
 
 
 def mg_merge(summaries, k: int):
-    """Merge (items, counts, err, total_n) summaries at capacity k."""
+    """Merge (items, counts, err, total_n) summaries at capacity k.
+
+    The Python reference of the PODS'12 merge: no engine path calls it;
+    tests pin `mg_cascade` value-identical to it."""
     bag: dict[str, int] = {}
     err = 0
     total = 0

@@ -18,6 +18,8 @@ Scale design:
 - ``rollup`` is a single groupBy over native aggregates — Spark plans it
   as partial (map-side) + final agg, so the shuffle carries one row per
   (source, metric, kind, window) per map task, not per point.
+- ``rollup_stream`` is the same aggregate over a watermarked stream
+  (the daemon's finest tier); only the window expression differs.
 - ``cascade`` re-aggregates a finer tier into a coarser one: count/sum/
   min/max compose, avg is recomputed sum/cnt, gauge-last carries via
   max_by(last, last_ts).  Input is already tiny (one row per fine
@@ -80,17 +82,14 @@ def stddev_from_moments(cnt, total, sum_sq):
     return F.when(c > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).otherwise(F.lit(0.0))
 
 
-def rollup(points: DataFrame, tier: str) -> DataFrame:
-    """points(source,metric,kind,ts,value) -> one row per series-window.
-
-    Output: source, metric, kind, window_start, cnt, sum, min, max, avg,
-            last, last_ts, sum_sq, stddev, rate.  ``last`` is the gauge
-    view (max_by on ts); ``sum_sq`` is carried so stddev survives the
-    cascade; harmless-but-defined for other kinds.
-    """
+def _rollup(points: DataFrame, ws: Column, tier: str, ts_col: str) -> DataFrame:
+    """Shared body of ``rollup`` / ``rollup_stream``: group ``points`` by
+    the series + the window column ``ws`` (named ``window_start``) and
+    aggregate.  One aggregate list for both, so the batch and streaming
+    rows the daemon appends into one ``tiers/`` table share a schema."""
     secs = tier_seconds(tier)
     return (
-        points.withColumn("window_start", window_start(F.col("ts"), tier))
+        points.withColumn("window_start", ws)
         .groupBy(*KEY, "window_start")
         .agg(
             F.count("value").alias("cnt"),
@@ -98,13 +97,51 @@ def rollup(points: DataFrame, tier: str) -> DataFrame:
             F.min("value").alias("min"),
             F.max("value").alias("max"),
             F.avg("value").alias("avg"),
-            F.max_by("value", "ts").alias("last"),
-            F.max("ts").alias("last_ts"),
+            F.max_by("value", ts_col).alias("last"),
+            F.max(ts_col).alias("last_ts"),
             F.sum(F.col("value") * F.col("value")).alias("sum_sq"),
         )
         .withColumn("rate", F.col("cnt").cast("double") / F.lit(float(secs)))
         .withColumn("stddev", stddev_from_moments("cnt", "sum", "sum_sq"))
     )
+
+
+def rollup(points: DataFrame, tier: str) -> DataFrame:
+    """points(source,metric,kind,ts,value) -> one row per series-window.
+
+    Output: source, metric, kind, window_start, cnt, sum, min, max, avg,
+            last, last_ts, sum_sq, rate, stddev.  ``last`` is the gauge
+    view (max_by on ts); ``sum_sq`` is carried so stddev survives the
+    cascade; harmless-but-defined for other kinds.
+    """
+    return _rollup(points, window_start(F.col("ts"), tier), tier, "ts")
+
+
+def rollup_stream(
+    points: DataFrame,
+    tier: str,
+    watermark: str = "10 minutes",
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Streaming points -> per-window aggregates, with ``rollup``'s schema.
+
+    The streaming analog of the reference's interval flush
+    (graphite/graphite.go:84-98): a watermarked tumbling-window
+    aggregate over an unbounded point stream, emitted per trigger.  The
+    window is ``F.window`` (not ``window_start``'s epoch arithmetic)
+    because state eviction needs a window on the watermarked event-time
+    column: a window closes once the watermark passes window_end +
+    delay, so state stays bounded at any stream length.  Every
+    aggregate composes in streaming state (max_by partials merge, and
+    stddev derives from cnt/sum/sum_sq at emit).
+    """
+    agg = _rollup(
+        points.withWatermark(ts_col, watermark),
+        F.window(ts_col, f"{tier_seconds(tier)} seconds"),
+        tier,
+        ts_col,
+    )
+    return agg.withColumn("window_start", F.col("window_start.start"))
 
 
 def _check_multiple(fine_tier: str, coarse_tier: str) -> None:

@@ -27,10 +27,6 @@ the heavy exchange gains a time dimension, so one dominant key still
 parallelizes — then ``stitch_sessions`` merges runs across bucket
 edges over SESSION rows only (orders of magnitude smaller than
 events); output is row-identical to the direct computation (tested).
-
-Streaming analog: ``streaming/session_stream.py`` wraps Structured
-Streaming's native session_window(ts, gap) with the same output
-schema, so a live daemon maintains the same sessions incrementally.
 """
 
 from __future__ import annotations

@@ -18,10 +18,10 @@ k(q) = (δ/2π)·asin(2q−1), which caps centroid count at δ/2 + 1 and
 concentrates resolution at the tails (exactly where p99/p999 live).
 Construction is FULLY VECTORIZED — sort, cumulative weight, one
 floor(k) cell assignment, `np.add.reduceat` — no per-element Python
-loop (the zscore_stream lesson), so building from a multi-million-row
-window is numpy-speed.  Merging two digests is the same routine over
-the concatenated centroids, making merge associative-up-to-resolution
-and deterministic for a fixed input order.
+loop, so building from a multi-million-row window is numpy-speed.
+Merging two digests is the same routine over the concatenated
+centroids, making merge associative-up-to-resolution and deterministic
+for a fixed input order.
 
 Execution shape: groupBy(key, window).collect_list(value) — a plain
 JVM partial-aggregating shuffle — then ONE ArrowEvalPython pass

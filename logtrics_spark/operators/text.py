@@ -3,7 +3,7 @@
 All JVM-side (built-in pyspark.sql.functions — no Python in the hot
 path), so they whole-stage-codegen and scale linearly with the scan:
 - token_count: whitespace tokens + a BPE-ish subword regex count
-- quality_score: length / punctuation / stopword / uppercase ratios
+- quality_score: a blend of length, punctuation ratio and stopword ratio
 - language_id: stopword-hit heuristic over a few languages
 - fingerprint: deterministic 64-bit content fingerprint
 - Gopher quality rules (Rae et al. 2021, "Scaling Language Models:
@@ -74,13 +74,6 @@ def punct_ratio(text: Column | str) -> Column:
     # the stripped copy of every document
     punct = F.regexp_count(c, F.lit(r"[^\w\s]"))
     return F.when(n > 0, punct.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def upper_ratio(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    n = F.length(c)
-    upper = n - F.length(F.regexp_replace(c, r"[A-Z]", ""))
-    return F.when(n > 0, upper.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
 def stopword_hits(text: Column | str, lang: str = "en") -> Column:

@@ -8,7 +8,7 @@ deployment:
 
     modes -> line sources        sources/readers.py
           -> Engine.run          api.py   (one Arrow pass, all rules)
-          -> rollup_stream       streaming/rollup_stream.py (finest tier)
+          -> rollup_stream       operators/rollup.py (finest tier)
           -> foreachBatch sink   tier store append + Graphite lines
 
 Streaming modes (``file``/``tcp``) become Structured Streaming queries
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logtrics_spark.api import Engine
-from logtrics_spark.operators.rollup import rollup
+from logtrics_spark.operators.rollup import rollup, rollup_stream
 from logtrics_spark.operators.sketchset import KIND_VALS, SketchSet
 from logtrics_spark.sinks.graphite import send_graphite_tcp, to_graphite_lines
 from logtrics_spark.sources.readers import (
@@ -55,7 +55,6 @@ from logtrics_spark.sources.readers import (
     stream_socket,
 )
 from logtrics_spark.storage.tableio import ParquetTableIO
-from logtrics_spark.streaming.rollup_stream import rollup_stream
 
 logger = logging.getLogger("logtrics_spark.daemon")
 

@@ -124,7 +124,7 @@ def test_mg_cascade_validation(spark):
 def test_mg_cascade_matches_mg_merge_reference(spark):
     """The r7 pure-Catalyst cascade must be VALUE-IDENTICAL — items,
     item order, clipped counts, accumulated err, total_n — to the
-    Python `mg_merge` reference (the streaming fold's merge), on a
+    Python `mg_merge` test reference, on a
     workload where fine summaries are clipped (err > 0) and one fine
     window is emptied to exercise the posexplode_outer null-pos path
     for err/total_n accumulation."""

@@ -115,93 +115,3 @@ def test_bucketed_validation(spark):
 
     with pytest.raises(ValueError, match="must exceed"):
         session_stats_bucketed(None, ["user_id"], gap_seconds=600, bucket_seconds=600)
-
-
-def test_session_stream_matches_batch(spark, tmp_path):
-    """Streaming session_window over two micro-batch appends ==
-    batch session_stats (non-boundary gaps; complete output mode)."""
-    from logtrics_spark.streaming.session_stream import session_stream
-
-    ev_dir = str(tmp_path / "events")
-    rows1 = [(1, 0), (1, 100), (2, 50)]
-    rows2 = [(1, 150), (1, 2000), (2, 60)]
-    collected = {}
-
-    def run_pass():
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(ev_dir)
-        q = (
-            session_stream(stream, ["user_id"], gap_seconds=300)
-            .writeStream.outputMode("complete")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .foreachBatch(
-                lambda df, _b: collected.update(
-                    {(r["user_id"], r["start_us"]): r for r in df.collect()}
-                )
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    _events(spark, rows1).write.mode("append").parquet(ev_dir)
-    run_pass()
-    _events(spark, rows2).write.mode("append").parquet(ev_dir)
-    run_pass()
-
-    batch = session_stats(_events(spark, rows1 + rows2), ["user_id"], gap_seconds=300)
-    exp = {(r["user_id"], r["start_us"]): r for r in batch.collect()}
-    assert set(collected) == set(exp)
-    for k, r in exp.items():
-        got = collected[k]
-        assert got["n_events"] == r["n_events"]
-        assert got["end_us"] == r["end_us"]
-        assert got["duration_s"] == r["duration_s"]
-
-
-def test_session_stream_state_evicts_past_watermark(spark, tmp_path):
-    """State stays BOUNDED as event time advances: once the watermark
-    passes a session's gap the session is emitted (append mode) and its
-    state-store rows are dropped — the streaming analog of the zscore
-    stream's window-pruning pin.  Without eviction a long-running
-    stream accumulates one state row per session forever."""
-    import json
-
-    from logtrics_spark.streaming.session_stream import session_stream
-
-    ev_dir = str(tmp_path / "events")
-
-    def state_rows_after_pass():
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(ev_dir)
-        out = []
-        q = (
-            session_stream(stream, ["user_id"], gap_seconds=300, watermark="0 seconds")
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .foreachBatch(lambda df, _b: out.extend(df.collect()))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # last progress entry that reports the session state operator
-        rows_total = None
-        for p in q.recentProgress:
-            d = json.loads(p.json) if hasattr(p, "json") else p
-            ops = d.get("stateOperators") or []
-            if ops:
-                rows_total = ops[0]["numRowsTotal"]
-        return rows_total, out
-
-    # pass 1: two users, one open session each -> 2 state rows, nothing
-    # emitted yet (watermark has not passed any session's gap)
-    _events(spark, [(1, 0), (1, 100), (2, 50)]).write.mode("append").parquet(ev_dir)
-    n1, out1 = state_rows_after_pass()
-    assert n1 == 2
-    assert out1 == []
-
-    # pass 2: one event far in the future advances the watermark past
-    # both old sessions' gaps -> they are EMITTED and their state rows
-    # EVICTED; only the new open session remains in the store
-    _events(spark, [(1, 10_000)]).write.mode("append").parquet(ev_dir)
-    n2, out2 = state_rows_after_pass()
-    assert n2 == 1, "closed sessions' state must be evicted, not retained"
-    assert {(r["user_id"], r["n_events"]) for r in out2} == {(1, 2), (2, 1)}

@@ -2,13 +2,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from logtrics_spark.datagen import gen_tokseq
 from logtrics_spark.operators.extract import POINT_SCHEMA, extract_points
-from logtrics_spark.operators.rollup import rollup
+from logtrics_spark.operators.rollup import rollup, rollup_stream
 
 
 def test_meter_ewma_matches_oracle(spark):
@@ -26,28 +24,31 @@ def test_meter_ewma_matches_oracle(spark):
 
 
 def test_streaming_rollup_equals_batch(spark, tmp_path):
-    """availableNow file-stream through the windowed agg == batch rollup."""
-    from logtrics_spark.streaming.rollup_stream import rollup_stream, write_tier_stream
-
+    """availableNow file-stream through the windowed agg == batch rollup,
+    column for column: the daemon appends rows of both into one
+    ``tiers/`` table, so their schemas must match too."""
     pts = extract_points(gen_tokseq(spark, 2000, partitions=2))
     src_dir = str(tmp_path / "points")
     pts.write.parquet(src_dir)
 
     stream = spark.readStream.schema(POINT_SCHEMA).parquet(src_dir)
     agg = rollup_stream(stream, "5m", watermark="1 minute")
-    store = str(tmp_path / "store")
-    q = write_tier_stream(
-        agg, store, "5m", checkpoint_dir=str(tmp_path / "ckpt"), trigger_available_now=True
+    batch = rollup(pts, "5m")
+    assert [(f.name, f.dataType) for f in agg.schema] == [
+        (f.name, f.dataType) for f in batch.schema
+    ]
+    sink_rows = []
+    q = (
+        agg.writeStream.outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(lambda df, _bid: sink_rows.extend(df.collect()))
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination(120)
 
-    got = (
-        spark.read.option("basePath", f"{store}/tiers/tier=5m")
-        .parquet(f"{store}/tiers/tier=5m")
-        .drop("day")
-        .toPandas()
-    )
-    exp = rollup(pts, "5m").drop("last_ts").toPandas()
+    got = pd.DataFrame([r.asDict() for r in sink_rows])
+    exp = batch.toPandas()
     # append mode only emits windows the final watermark closed: the
     # stream's last in-progress window (end > max_ts - delay) stays open
     max_ts = pts.agg(F.max("ts")).collect()[0][0]
@@ -66,8 +67,6 @@ def test_streaming_rollup_equals_batch(spark, tmp_path):
 def test_streaming_late_data_dropped_after_watermark(spark, tmp_path):
     """Two micro-batches; rows older than watermark-closed windows are
     dropped (bounded-lateness semantics the reference lacks entirely)."""
-    from logtrics_spark.streaming.rollup_stream import rollup_stream
-
     src_dir = str(tmp_path / "pts")
     base = pd.Timestamp("2024-01-01 00:00:00")
     batch1 = pd.DataFrame(
@@ -125,159 +124,3 @@ def test_streaming_late_data_dropped_after_watermark(spark, tmp_path):
     q2.awaitTermination(120)
     got2 = {(r["window_start"].minute + 60 * r["window_start"].hour): r["sum"] for r in sink_rows}
     assert got2.get(0) == before.get(0) == 1  # late row dropped, not merged
-
-
-def test_stream_and_batch_write_interchangeable_tier_tables(spark, tmp_path):
-    """A store written by BOTH paths — streaming sink for early data,
-    batch RollupJob for a later day — reads back through the single
-    ["tier", "day"] layout with one schema (VERDICT r1 divergence)."""
-    from logtrics_spark.plans.pipeline import RollupJob
-    from logtrics_spark.streaming.rollup_stream import (
-        dedupe_tier_rows,
-        rollup_stream,
-        write_tier_stream,
-    )
-
-    store = str(tmp_path / "store")
-    tok = gen_tokseq(spark, 3000, partitions=2)
-    seq = F.substring("doc_id", 4, 12).cast("long")
-
-    # split at the DAY boundary (doc 1440 at step 60s = next midnight):
-    # streaming owns the live day, batch backfills later days — writing
-    # the same day from both paths would collide with the batch job's
-    # day-granular dynamic overwrite, by design
-    pts_early = extract_points(tok.where(seq < 1440), step_seconds=60)
-    src_dir = str(tmp_path / "pts")
-    pts_early.write.parquet(src_dir)
-    stream = spark.readStream.schema(POINT_SCHEMA).parquet(src_dir)
-    q = write_tier_stream(
-        rollup_stream(stream, "1h", watermark="0 seconds"),
-        store,
-        "1h",
-        checkpoint_dir=str(tmp_path / "ck"),
-        trigger_available_now=True,
-    )
-    q.awaitTermination(120)
-
-    # advance the watermark past every day-1 window: a sentinel point far
-    # in the future, then a second availableNow pass on the SAME
-    # checkpoint (the file-source watermark lags one micro-batch, so the
-    # final windows of the first pass only flush on the next batch)
-    sentinel = pd.DataFrame(
-        {
-            "source": ["zz"],
-            "metric": ["m"],
-            "kind": ["gauge"],
-            "ts": [pd.Timestamp("2024-02-01 00:00:00")],
-            "value": [0],
-        }
-    )
-    spark.createDataFrame(sentinel, POINT_SCHEMA).write.mode("append").parquet(src_dir)
-    q2 = write_tier_stream(
-        rollup_stream(stream, "1h", watermark="0 seconds"),
-        store,
-        "1h",
-        checkpoint_dir=str(tmp_path / "ck"),
-        trigger_available_now=True,
-    )
-    q2.awaitTermination(120)
-
-    # batch path: the remaining days through the full RollupJob
-    job = RollupJob(spark, store, tiers=["1h"], step_seconds=60)
-    job.ingest_raw(tok.where(seq >= 1440))
-    job.run(run_id="batch")
-
-    merged = dedupe_tier_rows(job.read_tier("1h"))
-    direct = rollup(extract_points(tok, step_seconds=60), "1h")
-    key = ["source", "metric", "kind", "window_start"]
-    m = merged.select(*key, "cnt", "sum", "last").toPandas().sort_values(key)
-    d = direct.select(*key, "cnt", "sum", "last").toPandas().sort_values(key)
-    # the streaming watermark closes every window except possibly the
-    # stream's final in-progress one per series; restrict to the union
-    # of what both paths cover, then values must agree exactly
-    m = m.reset_index(drop=True)
-    assert len(m) == len(d), (len(m), len(d))
-    dm = d.merge(m, on=key, suffixes=("_d", "_m")).reset_index(drop=True)
-    assert len(dm) == len(m)
-    for c in ["cnt", "sum", "last"]:
-        assert (dm[f"{c}_d"] == dm[f"{c}_m"]).all(), c
-
-
-def test_streaming_ewma_state_carries_across_batches(spark, tmp_path):
-    """applyInPandasWithState EWMA: two availableNow passes over a
-    growing tier-row directory share one checkpoint; the second pass
-    must continue the fold from stored state, matching the batch
-    meter_ewma over the full series."""
-    from logtrics_spark.operators.ewma import meter_ewma
-    from logtrics_spark.streaming.ewma_stream import meter_ewma_stream
-
-    tier_dir = str(tmp_path / "tier_rows")
-    ck = str(tmp_path / "ck_ewma")
-    base = pd.Timestamp("2024-01-01 00:00:00")
-
-    def tier_rows(start_win, n):
-        return pd.DataFrame(
-            {
-                "source": ["web"] * n,
-                "metric": ["m"] * n,
-                "kind": ["meter"] * n,
-                "window_start": [base + pd.Timedelta(minutes=start_win + i) for i in range(n)],
-                "cnt": [(start_win + i + 1) * 10 for i in range(n)],
-            }
-        )
-
-    schema = T.StructType(
-        [
-            T.StructField("source", T.StringType()),
-            T.StructField("metric", T.StringType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("window_start", T.TimestampType()),
-            T.StructField("cnt", T.LongType()),
-        ]
-    )
-    collected = []
-
-    def run_pass():
-        stream = spark.readStream.schema(schema).parquet(tier_dir)
-        q = (
-            meter_ewma_stream(stream, "1m")
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ck)
-            .foreachBatch(lambda df, _bid: collected.extend(df.collect()))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    spark.createDataFrame(tier_rows(0, 5), schema).write.mode("append").parquet(tier_dir)
-    run_pass()
-    assert len(collected) == 5
-    spark.createDataFrame(tier_rows(5, 4), schema).write.mode("append").parquet(tier_dir)
-    run_pass()
-    assert len(collected) == 9
-
-    got = (
-        pd.DataFrame([r.asDict() for r in collected])
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    batch = (
-        meter_ewma(
-            spark.createDataFrame(tier_rows(0, 9), schema).withColumn(
-                "rate", F.lit(0.0)
-            ),
-            "1m",
-        )
-        .toPandas()
-        .sort_values("window_start")
-        .reset_index(drop=True)
-    )
-    for c in ["rate", "rate_m1", "rate_m5", "rate_m15"]:
-        assert np.allclose(got[c].to_numpy(), batch[c].to_numpy(), rtol=1e-12), c
-    # the second pass really used carried state: window 5's EWMA differs
-    # from a cold restart over windows 5..8
-    cold = meter_ewma(
-        spark.createDataFrame(tier_rows(5, 4), schema).withColumn("rate", F.lit(0.0)),
-        "1m",
-    ).toPandas().sort_values("window_start")
-    assert not np.isclose(got["rate_m15"].iloc[5], cold["rate_m15"].iloc[0])
