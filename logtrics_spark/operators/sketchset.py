@@ -30,6 +30,8 @@ Per-kind notes:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -102,9 +104,11 @@ class SketchSet:
     def __bool__(self) -> bool:
         return bool(self.enabled)
 
-    @staticmethod
-    def val_cols(name: str) -> list[str]:
-        return KIND_VALS[name]
+    def kinds_with_stored(self, io) -> list[str]:
+        """Configured kinds ∪ the kinds with an ``sk_<kind>`` table in
+        ``io``'s store — what compact, archive and retention cover, so a
+        kind left by an earlier config is never stranded."""
+        return [k for k in KIND_VALS if k in self.enabled or io.exists(f"sk_{k}")]
 
     def rollup(self, points: DataFrame, tier: str, name: str) -> DataFrame:
         """Finest-tier sketch rows for one kind from raw points."""
@@ -141,3 +145,13 @@ class SketchSet:
         if name == "cms":
             return cms_cascade(df, fine_tier, coarse_tier)
         return set_sketch_cascade(df, fine_tier, coarse_tier)
+
+    def ladder(self, name: str, fine: DataFrame, tiers: list[str]) -> DataFrame:
+        """``fine`` (rows at ``tiers[0]``) and each coarser tier of
+        ``tiers`` merged from the tier before it, in one frame with a
+        ``tier`` column: sketches cascade, never rebuilt from raw."""
+        frames, prev = [fine.withColumn("tier", F.lit(tiers[0]))], fine
+        for lo, hi in zip(tiers, tiers[1:]):
+            prev = self.cascade(name, prev, lo, hi)
+            frames.append(prev.withColumn("tier", F.lit(hi)))
+        return reduce(DataFrame.unionByName, frames)

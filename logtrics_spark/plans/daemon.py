@@ -59,6 +59,26 @@ from logtrics_spark.storage.tableio import ParquetTableIO
 logger = logging.getLogger("logtrics_spark.daemon")
 
 
+def _pick_latest(df: DataFrame, vals: list[str], by: tuple[str, ...] = ()) -> DataFrame:
+    """One row per ``by`` + series + window: the ``vals`` of the row with
+    the highest ``flush_seq`` — the one latest-wins pick of every
+    snapshot read and compaction.
+
+    ONE max_by over a struct of all value columns: flush_seq is stamped
+    per process as max(seq+1, epoch_micros), so a live daemon and a CLI
+    compact can tie on the same microsecond — independent per-column
+    max_by calls could then mix columns from different rows (e.g. MG
+    'items' from one version, 'counts' from another).  The struct pick
+    is atomic: every value column comes from the same winning row.
+    """
+    keys = [c for c in ("source", "metric", "kind", "window_start") if c in df.columns]
+    return (
+        df.groupBy(*by, *keys)
+        .agg(F.max_by(F.struct(*vals), "flush_seq").alias("_v"))
+        .select(*keys, *[F.col(f"_v.{c}").alias(c) for c in vals])
+    )
+
+
 def _resolve_sketch_versions(df: DataFrame, val_cols: list[str]) -> DataFrame:
     """Collapse a sketch table's stored versions to one contribution row
     per (series, window, contribution):
@@ -75,27 +95,8 @@ def _resolve_sketch_versions(df: DataFrame, val_cols: list[str]) -> DataFrame:
     partials cover disjoint underlying line sources, so merging is the
     union of disjoint event sets.
     """
-    keys = [c for c in ("source", "metric", "kind", "window_start") if c in df.columns]
-    # ONE max_by over a struct of all value columns: flush_seq is stamped
-    # per process as max(seq+1, epoch_micros), so a live daemon and a CLI
-    # compact can tie on the same microsecond — independent per-column
-    # max_by calls could then mix columns from different rows (e.g. MG
-    # 'items' from one version, 'counts' from another).  The struct pick
-    # is atomic: every value column comes from the same winning row.
-    pick = F.max_by(F.struct(*val_cols), "flush_seq").alias("_v")
-    expand = [F.col(f"_v.{c}").alias(c) for c in val_cols]
-    snap = (
-        df.where(F.col("origin") != "stream")
-        .groupBy(*keys)
-        .agg(pick)
-        .select(*keys, *expand)
-    )
-    stream = (
-        df.where(F.col("origin") == "stream")
-        .groupBy("batch_seq", *keys)
-        .agg(pick)
-        .select(*keys, *expand)
-    )
+    snap = _pick_latest(df.where(F.col("origin") != "stream"), val_cols)
+    stream = _pick_latest(df.where(F.col("origin") == "stream"), val_cols, by=("batch_seq",))
     return snap.unionByName(stream)
 
 
@@ -110,15 +111,8 @@ def resolve_latest(tier_df: DataFrame) -> DataFrame:
     """
     if "flush_seq" not in tier_df.columns:
         return tier_df
-    keys = [c for c in ("source", "metric", "kind", "window_start") if c in tier_df.columns]
-    vals = [c for c in tier_df.columns if c not in keys and c != "flush_seq"]
-    # atomic struct pick — a flush_seq tie must never mix columns from
-    # different snapshot rows (see _resolve_sketch_versions)
-    return (
-        tier_df.groupBy(*keys)
-        .agg(F.max_by(F.struct(*vals), "flush_seq").alias("_v"))
-        .select(*keys, *[F.col(f"_v.{c}").alias(c) for c in vals])
-    )
+    keys = ("source", "metric", "kind", "window_start", "flush_seq")
+    return _pick_latest(tier_df, [c for c in tier_df.columns if c not in keys])
 
 
 def load_rules(spec: str) -> Engine:
@@ -297,21 +291,24 @@ class Daemon:
     def _next_flush_seq(self) -> int:
         """Monotonic snapshot stamp across all queries + driver drains.
 
-        The first call folds in max(flush_seq) already in the store
-        (mirroring ParquetTableIO._next_seal_seq): a daemon restart on a
-        clock that stepped backwards must never stamp below rows already
-        written, or read_tier_latest would resurrect stale snapshots.
+        The first call folds in max(flush_seq) already in the store —
+        over ``tiers/`` and every ``sk_*`` table, whose snapshots a drain
+        stamps after its tier rows (mirroring
+        ParquetTableIO._next_seal_seq): a daemon restart on a clock that
+        stepped backwards must never stamp below rows already written, or
+        read_tier_latest / read_sketch would resurrect stale snapshots.
         """
         import time
 
         with self._seq_lock:
             if not self._flush_floor_loaded:
                 self._flush_floor_loaded = True
-                if self.io.exists("tiers"):
-                    t = self.io.read("tiers")
-                    if "flush_seq" in t.columns:
-                        stored = t.agg(F.max("flush_seq")).collect()[0][0] or 0
-                        self._flush_seq = max(self._flush_seq, stored)
+                for table in ("tiers", *(f"sk_{k}" for k in KIND_VALS)):
+                    if self.io.exists(table):
+                        t = self.io.read(table)
+                        if "flush_seq" in t.columns:
+                            stored = t.agg(F.max("flush_seq")).collect()[0][0] or 0
+                            self._flush_seq = max(self._flush_seq, stored)
             self._flush_seq = max(self._flush_seq + 1, int(time.time() * 1_000_000))
             return self._flush_seq
 
@@ -488,14 +485,15 @@ class Daemon:
 
     # --------------------------------------------------- sketch tiers
     def _write_sketch_rows(
-        self, name: str, rows: DataFrame, tier: str, origin: str, batch_seq: int = -1
+        self, name: str, rows: DataFrame, origin: str, batch_seq: int = -1
     ) -> None:
+        """One append of sketch rows (with a ``tier`` column) to
+        ``sk_<name>``, stamped with one flush_seq."""
         from logtrics_spark.plans.pipeline import _day
 
         with self._store_guard():
             out = (
                 rows.withColumn("day", _day("window_start"))
-                .withColumn("tier", F.lit(tier))
                 .withColumn("origin", F.lit(origin))
                 .withColumn("batch_seq", F.lit(int(batch_seq)))
                 .withColumn("flush_seq", F.lit(self._next_flush_seq()))
@@ -516,8 +514,8 @@ class Daemon:
         trio safe to append without streaming state.
         """
         for name in self.sketch_kinds:
-            rows = self.sketchset.rollup(points, self.tier, name)
-            self._write_sketch_rows(name, rows, self.tier, origin, batch_seq)
+            rows = self.sketchset.rollup(points, self.tier, name).withColumn("tier", F.lit(self.tier))
+            self._write_sketch_rows(name, rows, origin, batch_seq)
 
     def _sketch_sink(self, points_batch: DataFrame, batch_id: int) -> None:
         points_batch = points_batch.persist()
@@ -529,15 +527,11 @@ class Daemon:
             points_batch.unpersist()
 
     def _sketch_kinds_effective(self) -> list[str]:
-        """Configured sketch kinds, or — for housekeeping entry points
-        invoked WITHOUT the daemon's TOML (the CLI compact/archive
-        construct a bare Daemon) — the kinds whose tables exist in the
-        store, so sketch tiers are never silently skipped.  Merge
-        parameters then take defaults; pass the deployment's config to
-        the CLI when it customizes mg_k/compression."""
-        if self.sketch_kinds:
-            return self.sketch_kinds
-        return [k for k in KIND_VALS if self.io.exists(f"sk_{k}")]
+        """The sketch kinds housekeeping covers: configured ∪ stored
+        (``SketchSet.kinds_with_stored``, as in ``retention_tiers``).  An
+        unconfigured kind merges with default parameters — pass the
+        deployment's config to the CLI when it customizes mg_k/compression."""
+        return self.sketchset.kinds_with_stored(self.io)
 
     def read_sketch(self, name: str, tier: str | None = None) -> DataFrame:
         """Consolidated sketch rows for one kind+tier: one row per
@@ -608,21 +602,10 @@ class Daemon:
             # them away would break the (batch_seq, window) dedupe that
             # makes at-least-once replays safe.
             for name in self._sketch_kinds_effective():
-                if not self.io.exists(f"sk_{name}"):
-                    continue
                 for t in self.io.list_partitions(f"sk_{name}", "tier"):
                     df = self.io.read(f"sk_{name}/tier={t}").drop("day").localCheckpoint()
-                    keys = [
-                        c for c in ("source", "metric", "kind", "window_start")
-                        if c in df.columns
-                    ]
-                    vals = KIND_VALS[name]
                     snap = (
-                        df.where(F.col("origin") != "stream")
-                        .groupBy(*keys)
-                        # atomic struct pick (see _resolve_sketch_versions)
-                        .agg(F.max_by(F.struct(*vals), "flush_seq").alias("_v"))
-                        .select(*keys, *[F.col(f"_v.{c}").alias(c) for c in vals])
+                        _pick_latest(df.where(F.col("origin") != "stream"), KIND_VALS[name])
                         .withColumn("origin", F.lit("compact"))
                         .withColumn("batch_seq", F.lit(-1))
                         .withColumn("flush_seq", F.lit(self._next_flush_seq()))
@@ -639,22 +622,28 @@ class Daemon:
 
     def archive_closed_days(self, job, before_day: str | None = None) -> dict:
         """Seal CLOSED days of the live store into a RollupJob's
-        archival store (Gorilla chunks of every tier + one lineage
-        append, ``RollupJob.seal_from_fine``), then drop
-        them from the live head — the daemon owns the open day, the
-        batch pipeline owns sealed history; without this handoff they
-        are disjoint stores a user must reconcile by hand.
+        archival store, then drop them from the live head — the daemon
+        owns the open day, the batch pipeline owns sealed history;
+        without this handoff they are disjoint stores a user must
+        reconcile by hand.
 
         ``before_day`` ('yyyy-MM-dd'): archive days strictly before it;
         defaults to the day of the store's newest window (the open day),
         which assumes event time is roughly monotonic — pass an explicit
         watermark when late data may still arrive for older days.
 
-        Order matters for crash-safety: archive writes + lineage seals
-        land FIRST (idempotent — a replay overwrites identical
-        partitions), live-store drops happen strictly after, so a crash
-        in between leaves the day readable in both stores rather than
-        in neither.  Returns the per-tier sealed-unit counts.
+        The closed fine sketch rows of each kind are consolidated once
+        and merged up the job's tiers with the daemon's own ``SketchSet``
+        (``ladder``: its merge parameters stay in force), then handed
+        with the closed scalar rows to ``RollupJob.seal_from_fine`` — so
+        the archive lands through the job's one seal path: the chunk
+        write, one ``sk_<kind>`` write per kind, one lineage append.
+        Live-head drops happen strictly after (a crash in between leaves
+        the day readable in both stores rather than in neither), the
+        finest scalar tier last: its closed days are what a rerun
+        re-archives (idempotently) before it finishes the drops.
+        Returns the per-tier sealed units and the ``sk_<kind>:<tier>``
+        rows sealed.
         """
         from logtrics_spark.plans.pipeline import _day
 
@@ -667,52 +656,34 @@ class Daemon:
             if not self.io.exists(f"tiers/tier={self.tier}"):
                 return {}
             if before_day is None:
-                newest = (
+                before_day = (
                     self.io.read(f"tiers/tier={self.tier}")
                     .agg(F.max(_day("window_start")))
                     .collect()[0][0]
                 )
-                before_day = newest
             closed = self.read_tier_latest().where(_day("window_start") < before_day)
             if closed.isEmpty():
                 return {}
-            stats = job.seal_from_fine(closed)
-            # sketch handoff mirrors seal_from_fine: consolidate the
-            # closed fine sketch rows, MERGE up every archival tier
-            # (sketches cascade, they are never rebuilt from raw), land
-            # all of it in the job's store, and only then drop the live
-            # head's closed sketch partitions — same crash-safety order
-            # as the scalar path.
-            for name in self._sketch_kinds_effective():
-                if not self.io.exists(f"sk_{name}/tier={self.tier}"):
-                    continue
-                fine_sk = (
-                    self.read_sketch(name)
-                    .where(_day("window_start") < before_day)
-                    .localCheckpoint()
-                )
-                if fine_sk.isEmpty():
-                    continue
-                sprev, sprev_tier = fine_sk, self.tier
-                frames = [(self.tier, fine_sk)]
-                for t in job.tiers[1:]:
-                    scur = self.sketchset.cascade(name, sprev, sprev_tier, t).localCheckpoint()
-                    frames.append((t, scur))
-                    sprev, sprev_tier = scur, t
-                for t, fdf in frames:
-                    out = fdf.withColumn("day", _day("window_start")).withColumn(
-                        "tier", F.lit(t)
-                    )
-                    job.io.write_partitioned(out, f"sk_{name}", ["tier", "day"])
-                    stats[f"sk_{name}:{t}"] = fdf.count()
-                for t in self.io.list_partitions(f"sk_{name}", "tier"):
-                    for day in self.io.list_partitions(f"sk_{name}/tier={t}", "day"):
-                        if day < before_day:
-                            self.io.drop_partition(f"sk_{name}/tier={t}", day=day)
-            for t in self.io.list_partitions("tiers", "tier"):
-                for day in self.io.list_partitions(f"tiers/tier={t}", "day"):
+            kinds = [
+                k for k in self._sketch_kinds_effective()
+                if self.io.exists(f"sk_{k}/tier={self.tier}")
+            ]
+            sketches = []
+            for k in kinds:
+                # consolidated once and checkpointed: every ladder tier reads it
+                fine = self.read_sketch(k).where(_day("window_start") < before_day)
+                sketches.append((k, self.sketchset.ladder(k, fine.localCheckpoint(), job.tiers)))
+            stats = job.seal_from_fine(closed, sketches=sketches)
+            live = [
+                f"{table}/tier={t}"
+                for table in (*(f"sk_{k}" for k in kinds), "tiers")
+                for t in self.io.list_partitions(table, "tier")
+            ]
+            live.sort(key=lambda part: part == f"tiers/tier={self.tier}")
+            for part in live:
+                for day in self.io.list_partitions(part, "day"):
                     if day < before_day:
-                        self.io.drop_partition(f"tiers/tier={t}", day=day)
+                        self.io.drop_partition(part, day=day)
             return stats
 
     # -------------------------------------------------------- cascading
@@ -720,53 +691,46 @@ class Daemon:
         """Roll the live store's finest tier up to the coarser configured
         tiers (offline continuous-aggregate maintenance — the daemon
         only streams the finest tier; run this periodically or after
-        --once drains).  Each coarser tier is recomputed from the
-        latest finest snapshot and written as one new flush_seq version,
-        so reruns converge via the same latest-wins rule.  Returns
-        {tier: rows written}.
+        --once drains).  Every coarser tier is recomputed from the
+        latest finest snapshot in one aggregate (``rollup.cascade_tiers``)
+        and lands as ONE append under one new flush_seq; each sketch kind
+        merges up the same tiers (``SketchSet.ladder``) into one append
+        of snapshot rows (origin='cascade').  Reruns converge via the
+        same latest-wins rule.  Returns {tier: rows written} and
+        {"sk_<kind>:<tier>": rows written}.
         """
-        from logtrics_spark.operators.rollup import cascade
-        from logtrics_spark.plans.pipeline import _day
+        from logtrics_spark.operators.rollup import cascade_tiers
+        from logtrics_spark.plans.pipeline import _day, _tier_counts
 
         tiers = tiers or (self.conf.get("graphite", {}).get("tiers") or [self.tier])
         if tiers[0] != self.tier:
             raise ValueError(f"tier list must start at the streamed tier {self.tier!r}")
-        if not self.io.exists(f"tiers/tier={self.tier}"):
-            return {}  # nothing flushed yet (e.g. no line matched any rule)
-        prev = self.read_tier_latest().localCheckpoint()
-        prev_tier = self.tier
-        counts: dict[str, int] = {}
-        for t in tiers[1:]:
-            cur = cascade(prev, prev_tier, t).localCheckpoint()
-            # scalar appends take the same cross-process store guard as
-            # _sink/_write_sketch_rows: a concurrent CLI compact's
-            # read-then-dynamic-overwrite must not drop this append
-            # landing in between (the flush_seq stamp rides inside the
-            # guard so the compact's own stamp orders after it)
-            with self._store_guard():
-                out = (
-                    cur.withColumn("day", _day("window_start"))
-                    .withColumn("tier", F.lit(t))
-                    .withColumn("flush_seq", F.lit(self._next_flush_seq()))
-                )
-                self.io.write_partitioned(
-                    out, "tiers", ["tier", "day"], overwrite_dynamic=False
-                )
-            counts[t] = cur.count()
-            prev, prev_tier = cur, t
-        # sketch tiers ride the same cascade: coarser windows get MERGED
-        # summaries (never re-built from raw), written as snapshot rows
-        # (origin='cascade') so reruns converge latest-wins like scalars
+        # nothing flushed yet (e.g. no line matched any rule), or no coarser tier
+        if not self.io.exists(f"tiers/tier={self.tier}") or len(tiers) == 1:
+            return {}
+        coarse = cascade_tiers(self.read_tier_latest(), self.tier, tiers[1:]).localCheckpoint()
+        # the append takes the same cross-process store guard as
+        # _sink/_write_sketch_rows: a concurrent CLI compact's
+        # read-then-dynamic-overwrite must not drop this append landing
+        # in between (the flush_seq stamp rides inside the guard so the
+        # compact's own stamp orders after it)
+        with self._store_guard():
+            out = coarse.withColumn("day", _day("window_start")).withColumn(
+                "flush_seq", F.lit(self._next_flush_seq())
+            )
+            self.io.write_partitioned(out, "tiers", ["tier", "day"], overwrite_dynamic=False)
+        counts = {t: 0 for t in tiers[1:]} | _tier_counts(coarse)
         for name in self._sketch_kinds_effective():
             if not self.io.exists(f"sk_{name}/tier={self.tier}"):
                 continue
-            sprev = self.read_sketch(name).localCheckpoint()
-            sprev_tier = self.tier
-            for t in tiers[1:]:
-                scur = self.sketchset.cascade(name, sprev, sprev_tier, t).localCheckpoint()
-                self._write_sketch_rows(name, scur, t, origin="cascade")
-                counts[f"sk_{name}:{t}"] = scur.count()
-                sprev, sprev_tier = scur, t
+            fine = self.read_sketch(name).localCheckpoint()
+            rows = (
+                self.sketchset.ladder(name, fine, tiers)
+                .where(F.col("tier") != self.tier)
+                .localCheckpoint()
+            )
+            self._write_sketch_rows(name, rows, origin="cascade")
+            counts.update({f"sk_{name}:{t}": n for t, n in _tier_counts(rows).items()})
         return counts
 
     def drain_udp(self) -> int:

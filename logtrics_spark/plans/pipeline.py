@@ -27,7 +27,10 @@ Checkpoint/resume semantics (north rule): the unit of progress is a
 
 Kill the job anywhere and rerun: sealed units are skipped, unsealed
 units are recomputed onto the same partitions, and the final tables are
-identical to a never-killed run (tested in tests/test_pipeline.py).
+identical to a never-killed run.  tests/test_crash_matrix.py crashes
+``run``, ``seal_from_fine`` and ``Daemon.archive_closed_days`` after each
+store write of the seal by wrapping the store's ``ParquetTableIO`` — the
+job itself carries no crash hook.
 
 Retention: a raw (source, day) partition is dropped once EVERY tier has
 a sealed unit covering it — the Iceberg analog is `DELETE WHERE`, the
@@ -54,7 +57,6 @@ from pyspark.sql import functions as F
 from logtrics_spark.operators.extract import extract_points
 from logtrics_spark.operators import gorilla
 from logtrics_spark.operators.rollup import TIER_ORDER, cascade_tiers, rollup, tier_seconds
-from logtrics_spark.operators.sketchset import KIND_VALS
 from logtrics_spark.storage.tableio import ParquetTableIO
 
 DAY_FMT = "yyyy-MM-dd"
@@ -66,6 +68,11 @@ def _day(col):
 
 def _day_str(ts) -> str:
     return ts.strftime("%Y-%m-%d")
+
+
+def _tier_counts(df: DataFrame) -> dict[str, int]:
+    """Rows per ``tier`` of a frame, in one aggregate."""
+    return {r["tier"]: r["count"] for r in df.groupBy("tier").count().collect()}
 
 
 def _prune(df: DataFrame, days: DataFrame | None) -> DataFrame:
@@ -166,19 +173,13 @@ class RollupJob:
         return units.join(sealed, ["source", "day"], "left_anti")
 
     # --------------------------------------------------------------- run
-    def run(
-        self,
-        run_id: str | None = None,
-        fail_at: str | None = None,
-        seal_before: str | None = None,
-    ) -> dict:
-        """Compute pending units for every tier; returns per-tier counts.
+    def run(self, run_id: str | None = None, seal_before: str | None = None) -> dict:
+        """Compute and seal pending units for every tier; returns what
+        ``_seal`` returns (per-tier sealed units, and the sketch rows
+        written when sketches are on).
 
         ``seal_before`` ('yyyy-MM-dd'): only seal days strictly before
         this watermark, so an in-progress ingest day is never frozen.
-        ``fail_at`` ("chunks", "sketches" or "lineage") injects a crash
-        after that step of the seal — used by the kill/resume tests;
-        never set in production.
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         raw = self.read_raw()
@@ -246,8 +247,7 @@ class RollupJob:
                 {t: pending[t][0] for t in self.tiers if t in pending},
                 lambda src: [f"raw/source={src}"],
                 run_id,
-                fail_at=fail_at,
-                sketches=sketches,
+                sketches=[(k, f.withColumn("tier", F.lit(t))) for k, t, f in sketches],
             )
         finally:
             for df in cached:
@@ -344,52 +344,53 @@ class RollupJob:
         units: dict[str, set | None],
         inputs: Callable[[str], list[str]],
         run_id: str,
-        fail_at: str | None = None,
         sketches=(),
     ) -> dict[str, int]:
         """Land tier rows (``tier`` + ``day`` columns) as Gorilla chunks
-        and seal them.
+        and seal them — the one place sealed rows land.
 
         The chunks are the sealed tiers' only copy.  ONE clustered write
         lands every tier's chunks: partitionBy(tier, day) produces the
         chunks/tier=X/day=Y layout (source stays a data column) — each
         partitioned write costs seconds of commit/listing overhead
         regardless of size.  Compression runs as one pass over the union
-        (tier joins the chunk key).  Sketch tables land next, then ONE
-        lineage append seals every tier: a crash anywhere before it
-        leaves the whole seal pending, and the next run rewrites the same
-        partitions with identical bytes.  ``units[tier]`` None seals
-        every unit of the tier, else only those (source, day) units — a
-        whole-day recompute may cover already-sealed sources.
-        ``inputs(source)`` names the lineage input partitions.
-        ``fail_at`` names the step after which to inject a crash (tests
-        only).  Returns {tier: sealed (source, day) units}.
+        (tier joins the chunk key).  ``sketches`` — (kind, rows with
+        ``tier`` + ``day``) pairs — land next, one ``sk_<kind>`` write per
+        kind.  Then ONE lineage append seals every tier: a crash anywhere before it leaves the whole seal pending,
+        and the next run rewrites the same partitions with identical
+        bytes.  ``units[tier]`` None seals every unit of the tier, else
+        only those (source, day) units — a whole-day recompute may cover
+        already-sealed sources.  ``inputs(source)`` names the lineage
+        input partitions.  Returns {tier: sealed (source, day) units} and
+        {"sk_<kind>:<tier>": sketch rows written}.
         """
-
-        def done(step: str) -> None:
-            if fail_at == step:
-                raise RuntimeError(f"injected failure after the {step} write")
-
         chunks = gorilla.compress_tier(
             all_tiers.drop("day"), self.tiers[0], chunk_span="1d", extra_keys=["tier"]
         )
         chunks = chunks.withColumn("day", _day("chunk_start")).persist()
+        by_kind: dict[str, list[DataFrame]] = {}
+        for k, rows in sketches:
+            by_kind.setdefault(k, []).append(rows)
+        cached, written = [chunks], {}
         try:
             self.io.write_partitioned(chunks, "chunks", ["tier", "day"])
-            done("chunks")
-            for k in self.sketchset.enabled:
-                frames = [f.withColumn("tier", F.lit(t)) for kk, t, f in sketches if kk == k]
-                if frames:
-                    all_sk = reduce(DataFrame.unionByName, frames)
-                    self.io.write_partitioned(all_sk, f"sk_{k}", ["tier", "day"])
-            done("sketches")
+            for k, frames in by_kind.items():
+                # persisted for its one row count per tier, which the
+                # write then reads; a kind with no rows writes nothing
+                rows = reduce(DataFrame.unionByName, frames).persist()
+                cached.append(rows)
+                counts = _tier_counts(rows)
+                if counts:
+                    self.io.write_partitioned(rows, f"sk_{k}", ["tier", "day"])
+                written.update({f"sk_{k}:{t}": n for t, n in counts.items()})
             lin = (
                 chunks.groupBy("tier", "source", "chunk_start")
                 .agg(F.count("*").alias("row_count"), F.sum("n_points").alias("point_count"))
                 .collect()
             )
         finally:
-            chunks.unpersist()
+            for df in cached:
+                df.unpersist()
         rows = []
         for r in lin:
             pset = units.get(r["tier"], ())
@@ -410,23 +411,27 @@ class RollupJob:
                 for r in rows
             ]
         )
-        done("lineage")
         stats: dict[str, int] = {t: 0 for t in self.tiers}
         for tier, _src, _d in {(r["tier"], r["source"], _day_str(r["chunk_start"])) for r in rows}:
             stats[tier] += 1
-        return stats
+        return {**stats, **written}
 
-    def seal_from_fine(self, fine: DataFrame, run_id: str | None = None) -> dict[str, int]:
+    def seal_from_fine(
+        self, fine: DataFrame, run_id: str | None = None, sketches=()
+    ) -> dict[str, int]:
         """Archive externally-computed finest-tier rows (the daemon's
         closed days, ``Daemon.archive_closed_days``): every coarser
         configured tier in one aggregate over them, then the shared
-        ``_seal`` (one chunk write, one lineage append).
+        ``_seal`` (one chunk write, one write per sketch kind, one
+        lineage append).
 
         ``fine`` must carry finest-tier rollup rows (KEY + window_start
-        + the aggregate columns).  Idempotent like run(): a replay
-        overwrites the same (tier, day) partitions with identical bytes
-        and the duplicate lineage rows resolve latest-wins.  Returns
-        {tier: sealed (source, day) units}.
+        + the aggregate columns).  ``sketches`` are (kind, rows) pairs
+        whose rows carry a ``tier`` column and cover every tier to seal —
+        the caller cascades them (``SketchSet.ladder``) with its own merge
+        parameters.  Idempotent like run(): a replay overwrites the same
+        (tier, day) partitions with identical bytes and the duplicate
+        lineage rows resolve latest-wins.  Returns what ``_seal`` returns.
         """
         run_id = run_id or uuid.uuid4().hex[:12]
         fine = fine.withColumn("day", _day("window_start")).persist()
@@ -435,7 +440,11 @@ class RollupJob:
             all_tiers = all_tiers.unionByName(self._coarse(fine, self.tiers[1:], None))
         try:
             return self._seal(
-                all_tiers, {t: None for t in self.tiers}, lambda _src: ["daemon-live-store"], run_id
+                all_tiers,
+                {t: None for t in self.tiers},
+                lambda _src: ["daemon-live-store"],
+                run_id,
+                sketches=[(k, rows.withColumn("day", _day("window_start"))) for k, rows in sketches],
             )
         finally:
             fine.unpersist()
@@ -477,22 +486,13 @@ class RollupJob:
 
         t0 = _dt.date.fromisoformat(today)
         dropped: list[tuple[str, str]] = []
+        sk_kinds = self.sketchset.kinds_with_stored(self.io)
         for tier, days in max_age_days.items():
             if tier not in self.tiers:
                 raise ValueError(f"unknown tier {tier!r}")
             cutoff = (t0 - _dt.timedelta(days=days)).isoformat()
-            # auto-detect EXISTING sk_* tables (mirror the daemon's
-            # _sketch_kinds_effective) rather than keying off the
-            # configured list: a bare `rollup` CLI run without
-            # --sketches must still age out sketch partitions written
-            # by an earlier sketch-enabled job, or they live forever
-            sk_kinds = set(self.sketchset.enabled) | {
-                k for k in KIND_VALS if self.io.exists(f"sk_{k}")
-            }
             sk_tables = [
-                f"sk_{k}/tier={tier}"
-                for k in sorted(sk_kinds)
-                if self.io.exists(f"sk_{k}/tier={tier}")
+                f"sk_{k}/tier={tier}" for k in sk_kinds if self.io.exists(f"sk_{k}/tier={tier}")
             ]
             for table in (f"chunks/tier={tier}", f"tiers/tier={tier}", *sk_tables):
                 for day in self.io.list_partitions(table, "day"):

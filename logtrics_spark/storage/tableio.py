@@ -106,13 +106,23 @@ class ParquetTableIO:
         """Drop one partition directory (Iceberg: DELETE WHERE/drop partition).
 
         Values are applied in the order given; returns True if removed.
+        Directories the drop leaves holding only commit markers
+        (``_SUCCESS``, ``.crc``) go too, up to the table itself: a table
+        whose last partition is dropped no longer exists, so no reader
+        trips over a directory with no data files.
         """
         sub = "/".join(f"{k}={v}" for k, v in partition_values.items())
         target = Path(self.path(table)) / sub
-        if target.exists():
-            shutil.rmtree(target)
-            return True
-        return False
+        if not target.exists():
+            return False
+        shutil.rmtree(target)
+        parent = target.parent
+        while self.root in parent.parents and not any(
+            p.is_dir() or not p.name.startswith(("_", ".")) for p in parent.iterdir()
+        ):
+            shutil.rmtree(parent)
+            parent = parent.parent
+        return True
 
     def compact_partition(self, table: str, **partition_values: str) -> int:
         """Rewrite one partition directory as a single file (small-file

@@ -66,10 +66,12 @@ def _drain(d, spark, pdf):
     d._write_sketches(pts, origin="drain")
 
 
-def test_daemon_sketch_e2e_flush_cascade_archive(spark, tmp_path):
+def test_daemon_sketch_e2e_flush_cascade_archive(spark, tmp_path, io_calls):
     """N flush ticks -> cascade -> archive -> fine drops: the ARCHIVED
     coarse sketches still answer quantile/top-k/distinct within the
-    sketch envelopes."""
+    sketch envelopes.  The cascade is one tiers/ append and one append
+    per sketch kind; the archive writes chunks, each sk_<kind> table
+    once, one lineage append, then drops the live head."""
     from logtrics_spark.operators import tdigest as td
     from logtrics_spark.operators.heavyhitters import mg_topk
     from logtrics_spark.operators.rollup import set_sketch_estimate
@@ -85,13 +87,22 @@ def test_daemon_sketch_e2e_flush_cascade_archive(spark, tmp_path):
     _drain(d, spark, open_day)
 
     # live cascade: coarse sketch rows appear alongside scalar tiers
+    kinds = ["tdigest", "mg", "hll", "cms"]
+    io_calls.clear()
     counts = d.cascade_tiers()
+    assert io_calls == [("write", "tiers"), *[("write", f"sk_{k}") for k in kinds]]
     assert counts["sk_tdigest:1h"] == 2  # one 1h window per day
     assert counts["sk_mg:1h"] == 2 and counts["sk_hll:1h"] == 2
     assert counts["sk_cms:1h"] == 2
 
     job = RollupJob(spark, str(tmp_path / "archive"), tiers=["1m", "1h"])
+    io_calls.clear()
     stats = d.archive_closed_days(job)
+    seal = [("write", "chunks"), *[("write", f"sk_{k}") for k in kinds], ("lineage", "lineage")]
+    assert io_calls[: len(seal)] == seal
+    drops = io_calls[len(seal):]
+    assert drops and all(kind == "drop" for kind, _t in drops)
+    assert drops[-1] == ("drop", "tiers/tier=1m/day=2024-03-01")  # the finest scalar tier last
     assert stats["sk_tdigest:1m"] == 60 and stats["sk_tdigest:1h"] == 1
     assert stats["sk_mg:1h"] == 1 and stats["sk_hll:1h"] == 1
     assert stats["sk_cms:1m"] == 60 and stats["sk_cms:1h"] == 1
@@ -324,3 +335,56 @@ def test_sketch_cli_and_bare_daemon_autodetect(spark, tmp_path, capsys):
          "--tier", "1d"]
     )
     assert rc == 2
+
+
+def test_flush_seq_floor_covers_sketch_tables(spark, tmp_path):
+    """A sketch snapshot stamped above every tiers/ row (written before a
+    backwards clock step) must not outrank a restarted daemon's drain:
+    the restart floor folds in the sk_* tables, so the new snapshot wins."""
+    from logtrics_spark.operators import tdigest as td
+
+    d = _daemon(spark, tmp_path)
+    first = _points_pdf("2024-03-01", range(3))
+    _drain(d, spark, first)
+    future = 4_102_444_800 * 1_000_000  # year 2100 in µs
+    stale = d.io.read("sk_tdigest").withColumn("flush_seq", F.lit(future)).localCheckpoint()
+    d.io.write_partitioned(stale, "sk_tdigest", ["tier", "day"], overwrite_dynamic=False)
+
+    d2 = _daemon(spark, tmp_path)  # same store path, fresh process
+    cumulative = pd.concat([first, first])  # a later drain: every window doubled
+    _drain(d2, spark, cumulative)
+    total = td.tdigest_stats(d2.read_sketch("tdigest")).agg(F.sum("cnt")).collect()[0][0]
+    assert total == len(cumulative)
+
+
+def test_archive_covers_leftover_sketch_kind(spark, tmp_path):
+    """A daemon configured with ["tdigest"] on a store that still holds
+    sk_mg/sk_hll/sk_cms from an earlier config archives and drops their
+    closed days too (configured ∪ stored kinds).  A kind whose last live
+    day is archived leaves no table behind, so later housekeeping runs."""
+    from logtrics_spark.plans.daemon import Daemon
+    from logtrics_spark.plans.pipeline import RollupJob
+
+    old = _daemon(spark, tmp_path)  # all four kinds
+    _drain(old, spark, _points_pdf("2024-03-01", range(10)))
+    conf = {
+        "modes": ["console"],
+        "graphite": {"tiers": ["1m", "1h"]},
+        "sketches": {"enabled": ["tdigest"], "item_col": "user"},
+    }
+    d = Daemon(spark, conf, old.engine, str(tmp_path / "store"))
+    _drain(d, spark, _points_pdf("2024-03-02", range(3), seed=9))
+    assert d._sketch_kinds_effective() == ["tdigest", "mg", "hll", "cms"]
+
+    job = RollupJob(spark, str(tmp_path / "archive"), tiers=["1m", "1h"])
+    stats = d.archive_closed_days(job)
+    for k in ("mg", "hll", "cms"):
+        assert stats[f"sk_{k}:1m"] == 10 and stats[f"sk_{k}:1h"] == 1
+        assert not d.io.exists(f"sk_{k}")  # its one (closed) day archived
+    assert d.io.list_partitions("sk_tdigest/tier=1m", "day") == ["2024-03-02"]
+    from logtrics_spark.operators.heavyhitters import mg_topk
+
+    assert mg_topk(job.read_sketch_tier("mg", "1h"), n=1).collect()[0]["item"] == "7"
+    assert d._sketch_kinds_effective() == ["tdigest"]
+    assert d.archive_closed_days(job) == {}
+    assert set(d.compact()) == {"1m", "sk_tdigest:1m"}

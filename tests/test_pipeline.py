@@ -91,18 +91,20 @@ def test_second_run_is_noop(spark, tok, tmp_path):
     assert all(v == 0 for v in stats.values()), stats
 
 
-def test_kill_and_resume_identical(spark, tmp_path):
-    """SURVEY.md §5.6: a crash after each step of the seal -> rerun ->
-    the same chunk bytes and sealed units as a never-killed run.  Before
-    the one lineage append nothing is sealed; after it, everything."""
+def test_kill_and_resume_identical(spark, tmp_path, crash_after):
+    """SURVEY.md §5.6: a crash after each store write of the seal ->
+    rerun -> the same chunk bytes and sealed units as a never-killed run.
+    Before the one lineage append nothing is sealed; after it,
+    everything.  (Sketches off: no sk_* write; test_crash_matrix.py
+    covers the other seal paths.)"""
     tok = gen_tokseq(spark, TINY, partitions=2)
     clean = _run_clean(spark, tok, str(tmp_path / "clean"))
     want, units = _chunk_rows(clean), _sealed(clean)
-    for point in ("chunks", "sketches", "lineage"):
+    for point in ("chunks", "lineage"):
         killed = RollupJob(spark, str(tmp_path / point), step_seconds=STEP)
         killed.ingest_raw(tok)
-        with pytest.raises(RuntimeError, match="injected failure"):
-            killed.run(run_id="r1", fail_at=point)
+        with crash_after(point):
+            killed.run(run_id="r1")
         stats = killed.run(run_id="r2")
         assert (sum(stats.values()) == 0) == (point == "lineage"), (point, stats)
         assert _chunk_rows(killed).equals(want) and _sealed(killed) == units, point

@@ -130,10 +130,10 @@ def _state(job):
     return chunks.sort_values(key).reset_index(drop=True), units, digests
 
 
-def test_sketch_kill_resume_completes(spark, tmp_path):
-    """A crash after each step of the seal (chunk write, sketch writes,
-    lineage append): the resume leaves the same chunk bytes, sealed units
-    and sketch estimates as a never-killed run."""
+def test_sketch_kill_resume_completes(spark, tmp_path, crash_after):
+    """A crash after each store write of the seal (chunk write, sketch
+    writes, lineage append): the resume leaves the same chunk bytes,
+    sealed units and sketch estimates as a never-killed run."""
     tok = gen_tokseq(spark, TINY, partitions=2)
     clean = RollupJob(spark, str(tmp_path / "clean"), step_seconds=STEP, sketches=SK)
     clean.ingest_raw(tok)
@@ -143,8 +143,8 @@ def test_sketch_kill_resume_completes(spark, tmp_path):
     for point in ("chunks", "sketches", "lineage"):
         killed = RollupJob(spark, str(tmp_path / point), step_seconds=STEP, sketches=SK)
         killed.ingest_raw(tok)
-        with pytest.raises(RuntimeError, match="injected failure"):
-            killed.run(run_id="r1", fail_at=point)
+        with crash_after(point):
+            killed.run(run_id="r1")
         killed.run(run_id="r2")
         got_chunks, got_units, got_digests = _state(killed)
         assert got_chunks.equals(chunks) and got_units == units, point
