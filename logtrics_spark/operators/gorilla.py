@@ -20,6 +20,10 @@ VLDB 2015):
               emit length bits
       '1'  -> 5 bits leading-zero count (capped 31) + 6 bits
               (meaningful-length - 1) + that many bits
+  The control bits let the encoder pick any window.  This one declares
+  one window per chunk and column, covering the p10 leading / p90
+  ending bit of its nonzero xors; a value outside it emits a one-off
+  header, and the next fitting value re-declares the chunk window.
   Bit-identity is guaranteed for every float64 including NaN payloads,
   ±0.0 and denormals because everything runs on uint64 views — Python
   floats never touch the values (SURVEY.md §7.6 hard part #1).
@@ -39,13 +43,16 @@ sharing one timestamp stream):
   rows without it are the older float64-only layout, named by the
   reader.
 
-The Spark face is ``compress_tier`` (repartition + sort by chunk key ->
-one mapInArrow pass per partition) and ``decompress_chunks`` (one
-mapInArrow pass that decodes only the requested columns).  Chunks are
-built from TIER rows (already 3-6 orders of magnitude smaller than
-raw), so the Python codec cost is bounded by tier cardinality, not raw
-row count; the chunk key includes the chunk window, so hot sources
-split across chunks.
+The encoder is one segmented numpy pass over every chunk of an Arrow
+batch (``_encode_chunks``): no step loops over chunks in Python, and
+``compress_chunk`` is its one-chunk call.  The Spark face is
+``compress_tier`` (repartition + sort by chunk key -> one mapInArrow
+pass per partition, one encoder call per Arrow batch) and
+``decompress_chunks`` (one mapInArrow pass that decodes only the
+requested columns).  Chunks are built from TIER rows (already 3-6
+orders of magnitude smaller than raw), so the Python codec cost is
+bounded by tier cardinality, not raw row count; the chunk key includes
+the chunk window, so hot sources split across chunks.
 """
 
 from __future__ import annotations
@@ -60,49 +67,184 @@ from pyspark.sql import types as T
 
 from logtrics_spark.operators.rollup import KEY, tier_seconds, window_start
 
-# -------------------------------------------------------- bit packing
+# ------------------------------------------------------------- encode
 #
-# The encoders below emit (value, nbits) code pairs; _pack_codes
-# assembles the final bitstream with one vectorized numpy pass.  Bits
-# are MSB-first and the final byte is zero-padded low; the byte format
-# is pinned by golden fixtures (tests/test_gorilla.py).
+# Rows arrive sorted by chunk; ``starts`` marks each chunk's first row.
+# An "element" is a row that is not its chunk's first: it carries one
+# code per stream.  Every code is MSB-first, 1..64 bits, its value below
+# 2**nbits.  Each stream starts on a byte, so per-stream bit counts fix
+# the whole layout before a bit is packed; the codes are then ORed into
+# one buffer and the fixed-width fields are written into the gaps.  The
+# byte format is pinned by golden fixtures (tests/test_gorilla.py).
+
+_U64 = np.uint64
 
 
-def _pack_codes(vals: np.ndarray, nbits: np.ndarray) -> bytes:
-    """Pack MSB-first variable-length codes (<=64 bits each) into bytes.
-
-    O(#codes), not O(#bits): each code lands in at most two adjacent
-    64-bit words; the high/low contributions are scattered with
-    np.add.at (codes never overlap, so add == bitwise-or).  MSB-first,
-    trailing zero padding.
-    """
-    nb = nbits.astype(np.int64)
-    keep = nb > 0
-    if not keep.all():
-        nb = nb[keep]
-        vals = vals[keep]
-    total = int(nb.sum())
-    if total == 0:
-        return b""
-    v = vals.astype(np.uint64)
-    off = np.cumsum(nb) - nb
+def _pack(words: np.ndarray, off: np.ndarray, vals: np.ndarray, nbits: np.ndarray) -> None:
+    """OR codes into big-endian uint64 ``words`` at bit offsets ``off``
+    (strictly increasing).  A code lands in at most two adjacent words,
+    and codes sharing a first word are adjacent, so one
+    ``bitwise_or.reduceat`` merges them."""
+    if not len(off):
+        return
     w = off >> 6
-    b = off & 63
-    rem = 64 - b  # bits available in the first word
-    hi_bits = np.minimum(nb, rem)
-    lo_bits = (nb - hi_bits).astype(np.uint64)
+    rem = 64 - (off & 63)  # bits left in the first word
+    hi_bits = np.minimum(nbits, rem)
+    lo_bits = (nbits - hi_bits).astype(_U64)
+    hi = (vals >> lo_bits) << (rem - hi_bits).astype(_U64)
+    first = np.flatnonzero(np.diff(w, prepend=-1))
+    words[w[first]] |= np.bitwise_or.reduceat(hi, first)
+    spill = np.flatnonzero(lo_bits)
+    words[w[spill] + 1] |= vals[spill] << (_U64(64) - lo_bits[spill])
 
-    hi_val = (v >> lo_bits) << (rem - hi_bits).astype(np.uint64)
-    has_lo = lo_bits > 0
-    shift_lo = np.where(has_lo, np.uint64(64) - lo_bits, np.uint64(0))
-    lo_val = np.where(has_lo, v << shift_lo, np.uint64(0))
 
-    nwords = (total + 63) >> 6
-    words = np.zeros(nwords + 1, dtype=np.uint64)
-    np.add.at(words, w, hi_val)
-    if has_lo.any():
-        np.add.at(words, w[has_lo] + 1, lo_val[has_lo])
-    return words.byteswap().tobytes()[: (total + 7) >> 3]
+def _bit_length(x: np.ndarray) -> np.ndarray:
+    """Bit length of nonzero uint64s: the float64 exponent, less one
+    where rounding to 53 bits carried into the next power of two."""
+    e = np.frexp(x.astype(np.float64))[1].astype(np.int64)
+    return e - ((x >> (e - 1).astype(_U64)) == 0)
+
+
+def _group_quantile(v: np.ndarray, g: np.ndarray, ngroups: int, q: float, width: int):
+    """``np.quantile(v[g == s], q)`` for every group s, with numpy's
+    linear interpolation op for op, so each float is the same; v holds
+    ints in [0, width).  Ranks are read off per-group histograms, so no
+    sort."""
+    cum = np.bincount(g * width + v, minlength=ngroups * width).reshape(ngroups, width)
+    cum = cum.cumsum(axis=1)
+    m = cum[:, -1]
+    pos = (m - 1) * q
+    lo = np.floor(pos)[:, None]
+    t = pos - lo[:, 0]  # q < 1: rank lo + 1 exists wherever t > 0
+    a = (cum <= lo).sum(axis=1)
+    b = (cum <= lo + 1).sum(axis=1)
+    d = b - a
+    return np.where(t >= 0.5, b - d * (1 - t), a + d * t)
+
+
+def _ts_codes(ts: np.ndarray, starts: np.ndarray, elems: np.ndarray):
+    """Delta-of-delta codes: (bits per element, [(element, bit shift,
+    value, nbits) sources]).  '0' codes are all-zero, so only nonzero
+    ones are packed."""
+    dd = np.diff(ts, prepend=ts[:1])
+    dd[starts] = 0  # a chunk's first delta follows an implicit 0
+    dod = dd[elems] - dd[elems - 1]
+    nbits = np.full(len(dod), 68)  # '1111' + the 64-bit dod
+    vals = np.full(len(dod), 0b1111, _U64)
+    for prefix, width in ((0b1110, 12), (0b110, 9), (0b10, 7)):  # widest first
+        biased = (dod + ((1 << (width - 1)) - 1)).view(_U64)
+        fits = biased < (1 << width)
+        nbits[fits] = prefix.bit_length() + width
+        vals[fits] = (_U64(prefix) << _U64(width)) | biased[fits]
+    nbits[dod == 0] = 1
+    nz = np.flatnonzero(dod)
+    is_over = nbits[nz] == 68
+    over = nz[is_over]
+    return nbits, [
+        (nz, 0, vals[nz], np.where(is_over, 4, nbits[nz])),
+        (over, 4, dod[over].view(_U64), np.full(len(over), 64)),
+    ]
+
+
+def _xor_codes(bits: np.ndarray, elems: np.ndarray, egroup: np.ndarray, ngroups: int):
+    """XOR codes of one value column, in ``_ts_codes``' shape.  Every
+    decision is a numpy mask over all chunks at once."""
+    xor = bits[elems] ^ bits[elems - 1]
+    nbits = np.ones(len(xor), np.int64)  # '0': repeat the previous value
+    nz = np.flatnonzero(xor)
+    if not len(nz):
+        return nbits, []
+    x, g = xor[nz], egroup[nz]
+    lz = np.minimum(64 - _bit_length(x), 31)
+    tz = _bit_length(x & (~x + _U64(1))) - 1
+    ends = 64 - tz
+    lead = np.minimum(31, _group_quantile(lz, g, ngroups, 0.10, 32)).astype(np.int64)
+    end = np.minimum(64, np.maximum(_group_quantile(ends, g, ngroups, 0.90, 65), lead + 1))
+    lead, end = lead[g], end.astype(np.int64)[g]
+    fit = (lz >= lead) & (ends <= end)
+    # a chunk's first nonzero xor, and any fit after an outlier, (re)declare
+    # the chunk window with a full header
+    declare = np.ones(len(nz), bool)
+    declare[1:] = ~fit[:-1] | (g[1:] != g[:-1])
+    plain = fit & ~declare
+    ml = 64 - lz - tz
+    # '11' + 5 bits leading zeros + 6 bits (length - 1): the chunk window's
+    # or, for an outlier, the value's own
+    head = (0b11 << 11) | np.where(fit, (lead << 6) | (end - lead - 1), (lz << 6) | (ml - 1))
+    ctl_bits = np.where(plain, 2, 13)
+    ctl = np.where(plain, 0b10, head).astype(_U64)
+    pay_bits = np.where(fit, end - lead, ml)
+    pay = x >> np.where(fit, 64 - end, tz).astype(_U64)
+    nbits[nz] = ctl_bits + pay_bits
+    return nbits, [(nz, 0, ctl, ctl_bits), (nz, ctl_bits, pay, pay_bits)]
+
+
+def _encode_chunks(
+    ts: np.ndarray, cols: list[np.ndarray], valid: list, starts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Encode every chunk of a batch in one pass.
+
+    ``ts`` (int64) and ``cols`` (uint64 bit patterns) are rows sorted by
+    chunk; chunk g is rows ``starts[g]`` up to the next start (never
+    empty).  ``valid`` is a bool mask or None per column.  Returns
+    (uint8 buffer, int64 offsets): chunk g is
+    ``buffer[offsets[g]:offsets[g + 1]]``.
+    """
+    n, k, ng = len(ts), len(cols), len(starts)
+    sizes = np.diff(starts, append=n)
+    group = np.repeat(np.arange(ng), sizes)
+    elems = np.flatnonzero(np.diff(group, prepend=-1) == 0)
+    egroup = group[elems]
+    ebound = np.append(starts - np.arange(ng), len(elems))  # each chunk's first element
+    valid = [None if ok is None else np.asarray(ok, bool) for ok in valid]
+    cols = [c if ok is None else np.where(ok, c, _U64(0)) for c, ok in zip(cols, valid)]
+
+    streams = [_ts_codes(ts, starts, elems)]
+    streams += [_xor_codes(c, elems, egroup, ng) for c in cols]
+    cums = [np.concatenate(([0], np.cumsum(nbits))) for nbits, _ in streams]
+    stream_len = np.stack([(c[ebound[1:]] - c[ebound[:-1]] + 7) >> 3 for c in cums], axis=1)
+    nulls = np.zeros((ng, k), bool)
+    for j, ok in enumerate(valid):
+        if ok is not None:
+            nulls[:, j] = np.bincount(group[~ok], minlength=ng) > 0
+    trailer_len = nulls * (2 + ((sizes + 7) >> 3))[:, None]
+
+    head = 14 + 8 * k
+    body = head + 4 * (k + 1) + stream_len.sum(axis=1)
+    offsets = np.concatenate(([0], np.cumsum(body + trailer_len.sum(axis=1))))
+    # first byte of each stream (after its u32 length) and trailer entry
+    stream_at = (
+        offsets[:-1, None] + head + 4 * np.arange(1, k + 2) + stream_len.cumsum(axis=1) - stream_len
+    )
+    trailer_at = (offsets[:-1] + body)[:, None] + trailer_len.cumsum(axis=1) - trailer_len
+
+    words = np.zeros((offsets[-1] >> 3) + 2, _U64)
+    for s, ((_, sources), cum) in enumerate(zip(streams, cums)):
+        base = stream_at[:, s] * 8 - cum[ebound[:-1]]
+        for e, shift, vals, nbits in sources:
+            _pack(words, base[egroup[e]] + cum[e] + shift, vals, nbits)
+    for j, ok in enumerate(valid):
+        if nulls[:, j].any():  # validity bitmap: a 1 code per valid row
+            rows = np.flatnonzero(nulls[group, j] & ok)
+            g = group[rows]
+            off = (trailer_at[g, j] + 2) * 8 + rows - starts[g]
+            _pack(words, off, np.ones(len(rows), _U64), np.ones(len(rows), np.int64))
+    out = words.byteswap().view(np.uint8)[: offsets[-1]]
+
+    fixed = np.empty(ng, [("n", "<u4"), ("k", "<u2"), ("ts", "<i8"), ("first", "<u8", (k,))])
+    fixed["n"], fixed["k"], fixed["ts"] = sizes, k, ts[starts]
+    if k:
+        fixed["first"] = np.stack([c[starts] for c in cols], axis=1)
+    out[offsets[:-1, None] + np.arange(head)] = fixed.view(np.uint8).reshape(ng, head)
+    out[(stream_at - 4)[..., None] + np.arange(4)] = (
+        stream_len.astype("<u4").view(np.uint8).reshape(ng, k + 1, 4)
+    )
+    g, j = np.nonzero(nulls)
+    out[trailer_at[g, j]], out[trailer_at[g, j] + 1] = j & 0xFF, j >> 8
+    return out, offsets
+
+
+# ------------------------------------------------------------- decode
 
 
 def _zero_run(buf: bytes, pos: int, max_bits: int) -> int:
@@ -128,47 +270,6 @@ def _zero_run(buf: bytes, pos: int, max_bits: int) -> int:
             cnt += (8 - bit_i) - rest.bit_length()
             break
     return min(cnt, max_bits)
-
-
-# ------------------------------------------------------------ ts codec
-
-def _encode_ts_codes(ts: np.ndarray) -> bytes:
-    """Vectorized ts encoder: bucket selection and payloads via numpy,
-    one _pack_codes pass."""
-    d = np.diff(ts.astype(np.int64))
-    if len(d) == 0:
-        return b""
-    dod = np.empty(len(d), dtype=np.int64)
-    dod[0] = d[0]
-    np.subtract(d[1:], d[:-1], out=dod[1:])
-
-    m = len(dod)
-    vals = np.full(m, 0b1111, dtype=np.uint64)
-    nbits = np.full(m, 4, dtype=np.uint8)
-    over_vals = np.zeros(m, dtype=np.uint64)
-    over_nbits = np.zeros(m, dtype=np.uint8)
-
-    c0 = dod == 0
-    c1 = ~c0 & (dod > -64) & (dod <= 64)
-    c2 = ~c0 & ~c1 & (dod > -256) & (dod <= 256)
-    c3 = ~c0 & ~c1 & ~c2 & (dod > -2048) & (dod <= 2048)
-    over = ~(c0 | c1 | c2 | c3)
-
-    vals[c0] = 0
-    nbits[c0] = 1
-    vals[c1] = (0b10 << 7) | (dod[c1] + 63).astype(np.uint64)
-    nbits[c1] = 9
-    vals[c2] = (0b110 << 9) | (dod[c2] + 255).astype(np.uint64)
-    nbits[c2] = 12
-    vals[c3] = (0b1110 << 12) | (dod[c3] + 2047).astype(np.uint64)
-    nbits[c3] = 16
-    if over.any():
-        over_vals[over] = dod[over].astype(np.uint64)  # two's complement
-        over_nbits[over] = 64
-
-    all_vals = np.column_stack([vals, over_vals]).ravel()
-    all_nbits = np.column_stack([nbits, over_nbits]).ravel()
-    return _pack_codes(all_vals, all_nbits)
 
 
 def _decode_ts(buf: bytes, n: int, first: int) -> np.ndarray:
@@ -212,101 +313,6 @@ def _decode_ts(buf: bytes, n: int, first: int) -> np.ndarray:
         out[i] = prev
         i += 1
     return out
-
-
-# --------------------------------------------------------- value codec
-
-
-def _clz64(x: np.ndarray) -> np.ndarray:
-    """Vectorized count-leading-zeros for uint64 (exact, 6 halvings)."""
-    x = x.copy()
-    n = np.full(x.shape, 64, dtype=np.int64)
-    for s in (32, 16, 8, 4, 2, 1):
-        big = x >= (np.uint64(1) << np.uint64(s))
-        n[big] -= s
-        x[big] >>= np.uint64(s)
-    return n - x.astype(np.int64)  # x is 0 or 1 here; nonzero -> one more
-
-
-def _xor_stats(bits: np.ndarray):
-    b = bits.astype(np.uint64)
-    xor = b[1:] ^ b[:-1]
-    nz = xor != np.uint64(0)
-    lz = np.minimum(_clz64(xor), 31)
-    low = xor & (~xor + np.uint64(1))  # lowest set bit
-    tz = np.where(nz, 63 - _clz64(low), 0)
-    ml = (64 - lz - tz).astype(np.int64)
-    return xor, nz, lz, tz, ml
-
-
-def _encode_vals_codes(bits: np.ndarray) -> bytes:
-    """Value encoder.  The control-bit format lets the ENCODER pick any
-    (leading, length) window — the decoder just follows headers.  This
-    one declares one chunk-level window covering the p10 leading / p90
-    ending bit of all xors; values outside it emit their own one-off
-    header, and the next fitting value re-declares the chunk window.
-    Every decision is a numpy mask — no Python per-element loop — at a
-    small size cost over the paper's adaptive walk (~10% of values pay a
-    13-bit header; payloads are window-width instead of per-value
-    width).
-    """
-    if len(bits) <= 1:
-        return b""
-    xor, nz, lz, tz, ml = _xor_stats(bits)
-
-    m = len(xor)
-    # two code slots per element: control/header, then payload
-    vals1 = np.zeros(m, dtype=np.uint64)
-    nbits1 = np.ones(m, dtype=np.uint8)  # default: the single '0' bit
-    vals2 = np.zeros(m, dtype=np.uint64)
-    nbits2 = np.zeros(m, dtype=np.uint8)
-
-    idx = np.flatnonzero(nz)
-    if len(idx):
-        lzs = lz[idx]
-        ends = 64 - tz[idx]
-        lead_w = int(min(31, np.quantile(lzs, 0.10)))
-        end_w = int(min(64, max(np.quantile(ends, 0.90), lead_w + 1)))
-        mlen_w = end_w - lead_w
-
-        fit = (lzs >= lead_w) & (ends <= end_w)
-        # first nonzero, and any fit following an outlier, must
-        # (re)declare the chunk window via a full header
-        prev_outlier = np.empty(len(idx), dtype=bool)
-        prev_outlier[0] = True
-        np.logical_not(fit[:-1], out=prev_outlier[1:])
-        header_w = fit & prev_outlier
-        plain = fit & ~prev_outlier
-        outlier = ~fit
-
-        w_header = np.uint64((0b11 << 11) | (lead_w << 6) | (mlen_w - 1))
-        w_payload = (xor[idx] >> np.uint64(64 - lead_w - mlen_w))
-
-        p = idx[plain]
-        vals1[p] = np.uint64(0b10)
-        nbits1[p] = 2
-        vals2[p] = w_payload[plain]
-        nbits2[p] = mlen_w
-
-        h = idx[header_w]
-        vals1[h] = w_header
-        nbits1[h] = 13
-        vals2[h] = w_payload[header_w]
-        nbits2[h] = mlen_w
-
-        o = idx[outlier]
-        vals1[o] = (
-            np.uint64(0b11 << 11)
-            | (lz[o].astype(np.uint64) << np.uint64(6))
-            | (ml[o] - 1).astype(np.uint64)
-        )
-        nbits1[o] = 13
-        vals2[o] = xor[o] >> tz[o].astype(np.uint64)
-        nbits2[o] = ml[o]
-
-    all_vals = np.column_stack([vals1, vals2]).ravel()
-    all_nbits = np.column_stack([nbits1, nbits2]).ravel()
-    return _pack_codes(all_vals, all_nbits)
 
 
 def _decode_vals(buf: bytes, n: int, first: int) -> np.ndarray:
@@ -353,7 +359,8 @@ def _decode_vals(buf: bytes, n: int, first: int) -> np.ndarray:
 def compress_chunk(
     ts: np.ndarray, cols: list[np.ndarray], valid: list[np.ndarray | None] | None = None
 ) -> bytes:
-    """(int64 ts[], k value columns) -> one Gorilla chunk (bytes).
+    """(int64 ts[], k value columns) -> one Gorilla chunk (bytes): the
+    one-chunk call of ``_encode_chunks``.
 
     A column is stored as its 64-bit pattern: float64, int64 and uint64
     arrays as they are, anything else converted to float64 first.
@@ -362,25 +369,16 @@ def compress_chunk(
     chunk's trailer, so NaN and null stay apart.
     """
     ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    if n == 0:
+    if len(ts) == 0:
         return struct.pack("<IH", 0, len(cols))
     views = []
-    trailer = b""
-    for i, (c, ok) in enumerate(zip(cols, valid or [None] * len(cols))):
+    for c in cols:
         c = np.asarray(c)
         if c.dtype not in (np.float64, np.int64, np.uint64):
             c = c.astype(np.float64)
-        v = np.ascontiguousarray(c).view(np.uint64)
-        if ok is not None and not ok.all():
-            v = np.where(ok, v, np.uint64(0))
-            trailer += struct.pack("<H", i) + np.packbits(ok).tobytes()
-        views.append(v)
-    head = struct.pack("<IHq", n, len(views), int(ts[0]))
-    head += b"".join(struct.pack("<Q", int(v[0])) for v in views)
-    streams = [_encode_ts_codes(ts)]
-    streams += [_encode_vals_codes(v) for v in views]
-    return head + b"".join(struct.pack("<I", len(s)) + s for s in streams) + trailer
+        views.append(np.ascontiguousarray(c).view(np.uint64))
+    buf, _ = _encode_chunks(ts, views, valid or [None] * len(cols), np.zeros(1, np.int64))
+    return buf.tobytes()
 
 
 def decompress_chunk(
@@ -473,6 +471,55 @@ def _column_bits(arr, ws_us: np.ndarray):
     return np.ascontiguousarray(v).view(np.uint64), valid
 
 
+def _chunk_batches(
+    batches: Iterator, keys: list[str], vcols: list[str], desc: str, names: list[str]
+) -> Iterator:
+    """Sorted tier-row batches -> chunk-row batches (``names`` columns):
+    one ``_encode_chunks`` call per batch covers its complete groups,
+    and the still-open last group is carried into the next batch."""
+    import pyarrow as pa
+
+    def encode(batch: pa.RecordBatch, last: bool):
+        starts = _group_starts([batch.column(k) for k in keys])
+        done = len(starts) if last else len(starts) - 1
+        if done == 0:
+            return None, batch
+        bounds = np.append(starts, batch.num_rows)
+        first, stop = bounds[:done], bounds[1 : done + 1]
+        head = batch.slice(0, int(stop[-1]))
+        ws = head.column("window_start")
+        us = np.asarray(ws.cast(pa.int64()))  # Spark ships timestamps in us
+        bits = [_column_bits(head.column(c), us) for c in vcols]
+        buf, offsets = _encode_chunks(
+            us // 10**6, [v for v, _ in bits], [ok for _, ok in bits], first
+        )
+        chunks = pa.Array.from_buffers(
+            pa.binary(), done, [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(buf)]
+        )
+        cols = [batch.column(k).take(first) for k in keys]
+        cols += [
+            pa.array(stop - first, pa.int32()),
+            ws.take(first),
+            ws.take(stop - 1),
+            chunks,
+            pa.array([desc] * done, pa.string()),
+        ]
+        rest = None if last else batch.slice(int(stop[-1]))
+        return pa.RecordBatch.from_arrays(cols, names=names), rest
+
+    carry = None  # the open group's rows, never empty
+    for batch in batches:
+        if carry is not None:
+            batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+        if not batch.num_rows:
+            continue
+        out, carry = encode(batch, last=False)
+        if out is not None:
+            yield out
+    if carry is not None:
+        yield encode(carry, last=True)[0]
+
+
 def compress_tier(
     tier_df: DataFrame,
     tier: str,
@@ -484,13 +531,13 @@ def compress_tier(
 
     repartition(chunk key) + sortWithinPartitions(chunk key,
     window_start) + ONE mapInArrow pass per partition: group boundaries
-    come from a numpy compare over the sorted key columns and each group
-    is a zero-copy array slice handed to ``compress_chunk`` — no pandas
-    frame and no Python round trip per group.  A group cut by an Arrow
-    batch boundary is carried into the next batch.  Input is tier-sized;
-    never point this at raw rows.  The chunk key includes chunk_start,
-    so a hot source fans out across chunk windows instead of one giant
-    group.
+    come from a numpy compare over the sorted key columns, and ONE
+    ``_encode_chunks`` call per Arrow batch encodes all of its complete
+    groups into one binary buffer — no pandas frame and no Python call
+    per group.  A group cut by an Arrow batch boundary is carried into
+    the next batch.  Input is tier-sized; never point this at raw rows.
+    The chunk key includes chunk_start, so a hot source fans out across
+    chunk windows instead of one giant group.
 
     ``value_cols`` defaults to every stored tier column present
     (``TIER_VALUE_COLS``); each keeps its own type and nulls, and the
@@ -500,8 +547,6 @@ def compress_tier(
     to the output — the pipeline compresses ALL tiers' rows in ONE pass
     over their union.
     """
-    import pyarrow as pa
-
     chunk_span = chunk_span or CHUNK_SPAN[tier]
     vcols = list(value_cols or [c for c in TIER_VALUE_COLS if c in tier_df.columns])
     types = [tier_df.schema[c].dataType.simpleString() for c in vcols]
@@ -518,59 +563,13 @@ def compress_tier(
         + CHUNK_SCHEMA.fields[:-1]
         + [T.StructField("value_cols", T.StringType(), metadata={"value_cols": desc})]
     )
-    out_names = schema.fieldNames()
-
-    def encode(batch: pa.RecordBatch, last: bool):
-        """Chunks for every complete group of ``batch`` (all of them when
-        ``last``), plus the trailing rows still open."""
-        starts = _group_starts([batch.column(k) for k in keys])
-        done = len(starts) if last else len(starts) - 1
-        if done == 0:
-            return None, batch
-        bounds = np.append(starts, batch.num_rows)
-        first, stop = bounds[:done], bounds[1 : done + 1]
-        ws = batch.column("window_start")
-        us = np.asarray(ws.cast(pa.int64()))  # Spark ships timestamps in us
-        ts = us // 10**6
-        bits = [_column_bits(batch.column(c), us) for c in vcols]
-        chunks = [
-            compress_chunk(
-                ts[a:b],
-                [v[a:b] for v, _ in bits],
-                [None if ok is None else ok[a:b] for _, ok in bits],
-            )
-            for a, b in zip(first, stop)
-        ]
-        cols = [batch.column(k).take(first) for k in keys]
-        cols += [
-            pa.array(stop - first, pa.int32()),
-            ws.take(first),
-            ws.take(stop - 1),
-            pa.array(chunks, pa.binary()),
-            pa.array([desc] * done, pa.string()),
-        ]
-        rest = batch.slice(int(bounds[done])) if not last else None
-        return pa.RecordBatch.from_arrays(cols, names=out_names), rest
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry = None  # the open group's rows, never empty
-        for batch in batches:
-            if carry is not None:
-                batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
-            if not batch.num_rows:
-                continue
-            out, carry = encode(batch, last=False)
-            if out is not None:
-                yield out
-        if carry is not None:
-            yield encode(carry, last=True)[0]
-
+    names = schema.fieldNames()
     return (
         tier_df.withColumn("chunk_start", window_start(F.col("window_start"), chunk_span))
         .select(*keys, "window_start", *vcols)
         .repartition(*keys)
         .sortWithinPartitions(*keys, "window_start")
-        .mapInArrow(build, schema)
+        .mapInArrow(lambda it: _chunk_batches(it, keys, vcols, desc, names), schema)
     )
 
 

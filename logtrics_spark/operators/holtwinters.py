@@ -62,7 +62,6 @@ def holt_winters_fold(
     import math
 
     m = season_slots
-    n = len(values)
     forecasts: list[float | None] = []
     devs: list[float | None] = []
     level = trend = None
@@ -94,7 +93,6 @@ def holt_winters_fold(
         deviations[si] = gamma * abs(y - forecast) + (1 - gamma) * last_dev
         forecasts.append(forecast)
         devs.append(deviations[si])
-    assert len(forecasts) == n
     return forecasts, devs
 
 

@@ -57,6 +57,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Spark pins a persisted plan's output partitioning by default, so
+        # that a later join on the cached frame's shuffle key can skip its
+        # own exchange: the plan is cached with AQE off, and a persisted
+        # shuffle stage runs all spark.sql.shuffle.partitions tasks, most
+        # of them tiny.  The seal's persisted tier, chunk and sketch frames
+        # are only scanned, re-shuffled or written, so let cached plans
+        # coalesce like every other stage; the cost is that such a join
+        # may shuffle its (already reduced) cached side again.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow: every Python-boundary op in this engine is batch/Arrow
         # (pandas_udf / mapInPandas / applyInPandas); never row-at-a-time.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

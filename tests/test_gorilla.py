@@ -310,3 +310,87 @@ def test_compress_tier_arrow_batches_match_per_group_chunks(spark):
     assert empty.schema.simpleString() == CHUNK_SCHEMA.simpleString() and empty.count() == 0
     desc = "cnt:bigint,sum:bigint,min:bigint,max:bigint,avg:double,last:bigint"
     assert empty.schema["value_cols"].metadata == {"value_cols": desc}
+
+
+_SPECIAL = np.array(
+    [0.0, -0.0, np.nan, _PAYLOAD_NAN, np.inf, -np.inf, 5e-324, -5e-324, 2.2250738585072e-308, 1.5]
+)
+
+
+def _random_tier_rows(rng, n_groups: int):
+    """Sorted tier-like rows (chunk key, window_start, one int, one float
+    and one timestamp column) as one Arrow table, and each group's start.
+    Groups mix singletons and longer runs; window_start steps are
+    regular, jittered (negative delta-of-deltas), repeated (duplicate
+    deltas) or jumps too wide for every short bucket (64-bit codes);
+    values cover int64 extremes, NaN payloads, ±0, denormals and nulls,
+    including null timestamps and a group with no valid value."""
+    import pyarrow as pa
+
+    sizes = np.where(rng.random(n_groups) < 0.4, 1, rng.integers(2, 40, n_groups))
+    n = int(sizes.sum())
+    starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+    group = np.repeat(np.arange(n_groups), sizes)
+    steps = rng.choice([60, 300], n) + rng.choice([0, 0, 0, -7, 3, -60, 10**4, -(10**9)], n)
+    ws = 1_704_067_200 + np.cumsum(steps) + group * 86_400
+    ints = rng.choice(np.array([0, 1, 7, -3, 2**62, -(2**63), 2**63 - 1]), n)
+    ints += rng.integers(0, 3, n)  # wraps past the int64 extremes
+    floats = np.where(rng.random(n) < 0.5, rng.choice(_SPECIAL, n), rng.normal(0, 1e6, n))
+    stamps = (ws - rng.integers(0, 60, n)) * 10**6 + rng.integers(0, 10**6, n)
+    int_ok, stamp_ok = rng.random(n) < 0.8, rng.random(n) < 0.7
+    stamp_ok[group == group[-1]] = False
+    us = pa.timestamp("us", tz="UTC")
+    table = pa.table(
+        {
+            "source": pa.array((group // 3).astype(str)),
+            "metric": pa.array((group % 3).astype(str)),
+            "chunk_start": pa.array(group * 86_400 * 10**6, us),
+            "window_start": pa.array(ws * 10**6, us),
+            "cnt": pa.array(ints, mask=~int_ok),
+            "avg": pa.array(floats, mask=rng.random(n) < 0.1),
+            "last_ts": pa.array(stamps, us, mask=~stamp_ok),
+        }
+    )
+    return table, starts
+
+
+def test_batch_encoder_matches_one_chunk_calls():
+    """One ``_encode_chunks`` call over a random batch of many chunks is
+    byte for byte the per-chunk ``compress_chunk`` calls, and every chunk
+    decodes back to its rows, nulls included; ``_chunk_batches`` gives
+    the same chunks however the rows are cut into Arrow batches (groups
+    straddling batches, one-row batches)."""
+    import pyarrow as pa
+
+    from logtrics_spark.operators.gorilla import _chunk_batches, _column_bits, _encode_chunks
+
+    rng = np.random.default_rng(11)
+    keys, vcols = ["source", "metric", "chunk_start"], ["cnt", "avg", "last_ts"]
+    names = [*keys, "n_points", "min_ts", "max_ts", "chunk", "value_cols"]
+    for trial in range(30):
+        table, starts = _random_tier_rows(rng, int(rng.integers(1, 60)))
+        batch = table.combine_chunks().to_batches()[0]
+        us = np.asarray(batch.column("window_start").cast(pa.int64()))
+        ts = us // 10**6
+        bits = [_column_bits(batch.column(c), us) for c in vcols]
+        buf, offsets = _encode_chunks(ts, [v for v, _ in bits], [ok for _, ok in bits], starts)
+        got = [buf[a:b].tobytes() for a, b in zip(offsets[:-1], offsets[1:])]
+        bounds = np.append(starts, len(ts))
+        for chunk, a, b in zip(got, bounds[:-1], bounds[1:]):
+            valid = [None if ok is None else ok[a:b] for _, ok in bits]
+            assert chunk == compress_chunk(ts[a:b], [v[a:b] for v, _ in bits], valid), trial
+            ts2, bits2, valid2 = decompress_chunk(chunk)
+            assert np.array_equal(ts2, ts[a:b]), trial
+            for (v, _), ok, b2, ok2 in zip(bits, valid, bits2, valid2):
+                keep = np.ones(b - a, bool) if ok is None else ok
+                assert ok2 is None if keep.all() else np.array_equal(ok2, keep), trial
+                assert np.array_equal(v[a:b][keep], b2[keep]) and not b2[~keep].any(), trial
+        cuts = np.sort(rng.choice(np.arange(len(ts)), min(len(ts), 5), replace=False))
+        if trial % 5 == 0:
+            cuts = np.arange(len(ts))  # one row per batch
+        # batches between the cuts, and an empty one at the end
+        pieces = [batch.slice(a, b - a) for a, b in zip(cuts, np.append(cuts[1:], len(ts)))]
+        pieces = [batch.slice(0, cuts[0]), *pieces, batch.slice(len(ts))]
+        out = pa.Table.from_batches(list(_chunk_batches(iter(pieces), keys, vcols, "d", names)))
+        assert out.column("chunk").to_pylist() == got, trial
+        assert np.array_equal(out.column("n_points").to_numpy(), np.diff(bounds)), trial

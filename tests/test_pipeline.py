@@ -119,6 +119,31 @@ def test_kill_and_resume_identical(spark, tmp_path, crash_after):
     assert _chunk_rows(part).equals(want) and _sealed(part) == units
 
 
+def test_cached_stages_coalesce_and_seal_the_same_chunks(spark, tmp_path):
+    """The session lets AQE coalesce persisted shuffle stages (the seal
+    persists its tier, chunk and sketch frames), and a run lands the same
+    chunk rows, bytes included, as with cached plans pinned to
+    spark.sql.shuffle.partitions."""
+    conf = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert spark.conf.get(conf) == "true"
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cached = spark.range(200).withColumn("k", F.col("id") % 7).repartition("k").persist()
+    try:
+        assert cached.count() == 200
+        assert cached.rdd.getNumPartitions() < shuffle_parts
+    finally:
+        cached.unpersist()
+
+    tok = gen_tokseq(spark, TINY, partitions=2)
+    want = _chunk_rows(_run_clean(spark, tok, str(tmp_path / "coalesced")))
+    spark.conf.set(conf, "false")
+    try:
+        pinned = _chunk_rows(_run_clean(spark, tok, str(tmp_path / "pinned")))
+    finally:
+        spark.conf.set(conf, "true")
+    assert pinned.equals(want)
+
+
 def test_resume_without_fine_rows_raises(spark, tmp_path):
     """Coarse tiers pending while the sealed 1m chunks are gone (dropped
     between the 1m seal and the resume): the run raises instead of
