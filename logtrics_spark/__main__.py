@@ -94,7 +94,8 @@ def _cmd_run(args) -> int:
 def _cmd_alerts(args) -> int:
     """Score a stored tier with the rolling z-score and print flagged
     rows (the read-path sibling of `graphite`: series.py over the
-    store).  Chunk-archived tiers are served transparently.  Daemon
+    store).  The tier is read by ``RollupJob.read_tier``: sealed days
+    from their chunks, the live head as stored.  Daemon
     (snapshot-flush) stores are resolved latest-wins first — scoring
     the raw snapshot history would let superseded flush_seq versions
     pollute the trailing stats and emit duplicate rows per window."""
@@ -106,11 +107,7 @@ def _cmd_alerts(args) -> int:
 
     spark, own = _get_session("logtrics-alerts")
     job = RollupJob(spark, args.store)
-    tier_df = resolve_latest(
-        job.read_tier(args.tier)
-        if not args.from_chunks
-        else job.read_tier_from_chunks(args.tier)
-    )
+    tier_df = resolve_latest(job.read_tier(args.tier))
     flagged = (
         zscore(tier_df, args.value_col, args.window_seconds, out_col="z")
         .where(F.abs(F.col("z")) > args.threshold)
@@ -130,13 +127,12 @@ def _cmd_alerts(args) -> int:
 def _cmd_read(args) -> int:
     """Time-range read over a stored tier — the dashboard fetch path.
 
-    ``read_tier`` rows (sealed days decoded from their chunks, live
-    rows as stored) get plain ``window_start`` predicates;
-    ``--from-chunks`` serves the sealed days alone with CHUNK-level
-    zone-map pruning (only chunks whose stored min_ts/max_ts overlap
-    [--from, --to] are decompressed — operators/gorilla.py::
-    decompress_chunks_range).  Daemon (snapshot-flush) stores resolve
-    latest-wins first, so superseded flush versions never print."""
+    The bounds go to ``RollupJob.read_tier``: only sealed chunks whose
+    stored min_ts/max_ts overlap [--from, --to] are decompressed
+    (operators/gorilla.py::decompress_chunks_range), and the live head
+    rows are filtered by the same inclusive bounds.  Daemon
+    (snapshot-flush) stores resolve latest-wins first, so superseded
+    flush versions never print."""
     import datetime as _dt
 
     from pyspark.sql import functions as F
@@ -162,15 +158,7 @@ def _cmd_read(args) -> int:
     hi = _parse("to", args.to)
     spark, own = _get_session("logtrics-read")
     job = RollupJob(spark, args.store)
-    if args.from_chunks:
-        df = job.read_tier_from_chunks(args.tier, ts_from=lo, ts_to=hi)
-    else:
-        df = job.read_tier(args.tier)
-        if lo:
-            df = df.where(F.col("window_start") >= F.lit(lo))
-        if hi:
-            df = df.where(F.col("window_start") <= F.lit(hi))
-    df = resolve_latest(df)
+    df = resolve_latest(job.read_tier(args.tier, lo, hi))
     if args.source:
         df = df.where(F.col("source") == args.source)
     if args.out:
@@ -502,8 +490,6 @@ def main(argv: list[str] | None = None) -> int:
     a.add_argument("--window-seconds", type=int, default=3600)
     a.add_argument("--threshold", type=float, default=3.0)
     a.add_argument("--limit", type=int, default=50)
-    a.add_argument("--from-chunks", action="store_true",
-                   help="serve the tier from Gorilla chunks (post-retention)")
     a.set_defaults(fn=_cmd_alerts)
 
     rd = sub.add_parser("read", help="time-range read of a stored tier (chunk-pruned)")
@@ -513,8 +499,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="inclusive lower bound, e.g. '2024-01-01 00:00:00'")
     rd.add_argument("--to", default=None, help="inclusive upper bound")
     rd.add_argument("--source", default=None, help="exact source filter")
-    rd.add_argument("--from-chunks", action="store_true",
-                    help="serve from Gorilla chunks with zone-map pruning")
     rd.add_argument("--limit", type=int, default=50)
     rd.add_argument("--out", default=None, help="write parquet here instead of printing")
     rd.set_defaults(fn=_cmd_read)

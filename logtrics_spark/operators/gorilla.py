@@ -39,9 +39,9 @@ sharing one timestamp stream):
   columns, the µs offset from window_start for timestamps.  A chunk
   without nulls has no trailer.  The chunk table's ``value_cols``
   column names each chunk's columns and their Spark types
-  ("cnt:bigint,sum:double,.."); parquet dictionary-encodes it.  Chunk
-  rows without it are the older float64-only layout, named by the
-  reader.
+  ("cnt:bigint,sum:double,.."); parquet dictionary-encodes it.  That
+  description is the chunk format: a chunk table or row without one
+  raises ``ChunkFormatError``.
 
 The encoder is one segmented numpy pass over every chunk of an Arrow
 batch (``_encode_chunks``): no step loops over chunks in Python, and
@@ -49,14 +49,16 @@ batch (``_encode_chunks``): no step loops over chunks in Python, and
 ``compress_tier`` (repartition + sort by chunk key -> one mapInArrow
 pass per partition, one encoder call per Arrow batch) and
 ``decompress_chunks`` (one mapInArrow pass that decodes only the
-requested columns).  Chunks are built from TIER rows (already 3-6
-orders of magnitude smaller than raw), so the Python codec cost is
-bounded by tier cardinality, not raw row count; the chunk key includes
-the chunk window, so hot sources split across chunks.
+requested columns; ``decompress_chunks_range`` first prunes whole
+chunks on their min_ts/max_ts zone map).  Chunks are built from TIER
+rows (already 3-6 orders of magnitude smaller than raw), so the Python
+codec cost is bounded by tier cardinality, not raw row count; the chunk
+key includes the chunk window, so hot sources split across chunks.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 from collections.abc import Iterator
 
@@ -573,15 +575,30 @@ def compress_tier(
     )
 
 
-def _out_types(descs: list, names: list[str]) -> dict[str, T.DataType]:
-    """Output type of each requested column over descriptions (None: a
-    legacy float64 row).  Integer and float columns that differ across
-    descriptions widen to double, as a union would; a column no
-    description carries reads as double."""
+class ChunkFormatError(ValueError):
+    """Gorilla chunks without a ``value_cols`` description: the
+    float64-by-position format of stores sealed before chunks described
+    their columns, which no reader decodes."""
+
+    def __init__(self, where: str) -> None:
+        super().__init__(
+            f"{where} holds Gorilla chunks without a value_cols description "
+            "(sealed before chunks described their columns); re-seal it from raw"
+        )
+
+
+def _table_of(chunk_df: DataFrame) -> str:
+    files = chunk_df.inputFiles()  # a plan walk: error messages only
+    return f"chunk table {os.path.commonpath(files)}" if files else "chunk frame"
+
+
+def _out_types(descs: list[str], names: list[str]) -> dict[str, T.DataType]:
+    """Output type of each requested column over descriptions.  Integer
+    and float columns that differ across descriptions widen to double,
+    as a union would; a column no description carries reads as double."""
     seen: dict[str, set] = {c: set() for c in names}
     for d in descs:
-        pairs = [p.split(":") for p in d.split(",")] if d else [(c, "double") for c in names]
-        for c, t in pairs:
+        for c, t in (p.split(":") for p in d.split(",")):
             seen.get(c, set()).add(t)
     out = {}
     for c, ts in seen.items():
@@ -595,26 +612,26 @@ def decompress_chunks(chunk_df: DataFrame, value_cols: list[str] | None = None) 
     """Chunk table -> tier rows (inverse of compress_tier), with the
     ``value_cols`` columns (default ``DEFAULT_VALUE_COLS``).
 
-    A typed chunk row (its ``value_cols`` description is set, as
-    compress_tier writes it) yields each named column in its own type,
-    nulls included, and decodes only those streams; a name the chunk
-    does not carry reads null.  Output types come from the description
-    in the column's metadata, or, when a plan lost it, from one small
-    job over the ``value_cols`` column.  A legacy chunk row (no
-    description) stores float64 columns by position: ``value_cols``
-    must then be the writer's list IN WRITER ORDER — a count mismatch
-    raises instead of mislabeling streams.
+    Each chunk row's ``value_cols`` description types its columns:
+    each requested one comes back in its own type, nulls included, and
+    only those streams decode; a name the chunk does not carry reads
+    null.  Output types come from the description in the column's
+    metadata or, where a store keeps no Spark field metadata (an
+    Iceberg table, parquet written outside Spark), from one small job
+    over the ``value_cols`` column.  A table without the column, or a
+    row whose description is null, raises ``ChunkFormatError``.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     names = list(value_cols or DEFAULT_VALUE_COLS)
-    typed = "value_cols" in chunk_df.columns
-    descs = [None]
-    if typed:
-        descs = [chunk_df.schema["value_cols"].metadata.get("value_cols")]
-        if descs[0] is None:  # a plan or table format that dropped the metadata
-            descs = [r[0] for r in chunk_df.select("value_cols").distinct().collect()]
+    if "value_cols" not in chunk_df.columns:
+        raise ChunkFormatError(_table_of(chunk_df))
+    descs = [chunk_df.schema["value_cols"].metadata.get("value_cols")]
+    if descs[0] is None:
+        descs = [r[0] for r in chunk_df.select("value_cols").distinct().collect()]
+        if None in descs:
+            raise ChunkFormatError(_table_of(chunk_df))
     types = _out_types(descs, names)
     out_schema = T.StructType(
         [T.StructField(c, T.StringType()) for c in KEY]
@@ -625,16 +642,8 @@ def decompress_chunks(chunk_df: DataFrame, value_cols: list[str] | None = None) 
     floats = [isinstance(types[c], (T.FloatType, T.DoubleType)) for c in names]
     layouts: dict = {}
 
-    def layout(desc, k: int) -> list:
+    def layout(desc: str) -> list:
         """[(stream position, stored type) or None] per requested name."""
-        if desc is None:
-            if k != len(names):
-                raise ValueError(
-                    f"chunk encodes {k} value columns but value_cols names "
-                    f"{len(names)} ({names}); pass the writer's value columns "
-                    "(in writer order)"
-                )
-            return [(i, "double") for i in range(k)]
         if desc not in layouts:
             pos = {c: (i, t) for i, (c, t) in enumerate(p.split(":") for p in desc.split(","))}
             for c, f in zip(names, floats):
@@ -655,13 +664,15 @@ def decompress_chunks(chunk_df: DataFrame, value_cols: list[str] | None = None) 
             if not batch.num_rows:
                 continue
             bufs = batch.column("chunk").to_pylist()
-            descs = batch.column("value_cols").to_pylist() if typed else [None] * len(bufs)
+            descs = batch.column("value_cols").to_pylist()
             counts, stamps = [], []
             vals: list[list] = [[] for _ in names]
             oks: list[list] = [[] for _ in names]  # validity per chunk, None: all valid
-            for buf, desc in zip(bufs, descs):
-                (k,) = struct.unpack_from("<H", buf, 4)
-                where = layout(desc, k)
+            for i, (buf, desc) in enumerate(zip(bufs, descs)):
+                if desc is None:  # a row from an undescribed file of a mixed table
+                    series = ".".join(str(batch.column(c)[i]) for c in KEY)
+                    raise ChunkFormatError(f"the chunk table of series {series}")
+                where = layout(desc)
                 ts, bits, valid = decompress_chunk(buf, [w[0] for w in where if w])
                 n = len(ts)
                 counts.append(n)
@@ -687,8 +698,18 @@ def decompress_chunks(chunk_df: DataFrame, value_cols: list[str] | None = None) 
             cols = [c.cast(f.type) for c, f in zip(cols, arrow_schema)]
             yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
-    src = [*KEY, "chunk", *(["value_cols"] if typed else [])]
-    return chunk_df.select(*src).mapInArrow(explode, out_schema)
+    return chunk_df.select(*KEY, "chunk", "value_cols").mapInArrow(explode, out_schema)
+
+
+def in_range(df: DataFrame, ts_from=None, ts_to=None, first="window_start", last="window_start"):
+    """Rows of ``df`` whose [``first``, ``last``] column span overlaps
+    the inclusive [ts_from, ts_to]; a None bound is open.  Plain
+    Catalyst predicates, so on a parquet scan they push down."""
+    if ts_from is not None:
+        df = df.where(F.col(last) >= F.lit(ts_from).cast("timestamp"))
+    if ts_to is not None:
+        df = df.where(F.col(first) <= F.lit(ts_to).cast("timestamp"))
+    return df
 
 
 def decompress_chunks_range(
@@ -710,16 +731,5 @@ def decompress_chunks_range(
     Results are row-identical to decompress-then-filter (pinned by
     tests/test_gorilla.py).  Bounds are inclusive; either may be None.
     """
-    pruned = chunk_df
-    if ts_from is not None:
-        ts_from = F.lit(ts_from).cast("timestamp")
-        pruned = pruned.where(F.col("max_ts") >= ts_from)
-    if ts_to is not None:
-        ts_to = F.lit(ts_to).cast("timestamp")
-        pruned = pruned.where(F.col("min_ts") <= ts_to)
-    out = decompress_chunks(pruned, value_cols)
-    if ts_from is not None:
-        out = out.where(F.col("window_start") >= ts_from)
-    if ts_to is not None:
-        out = out.where(F.col("window_start") <= ts_to)
-    return out
+    pruned = in_range(chunk_df, ts_from, ts_to, first="min_ts", last="max_ts")
+    return in_range(decompress_chunks(pruned, value_cols), ts_from, ts_to)

@@ -3,8 +3,8 @@
 Pipeline:  raw token table -> extract points -> 1m rollup -> every
 coarse tier (5m/1h/1d) in ONE aggregate over the cached 1m frame ->
 Gorilla chunks for all tiers in one Arrow pass -> one lineage append ->
-retention.  The chunks are the sealed tiers' only copy; ``read_tier``
-decodes them.
+retention.  The chunks are the sealed tiers' only copy; ``read_tier``,
+the one tier read, decodes them (zone-map pruned to its time range).
 
 Checkpoint/resume semantics (north rule): the unit of progress is a
 *seal unit* = (tier, source, day).  A run:
@@ -502,32 +502,41 @@ class RollupJob:
         return dropped
 
     # ------------------------------------------------------------- reads
-    def read_tier(self, tier: str) -> DataFrame:
-        """Every row of a tier: the sealed days decoded from their Gorilla
-        chunks — each stored column in its own type, with ``rate`` and
-        ``stddev`` re-derived by the expressions rollup/cascade use, so
-        the rows are bit-identical to the sealed ones — plus each
-        ``tiers/`` day partition that has no chunk partition: the
-        unsealed head (a daemon's live store) or a day sealed before
-        chunks carried every column.  A day in both is served once, from
-        chunks."""
-        from logtrics_spark.operators.rollup import stddev_from_moments
+    def read_tier(self, tier: str, ts_from=None, ts_to=None, cols=None) -> DataFrame:
+        """A tier's rows with ``window_start`` in the inclusive [ts_from,
+        ts_to] (None: open): the sealed days decoded from their Gorilla
+        chunks, pruned on the chunks' min_ts/max_ts zone map before any
+        decode (``gorilla.decompress_chunks_range``), plus the unsealed
+        ``tiers/`` head (a daemon's live store).  ``cols=None`` returns
+        every stored column in its own type, with ``rate`` and ``stddev``
+        re-derived as rollup/cascade derive them: bit-identical to the
+        sealed rows.  A ``cols`` list returns the series key,
+        ``window_start`` and those columns, decoding only their streams.
+        A day in both ``tiers/`` and ``chunks/`` (an archive into the live
+        store itself that stopped between its seal and its head drops) is
+        served once, from the chunks.  A tier with no rows raises."""
+        from logtrics_spark.operators.rollup import KEY, stddev_from_moments
 
         sealed = self.io.list_partitions(f"chunks/tier={tier}", "day")
+        has_head = self.io.exists(f"tiers/tier={tier}")
+        if not sealed and not has_head:
+            raise ValueError(f"store {self.io.path()!r} has no tier={tier} rows")
         parts = []
         if sealed:
             chunks = self.io.read(f"chunks/tier={tier}").drop("day")
-            typed = "value_cols" in chunks.columns
-            out = gorilla.decompress_chunks(chunks, gorilla.TIER_VALUE_COLS if typed else None)
-            secs = F.lit(float(tier_seconds(tier)))
-            out = out.withColumn("rate", F.col("cnt").cast("double") / secs)
-            if typed:
+            out = gorilla.decompress_chunks_range(
+                chunks, ts_from, ts_to, cols or gorilla.TIER_VALUE_COLS
+            )
+            if cols is None:
+                secs = F.lit(float(tier_seconds(tier)))
+                out = out.withColumn("rate", F.col("cnt").cast("double") / secs)
                 out = out.withColumn("stddev", stddev_from_moments("cnt", "sum", "sum_sq"))
             parts.append(out)
-        if self.io.exists(f"tiers/tier={tier}") or not parts:
-            # a tier with no rows at all raises here (path not found)
+        if has_head:
             head = self.io.read(f"tiers/tier={tier}")
-            parts.append(head.where(~F.col("day").isin(sealed)).drop("day"))
+            head = gorilla.in_range(head.where(~F.col("day").isin(sealed)), ts_from, ts_to)
+            head = head.drop("day") if cols is None else head.select(*KEY, "window_start", *cols)
+            parts.append(head)
         return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
     def read_sketch_tier(self, name: str, tier: str) -> DataFrame:
@@ -539,13 +548,5 @@ class RollupJob:
         return self.io.read(f"sk_{name}/tier={tier}").drop("day")
 
     def read_tier_from_chunks(self, tier: str, ts_from=None, ts_to=None) -> DataFrame:
-        """A tier's sealed rows with the gorilla.DEFAULT_VALUE_COLS
-        columns, decoding only those streams of its Gorilla chunks (the
-        dashboard read path; ``read_tier`` returns every column).
-
-        ``ts_from``/``ts_to`` (inclusive) prune at CHUNK granularity on
-        the stored min_ts/max_ts stats before any decompression — a
-        narrow dashboard range decompresses only overlapping chunks
-        (operators/gorilla.py::decompress_chunks_range)."""
-        chunks = self.io.read(f"chunks/tier={tier}").drop("day")
-        return gorilla.decompress_chunks_range(chunks, ts_from=ts_from, ts_to=ts_to)
+        """``read_tier`` with the gorilla.DEFAULT_VALUE_COLS columns."""
+        return self.read_tier(tier, ts_from, ts_to, cols=gorilla.DEFAULT_VALUE_COLS)

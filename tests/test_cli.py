@@ -81,9 +81,8 @@ def test_explain_queries_tool(spark, capsys):
 
 
 def test_cli_read_range(spark, tmp_path, capsys):
-    """`read`: range fetch from live tiers AND from Gorilla chunks
-    (zone-map pruned); bounds are inclusive and rows agree between the
-    two serving paths on the composable columns."""
+    """`read`: range fetch over a stored tier (sealed chunks zone-map
+    pruned); both bounds are inclusive, and --out writes the same rows."""
     raw = str(tmp_path / "tok.parquet")
     gen_tokseq(spark, 800, partitions=2).write.parquet(raw)
     store = str(tmp_path / "store")
@@ -95,18 +94,23 @@ def test_cli_read_range(spark, tmp_path, capsys):
             "--limit", "500"]
     assert main(args) == 0
     live = capsys.readouterr().out.strip().splitlines()
-    assert live and all("2024-01-01 00:0" in ln for ln in live)
-
-    assert main(args + ["--from-chunks"]) == 0
-    chunks = capsys.readouterr().out.strip().splitlines()
-    # same series-window keys served from either path
-    key = lambda ln: ln.split(" cnt=")[0]
-    assert {key(ln) for ln in chunks} == {key(ln) for ln in live}
+    assert {ln.split(" ")[2] for ln in live} == {f"00:0{m}:00" for m in range(2, 6)}
 
     out_dir = str(tmp_path / "out.parquet")
     assert main(args + ["--out", out_dir]) == 0
     assert "wrote" in capsys.readouterr().out
     assert spark.read.parquet(out_dir).count() == len(live)
+
+
+@pytest.mark.parametrize(
+    "cmd", [["graphite", "--dry-run"], ["read"], ["alerts"]], ids=lambda c: c[0]
+)
+def test_cli_reads_of_a_missing_tier_name_it(spark, tmp_path, cmd):
+    """The tier-reading commands fail with read_tier's named error when
+    the store has no rows of the tier, not with a path-not-found."""
+    store = str(tmp_path / "empty")
+    with pytest.raises(ValueError, match=r"store .* has no tier=1h rows"):
+        main([cmd[0], "--store", store, "--tier", "1h", *cmd[1:]])
 
 
 def test_cli_curate(spark, tmp_path, capsys):

@@ -225,6 +225,29 @@ def test_read_tier_over_daemon_live_store(spark, tmp_path):
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
+def test_read_tier_serves_a_day_in_both_stores_once(spark, tmp_path, crash_after):
+    """An archive into the live store itself that stops after its seal,
+    before its live-head drops, leaves the closed day in both tiers/ and
+    chunks/: read_tier serves that day once, from the chunks, and the
+    open day from the head."""
+    from logtrics_spark.plans.pipeline import RollupJob
+
+    d = _daemon(spark, tmp_path)
+    _flush(d, spark, "2024-03-01", 60, value0=1.0)  # closed day
+    _flush(d, spark, "2024-03-02", 5, value0=7.0)  # open day
+    want = d.read_tier_latest().orderBy(*TIER_COLS).toPandas()
+    job = RollupJob(spark, str(tmp_path / "store"), tiers=["1m"])
+    with crash_after("lineage"):
+        d.archive_closed_days(job)
+    assert job.io.list_partitions("chunks/tier=1m", "day") == ["2024-03-01"]
+    assert d.io.list_partitions("tiers/tier=1m", "day") == ["2024-03-01", "2024-03-02"]
+
+    got = job.read_tier("1m").orderBy(*TIER_COLS).toPandas()
+    assert got["flush_seq"].isna().tolist() == [True] * 60 + [False] * 5
+    cols = [c for c in got.columns if c != "flush_seq"]
+    pd.testing.assert_frame_equal(got[cols], want[cols])
+
+
 def test_alerts_cli_resolves_daemon_snapshots(spark, tmp_path, capsys):
     """ADVICE r3: alerts over a snapshot-flush store must score the
     latest-wins view — one row per window, stale snapshots ignored."""

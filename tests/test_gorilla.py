@@ -248,6 +248,58 @@ def test_range_read_prunes_chunks_and_matches_filter(spark, tmp_path):
     ).where(F.col("window_start") >= F.lit(lo).cast("timestamp")).count()
 
 
+def test_read_tier_range_plan_prunes_chunk_scan(spark, tmp_path):
+    """``RollupJob.read_tier(tier, lo, hi)`` is the range read above on
+    a store: the min_ts/max_ts zone-map filters reach the chunk parquet
+    scan, and the plan has exactly one Python node, the decode."""
+    from logtrics_spark.datagen import gen_tokseq
+    from logtrics_spark.plans.pipeline import RollupJob
+
+    job = RollupJob(spark, str(tmp_path / "store"), tiers=["1m"])
+    job.ingest_raw(gen_tokseq(spark, 2000, partitions=2))
+    job.run()
+    df = job.read_tier("1m", "2024-01-01 00:10:00", "2024-01-01 00:20:00")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pushed = plan.split("PushedFilters: [")[1].split("]")[0]
+    assert "max_ts" in pushed and "min_ts" in pushed, pushed
+    markers = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow", "InPandas")
+    python_nodes = [ln for ln in plan.splitlines() if any(m in ln for m in markers)]
+    assert len(python_nodes) == 1, plan
+    assert 0 < df.count() < job.read_tier("1m").count()
+
+
+def test_decompress_without_field_metadata(spark, tmp_path):
+    """A chunk table whose value_cols field carries no Spark metadata
+    (an Iceberg table, or parquet written outside Spark) decodes every
+    column in its own type from one job over the rows' descriptions; a
+    null description among them raises ChunkFormatError."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from logtrics_spark.datagen import gen_tokseq
+    from logtrics_spark.operators.extract import extract_points
+    from logtrics_spark.operators.gorilla import ChunkFormatError, TIER_VALUE_COLS
+    from logtrics_spark.operators.rollup import rollup
+
+    tier = rollup(extract_points(gen_tokseq(spark, 2000, partitions=2)), "1m")
+    table = compress_tier(tier, "1m").toArrow()
+    pq.write_table(table, tmp_path / "bare.parquet")
+    bare = spark.read.parquet(str(tmp_path / "bare.parquet"))
+    assert bare.schema["value_cols"].metadata == {}
+    want = tier.select(*tier.columns[:4], *TIER_VALUE_COLS)
+    got = decompress_chunks(bare, TIER_VALUE_COLS)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+    descs = table.column("value_cols").to_pylist()
+    descs[0] = None
+    at = table.schema.get_field_index("value_cols")
+    table = table.set_column(at, "value_cols", pa.array(descs))
+    pq.write_table(table, tmp_path / "null.parquet")
+    with pytest.raises(ChunkFormatError, match="null.parquet.*re-seal it from raw"):
+        decompress_chunks(spark.read.parquet(str(tmp_path / "null.parquet")))
+
+
 def test_compress_tier_arrow_batches_match_per_group_chunks(spark):
     """The one-pass Arrow encode equals per-group compress_chunk output
     (each column in its own 64-bit type) byte for byte, with a tiny

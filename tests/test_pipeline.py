@@ -238,34 +238,107 @@ def test_seal_from_fine_keeps_types_nulls_and_special_values(spark, tmp_path):
     _identical(cascade_tiers(fine, "1m", ["1h"]).drop("tier"), job.read_tier("1h"))
 
 
-def test_read_tier_serves_legacy_day_once(spark, tok, tmp_path):
-    """A store sealed before chunks carried every column holds a day in
-    both tiers/ (rows) and chunks/ (float-only chunks without a
-    description): read_tier serves that day once, from the chunks, and a
-    day only in tiers/ from its rows."""
+def _raises_format_error(read) -> None:
+    """``read()`` raises ChunkFormatError: on the driver, or from the
+    decode task, where Spark wraps it and keeps its name and message."""
+    from logtrics_spark.operators.gorilla import ChunkFormatError
+
+    with pytest.raises(Exception, match="re-seal it from raw") as err:
+        read()
+    assert isinstance(err.value, ChunkFormatError) or "ChunkFormatError" in str(err.value)
+
+
+def _undescribed_chunks(rows):
+    """Rows of one tier -> chunk rows without a value_cols description
+    (the layout before chunks described their columns), with the tier
+    and day columns of the store's chunks/ table."""
     from logtrics_spark.operators.gorilla import DEFAULT_VALUE_COLS, compress_tier
     from logtrics_spark.plans.pipeline import _day
 
-    job = RollupJob(spark, str(tmp_path / "legacy"), tiers=["1m"])
-    rows = rollup(extract_points(tok, step_seconds=STEP), "1m")
-    rows = rows.withColumn("day", _day("window_start")).localCheckpoint()
-    days = sorted(r["day"] for r in rows.select("day").distinct().collect())
-    assert len(days) == 2
-    job.io.write_partitioned(rows.withColumn("tier", F.lit("1m")), "tiers", ["tier", "day"])
-    first = rows.where(F.col("day") == days[0])
-    floats = first.select(*KEY, *[F.col(c).cast("double") for c in DEFAULT_VALUE_COLS])
+    floats = rows.select(*KEY, *[F.col(c).cast("double") for c in DEFAULT_VALUE_COLS])
     chunks = compress_tier(floats, "1m", chunk_span="1d").drop("value_cols")
-    chunks = chunks.withColumn("day", _day("chunk_start")).withColumn("tier", F.lit("1m"))
-    job.io.write_partitioned(chunks, "chunks", ["tier", "day"])
+    return chunks.withColumn("day", _day("chunk_start")).withColumn("tier", F.lit("1m"))
 
-    got = job.read_tier("1m")
-    assert got.count() == rows.count()
-    day0 = got.where(_day("window_start") == days[0])
-    assert day0.where(F.col("last_ts").isNull()).count() == first.count()
-    _identical(floats, day0.select(*KEY, *DEFAULT_VALUE_COLS))
-    day1 = got.where(_day("window_start") == days[1])
-    assert day1.where(F.col("last_ts").isNull()).count() == 0
-    assert day1.count() == rows.count() - first.count()
+
+def test_old_format_store_raises(spark, tok, tmp_path):
+    """Chunks without a value_cols description raise ChunkFormatError,
+    naming the table to re-seal: on a read, on a resume that cascades
+    the coarse tiers from such 1m chunks, and on a chunks/ table that
+    mixes one undescribed file with described ones, whichever file's
+    footer gives the table its schema."""
+    import shutil
+    from pathlib import Path
+
+    from logtrics_spark.operators.gorilla import ChunkFormatError
+
+    rows = rollup(extract_points(tok, step_seconds=STEP), "1m").localCheckpoint()
+    old = RollupJob(spark, str(tmp_path / "old"), tiers=["1m"])
+    old.io.write_partitioned(_undescribed_chunks(rows), "chunks", ["tier", "day"])
+    with pytest.raises(ChunkFormatError, match="chunks/tier=1m .*re-seal it from raw"):
+        old.read_tier("1m")
+
+    root = str(tmp_path / "store")
+    job = RollupJob(spark, root, tiers=["1m"], step_seconds=STEP)
+    job.ingest_raw(tok)
+    job.run(run_id="r1")
+    # Spark takes a parquet table's schema from the first file of its
+    # first partition: the undescribed file's (no value_cols column, so
+    # the read raises on the driver), or a described file's (its rows
+    # then read a null description, so the decode task raises)
+    stray = sorted(Path(old.io.path("chunks/tier=1m")).rglob("*.parquet"))[0]
+    day = Path(job.io.path("chunks/tier=1m")) / stray.parent.name
+    described = []
+    for name in ("0-old.parquet", "z-old.parquet"):  # listed first, listed last
+        shutil.copy(stray, day / name)
+        described.append("value_cols" in job.io.read("chunks/tier=1m").columns)
+        _raises_format_error(lambda: job.read_tier("1m").collect())
+        (day / name).unlink()
+    assert described == [False, True]
+
+    # 1m sealed over undescribed chunks; the coarse tiers pending
+    job.io.write_partitioned(_undescribed_chunks(rows), "chunks", ["tier", "day"])
+    _raises_format_error(lambda: RollupJob(spark, root, step_seconds=STEP).run(run_id="r2"))
+
+
+def test_read_tier_range_over_chunks_and_head(spark, tok, tmp_path):
+    """A bounded read returns exactly the in-range rows of the sealed
+    chunks and of the unsealed tiers/ head, every column bit for bit;
+    a ``cols`` read equals the full read's projection; a tier with no
+    rows, or an unknown tier, raises a named error."""
+    import datetime as dt
+
+    from logtrics_spark.operators.gorilla import DEFAULT_VALUE_COLS
+    from logtrics_spark.plans.pipeline import _day
+
+    job = RollupJob(spark, str(tmp_path / "store"), tiers=["1m"], step_seconds=STEP)
+    with pytest.raises(ValueError, match=r"store .* has no tier=1m rows"):
+        job.read_tier("1m")
+    job.ingest_raw(tok)
+    job.run(run_id="r")
+    fine = rollup(extract_points(tok, step_seconds=STEP), "1m")
+    later = F.expr("INTERVAL 2 DAYS")
+    head = fine.withColumn("window_start", F.col("window_start") + later).withColumn(
+        "last_ts", F.col("last_ts") + later
+    )
+    job.io.write_partitioned(
+        head.withColumn("day", _day("window_start")).withColumn("tier", F.lit("1m")),
+        "tiers",
+        ["tier", "day"],
+    )
+    assert len(job.io.list_partitions("tiers/tier=1m", "day")) == 2
+
+    lo, hi = dt.datetime(2024, 1, 1, 20, 0), "2024-01-03 04:00:00"
+    got = job.read_tier("1m", lo, hi)
+    want = fine.unionByName(head).where(F.col("window_start").between(lo, hi))
+    _identical(want.select(*got.columns), got)
+    assert {r[0] for r in got.select(_day("window_start")).distinct().collect()} == {
+        "2024-01-01", "2024-01-02", "2024-01-03"
+    }
+    cols = [*KEY, *DEFAULT_VALUE_COLS]
+    _identical(job.read_tier("1m").select(*cols), job.read_tier("1m", cols=DEFAULT_VALUE_COLS))
+    _identical(got.select(*cols), job.read_tier_from_chunks("1m", lo, hi))
+    with pytest.raises(ValueError, match=r"store .* has no tier=2m rows"):
+        job.read_tier("2m")
 
 
 def test_retention_drops_only_fully_sealed(spark, tok, tmp_path):
@@ -387,26 +460,16 @@ def test_chunks_archive_sum_sq_restores_stddev(spark, tok, tmp_path):
 
 
 def test_decompress_rejects_mismatched_value_cols(spark, tok, tmp_path):
-    """The chunk header's column count gates decompression: reading a
-    7-column chunk with a 6-name config (or vice versa) must raise, not
-    silently truncate or mislabel streams."""
-    from logtrics_spark.operators.gorilla import (
-        DEFAULT_VALUE_COLS,
-        compress_tier,
-        decompress_chunks,
-    )
+    """A described chunk table needs no column names from the reader; an
+    undescribed one raises ChunkFormatError instead of decoding streams
+    by position."""
+    from logtrics_spark.operators.gorilla import ChunkFormatError, compress_tier, decompress_chunks
 
     tiers = rollup(extract_points(tok, step_seconds=STEP), "1h")
-    cols = [*DEFAULT_VALUE_COLS, "sum_sq"]
-    floats = tiers.select(*KEY, *[F.col(c).cast("double") for c in cols])
-    # a float-only chunk table without its description: the reader names the columns
-    chunks = compress_tier(floats, "1h", value_cols=cols).drop("value_cols").localCheckpoint()
-    with pytest.raises(Exception, match="7 value columns.*names 6"):
-        decompress_chunks(chunks).count()  # default 6-name config
-    ok = decompress_chunks(chunks, value_cols=cols)
-    assert ok.count() == tiers.count()
-    # a described table needs no names from the reader
     assert decompress_chunks(compress_tier(tiers, "1h")).count() == tiers.count()
+    chunks = compress_tier(tiers, "1h").drop("value_cols")
+    with pytest.raises(ChunkFormatError, match="re-seal it from raw"):
+        decompress_chunks(chunks)
 
 
 def test_compact_partition_heals_crashed_swap(spark, tok, tmp_path):
