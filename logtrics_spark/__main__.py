@@ -94,20 +94,17 @@ def _cmd_run(args) -> int:
 def _cmd_alerts(args) -> int:
     """Score a stored tier with the rolling z-score and print flagged
     rows (the read-path sibling of `graphite`: series.py over the
-    store).  The tier is read by ``RollupJob.read_tier``: sealed days
-    from their chunks, the live head as stored.  Daemon
-    (snapshot-flush) stores are resolved latest-wins first — scoring
-    the raw snapshot history would let superseded flush_seq versions
-    pollute the trailing stats and emit duplicate rows per window."""
+    store).  The tier is read by ``RollupJob.read_tier``, one row per
+    window from either kind of store (a live store's superseded
+    snapshot versions never reach the trailing stats)."""
     from pyspark.sql import functions as F
 
     from logtrics_spark.operators.series import zscore
-    from logtrics_spark.plans.daemon import resolve_latest
     from logtrics_spark.plans.pipeline import RollupJob
 
     spark, own = _get_session("logtrics-alerts")
     job = RollupJob(spark, args.store)
-    tier_df = resolve_latest(job.read_tier(args.tier))
+    tier_df = job.read_tier(args.tier)
     flagged = (
         zscore(tier_df, args.value_col, args.window_seconds, out_col="z")
         .where(F.abs(F.col("z")) > args.threshold)
@@ -129,15 +126,13 @@ def _cmd_read(args) -> int:
 
     The bounds go to ``RollupJob.read_tier``: only sealed chunks whose
     stored min_ts/max_ts overlap [--from, --to] are decompressed
-    (operators/gorilla.py::decompress_chunks_range), and the live head
-    rows are filtered by the same inclusive bounds.  Daemon
-    (snapshot-flush) stores resolve latest-wins first, so superseded
-    flush versions never print."""
+    (operators/gorilla.py::decompress_chunks_range), and a live store's
+    head rows are cut to the same inclusive bounds and resolved
+    latest-wins, so superseded snapshot versions never print."""
     import datetime as _dt
 
     from pyspark.sql import functions as F
 
-    from logtrics_spark.plans.daemon import resolve_latest
     from logtrics_spark.plans.pipeline import RollupJob
 
     # validate bounds DRIVER-side: lit(str).cast("timestamp") turns a
@@ -158,7 +153,7 @@ def _cmd_read(args) -> int:
     hi = _parse("to", args.to)
     spark, own = _get_session("logtrics-read")
     job = RollupJob(spark, args.store)
-    df = resolve_latest(job.read_tier(args.tier, lo, hi))
+    df = job.read_tier(args.tier, lo, hi)
     if args.source:
         df = df.where(F.col("source") == args.source)
     if args.out:
@@ -200,7 +195,7 @@ def _load_conf_opt(args) -> dict:
 def _cmd_compact(args) -> int:
     """Latest-wins compaction of a daemon live store: each tier's day
     partitions are rewritten to one snapshot version, dropping
-    superseded flush_seq history (the run-mode daemon can also do this
+    superseded snapshot history (the run-mode daemon can also do this
     itself every N flushes via graphite.compact_every).  Sketch tables
     (sk_*) are compacted too — snapshot versions collapse, stream
     partials are preserved.  Safe against a LIVE daemon: both sides
@@ -242,29 +237,21 @@ def _cmd_archive(args) -> int:
 
 def _cmd_sketch(args) -> int:
     """Answer percentile / top-k / distinct queries from a store's
-    mergeable sketch tables — the post-retention read path: works
-    against a LIVE daemon store (versions resolved, contributions
-    merged) and against an ARCHIVED RollupJob store (final rows)
-    identically, long after the raw points and fine tiers are gone."""
-    from pyspark.sql import functions as F  # noqa: F401 (parity with siblings)
-
-    from logtrics_spark.api import Engine
-    from logtrics_spark.plans.daemon import Daemon
-    from logtrics_spark.storage.tableio import ParquetTableIO
+    mergeable sketch tables — the post-retention read path:
+    ``RollupJob.read_sketch_tier`` answers from a LIVE daemon store and
+    from an ARCHIVED RollupJob store alike, long after the raw points and
+    fine tiers are gone (--config carries a live store's merge params)."""
+    from logtrics_spark.plans.pipeline import RollupJob
 
     spark, own = _get_session("logtrics-sketch")
-    io = ParquetTableIO(spark, args.store)
-    if not io.exists(f"sk_{args.kind}/tier={args.tier}"):
+    job = RollupJob(spark, args.store, sketches=_load_conf_opt(args).get("sketches"))
+    try:
+        rows = job.read_sketch_tier(args.kind, args.tier)
+    except ValueError:
         print(f"no sk_{args.kind} tier={args.tier} in {args.store}", file=sys.stderr)
         if own:
             spark.stop()
         return 2
-    probe = io.read(f"sk_{args.kind}/tier={args.tier}").drop("day")
-    if "origin" in probe.columns:  # live daemon store
-        d = Daemon(spark, _load_conf_opt(args), Engine(), args.store)
-        rows = d.read_sketch(args.kind, args.tier)
-    else:  # archived store: already one final row per window
-        rows = probe
     key_cols = [c for c in ("source", "metric", "kind", "window_start") if c in rows.columns]
     if args.kind == "tdigest":
         from logtrics_spark.operators.tdigest import tdigest_quantiles
@@ -511,7 +498,8 @@ def main(argv: list[str] | None = None) -> int:
 
     h = sub.add_parser("archive", help="seal closed live-store days into an archival store")
     h.add_argument("--store", required=True, help="live tier store root")
-    h.add_argument("--archive-store", required=True, help="RollupJob store root")
+    h.add_argument("--archive-store", required=True,
+                   help="RollupJob store root, not the --store itself")
     h.add_argument("--tiers", help="comma list, default 1m,5m,1h,1d (finest must match the live tier)")
     h.add_argument("--before-day", help="archive days < this yyyy-MM-dd (default: the open day)")
     h.add_argument("--config", help="deployment TOML (for [sketches] merge params)")

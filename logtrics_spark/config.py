@@ -30,8 +30,6 @@ DEFAULTS: dict[str, Any] = {
         # reference default flush interval 30s (cmd/logtrics/main.go:59)
         "interval": 30,
         "tiers": ["1m", "5m", "1h", "1d"],
-        "chunk_span": "1d",
-        "store": None,
         "debug": False,
         # daemon live-store housekeeping: compact superseded snapshot
         # versions every N flushes (0 = only via Daemon.compact()/CLI)
@@ -81,9 +79,8 @@ def load_toml(path: str) -> dict[str, Any]:
     (examples/config.toml + config/config.go:23-59): top-level
     modes/expression/scriptfile/scriptdir/buffersize, and the
     graphite/udp/tcp/logging tables.  Sections merge key-by-key over
-    DEFAULTS (so our engine-side graphite keys — tiers, chunk_span,
-    store — keep their defaults next to the reference's
-    host/port/interval/debug).  Unknown top-level keys and invalid
+    DEFAULTS (so our engine-side graphite keys — tiers, compact_every —
+    keep their defaults next to the reference's host/port/interval/debug).  Unknown top-level keys and invalid
     modes/log levels raise ConfigError, mirroring the reference's
     strict rule-level merge.
     """

@@ -223,25 +223,6 @@ def cascade_tiers(fine: DataFrame, fine_tier: str, coarse_tiers: list[str]) -> D
     return _cascade(exploded, F.col("_cws"), secs, ["tier"])
 
 
-def rollup_all_tiers(points: DataFrame, tiers: list[str] | None = None) -> dict[str, DataFrame]:
-    """Raw points -> {tier: rollup df} via one raw rollup + cascades.
-
-    Only the 1m rollup touches raw data; every coarser tier derives from
-    the previous tier (continuous-aggregate style) — at 100 TB this is
-    the difference between one big shuffle and four.
-    """
-    tiers = tiers or TIER_ORDER
-    out: dict[str, DataFrame] = {}
-    prev_tier: str | None = None
-    for t in tiers:
-        if prev_tier is None:
-            out[t] = rollup(points, t)
-        else:
-            out[t] = cascade(out[prev_tier], prev_tier, t)
-        prev_tier = t
-    return out
-
-
 def timer_percentiles(points: DataFrame, tier: str, exact: bool = True) -> DataFrame:
     """Per-window p50/p75/p95/p99/p999 for timer-kind points.
 

@@ -1,4 +1,4 @@
-"""N10 — skew handling: salted repartition + two-phase grouped-map.
+"""N10 — skew handling: salted two-phase aggregation.
 
 Native aggregates don't need this (Spark's partial+final agg already
 combines map-side, and AQE splits skewed shuffle partitions).  The gap
@@ -23,15 +23,6 @@ from pyspark.sql import functions as F
 def with_salt(df: DataFrame, fine_col: str, buckets: int, salt_col: str = "_salt") -> DataFrame:
     """Deterministic salt in [0, buckets) from a high-cardinality column."""
     return df.withColumn(salt_col, F.pmod(F.hash(F.col(fine_col)), F.lit(buckets)))
-
-
-def repartition_salted(
-    df: DataFrame, keys: list[str], fine_col: str, buckets: int = 32
-) -> DataFrame:
-    """Repartition by (keys..., salt) so one hot key spreads over
-    ``buckets`` tasks.  Callers group by (keys..., _salt) afterwards."""
-    salted = with_salt(df, fine_col, buckets)
-    return salted.repartition(*[F.col(k) for k in keys], F.col("_salt"))
 
 
 def salted_two_phase_agg(

@@ -25,9 +25,11 @@ Spark analog is ``update`` output mode: every trigger emits each
 changed window's aggregate-so-far (streaming state holds the complete
 aggregate, so the LAST emission per window is the closed value).  The
 store therefore appends snapshot versions stamped with a monotonic
-``flush_seq``; ``read_tier_latest`` resolves latest-wins per
-series+window.  (The batch pipeline's sealed, write-once Gorilla chunk
-tables remain the archival path; a daemon store is the live head.)
+``flush_seq``; ``RollupJob.read_tier`` and ``read_sketch_tier`` resolve
+latest-wins per series+window, so every reader (the daemon's own
+housekeeping and each CLI command) gets one row per window.  (The batch
+pipeline's sealed, write-once Gorilla chunk tables remain the archival
+path, in a store of their own; a daemon store is the live head.)
 
 Production posture at scale is unchanged: file/tcp streams are the real
 sources; console/udp are the dev harness the reference also treats as
@@ -47,6 +49,7 @@ from pyspark.sql import functions as F
 from logtrics_spark.api import Engine
 from logtrics_spark.operators.rollup import rollup, rollup_stream
 from logtrics_spark.operators.sketchset import KIND_VALS, SketchSet
+from logtrics_spark.plans.pipeline import RollupJob, _day, _pick_latest, _tier_counts
 from logtrics_spark.sinks.graphite import send_graphite_tcp, to_graphite_lines
 from logtrics_spark.sources.readers import (
     UDPLineCollector,
@@ -54,65 +57,8 @@ from logtrics_spark.sources.readers import (
     stream_lines,
     stream_socket,
 )
-from logtrics_spark.storage.tableio import ParquetTableIO
 
 logger = logging.getLogger("logtrics_spark.daemon")
-
-
-def _pick_latest(df: DataFrame, vals: list[str], by: tuple[str, ...] = ()) -> DataFrame:
-    """One row per ``by`` + series + window: the ``vals`` of the row with
-    the highest ``flush_seq`` — the one latest-wins pick of every
-    snapshot read and compaction.
-
-    ONE max_by over a struct of all value columns: flush_seq is stamped
-    per process as max(seq+1, epoch_micros), so a live daemon and a CLI
-    compact can tie on the same microsecond — independent per-column
-    max_by calls could then mix columns from different rows (e.g. MG
-    'items' from one version, 'counts' from another).  The struct pick
-    is atomic: every value column comes from the same winning row.
-    """
-    keys = [c for c in ("source", "metric", "kind", "window_start") if c in df.columns]
-    return (
-        df.groupBy(*by, *keys)
-        .agg(F.max_by(F.struct(*vals), "flush_seq").alias("_v"))
-        .select(*keys, *[F.col(f"_v.{c}").alias(c) for c in vals])
-    )
-
-
-def _resolve_sketch_versions(df: DataFrame, val_cols: list[str]) -> DataFrame:
-    """Collapse a sketch table's stored versions to one contribution row
-    per (series, window, contribution):
-
-    - snapshot rows (``origin`` drain/cascade — cumulative re-emissions,
-      like the scalar tiers): latest-wins per series+window by
-      ``flush_seq``;
-    - stream rows (append-only per-micro-batch partials): dedupe
-      at-least-once replays per (batch_seq, series, window) — a retried
-      foreachBatch re-appends the same partial under the same batch id.
-
-    The survivors are CONTRIBUTIONS, not final rows: merge them per
-    window afterwards (same-tier cascade) — drain snapshots and stream
-    partials cover disjoint underlying line sources, so merging is the
-    union of disjoint event sets.
-    """
-    snap = _pick_latest(df.where(F.col("origin") != "stream"), val_cols)
-    stream = _pick_latest(df.where(F.col("origin") == "stream"), val_cols, by=("batch_seq",))
-    return snap.unionByName(stream)
-
-
-def resolve_latest(tier_df: DataFrame) -> DataFrame:
-    """Latest-wins view of a snapshot-flush (daemon) tier table: one row
-    per series+window, each value taken from the highest ``flush_seq``.
-
-    Frames without a ``flush_seq`` column (the batch pipeline's sealed,
-    write-once tiers) pass through unchanged — callers can apply this
-    unconditionally before read-path operators (zscore, series
-    functions) that assume one row per window.
-    """
-    if "flush_seq" not in tier_df.columns:
-        return tier_df
-    keys = ("source", "metric", "kind", "window_start", "flush_seq")
-    return _pick_latest(tier_df, [c for c in tier_df.columns if c not in keys])
 
 
 def load_rules(spec: str) -> Engine:
@@ -198,7 +144,6 @@ class Daemon:
         tiers = g.get("tiers") or ["1m"]
         self.tier = tiers[0]  # finest tier; coarser tiers cascade offline
         self.interval = int(g.get("interval", 30))
-        self.io = ParquetTableIO(self.spark, self.store_root)
         self._flush_seq = 0
         self._flush_floor_loaded = False
         self.compact_every = int(g.get("compact_every", 0) or 0)
@@ -209,6 +154,10 @@ class Daemon:
         # the way the batch path's sketch tables do (test_sketch_store)
         self.sketchset = SketchSet.from_config(self.conf.get("sketches"))
         self.sketch_kinds = self.sketchset.enabled
+        # the live store's one read (latest-wins over the snapshot
+        # versions, sketch contributions merged with this SketchSet)
+        self.live = RollupJob(self.spark, self.store_root, tiers=tiers, sketches=self.sketchset)
+        self.io = self.live.io
         # cron-scheduled housekeeping (config [schedule] — the
         # reference's TODO.md:6 "Scheduler APIs"): job name -> cron
         # string, polled once per flush tick by run_scheduled().  The
@@ -296,7 +245,7 @@ class Daemon:
         stamps after its tier rows (mirroring
         ParquetTableIO._next_seal_seq): a daemon restart on a clock that
         stepped backwards must never stamp below rows already written, or
-        read_tier_latest / read_sketch would resurrect stale snapshots.
+        the latest-wins reads would resurrect stale snapshots.
         """
         import time
 
@@ -339,8 +288,6 @@ class Daemon:
         reporter likewise logs a failed flush and retries on the next
         tick.  Raising here would end a streaming query.
         """
-        from logtrics_spark.plans.pipeline import _day
-
         # store writes serialize across concurrently-flushing
         # streaming queries so compaction's read-then-rewrite can
         # never race an append into a lost update.  The flush_seq is
@@ -393,7 +340,7 @@ class Daemon:
         )
 
         try:
-            latest = self.read_tier_latest(self.tier)
+            latest = self.live.read_tier(self.tier)
         except ValueError:  # store has no rows yet: empty scrape
             payload = ""
         else:
@@ -489,8 +436,6 @@ class Daemon:
     ) -> None:
         """One append of sketch rows (with a ``tier`` column) to
         ``sk_<name>``, stamped with one flush_seq."""
-        from logtrics_spark.plans.pipeline import _day
-
         with self._store_guard():
             out = (
                 rows.withColumn("day", _day("window_start"))
@@ -533,31 +478,6 @@ class Daemon:
         deployment's config to the CLI when it customizes mg_k/compression."""
         return self.sketchset.kinds_with_stored(self.io)
 
-    def read_sketch(self, name: str, tier: str | None = None) -> DataFrame:
-        """Consolidated sketch rows for one kind+tier: one row per
-        series+window (versions resolved, contributions merged)."""
-        if name not in KIND_VALS:
-            raise ValueError(f"unknown sketch kind {name!r}; pick from {sorted(KIND_VALS)}")
-        tier = tier or self.tier
-        if not self.io.exists(f"sk_{name}/tier={tier}"):
-            raise ValueError(
-                f"store {self.store_root!r} has no sk_{name} tier={tier} rows yet"
-            )
-        df = self.io.read(f"sk_{name}/tier={tier}").drop("day")
-        resolved = _resolve_sketch_versions(df, KIND_VALS[name])
-        return self.sketchset.cascade(name, resolved, tier, tier)
-
-    # ------------------------------------------------------------- read
-    def read_tier_latest(self, tier: str | None = None) -> DataFrame:
-        """Latest snapshot per series+window (max_by over flush_seq)."""
-        tier = tier or self.tier
-        if not self.io.exists(f"tiers/tier={tier}"):
-            raise ValueError(
-                f"store {self.store_root!r} has no tier={tier} rows yet "
-                "(no batch produced matching lines?)"
-            )
-        return resolve_latest(self.io.read(f"tiers/tier={tier}").drop("day"))
-
     # ------------------------------------------------------ housekeeping
     def compact(self, tiers: list[str] | None = None) -> dict[str, int]:
         """Rewrite each tier's day partitions to latest-wins rows only,
@@ -570,8 +490,8 @@ class Daemon:
         latest-wins rows are restamped with ONE fresh flush_seq and
         replace every day partition they cover (every stored day has at
         least one surviving row, so no partition is orphaned).  A later
-        flush stamps a higher flush_seq and still wins;
-        ``read_tier_latest`` output is unchanged by construction.  The
+        flush stamps a higher flush_seq and still wins; ``read_tier``
+        output is unchanged by construction.  The
         per-partition replace is the same idempotent primitive the
         sealed pipeline uses — a crash mid-job leaves some partitions
         compacted and some not, both states latest-wins-correct.
@@ -579,15 +499,13 @@ class Daemon:
         Returns {tier: rows written}.  Runs under the store lock, so
         in-process streaming flushes queue behind it.
         """
-        from logtrics_spark.plans.pipeline import _day
-
         with self._store_guard():
             if not self.io.exists("tiers"):
                 return {}
             tiers = tiers or self.io.list_partitions("tiers", "tier")
             counts: dict[str, int] = {}
             for t in tiers:
-                latest = self.read_tier_latest(t).localCheckpoint()
+                latest = self.live.read_tier(t).localCheckpoint()
                 out = (
                     latest.withColumn("day", _day("window_start"))
                     .withColumn("tier", F.lit(t))
@@ -644,9 +562,16 @@ class Daemon:
         re-archives (idempotently) before it finishes the drops.
         Returns the per-tier sealed units and the ``sk_<kind>:<tier>``
         rows sealed.
-        """
-        from logtrics_spark.plans.pipeline import _day
 
+        The archive store must not be the live store: a store has one
+        writer, so a job over the daemon's own root raises before any
+        read or write.
+        """
+        if job.io.root.resolve() == self.io.root.resolve():
+            raise ValueError(
+                f"archive store {str(job.io.root)!r} is the live store "
+                f"{self.store_root!r}: archive into a store of its own"
+            )
         if job.tiers[0] != self.tier:
             raise ValueError(
                 f"archive job's finest tier {job.tiers[0]!r} must match "
@@ -661,7 +586,7 @@ class Daemon:
                     .agg(F.max(_day("window_start")))
                     .collect()[0][0]
                 )
-            closed = self.read_tier_latest().where(_day("window_start") < before_day)
+            closed = self.live.read_tier(self.tier).where(_day("window_start") < before_day)
             if closed.isEmpty():
                 return {}
             kinds = [
@@ -671,7 +596,8 @@ class Daemon:
             sketches = []
             for k in kinds:
                 # consolidated once and checkpointed: every ladder tier reads it
-                fine = self.read_sketch(k).where(_day("window_start") < before_day)
+                fine = self.live.read_sketch_tier(k, self.tier)
+                fine = fine.where(_day("window_start") < before_day)
                 sketches.append((k, self.sketchset.ladder(k, fine.localCheckpoint(), job.tiers)))
             stats = job.seal_from_fine(closed, sketches=sketches)
             live = [
@@ -700,7 +626,6 @@ class Daemon:
         {"sk_<kind>:<tier>": rows written}.
         """
         from logtrics_spark.operators.rollup import cascade_tiers
-        from logtrics_spark.plans.pipeline import _day, _tier_counts
 
         tiers = tiers or (self.conf.get("graphite", {}).get("tiers") or [self.tier])
         if tiers[0] != self.tier:
@@ -708,7 +633,8 @@ class Daemon:
         # nothing flushed yet (e.g. no line matched any rule), or no coarser tier
         if not self.io.exists(f"tiers/tier={self.tier}") or len(tiers) == 1:
             return {}
-        coarse = cascade_tiers(self.read_tier_latest(), self.tier, tiers[1:]).localCheckpoint()
+        fine = self.live.read_tier(self.tier)
+        coarse = cascade_tiers(fine, self.tier, tiers[1:]).localCheckpoint()
         # the append takes the same cross-process store guard as
         # _sink/_write_sketch_rows: a concurrent CLI compact's
         # read-then-dynamic-overwrite must not drop this append landing
@@ -723,7 +649,7 @@ class Daemon:
         for name in self._sketch_kinds_effective():
             if not self.io.exists(f"sk_{name}/tier={self.tier}"):
                 continue
-            fine = self.read_sketch(name).localCheckpoint()
+            fine = self.live.read_sketch_tier(name, self.tier).localCheckpoint()
             rows = (
                 self.sketchset.ladder(name, fine, tiers)
                 .where(F.col("tier") != self.tier)

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from logtrics_spark.operators.extract import extract_points
 from logtrics_spark.operators import gorilla
 from logtrics_spark.operators.rollup import TIER_ORDER, cascade_tiers, rollup, tier_seconds
+from logtrics_spark.operators.sketchset import KIND_VALS, SketchSet
 from logtrics_spark.storage.tableio import ParquetTableIO
 
 DAY_FMT = "yyyy-MM-dd"
@@ -80,6 +81,55 @@ def _prune(df: DataFrame, days: DataFrame | None) -> DataFrame:
     if days is None:
         return df
     return df.join(F.broadcast(days), ["day"], "left_semi")
+
+
+def _pick_latest(df: DataFrame, vals: list[str], by: tuple[str, ...] = ()) -> DataFrame:
+    """One row per ``by`` + series + window: the ``vals`` of the row with
+    the highest ``flush_seq`` — the one latest-wins pick of every
+    snapshot read and compaction.
+
+    ONE max_by over a struct of all value columns: flush_seq is stamped
+    per process as max(seq+1, epoch_micros), so a live daemon and a CLI
+    compact can tie on the same microsecond — independent per-column
+    max_by calls could then mix columns from different rows (e.g. MG
+    'items' from one version, 'counts' from another).  The struct pick
+    is atomic: every value column comes from the same winning row.
+    """
+    keys = [c for c in ("source", "metric", "kind", "window_start") if c in df.columns]
+    return (
+        df.groupBy(*by, *keys)
+        .agg(F.max_by(F.struct(*vals), "flush_seq").alias("_v"))
+        .select(*keys, *[F.col(f"_v.{c}").alias(c) for c in vals])
+    )
+
+
+def _resolve_sketch_versions(df: DataFrame, val_cols: list[str]) -> DataFrame:
+    """Collapse a sketch table's stored versions to one contribution row
+    per (series, window, contribution):
+
+    - snapshot rows (``origin`` drain/cascade — cumulative re-emissions,
+      like the scalar tiers): latest-wins per series+window by
+      ``flush_seq``;
+    - stream rows (append-only per-micro-batch partials): dedupe
+      at-least-once replays per (batch_seq, series, window) — a retried
+      foreachBatch re-appends the same partial under the same batch id.
+
+    The survivors are CONTRIBUTIONS, not final rows: merge them per
+    window afterwards (same-tier cascade) — drain snapshots and stream
+    partials cover disjoint underlying line sources, so merging is the
+    union of disjoint event sets.
+    """
+    snap = _pick_latest(df.where(F.col("origin") != "stream"), val_cols)
+    stream = _pick_latest(df.where(F.col("origin") == "stream"), val_cols, by=("batch_seq",))
+    return snap.unionByName(stream)
+
+
+def resolve_latest(tier_df: DataFrame) -> DataFrame:
+    """Latest-wins view of a snapshot-flush (daemon) tier table: one row
+    per series+window, each value taken from the highest ``flush_seq``,
+    which the view drops."""
+    keys = ("source", "metric", "kind", "window_start", "flush_seq")
+    return _pick_latest(tier_df, [c for c in tier_df.columns if c not in keys])
 
 
 class RollupJob:
@@ -106,8 +156,6 @@ class RollupJob:
         (dynamic day overwrite; contents equivalent, not byte-pinned —
         digest bytes depend on partition order, their estimates don't).
         """
-        from logtrics_spark.operators.sketchset import SketchSet
-
         self.spark = spark
         self.io = ParquetTableIO(spark, root)
         self.tiers = tiers or TIER_ORDER
@@ -504,17 +552,18 @@ class RollupJob:
     # ------------------------------------------------------------- reads
     def read_tier(self, tier: str, ts_from=None, ts_to=None, cols=None) -> DataFrame:
         """A tier's rows with ``window_start`` in the inclusive [ts_from,
-        ts_to] (None: open): the sealed days decoded from their Gorilla
-        chunks, pruned on the chunks' min_ts/max_ts zone map before any
-        decode (``gorilla.decompress_chunks_range``), plus the unsealed
-        ``tiers/`` head (a daemon's live store).  ``cols=None`` returns
-        every stored column in its own type, with ``rate`` and ``stddev``
-        re-derived as rollup/cascade derive them: bit-identical to the
-        sealed rows.  A ``cols`` list returns the series key,
-        ``window_start`` and those columns, decoding only their streams.
-        A day in both ``tiers/`` and ``chunks/`` (an archive into the live
-        store itself that stopped between its seal and its head drops) is
-        served once, from the chunks.  A tier with no rows raises."""
+        ts_to] (None: open), one row per series and window, from either
+        kind of store: the sealed days decoded from their Gorilla chunks,
+        pruned on the chunks' min_ts/max_ts zone map before any decode
+        (``gorilla.decompress_chunks_range``), and the unsealed ``tiers/``
+        head of a daemon's live store, cut to the range and resolved
+        latest-wins over its snapshot versions (no ``flush_seq`` leaves
+        the read).  ``cols=None`` returns every stored column in its own
+        type, with a chunk's ``rate`` and ``stddev`` re-derived as
+        rollup/cascade derive them: bit-identical to the sealed rows.  A
+        ``cols`` list returns the series key, ``window_start`` and those
+        columns, decoding only their streams.  A tier with no rows
+        raises."""
         from logtrics_spark.operators.rollup import KEY, stddev_from_moments
 
         sealed = self.io.list_partitions(f"chunks/tier={tier}", "day")
@@ -533,19 +582,30 @@ class RollupJob:
                 out = out.withColumn("stddev", stddev_from_moments("cnt", "sum", "sum_sq"))
             parts.append(out)
         if has_head:
-            head = self.io.read(f"tiers/tier={tier}")
-            head = gorilla.in_range(head.where(~F.col("day").isin(sealed)), ts_from, ts_to)
-            head = head.drop("day") if cols is None else head.select(*KEY, "window_start", *cols)
-            parts.append(head)
+            head = self.io.read(f"tiers/tier={tier}").drop("day")
+            head = resolve_latest(gorilla.in_range(head, ts_from, ts_to))
+            parts.append(head if cols is None else head.select(*KEY, "window_start", *cols))
         return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
     def read_sketch_tier(self, name: str, tier: str) -> DataFrame:
-        """Sketch tier rows (write-once final rows — estimate with
-        tdigest_quantiles / mg_topk / set_sketch_estimate).  This is the
-        post-retention answer path for quantiles / top-k / distinct:
-        coarse sketch tiers remain after ``retention_tiers`` drops the
-        fine ones."""
-        return self.io.read(f"sk_{name}/tier={tier}").drop("day")
+        """A sketch tier's rows, one per series and window (estimate with
+        tdigest_quantiles / mg_topk / set_sketch_estimate / cms_query).
+        A daemon's live ``sk_<kind>`` table (its rows carry ``origin``)
+        has its stored versions resolved and its contributions merged
+        with this job's ``SketchSet``; a sealed table holds final rows
+        and is returned as stored.  This is the post-retention answer
+        path for quantiles / top-k / distinct: coarse sketch tiers remain
+        after ``retention_tiers`` drops the fine ones."""
+        if name not in KIND_VALS:
+            raise ValueError(f"unknown sketch kind {name!r}; pick from {sorted(KIND_VALS)}")
+        table = f"sk_{name}/tier={tier}"
+        if not self.io.exists(table):
+            raise ValueError(f"store {self.io.path()!r} has no sk_{name} tier={tier} rows yet")
+        df = self.io.read(table).drop("day")
+        if "origin" not in df.columns:
+            return df
+        resolved = _resolve_sketch_versions(df, KIND_VALS[name])
+        return self.sketchset.cascade(name, resolved, tier, tier)
 
     def read_tier_from_chunks(self, tier: str, ts_from=None, ts_to=None) -> DataFrame:
         """``read_tier`` with the gorilla.DEFAULT_VALUE_COLS columns."""

@@ -1,4 +1,4 @@
-"""K2/K3 — Graphite plaintext sink parity + debug metric log.
+"""K2 — Graphite plaintext sink parity.
 
 The reference's entire output surface is the Graphite plaintext
 protocol: every ``interval`` seconds the go-metrics registry is pushed
@@ -6,7 +6,7 @@ over TCP as ``<metric path> <value> <epoch>\\n`` lines
 (/root/reference/graphite/graphite.go:61-98 via the
 cyberdelia/go-metrics-graphite reporter, go.mod:8), with ``graphite.
 debug`` additionally logging the registry every tick
-(graphite/graphite.go:75-83).
+(graphite/graphite.go:75-83; K3, honored by ``Daemon._flush``).
 
 Here the tier tables are the primary sink (the right at-scale design),
 and this module restores protocol parity for users migrating off the
@@ -22,9 +22,6 @@ reference:
 - ``send_graphite_tcp``: ships a lines DataFrame to a Graphite host
   over one TCP connection, streaming the frame to the driver one
   partition at a time (never the whole frame at once).
-- ``graphite_batch_sink``: foreachBatch adapter combining the two,
-  honoring the ``graphite.debug`` config key (K3) by also logging the
-  formatted registry snapshot per batch.
 
 Timestamping: the reference stamps lines with the wall-clock flush
 moment; the deterministic analog is the window END epoch (the moment
@@ -39,15 +36,12 @@ specific shortest-repr ambiguity) — this is also what makes the
 
 from __future__ import annotations
 
-import logging
 import socket
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logtrics_spark.operators.rollup import tier_seconds
-
-logger = logging.getLogger("logtrics_spark.graphite")
 
 
 def _q6(col) -> Column:
@@ -225,28 +219,3 @@ def send_graphite_tcp(
     finally:
         if sock is not None:
             sock.close()
-
-
-def graphite_batch_sink(
-    tier: str,
-    host: str | None = None,
-    port: int | None = None,
-    prefix: str = "logtrics",
-    debug: bool = False,
-    debug_limit: int = 50,
-):
-    """foreachBatch adapter: format tier rows, optionally emit over TCP,
-    and honor ``graphite.debug`` (K3) by logging the snapshot — the
-    reference's goMetrics.Log side-channel (graphite/graphite.go:75-83).
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        lines = to_graphite_lines(batch_df, tier, prefix=prefix)
-        if debug:
-            snapshot = [r["line"] for r in lines.limit(debug_limit).collect()]
-            for ln in snapshot:
-                logger.debug("graphite batch=%s %s", batch_id, ln)
-        if host is not None and port is not None:
-            send_graphite_tcp(lines, host, port)
-
-    return sink

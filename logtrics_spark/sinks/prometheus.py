@@ -23,9 +23,6 @@ Spark-first version over the same tier tables the Graphite sink reads:
   must never be scraped).
 - ``serve_metrics``: a minimal stdlib HTTP endpoint serving the latest
   payload with the ``text/plain; version=0.0.4`` content type.
-- ``prometheus_batch_sink``: foreachBatch adapter refreshing the
-  textfile per flush tick — the streaming analog of the reference's
-  snapshot-per-tick Graphite push.
 
 Kind mapping (mirrors _KIND_FIELDS in sinks/graphite.py; Prometheus
 naming per the exposition-format conventions):
@@ -135,7 +132,7 @@ def to_prometheus_samples(
     Emits one sample line per reported field whose source column exists
     in ``tier_df`` (same column-presence contract as
     ``to_graphite_lines``).  The input should normally be a LATEST
-    snapshot (one row per series — e.g. ``Daemon.read_tier_latest``
+    snapshot (one row per series — e.g. ``RollupJob.read_tier``
     filtered to each series' newest window); passing multiple windows
     per series emits one timestamped sample per window, which is valid
     exposition only with ``timestamps=True``.
@@ -303,39 +300,3 @@ class MetricsServer:
         self._httpd.shutdown()
         self._httpd.server_close()
         self._thread.join(timeout=5)
-
-
-def prometheus_batch_sink(
-    tier: str,
-    textfile: str | None = None,
-    prefix: str = "logtrics",
-    gauge_float: bool = False,
-    timer_duration_unit: float = 1.0,
-    payload_ref: dict | None = None,
-):
-    """foreachBatch adapter: refresh the exposition snapshot per flush.
-
-    Writes the textfile (timestamp-free, per the collector contract)
-    and/or updates ``payload_ref["payload"]`` — the hook a
-    ``MetricsServer`` payload_fn reads — every micro-batch.  The batch
-    the stream hands over is that flush's registry snapshot, matching
-    the reference's push-per-tick model.
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        samples = to_prometheus_samples(
-            batch_df,
-            tier,
-            prefix=prefix,
-            gauge_float=gauge_float,
-            timer_duration_unit=timer_duration_unit,
-            timestamps=False,
-        )
-        payload = render_exposition(samples)
-        if textfile is not None:
-            write_textfile(payload, textfile)
-        if payload_ref is not None:
-            payload_ref["payload"] = payload
-        logger.debug("prometheus batch=%s bytes=%d", batch_id, len(payload))
-
-    return sink

@@ -62,8 +62,7 @@ class ParquetTableIO:
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
-        self.root = Path(root)
-        self.root.mkdir(parents=True, exist_ok=True)
+        self.root = Path(root)  # created by the first write, never by a read
 
     # ---- generic partitioned tables -----------------------------------
     def path(self, *parts: str) -> str:

@@ -107,10 +107,19 @@ def test_cli_read_range(spark, tmp_path, capsys):
 )
 def test_cli_reads_of_a_missing_tier_name_it(spark, tmp_path, cmd):
     """The tier-reading commands fail with read_tier's named error when
-    the store has no rows of the tier, not with a path-not-found."""
+    the store has no rows of the tier, not with a path-not-found, and a
+    read of a missing store does not create it."""
     store = str(tmp_path / "empty")
     with pytest.raises(ValueError, match=r"store .* has no tier=1h rows"):
         main([cmd[0], "--store", store, "--tier", "1h", *cmd[1:]])
+    assert not Path(store).exists()
+
+
+def test_cli_sketch_of_a_missing_store_leaves_it_absent(spark, tmp_path, capsys):
+    store = tmp_path / "typo"
+    assert main(["sketch", "--store", str(store), "--kind", "tdigest"]) == 2
+    assert f"no sk_tdigest tier=1h in {store}" in capsys.readouterr().err
+    assert not store.exists()
 
 
 def test_cli_curate(spark, tmp_path, capsys):

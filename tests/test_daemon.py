@@ -71,7 +71,7 @@ def test_daemon_file_mode_once(spark, tmp_path, caplog):
         d.stop()
 
     assert stats["streams"] == 1
-    tiers = d.read_tier_latest().toPandas()
+    tiers = d.live.read_tier(d.tier).toPandas()
     # 4 matching lines -> counter + timer series in one 1m window
     cnt = tiers[tiers.metric == "http.requests"]
     assert cnt["sum"].sum() == 4
@@ -109,7 +109,7 @@ def test_daemon_console_and_udp_modes(spark, tmp_path):
         time.sleep(0.05)
     assert d.drain_udp() > 0
     d.stop()
-    tiers = d.read_tier_latest().toPandas()
+    tiers = d.live.read_tier(d.tier).toPandas()
     # console: 4 matches (epoch-1970 windows); udp: 2 matches, UDP: source
     assert tiers[tiers.source == "console"]["sum"][
         tiers.metric == "http.requests"
@@ -120,7 +120,7 @@ def test_daemon_console_and_udp_modes(spark, tmp_path):
 
 def test_daemon_empty_store_paths(spark, tmp_path):
     """No matching lines ever flushed: cascade_tiers returns {} and
-    read_tier_latest raises a clear error, not a raw path exception."""
+    read_tier raises a clear error, not a raw path exception."""
     from logtrics_spark.config import load_toml
     from logtrics_spark.plans.daemon import Daemon
 
@@ -130,7 +130,7 @@ def test_daemon_empty_store_paths(spark, tmp_path):
     d.start(once=True, console_lines=["no rule matches this line"])
     assert d.cascade_tiers() == {}
     with pytest.raises(ValueError, match="no tier=1m rows"):
-        d.read_tier_latest()
+        d.live.read_tier(d.tier)
     d.stop()
 
 
@@ -149,15 +149,15 @@ def test_daemon_cascade_tiers(spark, tmp_path):
     d.start(once=True, console_lines=LINES)
     counts = d.cascade_tiers()
     assert set(counts) == {"5m", "1h"} and all(v > 0 for v in counts.values())
-    fine = d.read_tier_latest("1m").toPandas()
-    hourly = d.read_tier_latest("1h").toPandas()
+    fine = d.live.read_tier("1m").toPandas()
+    hourly = d.live.read_tier("1h").toPandas()
     m = "http.requests"
     assert (
         hourly[hourly.metric == m]["sum"].sum() == fine[fine.metric == m]["sum"].sum() == 4
     )
     # rerun converges: one more snapshot version, identical latest view
     d.cascade_tiers()
-    hourly2 = d.read_tier_latest("1h").toPandas()
+    hourly2 = d.live.read_tier("1h").toPandas()
     key = ["source", "metric", "kind", "window_start"]
     assert hourly.sort_values(key).reset_index(drop=True).equals(
         hourly2.sort_values(key).reset_index(drop=True)
@@ -287,7 +287,7 @@ def test_graphite_outage_does_not_fail_the_flush(spark, tmp_path, caplog):
     with caplog.at_level(logging.WARNING, logger="logtrics_spark.daemon"):
         n = d.process_lines(lines_df(spark, LINES))
     assert n > 0
-    assert d.read_tier_latest().count() == n
+    assert d.live.read_tier(d.tier).count() == n
     warned = [r for r in caplog.records if r.levelno == logging.WARNING]
     assert len(warned) == 1
     assert f"127.0.0.1:{port}" in warned[0].getMessage()

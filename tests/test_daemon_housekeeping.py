@@ -66,7 +66,7 @@ def _flush(d, spark, day, n, value0=1.0):
 
 def test_compact_drops_superseded_snapshots(spark, tmp_path):
     """M flush ticks -> compact: store rows == distinct (series, window)
-    and read_tier_latest output is unchanged; a post-compact flush still
+    and the read_tier output is unchanged; a post-compact flush still
     wins latest-wins."""
     d = _daemon(spark, tmp_path)
     # 3 snapshot versions of overlapping windows (running counters)
@@ -77,7 +77,7 @@ def test_compact_drops_superseded_snapshots(spark, tmp_path):
     raw = d.io.read("tiers/tier=1m")
     assert raw.count() > raw.select(*TIER_COLS).distinct().count()
     before = (
-        d.read_tier_latest().orderBy(*TIER_COLS).toPandas().reset_index(drop=True)
+        d.live.read_tier(d.tier).orderBy(*TIER_COLS).toPandas().reset_index(drop=True)
     )
 
     counts = d.compact()
@@ -85,13 +85,13 @@ def test_compact_drops_superseded_snapshots(spark, tmp_path):
     raw = d.io.read("tiers/tier=1m")
     assert raw.count() == raw.select(*TIER_COLS).distinct().count() == 10
     after = (
-        d.read_tier_latest().orderBy(*TIER_COLS).toPandas().reset_index(drop=True)
+        d.live.read_tier(d.tier).orderBy(*TIER_COLS).toPandas().reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(before, after)
 
     # a flush AFTER compaction must still supersede the compacted rows
     _flush(d, spark, "2024-03-01", 2, value0=100.0)
-    latest = d.read_tier_latest().orderBy("window_start").toPandas()
+    latest = d.live.read_tier(d.tier).orderBy("window_start").toPandas()
     assert latest.iloc[0]["sum"] == 100.0
 
 
@@ -136,7 +136,7 @@ def test_archive_closed_days_handoff(spark, tmp_path):
     _flush(d, spark, "2024-03-01", 60, value0=1.0)  # closed day
     _flush(d, spark, "2024-03-02", 5, value0=7.0)  # open day
     closed_latest = (
-        d.read_tier_latest()
+        d.live.read_tier(d.tier)
         .where(F.col("window_start") < "2024-03-02")
         .orderBy(*TIER_COLS)
         .toPandas()
@@ -171,7 +171,7 @@ def test_archive_closed_days_handoff(spark, tmp_path):
 
     # live store holds ONLY the open day now
     assert d.io.list_partitions("tiers/tier=1m", "day") == ["2024-03-02"]
-    assert d.read_tier_latest().count() == 5
+    assert d.live.read_tier(d.tier).count() == 5
     # idempotent: nothing left before the open day
     assert d.archive_closed_days(job) == {}
 
@@ -211,41 +211,85 @@ def test_cli_compact_and_archive(spark, tmp_path, capsys):
 
 
 def test_read_tier_over_daemon_live_store(spark, tmp_path):
-    """RollupJob.read_tier (what the graphite/alerts/query CLI commands
-    use) over a daemon live store, which has no chunks: every stored
-    snapshot row, flush_seq included, exactly as written."""
+    """RollupJob.read_tier (what the daemon's housekeeping and the
+    graphite/alerts/read CLI commands use) over a daemon live store,
+    which has no chunks: one row per window with the latest snapshot's
+    values, in the stored column order, and no flush_seq.  A bounded
+    read with ``cols`` returns exactly the resolved rows of the
+    inclusive range, with the key, window_start and those columns."""
     from logtrics_spark.plans.pipeline import RollupJob
 
     d = _daemon(spark, tmp_path)
     _flush(d, spark, "2024-03-01", 30, value0=1.0)
-    _flush(d, spark, "2024-03-01", 30, value0=2.0)
-    got = RollupJob(spark, str(tmp_path / "store")).read_tier("1m")
-    want = d.io.read("tiers/tier=1m").drop("day")
-    assert got.schema == want.schema and got.count() == 60
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    _flush(d, spark, "2024-03-01", 20, value0=2.0)  # supersedes windows 0..19
+    latest = [2.0 + i for i in range(20)] + [1.0 + i for i in range(20, 30)]
+    job = RollupJob(spark, str(tmp_path / "store"))
+    got = job.read_tier("1m")
+    stored = d.io.read("tiers/tier=1m").drop("day")
+    assert stored.count() == 50
+    assert got.columns == [c for c in stored.columns if c != "flush_seq"]
+    pdf = got.orderBy("window_start").toPandas()
+    assert len(pdf) == 30 and pdf["window_start"].is_unique
+    assert pdf["sum"].tolist() == latest
+
+    got = job.read_tier("1m", "2024-03-01 00:10:00", "2024-03-01 00:24:00", cols=["cnt", "sum"])
+    assert got.columns == [*TIER_COLS, "cnt", "sum"]
+    pdf = got.orderBy("window_start").toPandas()
+    want = pd.Timestamp("2024-03-01") + pd.to_timedelta(range(10, 25), unit="min")
+    assert pdf["window_start"].tolist() == want.tolist()
+    assert pdf["cnt"].tolist() == [1] * 15
+    assert pdf["sum"].tolist() == latest[10:25]
 
 
-def test_read_tier_serves_a_day_in_both_stores_once(spark, tmp_path, crash_after):
-    """An archive into the live store itself that stops after its seal,
-    before its live-head drops, leaves the closed day in both tiers/ and
-    chunks/: read_tier serves that day once, from the chunks, and the
-    open day from the head."""
+def _tree(root) -> dict:
+    """Every file under ``root``, relative path -> bytes."""
+    from pathlib import Path
+
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in sorted(Path(root).rglob("*"))
+        if p.is_file()
+    }
+
+
+def test_archive_into_the_live_store_raises(spark, tmp_path):
+    """A store has one writer: an archive job over the daemon's own root
+    raises before any read or write, through the library call and the
+    `archive` CLI, however the same path is spelled.  The store is byte
+    for byte unchanged."""
+    from logtrics_spark.__main__ import main
     from logtrics_spark.plans.pipeline import RollupJob
 
     d = _daemon(spark, tmp_path)
     _flush(d, spark, "2024-03-01", 60, value0=1.0)  # closed day
     _flush(d, spark, "2024-03-02", 5, value0=7.0)  # open day
-    want = d.read_tier_latest().orderBy(*TIER_COLS).toPandas()
-    job = RollupJob(spark, str(tmp_path / "store"), tiers=["1m"])
-    with crash_after("lineage"):
-        d.archive_closed_days(job)
-    assert job.io.list_partitions("chunks/tier=1m", "day") == ["2024-03-01"]
-    assert d.io.list_partitions("tiers/tier=1m", "day") == ["2024-03-01", "2024-03-02"]
+    store = tmp_path / "store"
+    before = _tree(store)
+    for spelled in (str(store), f"{store}/", str(tmp_path / "x" / ".." / "store")):
+        with pytest.raises(ValueError, match="is the live store"):
+            d.archive_closed_days(RollupJob(spark, spelled, tiers=["1m"]))
+        with pytest.raises(ValueError, match="is the live store"):
+            main(["archive", "--store", str(store), "--archive-store", spelled, "--tiers", "1m"])
+        assert _tree(store) == before
+    assert not (tmp_path / "x").exists()
+    assert not d.io.exists("chunks") and not d.io.exists("lineage")
 
-    got = job.read_tier("1m").orderBy(*TIER_COLS).toPandas()
-    assert got["flush_seq"].isna().tolist() == [True] * 60 + [False] * 5
-    cols = [c for c in got.columns if c != "flush_seq"]
-    pd.testing.assert_frame_equal(got[cols], want[cols])
+
+def test_graphite_cli_over_live_store_prints_latest_once(spark, tmp_path, capsys):
+    """`graphite --dry-run` over a live store holding two snapshot
+    versions of the same windows prints one line per field and window,
+    with the latest values."""
+    from logtrics_spark.__main__ import main
+
+    d = _daemon(spark, tmp_path)
+    _flush(d, spark, "2024-03-01", 3, value0=1.0)
+    _flush(d, spark, "2024-03-01", 3, value0=10.0)
+    _flush(d, spark, "2024-03-02", 2, value0=100.0)
+    store = str(tmp_path / "store")
+    assert main(["graphite", "--store", store, "--tier", "1m", "--dry-run"]) == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 5
+    assert sorted(float(ln.split(" ")[1]) for ln in lines) == [10, 11, 12, 100, 101]
 
 
 def test_alerts_cli_resolves_daemon_snapshots(spark, tmp_path, capsys):

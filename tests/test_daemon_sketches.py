@@ -153,12 +153,12 @@ def test_daemon_sketch_drain_latest_wins_and_compact(spark, tmp_path):
     _drain(d, spark, pdf.iloc[: 2 * len(pdf) // 3])
     _drain(d, spark, pdf)
 
-    stats = td.tdigest_stats(d.read_sketch("tdigest")).agg(F.sum("cnt")).collect()[0][0]
+    stats = td.tdigest_stats(d.live.read_sketch_tier("tdigest", d.tier)).agg(F.sum("cnt")).collect()[0][0]
     assert stats == len(pdf)  # superseded snapshots resolved, not summed
 
     raw_before = d.io.read("sk_tdigest/tier=1m").count()
     before = (
-        td.tdigest_stats(d.read_sketch("tdigest"))
+        td.tdigest_stats(d.live.read_sketch_tier("tdigest", d.tier))
         .select(*KEY, "window_start", "cnt", "min", "max")
         .orderBy("window_start")
         .toPandas()
@@ -167,7 +167,7 @@ def test_daemon_sketch_drain_latest_wins_and_compact(spark, tmp_path):
     counts = d.compact()
     assert counts["sk_tdigest:1m"] < raw_before
     after = (
-        td.tdigest_stats(d.read_sketch("tdigest"))
+        td.tdigest_stats(d.live.read_sketch_tier("tdigest", d.tier))
         .select(*KEY, "window_start", "cnt", "min", "max")
         .orderBy("window_start")
         .toPandas()
@@ -190,7 +190,7 @@ def test_daemon_sketch_stream_partials_dedupe_replay(spark, tmp_path):
     d._sketch_sink(spark.createDataFrame(b1), batch_id=1)  # replay
 
     total = (
-        td.tdigest_stats(d.read_sketch("tdigest")).agg(F.sum("cnt")).collect()[0][0]
+        td.tdigest_stats(d.live.read_sketch_tier("tdigest", d.tier)).agg(F.sum("cnt")).collect()[0][0]
     )
     assert total == len(pdf)  # batches merged, replay deduped
 
@@ -224,9 +224,9 @@ def test_daemon_sketch_config_validation(spark, tmp_path):
         RollupJob(spark, str(tmp_path / "j"), sketches={"enabled": ["mg"], "presketch": True})
     d = _daemon(spark, tmp_path)
     with pytest.raises(ValueError, match="no sk_tdigest"):
-        d.read_sketch("tdigest")
+        d.live.read_sketch_tier("tdigest", d.tier)
     with pytest.raises(ValueError, match="unknown sketch kind"):
-        d.read_sketch("bloom")
+        d.live.read_sketch_tier("bloom", d.tier)
 
 
 def test_daemon_sketch_file_stream_once(spark, tmp_path):
@@ -259,7 +259,7 @@ def test_daemon_sketch_file_stream_once(spark, tmp_path):
     d.stop()
     assert stats["streams"] == 2  # rollup stream + sketch stream
 
-    row = td.tdigest_stats(d.read_sketch("tdigest")).collect()[0]
+    row = td.tdigest_stats(d.live.read_sketch_tier("tdigest", d.tier)).collect()[0]
     assert row["cnt"] == 4 and row["min"] == 3.0 and row["max"] == 30.0
 
 
@@ -353,7 +353,7 @@ def test_flush_seq_floor_covers_sketch_tables(spark, tmp_path):
     d2 = _daemon(spark, tmp_path)  # same store path, fresh process
     cumulative = pd.concat([first, first])  # a later drain: every window doubled
     _drain(d2, spark, cumulative)
-    total = td.tdigest_stats(d2.read_sketch("tdigest")).agg(F.sum("cnt")).collect()[0][0]
+    total = td.tdigest_stats(d2.live.read_sketch_tier("tdigest", d2.tier)).agg(F.sum("cnt")).collect()[0][0]
     assert total == len(cumulative)
 
 

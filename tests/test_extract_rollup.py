@@ -11,7 +11,6 @@ from logtrics_spark.operators.rollup import (
     cascade,
     cascade_tiers,
     rollup,
-    rollup_all_tiers,
     timer_percentiles,
     with_cumulative,
 )
@@ -145,14 +144,13 @@ def test_stddev_moment_formula_properties(spark):
 
 
 def test_cascade_equals_direct(spark, tok_df):
-    """Associativity: raw->1h directly == raw->1m->5m->1h (SURVEY.md §5.3)."""
+    """Associativity: raw->1h directly == raw->1m->1h (SURVEY.md §5.3),
+    through the engine's one cascade (``cascade_tiers``)."""
     pts = extract_points(tok_df)
-    tiers = rollup_all_tiers(pts)
-    direct_1h = rollup(pts, "1h").toPandas()
-    cascaded_1h = tiers["1h"].toPandas()
-    _assert_frame_equal(direct_1h, cascaded_1h)
-    direct_1d = rollup(pts, "1d").toPandas()
-    _assert_frame_equal(direct_1d, tiers["1d"].toPandas())
+    tiers = cascade_tiers(rollup(pts, "1m"), "1m", ["5m", "1h", "1d"])
+    for t in ("1h", "1d"):
+        cascaded = tiers.where(f"tier = '{t}'").drop("tier").toPandas()
+        _assert_frame_equal(rollup(pts, t).toPandas(), cascaded)
 
 
 def _daemon_fine_rows(spark):
@@ -163,7 +161,7 @@ def _daemon_fine_rows(spark):
     from pyspark.sql import functions as F
 
     from logtrics_spark.api import Engine
-    from logtrics_spark.plans.daemon import resolve_latest
+    from logtrics_spark.plans.pipeline import resolve_latest
 
     rng = np.random.default_rng(3)
     n = 3000

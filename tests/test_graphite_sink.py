@@ -1,9 +1,9 @@
-"""K2/K3 parity tests: Graphite plaintext formatting, TCP emission,
-debug registry log (reference graphite/graphite.go:61-98, 75-83)."""
+"""K2 parity tests: Graphite plaintext formatting and TCP emission
+(reference graphite/graphite.go:61-98).  The K3 debug registry log is
+the daemon flush's (tests/test_daemon.py)."""
 
 from __future__ import annotations
 
-import logging
 import socket
 import socketserver
 import threading
@@ -330,20 +330,8 @@ def test_console_drain_sends_lines_of_drained_rows(spark, tmp_path, listener):
     d = Daemon(spark, conf, eng, str(tmp_path / "store"))
     d.start(once=True, console_lines=["GET /a 200 12ms", "POST /b 401 8ms", "noise"])
     expected = sorted(
-        r["line"] for r in to_graphite_lines(d.read_tier_latest(), "1m", prefix="t").collect()
+        r["line"] for r in to_graphite_lines(d.live.read_tier("1m"), "1m", prefix="t").collect()
     )
     assert len(expected) == 1 + 6  # counter count; timer count/min/max/mean/std-dev/mean-rate
     assert sorted(listener.wait_for(len(expected))) == expected
     assert listener.connections == 1
-
-
-def test_graphite_debug_sink_logs_registry(spark, tier_df, caplog):
-    """graphite.debug=True logs the formatted snapshot per batch (K3)."""
-    from logtrics_spark.sinks.graphite import graphite_batch_sink
-
-    sink = graphite_batch_sink("1m", debug=True)
-    with caplog.at_level(logging.DEBUG, logger="logtrics_spark.graphite"):
-        sink(tier_df, batch_id=7)
-    msgs = [r.getMessage() for r in caplog.records]
-    assert any("batch=7" in m and "logtrics.web.req.total.count 250" in m for m in msgs)
-    assert len(msgs) == 10

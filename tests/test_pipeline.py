@@ -302,7 +302,8 @@ def test_old_format_store_raises(spark, tok, tmp_path):
 
 def test_read_tier_range_over_chunks_and_head(spark, tok, tmp_path):
     """A bounded read returns exactly the in-range rows of the sealed
-    chunks and of the unsealed tiers/ head, every column bit for bit;
+    chunks and of the unsealed tiers/ head, its snapshot versions
+    resolved latest-wins, every column bit for bit;
     a ``cols`` read equals the full read's projection; a tier with no
     rows, or an unknown tier, raises a named error."""
     import datetime as dt
@@ -320,8 +321,10 @@ def test_read_tier_range_over_chunks_and_head(spark, tok, tmp_path):
     head = fine.withColumn("window_start", F.col("window_start") + later).withColumn(
         "last_ts", F.col("last_ts") + later
     )
+    stale = head.withColumn("sum", F.col("sum") + 1).withColumn("flush_seq", F.lit(1))
+    versions = stale.unionByName(head.withColumn("flush_seq", F.lit(2)))
     job.io.write_partitioned(
-        head.withColumn("day", _day("window_start")).withColumn("tier", F.lit("1m")),
+        versions.withColumn("day", _day("window_start")).withColumn("tier", F.lit("1m")),
         "tiers",
         ["tier", "day"],
     )

@@ -170,19 +170,6 @@ def test_metrics_server_serves_payload():
         srv.stop()
 
 
-def test_batch_sink_refreshes_textfile_and_ref(spark, tier_df, tmp_path):
-    from logtrics_spark.sinks.prometheus import prometheus_batch_sink
-
-    path = tmp_path / "m.prom"
-    ref: dict = {}
-    sink = prometheus_batch_sink("1m", textfile=str(path), payload_ref=ref)
-    sink(tier_df, 0)
-    text = path.read_text()
-    assert ref["payload"] == text
-    assert 'logtrics_mem_used{source="web"} 15\n' in text  # timestamp-free
-    assert str(TS_MS) not in text
-
-
 def test_daemon_prometheus_wiring(spark, tmp_path):
     """[prometheus] config: every flush refreshes the textfile and the
     live payload from the store's FULL latest view (all live series,
@@ -223,6 +210,9 @@ def test_daemon_prometheus_wiring(spark, tmp_path):
         text2 = path.read_text()
         assert 'logtrics_hits_gamma_total{source="console"} 1' in text2
         assert 'logtrics_hits_alpha_total{source="console"} 1' in text2
+        # the textfile collector contract: no sample carries a timestamp
+        samples = [ln for ln in text2.splitlines() if ln and not ln.startswith("#")]
+        assert samples and all(len(ln.split(" ")) == 2 for ln in samples)
         import urllib.request
 
         body = urllib.request.urlopen(

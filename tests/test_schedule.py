@@ -190,7 +190,7 @@ def test_daemon_runs_scheduled_compact(spark, tmp_path):
     fired = d.run_scheduled(utc(2024, 1, 1, 0, 5))
     assert "compact" in fired and not isinstance(fired["compact"], Exception)
     # compacted store still resolves the latest snapshot
-    rows = d.read_tier_latest("1m").collect()
+    rows = d.live.read_tier("1m").collect()
     assert len(rows) >= 1
 
 
